@@ -15,8 +15,11 @@ SURVEY.md §2.5 Q2):
   anchored phrases count only position-0 instances.
 
 Execution: shard-local and shuffle-free — every term's postings for a doc
-live in the doc's shard, so boolean evaluation and scoring complete within
-the shard; only per-shard top-k rows (plus tiny df sentinel rows) leave.
+live in the doc's shard, so boolean evaluation completes within the shard.
+When the dfs are known a priori the shard also scores and only its top-k
+rows leave; otherwise its matched rows and one df sentinel row leave, and
+the matches are scored per partition once the sentinels are summed
+(search.SearchEngine._execute).
 """
 
 from __future__ import annotations
@@ -79,7 +82,6 @@ class TermPostings:
     doc_ids: np.ndarray  # int64 sorted
     tfs: np.ndarray
     dls: np.ndarray
-    positions: list[np.ndarray] | None  # eager (merged) positions, if any
     lazy: LazyPositions | None = None  # block-lazy resolver, if positional
 
 
@@ -112,7 +114,7 @@ class ShardIndex:
                     "n": len(doc_ids),
                 }
             parts.setdefault(r.term, []).append(
-                (TermPostings(doc_ids, tfs, dls, None), lazy_part)
+                (TermPostings(doc_ids, tfs, dls), lazy_part)
             )
         self.terms: dict[str, TermPostings] = {}
         for term, tps in parts.items():
@@ -131,7 +133,6 @@ class ShardIndex:
                 doc_ids[order],
                 np.concatenate([t.tfs for t, _ in tps])[order],
                 np.concatenate([t.dls for t, _ in tps])[order],
-                None,
                 lazy,
             )
 
@@ -204,12 +205,10 @@ def phrase_hits(
     simple = len(plists) == 1 and prefix_terms is None and not phrase.anchored
     if simple:
         tp = plists[0]
-        if need_positions and tp.lazy is not None:
-            # defer: only a NEAR evaluation consumes these, and it knows the
-            # candidate set — let it fetch just those docs' blocks
-            return PhraseHits(tp.doc_ids, tp.tfs.copy(), tp.dls, None, tp.lazy)
-        pos = tp.positions if need_positions else None
-        return PhraseHits(tp.doc_ids, tp.tfs.copy(), tp.dls, pos)
+        # positions deferred: only a NEAR evaluation consumes them, and it
+        # knows the candidate set — let it fetch just those docs' blocks
+        lazy = tp.lazy if need_positions else None
+        return PhraseHits(tp.doc_ids, tp.tfs.copy(), tp.dls, None, lazy)
 
     # Merge the prefix slot into a virtual term: union docs; per doc union
     # positions / sum tfs. Plain-term slots stay as TermPostings so the
@@ -227,12 +226,9 @@ def phrase_hits(
             loc = np.searchsorted(all_docs, s.doc_ids)
             tfs[loc] += s.tfs
             dls[loc] = s.dls
-            s_pos = (
-                s.lazy.fetch_all(len(s.doc_ids)) if s.lazy is not None else s.positions
-            )
-            if s_pos is not None:
-                for j, l in enumerate(loc):
-                    pos[l].append(s_pos[j])
+            if s.lazy is not None:
+                for j, arr in zip(loc, s.lazy.fetch_all(len(s.doc_ids))):
+                    pos[j].append(arr)
         merged_pos = [
             _union_positions(p) if p else np.zeros(0, dtype=np.int64) for p in pos
         ]
@@ -260,11 +256,7 @@ def phrase_hits(
     for si, s in enumerate(slots):
         prov = s[3]
         if isinstance(prov, TermPostings):
-            slot_pos.append(
-                prov.lazy.fetch(locs[si])
-                if prov.lazy is not None
-                else [prov.positions[j] for j in locs[si]]
-            )
+            slot_pos.append(prov.lazy.fetch(locs[si]))
         else:
             slot_pos.append([prov[j] for j in locs[si]])
 
@@ -453,11 +445,14 @@ def score_shard(
     dfs: dict[int, int] | None,
     k: int,
 ):
-    """Run the query against one shard.
+    """Match the query against one shard; never scores.
 
-    Returns (matched_docs, dls, tf_vis_matrix, local_dfs) — scoring to floats
-    happens here only when ``dfs`` (global per-phrase df) is provided;
-    otherwise the caller is in the df-collection pass.
+    Returns (matched_docs, dls, tf_vis_matrix, local_dfs), or None when no
+    phrase has a hit in this shard. ``local_dfs`` counts, per phrase index,
+    the shard's docs holding the phrase whatever the tree decides. The
+    caller scores the matches with ``bm25_scores`` once idfs are known.
+    ``n_docs``, ``avgdl``, ``dfs`` and ``k`` are not read; they stay only
+    for perfbench's scorer probe, which calls score_shard with them.
     """
     # Per-shard prefix expansion (driver passes NO expansion list): the
     # postings scan already restricted this shard's rows to
@@ -517,7 +512,7 @@ def score_shard(
         full_loc[loc] = np.arange(len(h.doc_ids))
         present[pi] = m
         locs[pi] = full_loc
-    phrase_lens = {p.index: len(p.terms) if not p.prefix else len(p.terms) for p in phrases}
+    phrase_lens = {p.index: len(p.terms) for p in phrases}
 
     mask, vis = evaluate(tree, hits, cand, tf_matrix, present, locs, phrase_lens)
     local_dfs = {pi: int(present[pi].sum()) for pi in hits}
@@ -532,12 +527,6 @@ def score_shard(
     mvis = vis[mask]
 
     return matched, mdl, mvis, local_dfs
-
-
-def _tree_has_near(node: Node) -> bool:
-    if node.op == "NEAR":
-        return True
-    return any(_tree_has_near(c) for c in node.children)
 
 
 def _near_phrase_indexes(node: Node) -> set[int]:

@@ -3,28 +3,31 @@
 Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → shard-pruned,
 term-pruned parquet scan of ``postings`` (predicate pushdown on the sorted
 ``term`` column) → per-shard applyInPandas match+score (shuffle-free: all of
-a doc's postings are in its shard) → global ``orderBy(score, doc_id).limit(k)``
-(TakeOrderedAndProject over ≤ shards×k pre-reduced rows) → point lookup into
-the doc store (column-pruned) for display fields → snippet UDF over ≤ k rows.
+a doc's postings are in its shard) → per-query top-k merged on the driver
+from ≤ shards×k rows → point lookup into the doc store for display fields
+→ snippets over ≤ k rows.
 
-Two physical strategies, picked per query shape:
+``search`` (one query, then result assembly) and ``search_batch`` (many
+queries, then rank numbers) run one executor, ``_execute``: one planner,
+one shard function, one BM25 formula (``scorer.bm25_scores``) and one
+top-k rule (``_topk``). Per query the planner only picks where idf comes
+from:
 
-- FAST path (all phrases are plain single terms — the common case): global
-  dfs come from the postings table's own (term, df) metadata columns before
-  the scan (format 6: no separate term_stats table — the pruned dictionary
-  read hits the same sorted-term row groups the scoring scan does, and the
-  ≤ shards×terms per-shard rows sum driver-side), so each shard scores
-  locally and emits only its top-k. Network cost: shards×k tiny rows.
-- GENERAL path (phrase / prefix / NEAR / anchor): per-phrase global df is
-  only known after matching, so shards emit matched rows (doc_id, dl,
-  visible-tf vector) plus one df-sentinel row; dfs reduce to idfs, and
-  scoring runs as a whole-stage-codegen Spark expression over the matched
-  rows — no second pass over postings.
+- A PRIORI (every phrase a plain single term, no NEAR): dfs come from the
+  postings table's own (term, df) columns before the scan, so each shard
+  scores and emits only its top-k — block-max WAND for pure conjunctions,
+  exhaustive scoring for OR/NOT trees.
+- SENTINEL (phrase / prefix / NEAR / anchor): per-phrase df is only known
+  after matching, so shards emit matched rows (doc_id, dl, visible-tf
+  vector) plus one df-sentinel row. The driver sums the sentinels of the
+  persisted output, then each partition scores its rows and keeps k per
+  query — untruncated matches never reach the driver.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -32,12 +35,53 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analyzer import tokenize, unicode61_tokens
 from .index_build import INDEX_FORMAT, shard_of, table_dir
-from .query.parser import Node, Phrase, QuerySyntaxError, parse_query
-from .query.scorer import K1, B, bm25_scores, idf_of, score_shard, wand_shard_topk
+from .query.parser import Node, Phrase, parse_query
+from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 
 RESULT_SCHEMA = (
     "doc_id long, part int, title string, text string, base_name string, score double"
 )
+BATCH_SCHEMA = "query_id int, doc_id long, score double, rank int"
+# one shard-function row is a scored hit (score), a matched hit awaiting
+# idf (dl, vis) or a df sentinel (dfs)
+SHARD_SCHEMA = (
+    "query_id int, doc_id long, score double, dl long, vis array<long>, dfs array<long>"
+)
+SCORED_SCHEMA = "query_id int, doc_id long, score double"
+
+
+@dataclass
+class _Query:
+    """One plan entry. ``idfs`` is set iff the query's dfs are known a
+    priori; ``None`` sends it down the df-sentinel path."""
+
+    qid: int
+    tree: Node
+    phrases: list[Phrase]
+    idfs: np.ndarray | None
+
+
+def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
+    """The one top-k rule: best k by (score asc = best BM25 first, doc_id
+    asc). Shard-local, partition-local and driver-side truncation all use
+    it, so every path keeps the same members of a score plateau crossing
+    the k boundary (tests/test_boundary_ties.py)."""
+    order = np.lexsort((doc_ids, scores))[:k]
+    return doc_ids[order], scores[order]
+
+
+def _frame(qid: int, doc_ids, scores=np.nan, dls=0, vis=None, dfs=None) -> pd.DataFrame:
+    n = len(doc_ids)
+    return pd.DataFrame(
+        {
+            "query_id": np.full(n, qid, dtype=np.int32),
+            "doc_id": np.asarray(doc_ids, dtype=np.int64),
+            "score": scores,
+            "dl": dls,
+            "vis": np.full(n, None) if vis is None else vis,
+            "dfs": np.full(n, None) if dfs is None else dfs,
+        }
+    )
 
 
 class SearchEngine:
@@ -57,33 +101,26 @@ class SearchEngine:
         # versioned-root commit): this engine is bound to one complete
         # epoch snapshot for its lifetime
         self.epoch = int(st["epoch"])
+        # ... and to its committed segments: a crashed or in-flight refresh
+        # leaves segment=n_segments on disk, whose postings would inflate df
+        # while n_docs leaves its docs out (a free partition filter)
+        self.n_segments = int(st["n_segments"])
+        committed = F.col("segment") < self.n_segments
         self._postings = spark.read.parquet(
             table_dir(index_dir, "postings", self.epoch)
-        )
-        # The term dictionary is every query's first hop (df lookup). It is
-        # the postings table's own (term, df) metadata columns — format 6
-        # materializes no separate term_stats table — read pruned: term is
-        # the sort key within each postings file, so parquet row-group
-        # min/max stats prune In/StartsWith exactly like the scoring scan's
-        # predicate. At web scale this is the RIGHT shape too: each
-        # executor's dictionary rows live beside its shards (no global
-        # vocabulary table to build, ship, or refresh), and the driver sums
-        # the ≤ shards×terms returned rows.
+        ).filter(committed)
+        # The term dictionary (df lookup) is the postings table's own
+        # (term, df) columns, read pruned: term is the sort key within each
+        # postings file, so row-group stats prune like the scoring scan's
+        # predicate — no global vocabulary table to build, ship or refresh.
         self._dict = self._postings.select("term", "df")
         self._doc_text = spark.read.parquet(
             table_dir(index_dir, "doc_text", self.epoch)
-        )
-        # the narrow doc catalog == column-pruned doc_text (text chunks are
-        # never read; same partition pruning the former table had)
-        self._documents = self._doc_text.drop("text")
-        # Driver-side df cache. An engine is bound to one index snapshot
-        # (Spark caches the parquet file listing at first action; a refresh
-        # needs a new SearchEngine), so term→df results are immutable for
-        # this engine's lifetime — repeated query vocabulary skips the
-        # dictionary job entirely. Prefixes are deliberately NOT expanded
-        # driver-side: expansion happens per shard against the pruned scan
-        # (scorer.score_shard), so `a*` over a web-scale vocabulary never
-        # materializes millions of terms on the driver.
+        ).filter(committed)
+        # Driver-side df cache: an engine is bound to one snapshot, so
+        # term→df never changes and repeated vocabulary skips the dictionary
+        # job. Prefixes are never expanded driver-side: expansion happens
+        # per shard against the pruned scan (scorer.score_shard).
         self._df_cache: dict[str, int] = {}
 
     def _dfs_of(self, terms: list[str]) -> dict[str, int]:
@@ -129,7 +166,136 @@ class SearchEngine:
             cond = cond | F.col("term").startswith(pref)
         return cond
 
+    def _shard_pass(
+        self,
+        parsed: list[tuple[int, Node, list[Phrase]]],
+        k: int,
+        book_ids: list[int] | None = None,
+    ) -> tuple[DataFrame | None, list[_Query]]:
+        """Plan ``parsed`` (query_id, tree, phrases) triples and return the
+        one shard-function DataFrame (SHARD_SCHEMA) with its plan, or
+        (None, plan) when no query can touch postings.
+
+        Per plan entry, each shard emits: for an a-priori pure conjunction,
+        its block-max WAND top-k; for any other a-priori query, its
+        exhaustively scored top-k; otherwise its matched (doc_id, dl, vis)
+        rows plus one df-sentinel row. ``book_ids`` (the Q6 doc subset)
+        filters hits, never dfs."""
+        cond = self._scan_predicate([p for _, _, ps in parsed for p in ps])
+        # ONE dictionary lookup for every a-priori query's terms
+        a_priori = [(qid, ps) for qid, tree, ps in parsed if _is_a_priori(tree, ps)]
+        dfs = self._dfs_of(sorted({p.terms[0] for _, ps in a_priori for p in ps}))
+        idfs = {
+            qid: np.array([idf_of(dfs[p.terms[0]], self.n_docs) for p in ps])
+            for qid, ps in a_priori
+        }
+        plan = [_Query(qid, tree, ps, idfs.get(qid)) for qid, tree, ps in parsed]
+        if cond is None:
+            return None, plan
+        n_docs, avgdl = self.n_docs, self.avgdl
+        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
+
+        def shard_rows(pdf: pd.DataFrame, q: _Query):
+            if q.idfs is not None and tree_is_pure_and(q.tree):
+                res = wand_shard_topk(
+                    pdf, [p.terms[0] for p in q.phrases], q.idfs, avgdl, k, books
+                )
+                if res is not None:
+                    yield _frame(q.qid, res[0], scores=res[1])
+                return
+            res = score_shard(pdf, q.tree, q.phrases, {}, n_docs, avgdl, None, k)
+            if res is None:
+                return
+            matched, mdl, mvis, local_dfs = res
+            if books is not None:
+                sel = np.isin(matched, books)
+                matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
+            if q.idfs is None:
+                yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
+                dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
+                yield _frame(q.qid, [0], dfs=[dfs_row])
+            elif len(matched):
+                ids, scores = _topk(matched, bm25_scores(mvis, mdl, q.idfs, avgdl), k)
+                yield _frame(q.qid, ids, scores=scores)
+
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            outs = [out for q in plan for out in shard_rows(pdf, q)]
+            return pd.concat(outs, ignore_index=True) if outs else _frame(0, [])
+
+        scored = self._postings.filter(cond).groupBy("shard").applyInPandas(
+            fn, schema=SHARD_SCHEMA
+        )
+        return scored, plan
+
     # ---- execution ----------------------------------------------------
+
+    def _execute(
+        self,
+        parsed: list[tuple[int, Node, list[Phrase]]],
+        k: int,
+        book_ids: list[int] | None = None,
+    ) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        """{query_id: (doc_ids, scores)} — each query's top-k ordered by
+        (score asc, doc_id asc); queries without a hit are absent."""
+        shard_out, plan = self._shard_pass(parsed, k, book_ids)
+        if shard_out is None:
+            return {}
+        if all(q.idfs is not None for q in plan):
+            # every shard already emitted scored top-k rows: one collect
+            rows = shard_out.select("query_id", "doc_id", "score").collect()
+        else:
+            shard_out = shard_out.persist()
+            try:
+                rows = self._score_matches(shard_out, k).collect()
+            finally:
+                shard_out.unpersist()
+        by_q: dict[int, tuple[list, list]] = {}
+        for r in rows:
+            ids, scores = by_q.setdefault(r["query_id"], ([], []))
+            ids.append(r["doc_id"])
+            scores.append(r["score"])
+        return {
+            qid: _topk(np.array(ids, dtype=np.int64), np.array(scores), k)
+            for qid, (ids, scores) in by_q.items()
+        }
+
+    def _score_matches(self, shard_out: DataFrame, k: int) -> DataFrame:
+        """Sentinel path over the persisted shard output: sum the df
+        sentinels driver-side (≤ shards×queries rows, no shuffle), then
+        score each partition's matched rows and keep its top-k per query.
+        Pre-scored a-priori rows pass through the same truncation."""
+        dfs: dict[int, np.ndarray] = {}
+        for r in shard_out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect():
+            dfs[r["query_id"]] = dfs.get(r["query_id"], 0) + np.array(r["dfs"])
+        idfs = {
+            qid: np.array([idf_of(int(df), self.n_docs) for df in q_dfs])
+            for qid, q_dfs in dfs.items()
+        }
+        avgdl = self.avgdl
+
+        def fn(batches):
+            best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+            for pdf in batches:
+                for qid, g in pdf.groupby("query_id", sort=False):
+                    qid = int(qid)
+                    ids = g["doc_id"].to_numpy()
+                    if qid in idfs:
+                        vis = np.stack(g["vis"].to_numpy())
+                        scores = bm25_scores(vis, g["dl"].to_numpy(), idfs[qid], avgdl)
+                    else:
+                        scores = g["score"].to_numpy()
+                    if qid in best:
+                        ids = np.concatenate([best[qid][0], ids])
+                        scores = np.concatenate([best[qid][1], scores])
+                    best[qid] = _topk(ids, scores, k)
+            for qid, (ids, scores) in best.items():
+                yield pd.DataFrame(
+                    {"query_id": np.int32(qid), "doc_id": ids, "score": scores}
+                )
+
+        return shard_out.filter(F.col("dfs").isNull()).mapInPandas(
+            fn, schema=SCORED_SCHEMA
+        )
 
     def search(
         self,
@@ -146,403 +312,77 @@ class SearchEngine:
         spark = self.spark
         if not query or not query.strip():
             return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
         tree, phrases = self._plan(query)
-        cond = self._scan_predicate(phrases) if tree is not None else None
-        if cond is None:
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
-        postings = self._postings.filter(cond)
-
-        fast = all(
-            len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
-            for p in phrases
-        ) and tree_has_no_near(tree)
-
-        if fast:
-            scored = self._run_fast(postings, tree, phrases, k, book_ids)
-        else:
-            scored = self._run_general(postings, tree, phrases, k, book_ids)
-
-        topk_rows = (
-            scored.orderBy(F.col("score").asc(), F.col("doc_id").asc()).limit(k).collect()
-        )
-        if not topk_rows:
+        hits = self._execute([(0, tree, phrases)], k, book_ids) if tree is not None else {}
+        if 0 not in hits:
             return spark.createDataFrame([], schema=RESULT_SCHEMA)
 
         # Result assembly over ≤k rows in ONE point-lookup job. Literal id +
         # shard filters push down to parquet (partition pruning on shard,
         # row-group stats pruning on doc_id) — never a join whose OTHER side
-        # is a full table scan: broadcasting `documents` or shuffling
-        # `doc_text` against a ≤200-row result is exactly the plan that dies
-        # at 10^12 docs. The snippet path reads doc_text (which carries
-        # base_name precisely so this stays one lookup); the no-snippet path
-        # reads the same store column-pruned (text chunks untouched).
-        ids = [int(r["doc_id"]) for r in topk_rows]
-        scores = [float(r["score"]) for r in topk_rows]
+        # is a full table scan, the plan that dies at 10^12 docs. doc_text
+        # carries base_name so this stays one lookup; without snippets the
+        # text chunks are pruned away.
+        ids, scores = (a.tolist() for a in hits[0])
         shards = sorted({shard_of(i, self.n_shards) for i in ids})
         pruned = F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
+        cols = ["doc_id", "base_name"] + (["text"] if with_snippets else [])
+        found = {
+            int(r["doc_id"]): r
+            for r in self._doc_text.filter(pruned).select(*cols).collect()
+        }
         if with_snippets:
-            rows = (
-                self._doc_text.filter(pruned)
-                .select("doc_id", "base_name", "text")
-                .collect()
-            )
-            meta = {int(r["doc_id"]): r["base_name"] for r in rows}
-            texts = {int(r["doc_id"]): r["text"] for r in rows}
-            # snippets are a ≤k-row presentation concern — driver-side pandas,
-            # not a cluster stage (reference computes them per emitted row too)
+            # snippets are a ≤k-row presentation concern — driver-side, not
+            # a cluster stage (reference computes them per emitted row too)
             titles, bodies = self._snippet_pair(
-                [texts.get(i, "") for i in ids], tree, phrases, {}
+                [found[i]["text"] if i in found else "" for i in ids], tree, phrases
             )
         else:
-            meta = {
-                int(r["doc_id"]): r["base_name"]
-                for r in self._documents.filter(pruned)
-                .select("doc_id", "base_name")
-                .collect()
-            }
-            titles = [""] * len(ids)
-            bodies = [""] * len(ids)
+            titles = bodies = [""] * len(ids)
         out_pdf = pd.DataFrame(
             {
                 "doc_id": pd.Series(ids, dtype="int64"),
                 "part": np.int32(0),
                 "title": titles,
                 "text": bodies,
-                "base_name": [meta.get(i) for i in ids],
+                "base_name": [found[i]["base_name"] if i in found else None for i in ids],
                 "score": pd.Series(scores, dtype="float64"),
             }
         )
         return spark.createDataFrame(out_pdf, schema=RESULT_SCHEMA)
-
-    def _run_fast(self, postings, tree, phrases, k, book_ids):
-        """dfs known a priori → shard-local scoring + per-shard top-k.
-
-        Pure conjunctions (the dominant query shape) additionally run
-        block-max WAND: block metadata prunes postings blocks that cannot
-        beat the shard's bounded min-heap, so their bytes are never decoded
-        (north_rule; SURVEY.md §2.5 Q2). Boolean trees with OR/NOT score
-        exhaustively — visible-tf semantics there need every candidate.
-        Results are identical either way (tests/test_search.py A/B)."""
-        term_list = sorted({p.terms[0] for p in phrases})
-        df_rows = self._dfs_of(term_list)
-        idfs = np.array(
-            [idf_of(df_rows.get(p.terms[0], 0), self.n_docs) for p in phrases]
-        )
-        n_docs, avgdl = self.n_docs, self.avgdl
-        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
-        use_wand = tree_is_pure_and(tree)
-        phrase_terms = [p.terms[0] for p in phrases]
-        empty = lambda: pd.DataFrame(  # noqa: E731
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if use_wand:
-                res = wand_shard_topk(pdf, phrase_terms, idfs, avgdl, k, books)
-                if res is None:
-                    return empty()
-                doc_ids, scores = res
-                return pd.DataFrame({"doc_id": doc_ids, "score": scores})
-            res = score_shard(pdf, tree, phrases, {}, n_docs, avgdl, None, k)
-            if res is None:
-                return empty()
-            matched, mdl, mvis, _ = res
-            if books is not None:
-                sel = np.isin(matched, books)
-                matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-                if len(matched) == 0:
-                    return empty()
-            scores = bm25_scores(mvis, mdl, idfs, avgdl)
-            if len(scores) > k:
-                # tie-deterministic truncation: argpartition alone keeps
-                # ARBITRARY members of a score plateau crossing the k
-                # boundary, making this path disagree with the batch path
-                # on boundary docs (tests/test_boundary_ties.py). Order by
-                # (score, doc_id) — the same total order as the global
-                # reduce — so every path picks identical tie members.
-                order = np.lexsort((matched, scores))[:k]
-                matched, scores = matched[order], scores[order]
-            return pd.DataFrame({"doc_id": matched, "score": scores})
-
-        return postings.groupBy("shard").applyInPandas(fn, schema="doc_id long, score double")
-
-    def _run_general(self, postings, tree, phrases, k, book_ids):
-        """Match pass emits rows + df sentinels; scoring is a codegen'd
-        Spark expression after the tiny df reduce. Prefix phrases expand
-        per shard inside score_shard (no driver-side expansion)."""
-        P = len(phrases)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="int64"),
-                    "dl": pd.Series(dtype="int64"),
-                    "vis": pd.Series(dtype="object"),
-                    "dfs": pd.Series(dtype="object"),
-                    "is_stats": pd.Series(dtype="bool"),
-                }
-            )
-            res = score_shard(pdf, tree, phrases, {}, n_docs, avgdl, None, k)
-            if res is None:
-                return empty
-            matched, mdl, mvis, local_dfs = res
-            if books is not None:
-                sel = np.isin(matched, books)
-                matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-            rows = pd.DataFrame(
-                {
-                    "doc_id": matched,
-                    "dl": mdl,
-                    "vis": list(mvis),
-                    "dfs": [None] * len(matched),
-                    "is_stats": False,
-                }
-            )
-            stats = pd.DataFrame(
-                {
-                    "doc_id": [0],
-                    "dl": [0],
-                    "vis": [None],
-                    "dfs": [[int(local_dfs.get(i, 0)) for i in range(P)]],
-                    "is_stats": True,
-                }
-            )
-            return pd.concat([rows, stats], ignore_index=True)
-
-        out = postings.groupBy("shard").applyInPandas(
-            fn,
-            schema="doc_id long, dl long, vis array<long>, dfs array<long>, is_stats boolean",
-        )
-        out = out.persist()
-        try:
-            df_rows = (
-                out.filter(F.col("is_stats"))
-                .select(F.posexplode("dfs").alias("pos", "df"))
-                .groupBy("pos")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            dfs_total = {r["pos"]: int(r["df"]) for r in df_rows}
-            idfs = [idf_of(dfs_total.get(i, 0), self.n_docs) for i in range(P)]
-
-            idf_arr = "array({})".format(",".join(f"{v!r}D" for v in idfs))
-            score_expr = (
-                f"-aggregate(zip_with(vis, {idf_arr}, (t, f) -> "
-                f"CASE WHEN t > 0 THEN f * t * {K1 + 1.0}D / "
-                f"(t + {K1}D * ({1.0 - B}D + {B}D * dl / {self.avgdl}D)) "
-                f"ELSE 0D END), 0D, (a, x) -> a + x)"
-            )
-            scored = (
-                out.filter(~F.col("is_stats"))
-                .withColumn("score", F.expr(score_expr))
-                .select("doc_id", "score")
-            )
-            # materialize top-k before unpersisting the match pass
-            result = scored.orderBy(F.col("score").asc(), F.col("doc_id").asc()).limit(k)
-            rows = result.collect()
-        finally:
-            out.unpersist()
-        return self.spark.createDataFrame(rows, schema="doc_id long, score double") if rows else self.spark.createDataFrame([], schema="doc_id long, score double")
-
-    # ---- batched execution --------------------------------------------
 
     def search_batch(self, queries: list[str], k: int = 10) -> DataFrame:
         """Evaluate MANY queries in ONE shard-scan job.
 
         Returns (query_id int, doc_id long, score double, rank int), rank
         1..k per query by (score asc = best BM25 first, doc_id asc) — the
-        same per-query results as ``search`` (rank-identity tested), but all
-        driver-side planning collapses to one dictionary lookup and all
+        same per-query results as ``search`` (both run ``_execute``), but
+        all driver-side planning collapses to one dictionary lookup and all
         matching/scoring to one pass over postings. Per-query latency on
         Spark is dominated by job-scheduling fixed costs; batching is how a
         query workload actually runs at cluster scale. Empty queries yield
         no rows; grammar errors raise (reference 400 behavior).
         """
-        spark = self.spark
-        parsed: list[tuple[int, Node, list[Phrase]]] = []
-        all_terms: set[str] = set()
-        prefixes: set[str] = set()
+        parsed = []
         for qid, q in enumerate(queries):
             if not q or not q.strip():
                 continue
-            tree, phrases = parse_query(q, tokenize, unicode61_tokens)
-            if tree is None:
-                continue  # query pruned to nothing (e.g. '""') — no rows
-            parsed.append((qid, tree, phrases))
-            for p in phrases:
-                if p.col == "unindexed":
-                    continue
-                if p.prefix:
-                    all_terms.update(p.terms[:-1])
-                    prefixes.add(p.terms[-1])
-                else:
-                    all_terms.update(p.terms)
-        if not parsed:
-            return spark.createDataFrame(
-                [], schema="query_id int, doc_id long, score double, rank int"
-            )
-
-        # ONE dictionary lookup for every query's EXACT terms (df → a-priori
-        # idfs for the WAND-able queries). Prefixes never touch the driver:
-        # they push startswith predicates into the scan and expand per shard
-        # inside score_shard.
-        df_map = self._dfs_of(sorted(all_terms)) if all_terms else {}
-
-        cond = F.col("term").isin(sorted(all_terms)) if all_terms else F.lit(False)
-        for pref in sorted(prefixes):
-            cond = cond | F.col("term").startswith(pref)
-        postings = self._postings.filter(cond)
-        # plan entry: (qid, tree, phrases, expansions, P, wand_idfs|None) —
-        # pure conjunctions of plain terms run block-max WAND per shard and
-        # emit only their per-shard top-k (scored); the rest emit matches +
-        # df sentinels and score in the codegen'd expression below.
-        plan = []
-        for qid, tree, phrases in parsed:
-            fast = all(
-                len(p.terms) == 1 and not p.prefix and not p.anchored
-                and p.col != "unindexed"
-                for p in phrases
-            ) and tree_is_pure_and(tree)
-            wand_idfs = (
-                np.array(
-                    [idf_of(df_map.get(p.terms[0], 0), self.n_docs) for p in phrases]
-                )
-                if fast
-                else None
-            )
-            plan.append((qid, tree, phrases, {}, len(phrases), wand_idfs))
-        n_docs, avgdl = self.n_docs, self.avgdl
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, tree, phrases, exp, P, wand_idfs in plan:
-                if wand_idfs is not None:
-                    res = wand_shard_topk(
-                        pdf, [p.terms[0] for p in phrases], wand_idfs, avgdl, k
-                    )
-                    if res is None:
-                        continue
-                    doc_ids, scores = res
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.int32(qid),
-                                "doc_id": doc_ids,
-                                "dl": np.int64(0),
-                                "vis": [None] * len(doc_ids),
-                                "dfs": [None] * len(doc_ids),
-                                "is_stats": False,
-                                "score": scores,
-                            }
-                        )
-                    )
-                    continue
-                res = score_shard(pdf, tree, phrases, exp, n_docs, avgdl, None, 0)
-                if res is None:
-                    continue
-                matched, mdl, mvis, local_dfs = res
-                rows = pd.DataFrame(
-                    {
-                        "query_id": np.int32(qid),
-                        "doc_id": matched,
-                        "dl": mdl,
-                        "vis": list(mvis),
-                        "dfs": [None] * len(matched),
-                        "is_stats": False,
-                        "score": np.nan,
-                    }
-                )
-                stats = pd.DataFrame(
-                    {
-                        "query_id": np.int32(qid),
-                        "doc_id": np.int64(0),
-                        "dl": np.int64(0),
-                        "vis": [None],
-                        "dfs": [[int(local_dfs.get(i, 0)) for i in range(P)]],
-                        "is_stats": True,
-                        "score": np.nan,
-                    }
-                )
-                outs.append(rows)
-                outs.append(stats)
-            if not outs:
-                return pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int32"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "dl": pd.Series(dtype="int64"),
-                        "vis": pd.Series(dtype="object"),
-                        "dfs": pd.Series(dtype="object"),
-                        "is_stats": pd.Series(dtype="bool"),
-                        "score": pd.Series(dtype="float64"),
-                    }
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        matched = postings.groupBy("shard").applyInPandas(
-            fn,
-            schema=(
-                "query_id int, doc_id long, dl long, vis array<long>, "
-                "dfs array<long>, is_stats boolean, score double"
-            ),
-        )
-        matched = matched.persist()
-        try:
-            df_rows = (
-                matched.filter(F.col("is_stats"))
-                .select("query_id", F.posexplode("dfs").alias("pos", "df"))
-                .groupBy("query_id", "pos")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            dfs_by_q: dict[int, dict[int, int]] = {}
-            for r in df_rows:
-                dfs_by_q.setdefault(r["query_id"], {})[r["pos"]] = int(r["df"])
-            idf_rows = [
-                (qid, [idf_of(dfs_by_q.get(qid, {}).get(i, 0), n_docs) for i in range(P)])
-                for qid, _t, _p, _e, P, wand_idfs in plan
-                if wand_idfs is None
-            ]
-            idf_df = self.spark.createDataFrame(
-                idf_rows, schema="query_id int, idfs array<double>"
-            )
-            score_expr = (
-                f"-aggregate(zip_with(vis, idfs, (t, f) -> "
-                f"CASE WHEN t > 0 THEN f * t * {K1 + 1.0}D / "
-                f"(t + {K1}D * ({1.0 - B}D + {B}D * dl / {self.avgdl}D)) "
-                f"ELSE 0D END), 0D, (a, x) -> a + x)"
-            )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("score").asc(), F.col("doc_id").asc()
-            )
-            out = (
-                matched.filter(~F.col("is_stats"))
-                .join(F.broadcast(idf_df), "query_id", "left")
-                # WAND rows arrive pre-scored; sentinel-path rows score here
-                .withColumn("score", F.coalesce(F.col("score"), F.expr(score_expr)))
-                .select("query_id", "doc_id", "score")
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-            )
-            rows = out.collect()
-        finally:
-            matched.unpersist()
-        return spark.createDataFrame(
-            rows, schema="query_id int, doc_id long, score double, rank int"
-        ) if rows else spark.createDataFrame(
-            [], schema="query_id int, doc_id long, score double, rank int"
-        )
+            tree, phrases = self._plan(q)
+            if tree is not None:  # a query pruned to nothing ('""') has no rows
+                parsed.append((qid, tree, phrases))
+        rows = [
+            (qid, d, s, rank)
+            for qid, (ids, scores) in sorted(self._execute(parsed, k).items())
+            for rank, (d, s) in enumerate(zip(ids.tolist(), scores.tolist()), start=1)
+        ]
+        # a local pandas frame (arrow): collecting it runs no Spark job
+        pdf = pd.DataFrame(rows, columns=["query_id", "doc_id", "score", "rank"])
+        return self.spark.createDataFrame(pdf, schema=BATCH_SCHEMA)
 
     # ---- snippets ------------------------------------------------------
 
     def _snippet_pair(
-        self, texts: list[str], tree, phrases, expansions
+        self, texts: list[str], tree, phrases
     ) -> tuple[list[str], list[str]]:
         """FTS5 snippet(…,16) titles + snippet(…,60) bodies for ≤k texts,
         computed driver-side (Q7 runs only over emitted rows). Per doc, only
@@ -552,7 +392,7 @@ class SearchEngine:
         d)."""
         from .query.snippet import make_snippet, phrase_slot_table, snippet_plan
 
-        slots_list, anchored = phrase_slot_table(phrases, expansions)
+        slots_list, anchored = phrase_slot_table(phrases, {})
         titles: list[str] = []
         bodies: list[str] = []
         for text in texts:
@@ -561,6 +401,15 @@ class SearchEngine:
             titles.append(make_snippet(text, fs, fa, 16, per_phrase=fi))
             bodies.append(make_snippet(text, fs, fa, 60, per_phrase=fi))
         return titles, bodies
+
+
+def _is_a_priori(tree: Node, phrases: list[Phrase]) -> bool:
+    """Every phrase is a plain single term and the tree has no NEAR: the
+    query's dfs are dictionary lookups, known before the scan."""
+    return tree_has_no_near(tree) and all(
+        len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
+        for p in phrases
+    )
 
 
 def tree_has_no_near(node: Node) -> bool:

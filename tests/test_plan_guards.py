@@ -69,23 +69,28 @@ def test_point_lookup_prunes_shard_partition(engine):
 
 
 def test_fts_query_plan_has_no_exchange_before_scoring(engine):
-    """The fast path is scan → (shard-grouped) score → top-k: the only wide
-    node allowed between the postings scan and the python scorer is the
-    groupBy("shard") exchange, whose payload is <= n_query_terms rows per
-    shard — never a second full-width shuffle."""
-    scored = engine._run_fast(
-        engine._postings.filter(F.col("term").isin(["renal", "failure"])),
-        *_tiny_tree(engine, "renal failure"),
-        200,
-        None,
-    )
-    plan = _executed_plan(scored)
-    assert plan.count("Exchange") <= 1, plan
-
-
-def _tiny_tree(engine, q):
-    tree, phrases = engine._plan(q)
-    return tree, phrases
+    """Both executor paths are scan → (shard-grouped) match+score: the only
+    wide node allowed between the postings scan and the python scorer is
+    the groupBy("shard") exchange, whose payload is <= n_query_terms rows
+    per shard — never a second full-width shuffle. 'renal failure' scores
+    a priori (WAND) inside the shard function; the phrase takes the
+    df-sentinel path, whose partition-local scoring over the persisted
+    match output must add no exchange above the cache."""
+    for q in ("renal failure", '"renal failure"'):
+        tree, phrases = engine._plan(q)
+        shard_out, plan = engine._shard_pass([(0, tree, phrases)], 200)
+        text = _executed_plan(shard_out)
+        assert text.count("Exchange") <= 1, (q, text)
+        if plan[0].idfs is not None:
+            continue
+        shard_out = shard_out.persist()
+        try:
+            text = _executed_plan(engine._score_matches(shard_out, 200))
+        finally:
+            shard_out.unpersist()
+        above_cache = text.partition("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in above_cache, (q, text)
+        assert "Exchange" not in above_cache, (q, text)
 
 
 # ---- entry queries ------------------------------------------------------

@@ -249,6 +249,60 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     _sh.rmtree(side, ignore_errors=True)
 
 
+def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
+    """Snapshot isolation across a refresh crash: a refresh killed at its
+    commit point (stats write) has already written its segment's doc_text
+    and postings partitions. A reader opened afterwards must not see them —
+    same docs and bit-identical scores (so idf is unchanged) as a reader of
+    the pre-refresh snapshot. The rerun then commits the segment."""
+    from pdfsearch_spark import index_build
+    from pdfsearch_spark.index_build import table_dir
+
+    side = REFRESH_INDEX_DIR + "_crash"
+    pages = corpus.web_pages_df(spark, N_DOCS, partitions=8)
+    cutoff = corpus_pdf["warc_ts"].quantile(0.5)
+    shutil.rmtree(side, ignore_errors=True)
+    build_index(
+        spark,
+        pages.filter(F.col("warc_ts") <= F.lit(cutoff)),
+        side,
+        n_shards=N_SHARDS,
+    )
+
+    def results():
+        eng = SearchEngine(spark, side)
+        out = {}
+        for q in SHAPES:
+            rows = eng.search(q, k=50, with_snippets=False).collect()
+            out[q] = sorted((r["doc_id"], r["score"]) for r in rows)
+        return out
+
+    before = results()
+    assert any(before.values())
+
+    real_write_stats = index_build._write_stats
+
+    def _boom(*a, **k):
+        raise RuntimeError("simulated crash before stats commit")
+
+    index_build._write_stats = _boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            refresh_index(spark, pages, side)
+    finally:
+        index_build._write_stats = real_write_stats
+
+    # the uncommitted segment's data is on disk, and readers ignore it
+    for tbl in ("postings", "doc_text"):
+        assert os.path.isdir(os.path.join(table_dir(side, tbl), "segment=1")), tbl
+    assert results() == before
+
+    res = refresh_index(spark, pages, side)
+    assert res["segment"] == 1
+    assert SearchEngine(spark, side).n_docs == N_DOCS
+    shutil.rmtree(side, ignore_errors=True)
+
+
 def test_compaction_preserves_results(spark, oracle, refreshed):
     from pdfsearch_spark.index_build import table_dir
 
