@@ -23,10 +23,19 @@ refresh) a fixed-tail Spark job that Amdahl-floored scaling efficiency
   write job per build/refresh and one rewrite per compaction.
 - ``term_stats`` (term → global df/cf, for idf) == sum over the postings
   table's own (term, df, cf) metadata columns. Query-side df lookup is a
-  pruned postings scan (term is the sort key within each file, so row-group
-  min/max stats prune In/StartsWith) summed driver-side over ≤ shards×terms
-  rows — no job writes the vocabulary, and a segment refresh no longer pays
-  a full-vocabulary groupBy: refresh cost is O(batch), not O(vocab).
+  column-pruned postings scan — only the term and df column chunks of the
+  committed files are read, blobs never — summed driver-side over
+  ≤ shards×terms rows. Terms are NOT sorted within a postings file (they
+  come in the encoder's first-appearance order), so row-group min/max stats
+  rarely prune that scan. No job writes the vocabulary, and a segment
+  refresh no longer pays a full-vocabulary groupBy: refresh cost is
+  O(batch), not O(vocab).
+
+Postings are a pure function of ``doc_text``, and ONE writer produces them:
+build, refresh and compaction all write doc_text through
+``_write_doc_text`` and encode a segment's postings from it through
+``_encode_postings``. Compaction is a one-segment rebuild from the
+committed doc_text.
 
 Scale design (the part that must survive 1000 executors × 100 TB):
 
@@ -99,17 +108,6 @@ def table_dir(out_dir: str, tbl: str, epoch: int = 0) -> str:
     the new complete epoch, never a half-swapped directory. Old epochs are
     GC'd only after the commit."""
     return os.path.join(out_dir, tbl if epoch == 0 else f"{tbl}.v{epoch}")
-
-TERMROW_SCHEMA = StructType(
-    [
-        StructField("shard", IntegerType()),
-        StructField("doc_id", LongType()),
-        StructField("term", StringType()),
-        StructField("tf", IntegerType()),
-        StructField("dl", IntegerType()),
-        StructField("positions", ArrayType(IntegerType())),
-    ]
-)
 
 DOCROW_SCHEMA = StructType(
     [
@@ -353,20 +351,6 @@ def extract_documents_sharded(pages_with_ids: DataFrame) -> DataFrame:
     return pages_with_ids.mapInPandas(fn, schema=DOCROW_SCHEMA)
 
 
-def extract_documents(pages: DataFrame, n_shards: int) -> DataFrame:
-    """Narrow (no shuffle, no dedup) ids+extract composition — kept as the
-    standalone extraction API; the build/refresh hot paths instead shuffle
-    raw pages first and use extract_documents_sharded so extraction lands
-    AFTER the exchange, fused with dedup."""
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    return ids_and_shards(pages, n_shards).mapInPandas(fn, schema=DOCROW_SCHEMA)
-
-
 class _ShardMetricsParam(AccumulatorParam):
     """Sums {shard: [sec, n_postings, n_terms, postings_bytes, pos_bytes]}."""
 
@@ -493,54 +477,107 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
     return fn
 
 
-def encode_shard_postings(avgdl: float, metrics_acc=None, segment: int = 0):
-    """applyInPandas body: one shard's flat (doc,term) TERMROW_SCHEMA rows →
-    encoded posting rows. This is the COMPACTION re-encode path
-    (decoded_term_rows); fresh builds and refreshes use
-    encode_docs_partitions, which never materializes per-term rows.
+def _write_doc_text(docs: DataFrame, path: str, segment: int) -> dict:
+    """Write DOCROW rows as segment ``segment`` of the doc store at ``path``
+    (dynamic partition overwrite of its (segment, shard) partitions) and
+    return the segment's corpus stats: ``n_docs``, ``n_tokens`` and
+    ``watermark`` (max warc_ts). The stats are OBSERVED on the write itself
+    (CollectMetrics merges from successfully-committed tasks), so no
+    separate stats job or second pass over the text is needed. ``docs`` is
+    expected shard-clustered, so each task writes one file per shard."""
+    obs = Observation("doc_text")
+    docs.withColumn("segment", F.lit(segment)).observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").alias("n_tokens"),
+        F.max("warc_ts").alias("watermark"),
+    ).write.partitionBy("segment", "shard").mode("overwrite").parquet(path)
+    return obs.get
 
-    ``metrics_acc`` (optional): a dict-summing accumulator fed
-    ``{shard: [encode_sec, n_postings, n_terms, postings_bytes,
-    positions_bytes]}`` per group — per-partition build metrics measured at
-    the source instead of re-scanning blob columns afterwards (a blob-length
-    scan would read every posting byte back at 100 TB scale). Task retries
-    double-count; metrics are throughput evidence, not invariants.
-    """
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .codec import encode_shard_frame
+def _encode_postings(
+    spark: SparkSession, store: DataFrame, path: str, segment: int, avgdl: float
+) -> dict:
+    """Encode segment ``segment`` of the doc store into the postings table at
+    ``path``, entirely map-side, with block bounds against ``avgdl``.
 
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in POSTING_SCHEMA.fields])
-        t0 = time.perf_counter()
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values(["term", "doc_id"], kind="stable")
-        cols = encode_shard_frame(
-            pdf["term"].to_numpy(),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["dl"].to_numpy(np.int64),
-            pdf["positions"].tolist(),
-            avgdl,
+    A pruned (shard, doc_id, text) re-read of the shard-clustered ``store``,
+    pinned to whole-file tasks so partition == shard exactly (one posting
+    row per (segment, shard, term)); tokenize → aggregate → encode runs in a
+    single mapInPandas (encode_docs_partitions), no shuffle, and the
+    per-term payload never crosses an Arrow boundary. Returns the per-shard
+    encode metrics ``{shard: [sec, n_postings, n_terms, postings_bytes,
+    positions_bytes]}``, measured at the source by accumulator (task retries
+    double-count; they are throughput evidence, not invariants)."""
+    acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
+    with _whole_file_scans(spark):
+        (
+            store.filter(F.col("segment") == segment)
+            .select("shard", "doc_id", "text")
+            .mapInPandas(
+                encode_docs_partitions(avgdl, acc, segment), schema=POSTING_SCHEMA
+            )
+            .write.partitionBy("segment", "shard")
+            .mode("overwrite")
+            .parquet(path)
         )
-        n_postings = len(pdf)
-        out = pd.DataFrame(cols)
-        out.insert(0, "shard", shard)
-        out.insert(0, "segment", np.int32(segment))
-        out["enc_avgdl"] = float(avgdl)
-        if metrics_acc is not None:
-            pbytes = int(
-                sum(len(b) for b in cols["doc_blob"])
-                + sum(len(b) for b in cols["tf_blob"])
-                + sum(len(b) for b in cols["dl_blob"])
-            )
-            qbytes = int(sum(len(b) for b in cols["pos_blob"]))
-            metrics_acc.add(
-                {shard: [time.perf_counter() - t0, n_postings, len(out), pbytes, qbytes]}
-            )
-        return out[[f.name for f in POSTING_SCHEMA.fields]]
+    return dict(acc.value)
 
-    return fn
+
+def _shard_lineage(store: DataFrame) -> dict:
+    """Per-shard lineage of doc-store rows — doc count, input fingerprint
+    (bit_xor of doc_ids: order-independent, cheap), token count, max
+    warc_ts — in ONE pruned agg (no text or blob reads)."""
+    return {
+        r["shard"]: r
+        for r in store.groupBy("shard")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
+            F.sum("dl").alias("n_tokens"),
+            F.max("warc_ts").alias("watermark"),
+        )
+        .collect()
+    }
+
+
+def _write_manifest(
+    spark: SparkSession,
+    out_dir: str,
+    shards: list[int],
+    lineage: dict,
+    shard_metrics: dict,
+    mode: str,
+) -> None:
+    """Per-shard lineage + metrics manifest (``_build_state``; the north_rule
+    checkpoint clause that resume_build reads): one ``complete`` row per
+    written shard, joining its lineage with its encode metrics."""
+    built_at = pd.Timestamp.utcnow().tz_localize(None)
+    rows = []
+    for s in shards:
+        lin = lineage.get(s)
+        n_docs = int(lin["n_docs"]) if lin else 0
+        sec, n_post, n_terms, pbytes, qbytes = shard_metrics.get(s, [0.0, 0, 0, 0, 0])
+        rows.append(
+            {
+                "shard": s,
+                "status": "complete",
+                "built_at": built_at,
+                "n_docs": n_docs,
+                "docs_fingerprint": int(lin["docs_fingerprint"]) if lin else 0,
+                "n_tokens": int(lin["n_tokens"]) if lin else 0,
+                "n_terms": int(n_terms),
+                "n_postings": int(n_post),
+                "postings_bytes": int(pbytes),
+                "positions_bytes": int(qbytes),
+                "encode_sec": float(sec),
+                "docs_per_sec": n_docs / sec if sec > 0 else 0.0,
+                "postings_per_sec": n_post / sec if sec > 0 else 0.0,
+            }
+        )
+    spark.createDataFrame(pd.DataFrame(rows)).write.mode(mode).parquet(
+        os.path.join(out_dir, "_build_state")
+    )
 
 
 def build_index(
@@ -554,8 +591,8 @@ def build_index(
 
     ``only_shards`` is the resume hook: drop completed shards before the
     exchange (never re-shuffled or re-extracted) and rebuild only the given
-    shards' doc_text/documents/postings partitions; global stats re-derive
-    from the now-complete narrow documents table.
+    shards' doc_text/postings partitions; global stats re-derive from the
+    now-complete doc_text store.
     """
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -570,8 +607,9 @@ def build_index(
         # Fresh build: clear prior table dirs. Dynamic partition overwrite
         # (needed for resume/refresh) only replaces partitions present in the
         # output, so a rebuild over an old dir would otherwise leave orphan
-        # shard/segment partitions behind.
-        for sub in ("postings", "doc_text"):
+        # shard/segment partitions behind. documents/term_stats are the
+        # tables a pre-format-6 index materialized; nothing reads them now.
+        for sub in ("postings", "doc_text", "documents", "term_stats"):
             _hdfs_rm(spark, os.path.join(out_dir, sub))
             _gc_epoch_dirs(spark, out_dir, sub, keep_epochs=0)
     # ONE full-payload shuffle for the whole build, and it moves RAW pages:
@@ -588,8 +626,8 @@ def build_index(
     if only_shards is not None:
         # per-partition checkpoint resume: completed shards are dropped
         # BEFORE the exchange — their pages are never shuffled or
-        # re-extracted; their committed doc_text/documents partitions feed
-        # the global stats below unchanged.
+        # re-extracted; their committed doc_text partitions feed the global
+        # stats below unchanged.
         pre = pre.filter(F.col("shard").isin(only_shards))
     docs = extract_documents_sharded(cluster_by_shard(pre, n_shards))
 
@@ -605,24 +643,7 @@ def build_index(
     # read-pruned is also the only layout that still works when the corpus
     # does not fit cluster memory.
     doc_text_dir = os.path.join(out_dir, "doc_text")
-    # Global corpus stats (N, total tokens, ingest watermark — everything the
-    # encode needs for avgdl) are OBSERVED on the store write itself
-    # (CollectMetrics merges from successfully-committed tasks; no separate
-    # stats job, no second pass over the store): the encode can start the
-    # moment the store is committed. Fresh builds only — on resume the
-    # written rows cover just the rebuilt shards, while the global stats must
-    # span ALL shards, so resume falls back to the full-store agg below.
-    obs = Observation("corpus_stats") if only_shards is None else None
-    if obs is not None:
-        docs = docs.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("n_tokens"),
-            F.max("warc_ts").alias("watermark"),
-        )
-    docs.withColumn("segment", F.lit(0)).write.partitionBy(
-        "segment", "shard"
-    ).mode("overwrite").parquet(doc_text_dir)
+    written = _write_doc_text(docs, doc_text_dir, 0)
     _phase("extract_and_doc_text_write")
 
     # ONE read handle (explicit schema, no inference probe) shared by every
@@ -630,49 +651,31 @@ def build_index(
     # DataFrame, instead of a fresh listing + footer job per consumer.
     store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
 
-    # The narrow doc catalog ("documents") is NOT materialized: it is the
-    # store minus the text column, and parquet readers that select only the
-    # metadata columns already skip the text column chunks — same I/O, same
-    # (segment, shard) partition pruning, one fewer write job (format 6).
-
-    # Per-shard lineage (input fingerprint + token counts) is ONE pruned agg
-    # over the store. It feeds only the manifest at the very end of the
+    # Per-shard lineage feeds only the manifest at the very end of the
     # build, so on a fresh build — where the global N/avgdl/watermark (FTS5
     # includes zero-token docs in N and avgdl) already arrived via the write
     # observation — it runs as a CONCURRENT job overlapped with the postings
-    # encode. On resume the agg is the (serialized) source of the global
-    # stats too: the store read covers ALL shards by construction —
-    # completed shards' partitions were already committed, the filtered
-    # rebuild just added the missing ones.
+    # encode. On resume the written rows cover just the rebuilt shards, so
+    # the lineage agg is the (serialized) source of the global stats: the
+    # store read covers ALL shards by construction — completed shards'
+    # partitions were already committed, the filtered rebuild just added
+    # the missing ones.
     lineage: dict = {}
     lin_state: dict = {}
 
     def _lineage_agg() -> None:
         tw = time.time()
         try:
-            lineage.update(
-                {
-                    r["shard"]: r
-                    for r in store.groupBy("shard")
-                    .agg(
-                        F.count("*").alias("n_docs"),
-                        F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
-                        F.sum("dl").alias("n_tokens"),
-                        F.max("warc_ts").alias("watermark"),
-                    )
-                    .collect()
-                }
-            )
+            lineage.update(_shard_lineage(store))
         except BaseException as exc:  # re-raised on join
             lin_state["exc"] = exc
         lin_state["sec"] = round(time.time() - tw, 2)
 
     lin_thread = None
-    if obs is not None:
-        m = obs.get
-        n_docs = int(m["n_docs"])
-        total_tokens = int(m["n_tokens"] or 0)
-        watermark = m["watermark"]
+    if only_shards is None:
+        n_docs = int(written["n_docs"])
+        total_tokens = int(written["n_tokens"] or 0)
+        watermark = written["watermark"]
         lin_thread = threading.Thread(target=_lineage_agg, name="lineage_agg")
         lin_thread.start()
     else:
@@ -688,22 +691,10 @@ def build_index(
     avgdl = total_tokens / n_docs if n_docs else 0.0
     _phase("stats_lineage_agg")
 
-    # Postings, entirely map-side: a pruned (shard, doc_id, text) read of
-    # the shard-clustered store, pinned to whole-file tasks so partition ==
-    # shard exactly (one posting row per (segment, shard, term)); tokenize
-    # → aggregate → encode runs in a single mapInPandas, no second shuffle,
-    # and the per-term payload never crosses an Arrow boundary.
-    shard_metrics_acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
-    with _whole_file_scans(spark):
-        rows = store.select("shard", "doc_id", "text")
-        if only_shards is not None:
-            rows = rows.filter(F.col("shard").isin(only_shards))
-        postings = rows.mapInPandas(
-            encode_docs_partitions(avgdl, shard_metrics_acc), schema=POSTING_SCHEMA
-        )
-        postings.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            os.path.join(out_dir, "postings")
-        )
+    rebuilt = (
+        store if only_shards is None else store.filter(F.col("shard").isin(only_shards))
+    )
+    sm = _encode_postings(spark, rebuilt, os.path.join(out_dir, "postings"), 0, avgdl)
     _phase("postings_encode_write")
 
     if lin_thread is not None:
@@ -713,59 +704,25 @@ def build_index(
         # overlapped with the postings encode; own wall recorded
         phases["lineage_agg"] = lin_state.get("sec", 0.0)
 
-    # No term_stats job: global df/cf per term is derivable from the
-    # postings table's own (term, df, cf) columns, and the query side reads
-    # it pruned (format 6; see module docstring).
-
     _write_stats(spark, out_dir, n_docs, avgdl, total_tokens, n_shards, 1, watermark)
 
     elapsed = time.time() - t0
-    # Per-shard lineage + metrics manifest (north_rule checkpoint clause):
-    # lineage = per-shard input fingerprint (doc count + bit_xor of doc_ids —
-    # order-independent, cheap, no blob reads), computed in the single
-    # corpus-stats agg above; metrics = encode time / posting count /
-    # compressed bytes measured inside the encode UDF via accumulator.
-    built = only_shards if only_shards is not None else list(range(n_shards))
-    sm = dict(shard_metrics_acc.value)
+    if only_shards is None:
+        _write_manifest(spark, out_dir, list(range(n_shards)), lineage, sm, "overwrite")
+    else:
+        _write_manifest(spark, out_dir, only_shards, lineage, sm, "append")
     n_postings = int(sum(v[1] for v in sm.values()))
-    zero = [0.0, 0, 0, 0, 0]
-    rows_out = []
-    for s in built:
-        lin = lineage.get(s)
-        sec, n_post, n_terms, pbytes, qbytes = sm.get(s, zero)
-        rows_out.append(
-            {
-                "shard": s,
-                "status": "complete",
-                "built_at": pd.Timestamp.utcnow().tz_localize(None),
-                "n_docs": int(lin["n_docs"]) if lin else 0,
-                "docs_fingerprint": int(lin["docs_fingerprint"]) if lin else 0,
-                "n_tokens": int(lin["n_tokens"]) if lin else 0,
-                "n_terms": int(n_terms),
-                "n_postings": int(n_post),
-                "postings_bytes": int(pbytes),
-                "positions_bytes": int(qbytes),
-                "encode_sec": float(sec),
-                "docs_per_sec": (int(lin["n_docs"]) / sec) if lin and sec > 0 else 0.0,
-                "postings_per_sec": (n_post / sec) if sec > 0 else 0.0,
-            }
-        )
-    manifest = pd.DataFrame(rows_out)
-    mode = "overwrite" if only_shards is None else "append"
-    spark.createDataFrame(manifest).write.mode(mode).parquet(
-        os.path.join(out_dir, "_build_state")
-    )
 
     return {
         "n_docs": int(n_docs),
         "avgdl": avgdl,
         "total_tokens": int(total_tokens),
-        "n_postings": int(n_postings),
+        "n_postings": n_postings,
         "n_shards": n_shards,
         "elapsed_sec": elapsed,
         "phase_sec": phases,
         "docs_per_sec": int(n_docs) / elapsed if elapsed > 0 else 0.0,
-        "postings_per_sec": int(n_postings) / elapsed if elapsed > 0 else 0.0,
+        "postings_per_sec": n_postings / elapsed if elapsed > 0 else 0.0,
         "postings_bytes": int(sum(v[3] for v in sm.values())),
         "positions_bytes": int(sum(v[4] for v in sm.values())),
     }
@@ -859,6 +816,19 @@ def _write_stats(
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
 
 
+def _read_stats(spark: SparkSession, out_dir: str) -> dict:
+    """The committed ``stats`` row of an index, as a dict. Raises
+    ``ValueError`` when the index was written in another on-disk format, so
+    no reader or writer misreads (or restamps) an older index."""
+    st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0].asDict()
+    fmt = st.get("format")
+    if fmt != INDEX_FORMAT:
+        raise ValueError(
+            f"index format {fmt!r} != reader format {INDEX_FORMAT}; rebuild the index"
+        )
+    return st
+
+
 def resume_build(
     spark: SparkSession, pages: DataFrame, out_dir: str, n_shards: int = SHARD_DEFAULT
 ) -> dict:
@@ -912,15 +882,12 @@ def refresh_index(
     anti-join is then the MERGE predicate and the watermark only advances.
     """
     t0 = time.time()
-    st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
-    if int(st["format"]) != INDEX_FORMAT:
-        raise ValueError(
-            f"index format {st['format']} != reader format {INDEX_FORMAT}; rebuild"
-        )
+    st = _read_stats(spark, out_dir)
     n_shards = int(st["n_shards"])
     seg = int(st["n_segments"])
     watermark = st["watermark"]
     epoch = int(st["epoch"])
+    doc_text_dir = table_dir(out_dir, "doc_text", epoch)
 
     new_pages = pages.select(*PAGE_COLUMNS)
     if use_watermark and watermark is not None:
@@ -931,7 +898,7 @@ def refresh_index(
     # Column-pruned read of the store — text chunks never touched.
     old_ids = (
         spark.read.schema(DOC_STORE_SCHEMA)
-        .parquet(table_dir(out_dir, "doc_text", epoch))
+        .parquet(doc_text_dir)
         .filter(F.col("segment") < seg)
         .select("doc_id")
     )
@@ -943,100 +910,36 @@ def refresh_index(
     n_spread = max(n_shards, spark.sparkContext.defaultParallelism * 2)
     docs = extract_documents_sharded(cluster_by_shard(pre, n_shards, n_spread))
 
-    # 1) the segment's doc_text partitions — like the fresh build, the
-    #    extraction's ONE consumer is the full doc store write; every later
-    #    step is a column-pruned read of the new segment's partitions (an
-    #    empty batch writes no partitions and commits nothing).
-    # The segment's global stats (doc count, token count, new watermark) are
-    # observed on the write itself (same zero-extra-job pattern as
-    # build_index): the written rows ARE the new segment, so the observation
-    # equals the former post-hoc agg over the segment's partitions.
-    obs = Observation("segment_stats")
-    docs.withColumn("segment", F.lit(seg)).observe(
-        obs,
-        F.count(F.lit(1)).alias("n_new"),
-        F.sum("dl").alias("new_tokens"),
-        F.max("warc_ts").alias("new_wm"),
-    ).write.partitionBy("segment", "shard").mode("overwrite").parquet(
-        table_dir(out_dir, "doc_text", epoch)
-    )
-    seg_store = (
-        spark.read.schema(DOC_STORE_SCHEMA)
-        .parquet(table_dir(out_dir, "doc_text", epoch))
-        .filter(F.col("segment") == seg)
-    )
-    agg = obs.get
-    n_new = int(agg["n_new"] or 0)
+    # 1) the segment's doc_text partitions, with the segment's stats (doc
+    #    count, token count, new watermark) observed on the write — like the
+    #    fresh build, every later step is a column-pruned read of the new
+    #    segment's partitions (an empty batch writes none, commits nothing)
+    added = _write_doc_text(docs, doc_text_dir, seg)
+    n_new = int(added["n_docs"] or 0)
     if n_new == 0:
         return {"appended_docs": 0, "segment": None, "elapsed_sec": time.time() - t0}
     n_docs2 = int(st["n_docs"]) + n_new
-    total2 = int(st["total_tokens"]) + int(agg["new_tokens"] or 0)
+    total2 = int(st["total_tokens"]) + int(added["n_tokens"] or 0)
     avgdl2 = total2 / n_docs2 if n_docs2 else 0.0
+    store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
 
-    # 2) postings for the new segment (blocks encoded against the NEW avgdl;
-    #    older segments' block bounds are rescaled at query time via
-    #    enc_avgdl), from a pruned whole-file read of the segment's store
-    shard_metrics_acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
-    with _whole_file_scans(spark):
-        rows = seg_store.select("shard", "doc_id", "text")
-        postings = rows.mapInPandas(
-            encode_docs_partitions(avgdl2, shard_metrics_acc, segment=seg),
-            schema=POSTING_SCHEMA,
-        )
-        postings.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            table_dir(out_dir, "postings", epoch)
-        )
+    # 2) postings for the new segment only, blocks encoded against the NEW
+    #    avgdl (older segments' block bounds are rescaled at query time via
+    #    enc_avgdl). Global df/cf stays derivable from the postings table
+    #    (all segments), so a segment append costs O(batch), not O(vocab).
+    sm = _encode_postings(
+        spark, store, table_dir(out_dir, "postings", epoch), seg, avgdl2
+    )
 
-    # 3) term stats: NOT rewritten. Global df/cf stays derivable from the
-    #    postings table (all segments), so a segment append costs O(batch)
-    #    — the former full-vocabulary groupBy rewrite per refresh is gone
-    #    (format 6).
+    # 3) per-shard lineage + metrics for the manifest (pruned store read)
+    lineage = _shard_lineage(store.filter(F.col("segment") == seg))
+    _write_manifest(spark, out_dir, sorted(lineage), lineage, sm, "append")
 
-    # 4) per-shard lineage + metrics for the manifest (pruned store read)
-    lineage = {
-        r["shard"]: r
-        for r in seg_store
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
-            F.sum("dl").alias("n_tokens"),
-        )
-        .collect()
-    }
-    sm = dict(shard_metrics_acc.value)
-    zero = [0.0, 0, 0, 0, 0]
-    rows_out = []
-    for s in sorted(lineage):
-        lin = lineage[s]
-        sec, n_post, n_terms, pbytes, qbytes = sm.get(s, zero)
-        rows_out.append(
-            {
-                "shard": s,
-                "status": "complete",
-                "built_at": pd.Timestamp.utcnow().tz_localize(None),
-                "n_docs": int(lin["n_docs"]),
-                "docs_fingerprint": int(lin["docs_fingerprint"]),
-                "n_tokens": int(lin["n_tokens"]),
-                "n_terms": int(n_terms),
-                "n_postings": int(n_post),
-                "postings_bytes": int(pbytes),
-                "positions_bytes": int(qbytes),
-                "encode_sec": float(sec),
-                "docs_per_sec": (int(lin["n_docs"]) / sec) if sec > 0 else 0.0,
-                "postings_per_sec": (n_post / sec) if sec > 0 else 0.0,
-            }
-        )
-    if rows_out:
-        spark.createDataFrame(pd.DataFrame(rows_out)).write.mode("append").parquet(
-            os.path.join(out_dir, "_build_state")
-        )
-
-    # 5) COMMIT: stats last — new watermark + segment count become visible
+    # 4) COMMIT: stats last — new watermark + segment count become visible
     #    only once every data partition for the segment is in place.
     #    The watermark only ever advances (out-of-order batches must not
     #    regress it).
-    new_wm = agg["new_wm"]
+    new_wm = added["watermark"]
     if watermark is not None and (new_wm is None or new_wm < watermark):
         new_wm = watermark
     _write_stats(
@@ -1054,37 +957,18 @@ def refresh_index(
     }
 
 
-def decoded_term_rows(postings: DataFrame) -> DataFrame:
-    """Inverse of the encode stage: posting rows → (shard, doc_id, term, tf,
-    dl, positions) rows, streamed via mapInPandas (compaction input)."""
-
-    def batches(it):
-        from .codec import decode_dls, decode_doc_ids, decode_positions, decode_tfs
-
-        for pdf in it:
-            for r in pdf.itertuples():
-                doc_ids = decode_doc_ids(bytes(r.doc_blob), list(r.block_lens))
-                tfs = decode_tfs(bytes(r.tf_blob))
-                dls = decode_dls(bytes(r.dl_blob))
-                pos = decode_positions(bytes(r.pos_blob), len(doc_ids))
-                yield pd.DataFrame(
-                    {
-                        "shard": np.int32(r.shard),
-                        "doc_id": doc_ids,
-                        "term": r.term,
-                        "tf": tfs.astype(np.int32),
-                        "dl": dls.astype(np.int32),
-                        "positions": [p.astype(np.int32) for p in pos],
-                    }
-                )
-
-    return postings.mapInPandas(batches, schema=TERMROW_SCHEMA)
-
-
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
-    """Merge all segments back into one (segment 0), re-encoding blocks
-    against the current avgdl — the Lucene merge / Iceberg rewriteDataFiles
-    analog.
+    """Merge all committed segments back into one (segment 0), with blocks
+    encoded against the current avgdl — the Lucene merge / Iceberg
+    rewriteDataFiles analog.
+
+    Postings are a pure function of doc_text, so compaction is a
+    one-segment REBUILD through the build's own writers: the committed
+    doc_text rows (segment < n_segments — a crashed refresh's uncommitted
+    segment is left out, exactly as readers leave it out) are clustered by
+    shard and written as segment 0 of the next epoch, then that segment's
+    postings are encoded from it at the committed avgdl. No posting blob
+    is decoded, and the result equals a fresh build of the same pages.
 
     Crash safety (versioned-root commit, the plain-parquet stand-in for an
     Iceberg RewriteFiles snapshot): the merged tables are written into the
@@ -1100,40 +984,30 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     bench) can verify the rewrite paid for itself.
     """
     t0 = time.time()
-    st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
-    if int(st["n_segments"]) <= 1:
+    st = _read_stats(spark, out_dir)
+    segments_before = int(st["n_segments"])
+    if segments_before <= 1:
         return {"compacted": False, "elapsed_sec": time.time() - t0}
     n_shards, avgdl = int(st["n_shards"]), float(st["avgdl"])
     epoch = int(st["epoch"])
     new_epoch = epoch + 1
-    segments_before = int(st["n_segments"])
     files_before = _count_parquet_files(
         spark, table_dir(out_dir, "postings", epoch)
     )
 
-    # decode → merge → re-encode per shard, into the next epoch's dirs
-    rows = decoded_term_rows(
-        spark.read.parquet(table_dir(out_dir, "postings", epoch))
+    committed = (
+        spark.read.schema(DOC_STORE_SCHEMA)
+        .parquet(table_dir(out_dir, "doc_text", epoch))
+        .filter(F.col("segment") < segments_before)
     )
-    merged = rows.groupBy("shard").applyInPandas(
-        encode_shard_postings(avgdl, segment=0), schema=POSTING_SCHEMA
-    )
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-    try:
-        merged.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            table_dir(out_dir, "postings", new_epoch)
-        )
-    finally:
-        spark.conf.set(coalesce_key, prev)
-    df = (
-        spark.read.parquet(table_dir(out_dir, "doc_text", epoch))
-        .withColumn("segment", F.lit(0))
-        .repartition(n_shards, F.col("shard"))
-    )
-    df.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-        table_dir(out_dir, "doc_text", new_epoch)
+    doc_text_dir = table_dir(out_dir, "doc_text", new_epoch)
+    _write_doc_text(cluster_by_shard(committed, n_shards), doc_text_dir, 0)
+    _encode_postings(
+        spark,
+        spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir),
+        table_dir(out_dir, "postings", new_epoch),
+        0,
+        avgdl,
     )
 
     # COMMIT: flip the epoch in stats. Until this write lands, readers

@@ -1,11 +1,12 @@
 """Query-side engine: FTS5-grammar search over the sharded index.
 
 Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → shard-pruned,
-term-pruned parquet scan of ``postings`` (predicate pushdown on the sorted
-``term`` column) → per-shard applyInPandas match+score (shuffle-free: all of
-a doc's postings are in its shard) → per-query top-k merged on the driver
-from ≤ shards×k rows → point lookup into the doc store for display fields
-→ snippets over ≤ k rows.
+term-filtered parquet scan of ``postings`` (the ``term`` predicate is
+pushed into the reader; terms are unsorted within a file, so it filters
+rows rather than skipping row groups) → per-shard applyInPandas
+match+score (shuffle-free: all of a doc's postings are in its shard) →
+per-query top-k merged on the driver from ≤ shards×k rows → point lookup
+into the doc store for display fields → snippets over ≤ k rows.
 
 ``search`` (one query, then result assembly) and ``search_batch`` (many
 queries, then rank numbers) run one executor, ``_execute``: one planner,
@@ -26,7 +27,6 @@ from:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analyzer import tokenize, unicode61_tokens
-from .index_build import INDEX_FORMAT, shard_of, table_dir
+from .index_build import _read_stats, shard_of, table_dir
 from .query.parser import Node, Phrase, parse_query
 from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 
@@ -88,12 +88,7 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str) -> None:
         self.spark = spark
         self.index_dir = index_dir
-        st = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
-        fmt = st.asDict().get("format")
-        if fmt != INDEX_FORMAT:
-            raise ValueError(
-                f"index format {fmt!r} != reader format {INDEX_FORMAT}; rebuild the index"
-            )
+        st = _read_stats(spark, index_dir)
         self.n_docs = st["n_docs"]
         self.avgdl = st["avgdl"]
         self.n_shards = st["n_shards"]
@@ -110,9 +105,8 @@ class SearchEngine:
             table_dir(index_dir, "postings", self.epoch)
         ).filter(committed)
         # The term dictionary (df lookup) is the postings table's own
-        # (term, df) columns, read pruned: term is the sort key within each
-        # postings file, so row-group stats prune like the scoring scan's
-        # predicate — no global vocabulary table to build, ship or refresh.
+        # (term, df) columns, read column-pruned (blob chunks are never
+        # read) — no global vocabulary table to build, ship or refresh.
         self._dict = self._postings.select("term", "df")
         self._doc_text = spark.read.parquet(
             table_dir(index_dir, "doc_text", self.epoch)

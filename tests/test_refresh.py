@@ -59,6 +59,38 @@ def _stats(spark):
     return spark.read.parquet(REFRESH_INDEX_DIR + "/stats").collect()[0]
 
 
+def _results(spark, index_dir, ndigits=None):
+    """SHAPES results of a fresh reader: sorted (doc_id, score) per query,
+    scores rounded to ``ndigits`` when given."""
+    eng = SearchEngine(spark, index_dir)
+    out = {}
+    for q in SHAPES:
+        rows = eng.search(q, k=50, with_snippets=False).collect()
+        out[q] = sorted(
+            (r["doc_id"], r["score"] if ndigits is None else round(r["score"], ndigits))
+            for r in rows
+        )
+    return out
+
+
+def _crash_at_commit(fn, *args):
+    """Run an index write killed at its commit point: every data partition
+    is written, the ``stats`` rewrite raises."""
+    from pdfsearch_spark import index_build
+
+    real_write_stats = index_build._write_stats
+
+    def _boom(*a, **k):
+        raise RuntimeError("simulated crash before stats commit")
+
+    index_build._write_stats = _boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            fn(*args)
+    finally:
+        index_build._write_stats = real_write_stats
+
+
 def _assert_oracle_identical(spark, oracle, queries, k=50):
     eng = SearchEngine(spark, REFRESH_INDEX_DIR)
     for q in queries:
@@ -197,7 +229,6 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     import os
     import shutil as _sh
 
-    from pdfsearch_spark import index_build
     from pdfsearch_spark.index_build import table_dir
 
     side = REFRESH_INDEX_DIR + "_kill"
@@ -205,28 +236,13 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     _sh.copytree(REFRESH_INDEX_DIR, side)
 
     def results():
-        eng = SearchEngine(spark, side)
-        out = {}
-        for q in SHAPES:
-            rows = eng.search(q, k=50, with_snippets=False).collect()
-            out[q] = sorted((r["doc_id"], round(r["score"], 9)) for r in rows)
-        return out
+        return _results(spark, side, ndigits=9)
 
     before = results()
 
     # kill the job at the commit point: all data dirs for the new epoch are
     # written, stats is not — the worst-case crash instant
-    real_write_stats = index_build._write_stats
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before stats commit")
-
-    index_build._write_stats = _boom
-    try:
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            compact_index(spark, side)
-    finally:
-        index_build._write_stats = real_write_stats
+    _crash_at_commit(compact_index, spark, side)
 
     # readers resolve the old epoch: index is fully usable, results identical
     st = spark.read.parquet(side + "/stats").collect()[0]
@@ -255,7 +271,6 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
     and postings partitions. A reader opened afterwards must not see them —
     same docs and bit-identical scores (so idf is unchanged) as a reader of
     the pre-refresh snapshot. The rerun then commits the segment."""
-    from pdfsearch_spark import index_build
     from pdfsearch_spark.index_build import table_dir
 
     side = REFRESH_INDEX_DIR + "_crash"
@@ -269,33 +284,15 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
         n_shards=N_SHARDS,
     )
 
-    def results():
-        eng = SearchEngine(spark, side)
-        out = {}
-        for q in SHAPES:
-            rows = eng.search(q, k=50, with_snippets=False).collect()
-            out[q] = sorted((r["doc_id"], r["score"]) for r in rows)
-        return out
-
-    before = results()
+    before = _results(spark, side)
     assert any(before.values())
 
-    real_write_stats = index_build._write_stats
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before stats commit")
-
-    index_build._write_stats = _boom
-    try:
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            refresh_index(spark, pages, side)
-    finally:
-        index_build._write_stats = real_write_stats
+    _crash_at_commit(refresh_index, spark, pages, side)
 
     # the uncommitted segment's data is on disk, and readers ignore it
     for tbl in ("postings", "doc_text"):
         assert os.path.isdir(os.path.join(table_dir(side, tbl), "segment=1")), tbl
-    assert results() == before
+    assert _results(spark, side) == before
 
     res = refresh_index(spark, pages, side)
     assert res["segment"] == 1
@@ -303,8 +300,68 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
     shutil.rmtree(side, ignore_errors=True)
 
 
-def test_compaction_preserves_results(spark, oracle, refreshed):
+def test_compact_after_crashed_refresh_drops_orphan_segment(spark, corpus_pdf):
+    """Compaction merges committed segments only. A refresh killed at its
+    commit point leaves an uncommitted segment on disk; compacting after it
+    must not publish that segment's docs (doc_text rows == n_docs) nor its
+    postings (results unchanged, so df and idf are unchanged)."""
     from pdfsearch_spark.index_build import table_dir
+
+    side = REFRESH_INDEX_DIR + "_orphan"
+    pages = corpus.web_pages_df(spark, N_DOCS, partitions=8)
+    q1, q2 = corpus_pdf["warc_ts"].quantile([1 / 3, 2 / 3])
+    shutil.rmtree(side, ignore_errors=True)
+    build_index(
+        spark, pages.filter(F.col("warc_ts") <= F.lit(q1)), side, n_shards=N_SHARDS
+    )
+    refresh_index(spark, pages.filter(F.col("warc_ts") <= F.lit(q2)), side)
+    n_committed = spark.read.parquet(side + "/stats").collect()[0]["n_docs"]
+    assert 0 < n_committed < N_DOCS
+    before = _results(spark, side, ndigits=9)
+
+    _crash_at_commit(refresh_index, spark, pages, side)
+    assert os.path.isdir(os.path.join(table_dir(side, "doc_text"), "segment=2"))
+
+    res = compact_index(spark, side)
+    assert res["compacted"] is True and res["segments_before"] == 2
+    st = spark.read.parquet(side + "/stats").collect()[0]
+    assert st["n_docs"] == n_committed and st["n_segments"] == 1
+    compacted = spark.read.parquet(table_dir(side, "doc_text", res["epoch"]))
+    assert compacted.count() == n_committed
+    assert _results(spark, side, ndigits=9) == before
+    shutil.rmtree(side, ignore_errors=True)
+
+
+def test_format_mismatch_is_refused_before_any_write(spark, refreshed):
+    """An index in another on-disk format is refused by every entry point —
+    compaction included, which must not restamp it as the current format:
+    ``stats`` is unchanged and no next-epoch table appears."""
+    from pdfsearch_spark.index_build import table_dir
+
+    side = REFRESH_INDEX_DIR + "_fmt"
+    shutil.rmtree(side, ignore_errors=True)
+    shutil.copytree(REFRESH_INDEX_DIR, side)
+    stats_dir = os.path.join(side, "stats")
+    cur = spark.read.parquet(stats_dir)
+    schema, row = cur.schema, cur.collect()[0]
+    old = tuple(5 if f.name == "format" else row[f.name] for f in schema.fields)
+    spark.createDataFrame([old], schema).write.mode("overwrite").parquet(stats_dir)
+    planted = spark.read.parquet(stats_dir).collect()
+
+    with pytest.raises(ValueError, match="format"):
+        compact_index(spark, side)
+    with pytest.raises(ValueError, match="format"):
+        refresh_index(spark, corpus.web_pages_df(spark, N_DOCS, partitions=8), side)
+    with pytest.raises(ValueError, match="format"):
+        SearchEngine(spark, side)
+    assert spark.read.parquet(stats_dir).collect() == planted
+    for tbl in ("postings", "doc_text"):
+        assert not os.path.exists(table_dir(side, tbl, 1)), tbl
+    shutil.rmtree(side, ignore_errors=True)
+
+
+def test_compaction_preserves_results(spark, oracle, refreshed, index_dir):
+    from pdfsearch_spark.index_build import DOC_STORE_SCHEMA, POSTING_SCHEMA, table_dir
 
     res = compact_index(spark, REFRESH_INDEX_DIR)
     assert res["compacted"] is True
@@ -323,3 +380,27 @@ def test_compaction_preserves_results(spark, oracle, refreshed):
     )
     assert [r["segment"] for r in segs] == [0]
     _assert_oracle_identical(spark, oracle, SHAPES)
+
+    # compaction is a rebuild from doc_text: the compacted index equals a
+    # fresh build of the same pages (the session index), posting bytes per
+    # (shard, term) included
+    def rows(index, tbl, epoch, schema, key):
+        return (
+            spark.read.parquet(table_dir(index, tbl, epoch))
+            .select(*[f.name for f in schema.fields])
+            .orderBy(*key)
+            .collect()
+        )
+
+    for tbl, schema, key in (
+        ("postings", POSTING_SCHEMA, ("shard", "term")),
+        ("doc_text", DOC_STORE_SCHEMA, ("doc_id",)),
+    ):
+        compacted = rows(REFRESH_INDEX_DIR, tbl, res["epoch"], schema, key)
+        fresh = rows(index_dir, tbl, 0, schema, key)
+        assert len(compacted) == len(fresh) > 0, tbl
+        for a, b in zip(compacted, fresh):
+            assert a == b, (tbl, [a[c] for c in key])
+    fresh_st = spark.read.parquet(index_dir + "/stats").collect()[0]
+    for c in ("n_docs", "avgdl", "total_tokens", "n_shards", "n_segments"):
+        assert st[c] == fresh_st[c], c

@@ -77,3 +77,18 @@ def test_resumed_index_searches_identically(spark, tmp_path, oracle):
     want = sorted((r.doc_id, r.score) for r in o.search("renal failure", k=200))
     assert [d_ for d_, _ in got] == [d_ for d_, _ in want]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def test_fresh_build_sweeps_legacy_tables(spark, tmp_path):
+    """An in-place rebuild over a pre-format-6 index removes the tables that
+    format no longer writes (documents, term_stats) and their compaction
+    epochs, instead of leaving them on disk beside the new index."""
+    d = str(tmp_path / "legacy")
+    legacy = ("documents", "documents.v1", "term_stats", "term_stats.v2")
+    for sub in legacy:
+        os.makedirs(os.path.join(d, sub, "shard=0"))
+        with open(os.path.join(d, sub, "shard=0", "part-0.parquet"), "wb") as f:
+            f.write(b"PAR1")
+    build_index(spark, corpus.web_pages_df(spark, N, partitions=4), d, n_shards=SHARDS)
+    assert not [sub for sub in legacy if os.path.exists(os.path.join(d, sub))]
+    assert os.path.isdir(os.path.join(d, "postings"))
