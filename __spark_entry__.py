@@ -443,17 +443,17 @@ FROM fr
 
 def _audio_features_sql() -> str:
     """DuckDB recomputation of audio_features' byte-fake path: samples are
-    centered bytes (ord(ch) - 128 — ASCII corpus, so char == byte), with
-    exact integer sums before the one float division/sqrt, mirroring
-    multimodal.audio_features._feats_int step for step."""
+    the text's centered UTF-8 bytes (byte - 128; each byte read back from
+    hex(encode(t))), with exact integer sums before the one float
+    division/sqrt, mirroring multimodal.audio_features._feats_int step for
+    step."""
     from pdfsearch_spark.pipeline.multimodal import FAKE_AUDIO_RATE
 
     return f"""
-WITH d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-v AS (SELECT doc_id, length(t) AS n,
-             CASE WHEN length(t) = 0 THEN []
-                  ELSE list_transform(string_split(t, ''), ch -> ord(ch) - 128)
-             END AS s
+WITH d AS (SELECT doc_id, hex(encode(coalesce(text, ''))) AS h FROM documents),
+v AS (SELECT doc_id, length(h) // 2 AS n,
+             list_transform(range(length(h) // 2),
+                            i -> ('0x' || substr(h, 2 * i + 1, 2))::INTEGER - 128) AS s
       FROM d)
 SELECT doc_id,
        n::BIGINT AS n_samples,

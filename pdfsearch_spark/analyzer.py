@@ -28,7 +28,6 @@ import json
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 
 from .porter import stem as porter_stem
 
@@ -109,37 +108,8 @@ def token_count(text: str) -> int:
     return len(text.translate(_tables()).split())
 
 
-def tokenize(text: str, stopwords: frozenset[str] = frozenset()) -> list[str]:
-    """Full analyzer chain: unicode61 fold/split → Porter stem.
-
-    ``stopwords`` is the north-star normalization hook; it defaults to the
-    empty set because the reference removes no stopwords (SURVEY.md §2.3 T3)
-    and rank-identity with the FTS5 oracle requires the same.
-    """
-    toks = [_stem_cached(t) for t in unicode61_tokens(text)]
-    if stopwords:
-        toks = [t for t in toks if t not in stopwords]
-    return toks
-
-
-def tokenize_series(texts: pd.Series, stopwords: frozenset[str] = frozenset()) -> pd.Series:
-    """Vectorized wrapper used inside pandas UDFs: Series[str] → Series[list[str]]."""
-    table = _tables()
-    memo = _STEM_MEMO
-    out = []
-    for text in texts:
-        if not text:
-            out.append([])
-            continue
-        raw = text.translate(table).split()
-        toks = []
-        for t in raw:
-            s = memo.get(t)
-            if s is None:
-                s = porter_stem(t)
-                memo[t] = s
-            toks.append(s)
-        if stopwords:
-            toks = [t for t in toks if t not in stopwords]
-        out.append(toks)
-    return pd.Series(out, index=texts.index)
+def tokenize(text: str) -> list[str]:
+    """Full analyzer chain: unicode61 fold/split → Porter stem. No stopword
+    removal: the reference removes none (SURVEY.md §2.3 T3), and
+    rank-identity with the FTS5 oracle requires the same."""
+    return [_stem_cached(t) for t in unicode61_tokens(text)]

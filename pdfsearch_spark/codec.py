@@ -24,10 +24,6 @@ K1 = 1.2
 B = 0.75
 
 
-def zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
 def unzigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
 

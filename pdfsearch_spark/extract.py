@@ -27,7 +27,6 @@ import re
 import sys
 import unicodedata
 
-import pandas as pd
 
 # Go unicode.IsSpace == Unicode White_Space property: a fixed, stable set.
 _GO_SPACE = frozenset(
@@ -123,7 +122,3 @@ def extract_text(data: bytes | str) -> str:
     contract (input_hint)."""
     return clean_text(html_to_raw_text(data))
 
-
-def extract_text_series(html: pd.Series) -> pd.Series:
-    """pandas-UDF body: Series[binary] → Series[str]."""
-    return pd.Series([extract_text(h) if h is not None else "" for h in html], index=html.index)

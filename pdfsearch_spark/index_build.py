@@ -861,14 +861,15 @@ def refresh_index(
     A refresh writes one new SEGMENT: docs newer than the index watermark get
     their own complete postings/doc_text partitions under
     ``segment=<n>``. Doc ids are hash-sharded, so every doc's postings still
-    land in its shard — a query stays shard-local and evaluates each segment
-    independently (segments partition the doc space; scorer merges).
+    land in its shard — a query evaluates each (segment, shard) on its own
+    (segments partition the doc space) and merges only per-group top-k rows.
 
-    Crash safety: all data writes are idempotent dynamic partition overwrites
-    of the new segment's partitions, and the small ``stats`` file — carrying
-    the watermark and segment count — is written LAST as the commit point.
-    A rerun after any crash recomputes the same batch (same watermark, same
-    anti-join against committed segments) and overwrites the same partitions.
+    Crash safety: a refresh first deletes whatever an earlier crashed
+    attempt left under the uncommitted ``segment=<n>``, then writes the
+    segment's partitions, and the small ``stats`` file — carrying the
+    watermark and segment count — is written LAST as the commit point. A
+    rerun after any crash, with the same batch or another one (the
+    streaming wrapper's next micro-batch), commits exactly its own docs.
     On Iceberg this whole function is one transaction; on plain parquet the
     ordering provides the same at-least-once-with-idempotence guarantee.
 
@@ -888,6 +889,12 @@ def refresh_index(
     watermark = st["watermark"]
     epoch = int(st["epoch"])
     doc_text_dir = table_dir(out_dir, "doc_text", epoch)
+    # A crashed attempt may have left segment=<seg> partitions written from
+    # ANOTHER batch; the writes below overwrite only the shards this batch
+    # touches, so clear the whole uncommitted segment first (no reader sees
+    # it: readers stop at segment < n_segments).
+    for tbl in ("doc_text", "postings"):
+        _hdfs_rm(spark, os.path.join(table_dir(out_dir, tbl, epoch), f"segment={seg}"))
 
     new_pages = pages.select(*PAGE_COLUMNS)
     if use_watermark and watermark is not None:

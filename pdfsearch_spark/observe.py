@@ -8,8 +8,6 @@ straight off the postings parquet, no engine startup, blobs never decoded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -25,13 +23,9 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     partial-agged aggregation over a scan that prunes to the stats columns
     (the blobs contribute only their lengths, via parquet column reads —
     nothing is decoded)."""
-    from .index_build import table_dir
+    from .index_build import _read_stats, table_dir
 
-    try:
-        st = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
-        epoch = int(st.asDict().get("epoch", 0) or 0)
-    except Exception:
-        epoch = 0  # bare postings dir without a stats table
+    epoch = int(_read_stats(spark, index_dir)["epoch"])
     p = spark.read.parquet(table_dir(index_dir, "postings", epoch))
     return p.groupBy("segment", "shard").agg(
         F.count("*").alias("n_terms"),

@@ -14,12 +14,13 @@ SURVEY.md §2.5 Q2):
   doesn't match contributes 0; NOT-excluded branches contribute nothing;
   anchored phrases count only position-0 instances.
 
-Execution: shard-local and shuffle-free — every term's postings for a doc
-live in the doc's shard, so boolean evaluation completes within the shard.
-When the dfs are known a priori the shard also scores and only its top-k
-rows leave; otherwise its matched rows and one df sentinel row leave, and
-the matches are scored per partition once the sentinels are summed
-(search.SearchEngine._execute).
+Execution: one (segment, shard) at a time — every term's postings for a
+doc live in the segment it arrived in and in its shard, so boolean
+evaluation completes there and one term never has two posting lists to
+merge. When the dfs are known a priori the group also scores and only its
+top-k rows leave; otherwise its matched rows and one df sentinel row
+leave, and the matches are scored per partition once the sentinels are
+summed (search.SearchEngine._execute).
 """
 
 from __future__ import annotations
@@ -28,122 +29,112 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..codec import decode_dls, decode_doc_ids, decode_tfs
+from ..codec import (
+    decode_block_doc_ids,
+    decode_block_positions,
+    decode_block_u64,
+    decode_dls,
+    decode_doc_ids,
+    decode_tfs,
+)
 from .parser import Node, Phrase
 
 K1 = 1.2
 B = 0.75
 
 
-class LazyPositions:
-    """Block-lazy position resolver for one term's (possibly multi-segment)
-    merged posting order. ``fetch(idxs)`` decodes ONLY the 128-doc blocks
-    holding the requested merged indexes (cached) — a phrase intersection
-    touches a handful of blocks, not the term's whole position stream."""
+class PostingList:
+    """One posting row — one term's postings in one (segment, shard) —
+    read lazily from the codec's independently decodable 128-doc blocks
+    (codec.py). Each read decodes only what it is asked for, once:
+    ``whole()`` the full doc/tf/dl lists (exhaustive matching),
+    ``block(i)`` one block's (block-max WAND: a skipped block's bytes are
+    never touched), ``positions(idxs)`` the position blocks holding the
+    given list indexes (phrases, anchors, NEAR) — positions live in a
+    separate stream so plain terms never pay their decode (SURVEY.md
+    §7.8-4)."""
 
-    __slots__ = ("parts", "bounds", "order", "_cache")
+    __slots__ = ("row", "df", "n_blocks", "_ends", "_whole", "_blocks", "_pos")
 
-    def __init__(self, parts: list[dict], order: np.ndarray | None) -> None:
-        self.parts = parts
-        self.bounds = np.cumsum([0] + [p["n"] for p in parts])
-        self.order = order  # merged idx -> concatenated idx; None = identity
-        self._cache: dict[tuple[int, int], list[np.ndarray]] = {}
+    def __init__(self, row) -> None:
+        self.row = row
+        self.df = int(row.df)
+        self.n_blocks = len(row.block_lens)
+        self._ends: np.ndarray | None = None  # cumulative block lengths
+        self._whole: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        self._blocks: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+        self._pos: dict[int, list[np.ndarray]] = {}
 
-    def fetch(self, idxs) -> list[np.ndarray]:
-        from ..codec import decode_block_positions
+    def whole(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc_ids, tfs, dls) of the whole list, doc ids sorted."""
+        if self._whole is None:
+            r = self.row
+            self._whole = (
+                decode_doc_ids(r.doc_blob, list(r.block_lens)),
+                decode_tfs(r.tf_blob),
+                decode_dls(r.dl_blob),
+            )
+        return self._whole
 
+    def block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc_ids, tfs, dls) of block ``i`` alone."""
+        b = self._blocks.get(i)
+        if b is None:
+            r, n = self.row, int(self.row.block_lens[i])
+            b = self._blocks[i] = (
+                decode_block_doc_ids(r.doc_blob, r.doc_offs[i], n),
+                decode_block_u64(r.tf_blob, r.tf_offs[i], n),
+                decode_block_u64(r.dl_blob, r.dl_offs[i], n),
+            )
+        return b
+
+    def blocks_concat(self, j0: int, j1: int):
+        parts = [self.block(j) for j in range(j0, j1)]
+        if len(parts) == 1:
+            return parts[0]
+        return tuple(np.concatenate([p[c] for p in parts]) for c in range(3))
+
+    def positions(self, idxs) -> list[np.ndarray]:
+        """Token positions of the docs at list indexes ``idxs``."""
+        r = self.row
+        if self._ends is None:
+            self._ends = np.cumsum(np.asarray(r.block_lens, dtype=np.int64))
+        idxs = np.asarray(idxs, dtype=np.int64)
+        blocks = np.searchsorted(self._ends, idxs, side="right")
         out: list[np.ndarray] = []
-        for i in idxs:
-            orig = int(self.order[i]) if self.order is not None else int(i)
-            pi = int(np.searchsorted(self.bounds, orig, side="right")) - 1
-            local = orig - int(self.bounds[pi])
-            part = self.parts[pi]
-            cum = part["cum"]
-            b = int(np.searchsorted(cum, local, side="right"))
-            bstart = int(cum[b - 1]) if b > 0 else 0
-            key = (pi, b)
-            blk = self._cache.get(key)
+        for i, b in zip(idxs.tolist(), blocks.tolist()):
+            blk = self._pos.get(b)
             if blk is None:
-                offs = part["pos_offs"]
-                end = int(offs[b + 1]) if b + 1 < len(offs) else len(part["pos_blob"])
-                blk = decode_block_positions(
-                    part["pos_blob"], int(offs[b]), end, int(part["block_lens"][b])
+                offs = r.pos_offs
+                end = offs[b + 1] if b + 1 < len(offs) else len(r.pos_blob)
+                blk = self._pos[b] = decode_block_positions(
+                    r.pos_blob, offs[b], end, int(r.block_lens[b])
                 )
-                self._cache[key] = blk
-            out.append(blk[local - bstart])
+            block_start = int(self._ends[b]) - len(blk)
+            out.append(blk[i - block_start])
         return out
 
-    def fetch_all(self, n: int) -> list[np.ndarray]:
-        return self.fetch(range(n))
 
-
-@dataclass
-class TermPostings:
-    doc_ids: np.ndarray  # int64 sorted
-    tfs: np.ndarray
-    dls: np.ndarray
-    lazy: LazyPositions | None = None  # block-lazy resolver, if positional
-
-
-class ShardIndex:
-    """Decoded postings for the query's terms within one shard.
-
-    A term may span several SEGMENTS (incremental refresh appends one posting
-    row per (segment, term, shard)); segments partition the doc space, so the
-    merge is a concat + sort by doc id with no duplicates.
-
-    ``pos_terms``: decode the position stream ONLY for these terms — plain
-    terms that merely AND/OR with a phrase never pay the (dominant) position
-    decode; positions live in a separate stream exactly for this
-    (SURVEY.md §7.8-4)."""
-
-    def __init__(self, posting_rows, pos_terms: frozenset | set) -> None:
-        parts: dict[str, list[tuple[TermPostings, dict | None]]] = {}
-        for r in posting_rows.itertuples():
-            doc_ids = decode_doc_ids(bytes(r.doc_blob), list(r.block_lens))
-            tfs = decode_tfs(bytes(r.tf_blob))
-            dls = decode_dls(bytes(r.dl_blob))
-            lazy_part = None
-            if r.term in pos_terms:
-                block_lens = np.asarray(r.block_lens, dtype=np.int64)
-                lazy_part = {
-                    "pos_blob": bytes(r.pos_blob),
-                    "pos_offs": np.asarray(r.pos_offs, dtype=np.int64),
-                    "block_lens": block_lens,
-                    "cum": np.cumsum(block_lens),
-                    "n": len(doc_ids),
-                }
-            parts.setdefault(r.term, []).append(
-                (TermPostings(doc_ids, tfs, dls), lazy_part)
+def postings_by_term(rows) -> dict[str, PostingList]:
+    """{term: PostingList} over the posting rows of ONE (segment, shard).
+    A doc's postings all live in the segment it arrived in, so a query
+    evaluates each segment on its own and never merges one term's lists;
+    a repeated term means the rows span segments, and raises ValueError."""
+    out: dict[str, PostingList] = {}
+    for r in rows.itertuples():
+        if r.term in out:
+            raise ValueError(
+                f"term {r.term!r} repeats: posting rows span more than one segment"
             )
-        self.terms: dict[str, TermPostings] = {}
-        for term, tps in parts.items():
-            if len(tps) == 1:
-                tp, lp = tps[0]
-                if lp is not None:
-                    tp.lazy = LazyPositions([lp], None)
-                self.terms[term] = tp
-                continue
-            doc_ids = np.concatenate([t.doc_ids for t, _ in tps])
-            order = np.argsort(doc_ids, kind="stable")
-            lazy = None
-            if term in pos_terms:
-                lazy = LazyPositions([lp for _, lp in tps], order)
-            self.terms[term] = TermPostings(
-                doc_ids[order],
-                np.concatenate([t.tfs for t, _ in tps])[order],
-                np.concatenate([t.dls for t, _ in tps])[order],
-                lazy,
-            )
-
-    def get(self, term: str) -> TermPostings | None:
-        return self.terms.get(term)
+        out[r.term] = PostingList(r)
+    return out
 
 
 @dataclass
 class PhraseHits:
-    """Per-shard instance data for one phrase: sorted doc ids, visible
-    instance counts, dl per doc, and (optional) instance start positions.
+    """Per-(segment, shard) instance data for one phrase: sorted doc ids,
+    visible instance counts, dl per doc, and (optional) instance start
+    positions.
     ``lazy`` defers position decode for single-term phrases under NEAR —
     _near_eval fetches only the blocks of docs where every NEAR phrase is
     present."""
@@ -152,7 +143,7 @@ class PhraseHits:
     counts: np.ndarray
     dls: np.ndarray
     positions: list[np.ndarray] | None  # start positions per doc
-    lazy: "LazyPositions | None" = None
+    lazy: PostingList | None = None
 
     @staticmethod
     def empty() -> "PhraseHits":
@@ -167,96 +158,81 @@ def _union_positions(arrs: list[np.ndarray]) -> np.ndarray:
 
 
 def phrase_hits(
-    idx: ShardIndex,
+    lists: dict[str, PostingList],
     phrase: Phrase,
     expansions: dict[int, list[str]],
     need_positions: bool,
 ) -> PhraseHits:
-    """Instances of one phrase in one shard (modifier-aware, tree-independent)."""
+    """Instances of one phrase in one (segment, shard), modifier-aware and
+    tree-independent. ``need_positions``: the phrase sits under NEAR, which
+    reads its instance positions."""
     if phrase.col == "unindexed":
         return PhraseHits.empty()
 
-    base_terms = phrase.terms
-    if phrase.prefix:
-        exp = expansions.get(phrase.index, [])
-        if not exp:
-            return PhraseHits.empty()
-        # prefix occupies the LAST slot of the phrase; preceding terms exact
-        prefix_terms = exp
-        exact_terms = base_terms[:-1]
-    else:
-        prefix_terms = None
-        exact_terms = base_terms
-
-    # resolve postings, fail fast on missing exact terms
-    plists: list[TermPostings | list[TermPostings]] = []
+    # resolve postings, fail fast on missing exact terms; a prefix occupies
+    # the LAST slot of the phrase, preceding terms are exact
+    exact_terms = phrase.terms[:-1] if phrase.prefix else phrase.terms
+    slots: list[PostingList | list[PostingList]] = []
     for t in exact_terms:
-        tp = idx.get(t)
-        if tp is None:
+        pl = lists.get(t)
+        if pl is None:
             return PhraseHits.empty()
-        plists.append(tp)
-    if prefix_terms is not None:
-        tps = [idx.get(t) for t in prefix_terms]
-        tps = [t for t in tps if t is not None]
-        if not tps:
+        slots.append(pl)
+    if phrase.prefix:
+        pls = [lists[t] for t in expansions.get(phrase.index, []) if t in lists]
+        if not pls:
             return PhraseHits.empty()
-        plists.append(tps)
+        slots.append(pls)
 
-    simple = len(plists) == 1 and prefix_terms is None and not phrase.anchored
-    if simple:
-        tp = plists[0]
+    positional = len(slots) > 1 or phrase.anchored
+    if not positional and not phrase.prefix:
         # positions deferred: only a NEAR evaluation consumes them, and it
         # knows the candidate set — let it fetch just those docs' blocks
-        lazy = tp.lazy if need_positions else None
-        return PhraseHits(tp.doc_ids, tp.tfs.copy(), tp.dls, None, lazy)
+        pl = slots[0]
+        return PhraseHits(*pl.whole(), None, pl if need_positions else None)
 
     # Merge the prefix slot into a virtual term: union docs; per doc union
-    # positions / sum tfs. Plain-term slots stay as TermPostings so the
-    # positional branch below can fetch their position blocks lazily for
-    # the intersection docs only.
+    # positions / sum tfs. Plain-term slots stay PostingLists so the
+    # positional branch below fetches their position blocks for the
+    # intersection docs only.
     def slot_data(slot):
-        if isinstance(slot, TermPostings):
-            return slot.doc_ids, slot.tfs, slot.dls, slot
-        # list of TermPostings (prefix expansion union)
-        all_docs = _union_positions([s.doc_ids for s in slot])
+        if isinstance(slot, PostingList):
+            return (*slot.whole(), slot)
+        all_docs = _union_positions([s.whole()[0] for s in slot])
         tfs = np.zeros(len(all_docs), dtype=np.int64)
         dls = np.zeros(len(all_docs), dtype=np.int64)
-        pos: list[list[np.ndarray]] = [[] for _ in range(len(all_docs))]
+        pos = [[] for _ in range(len(all_docs))] if positional or need_positions else None
         for s in slot:
-            loc = np.searchsorted(all_docs, s.doc_ids)
-            tfs[loc] += s.tfs
-            dls[loc] = s.dls
-            if s.lazy is not None:
-                for j, arr in zip(loc, s.lazy.fetch_all(len(s.doc_ids))):
+            s_docs, s_tfs, s_dls = s.whole()
+            loc = np.searchsorted(all_docs, s_docs)
+            tfs[loc] += s_tfs
+            dls[loc] = s_dls
+            if pos is not None:
+                for j, arr in zip(loc, s.positions(range(len(s_docs)))):
                     pos[j].append(arr)
-        merged_pos = [
-            _union_positions(p) if p else np.zeros(0, dtype=np.int64) for p in pos
-        ]
+        merged_pos = None if pos is None else [_union_positions(p) for p in pos]
         return all_docs, tfs, dls, merged_pos
 
-    slots = [slot_data(s) for s in plists]
-
-    single_slot = len(slots) == 1
-    if single_slot and not phrase.anchored:
-        docs, tfs, dls, pos = slots[0]
-        return PhraseHits(docs, tfs, dls, pos if need_positions else None)
+    slots_d = [slot_data(s) for s in slots]
+    if not positional:
+        return PhraseHits(*slots_d[0])
 
     # positional evaluation needed (multi-term adjacency and/or anchor):
     # positions are fetched ONLY for the doc-id intersection — block-lazy
     # for plain-term slots, so a phrase over two huge posting lists decodes
     # a handful of position blocks instead of both whole streams
-    docs_common = slots[0][0]
-    for s in slots[1:]:
+    docs_common = slots_d[0][0]
+    for s in slots_d[1:]:
         docs_common = np.intersect1d(docs_common, s[0], assume_unique=True)
     if len(docs_common) == 0:
         return PhraseHits.empty()
 
-    locs = [np.searchsorted(s[0], docs_common) for s in slots]
+    locs = [np.searchsorted(s[0], docs_common) for s in slots_d]
     slot_pos: list[list[np.ndarray]] = []
-    for si, s in enumerate(slots):
+    for si, s in enumerate(slots_d):
         prov = s[3]
-        if isinstance(prov, TermPostings):
-            slot_pos.append(prov.lazy.fetch(locs[si]))
+        if isinstance(prov, PostingList):
+            slot_pos.append(prov.positions(locs[si]))
         else:
             slot_pos.append([prov[j] for j in locs[si]])
 
@@ -264,7 +240,7 @@ def phrase_hits(
     for ci, doc in enumerate(docs_common):
         inter = slot_pos[0][ci]
         ok = True
-        for si in range(1, len(slots)):
+        for si in range(1, len(slots_d)):
             p = slot_pos[si][ci]
             inter = np.intersect1d(inter, p - si, assume_unique=True)
             if len(inter) == 0:
@@ -278,7 +254,7 @@ def phrase_hits(
                 continue
         out_docs.append(doc)
         out_counts.append(len(inter))
-        out_dls.append(slots[0][2][locs[0][ci]])
+        out_dls.append(slots_d[0][2][locs[0][ci]])
         out_pos.append(inter)
     if not out_docs:
         return PhraseHits.empty()
@@ -320,7 +296,7 @@ def _near_eval(
     pos_by_phrase: list[list] = []
     for j, h in enumerate(hits):
         if h.positions is None and h.lazy is not None:
-            fetched = h.lazy.fetch(locs[j][cand_rows])
+            fetched = h.lazy.positions(locs[j][cand_rows])
             plist: list = [None] * (len(h.doc_ids) or 1)
             for r, arr in zip(locs[j][cand_rows], fetched):
                 plist[r] = arr
@@ -445,15 +421,17 @@ def score_shard(
     dfs: dict[int, int] | None,
     k: int,
 ):
-    """Match the query against one shard; never scores.
+    """Match the query against one (segment, shard); never scores.
 
     Returns (matched_docs, dls, tf_vis_matrix, local_dfs), or None when no
-    phrase has a hit in this shard. ``local_dfs`` counts, per phrase index,
-    the shard's docs holding the phrase whatever the tree decides. The
+    phrase has a hit there. ``local_dfs`` counts, per phrase index, the
+    group's docs holding the phrase whatever the tree decides. The
     caller scores the matches with ``bm25_scores`` once idfs are known.
     ``n_docs``, ``avgdl``, ``dfs`` and ``k`` are not read; they stay only
     for perfbench's scorer probe, which calls score_shard with them.
+    Raises ValueError when the rows span more than one segment.
     """
+    lists = postings_by_term(posting_rows)
     # Per-shard prefix expansion (driver passes NO expansion list): the
     # postings scan already restricted this shard's rows to
     # (exact terms ∪ prefix-matching terms), so expanding against the
@@ -466,30 +444,13 @@ def score_shard(
     ]
     if missing:
         expansions = dict(expansions)
-        shard_terms = posting_rows["term"].unique()
         for p in missing:
             pref = p.terms[-1]
-            expansions[p.index] = [t for t in shard_terms if t.startswith(pref)]
+            expansions[p.index] = [t for t in lists if t.startswith(pref)]
 
-    # positions are needed per PHRASE, not per query: a phrase needs them if
-    # it is positional itself (multi-term / anchored / prefix-in-phrase) or
-    # sits under NEAR; only ITS terms pay the position-stream decode
     near_pis = _near_phrase_indexes(tree)
-    pos_phrases = {
-        p.index
-        for p in phrases
-        if len(p.terms) > 1 or p.anchored or p.prefix or p.index in near_pis
-    }
-    pos_terms: set[str] = set()
-    for p in phrases:
-        if p.index in pos_phrases and p.col != "unindexed":
-            pos_terms.update(p.terms[:-1] if p.prefix else p.terms)
-            if p.prefix:
-                pos_terms.update(expansions.get(p.index, []))
-    idx = ShardIndex(posting_rows, pos_terms)
-
     hits = {
-        p.index: phrase_hits(idx, p, expansions, p.index in pos_phrases)
+        p.index: phrase_hits(lists, p, expansions, p.index in near_pis)
         for p in phrases
     }
 
@@ -562,60 +523,6 @@ def idf_of(df: int, n_docs: int) -> float:
 
 # ---- block-max WAND (pure-conjunction fast path) ------------------------
 
-class BlockList:
-    """Lazily-decoded posting list: block metadata up front, per-block decode
-    on demand — a skipped block's bytes are never touched. Backed by the
-    codec's independently-decodable 128-doc blocks (codec.py)."""
-
-    __slots__ = (
-        "first_docs", "last_docs", "doc_offs", "tf_offs", "dl_offs",
-        "block_lens", "max_impacts", "doc_blob", "tf_blob", "dl_blob",
-        "n_blocks", "n_docs", "_cache",
-    )
-
-    def __init__(self, row, avgdl: float) -> None:
-        self.first_docs = np.asarray(row.first_docs, dtype=np.int64)
-        self.last_docs = np.asarray(row.last_docs, dtype=np.int64)
-        self.doc_offs = row.doc_offs
-        self.tf_offs = row.tf_offs
-        self.dl_offs = row.dl_offs
-        self.block_lens = row.block_lens
-        # float32 on disk → widen; the skip test adds a relative margin that
-        # more than covers the float32 rounding of the stored bound.
-        # Bounds were computed against the avgdl at ENCODE time; if refreshes
-        # have since raised the corpus avgdl, every doc's impact grew by at
-        # most avgdl_now/enc_avgdl (sup over dl of the denominator ratio), so
-        # scaling by max(1, that ratio) keeps the bound conservative.
-        enc_avgdl = float(getattr(row, "enc_avgdl", avgdl) or avgdl)
-        scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-        self.max_impacts = np.asarray(row.max_impacts, dtype=np.float64) * scale
-        self.doc_blob = bytes(row.doc_blob)
-        self.tf_blob = bytes(row.tf_blob)
-        self.dl_blob = bytes(row.dl_blob)
-        self.n_blocks = len(self.block_lens)
-        self.n_docs = int(row.df)
-        self._cache: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-
-    def block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        b = self._cache.get(i)
-        if b is None:
-            from ..codec import decode_block_doc_ids, decode_block_u64
-
-            n = int(self.block_lens[i])
-            b = (
-                decode_block_doc_ids(self.doc_blob, self.doc_offs[i], n),
-                decode_block_u64(self.tf_blob, self.tf_offs[i], n),
-                decode_block_u64(self.dl_blob, self.dl_offs[i], n),
-            )
-            self._cache[i] = b
-        return b
-
-    def blocks_concat(self, j0: int, j1: int):
-        parts = [self.block(j) for j in range(j0, j1)]
-        if len(parts) == 1:
-            return parts[0]
-        return tuple(np.concatenate([p[c] for p in parts]) for c in range(3))
-
 
 def wand_shard_topk(
     posting_rows,
@@ -626,17 +533,18 @@ def wand_shard_topk(
     books: np.ndarray | None = None,
     counters: dict | None = None,
 ):
-    """Block-max WAND top-k for a pure conjunction of plain terms.
+    """Block-max WAND top-k for a pure conjunction of plain terms over one
+    (segment, shard)'s posting rows (ValueError when they span segments).
 
-    The shard's rarest term drives iteration block by block; every other
-    term contributes only the blocks overlapping the pivot block's doc-id
+    The rarest term drives iteration block by block; every other term
+    contributes only the blocks overlapping the pivot block's doc-id
     range. A block is scored only if its upper bound — Σ_t weight_t ·
     block_max_impact_t over the overlapping range — can still beat the
     bounded min-heap's current k-th score; otherwise its bytes are never
     decoded (SURVEY.md §2.5 Q2, north_rule "block-max WAND pruning and a
     bounded min-heap per partition").
 
-    Returns (doc_ids, scores[negative bm25]) of the shard's top-k, or None.
+    Returns (doc_ids, scores[negative bm25]) of the top-k, or None.
     IDENTICAL results to the exhaustive path by construction: survivors are
     scored through the same ``bm25_scores`` float path (elementwise, so
     per-doc values are bit-equal), and the skip test keeps a relative
@@ -644,83 +552,54 @@ def wand_shard_topk(
     ``counters`` (optional) accrues blocks_total / blocks_skipped /
     blocks_dead evidence.
     """
-    wanted = set(phrase_terms)
-    by_seg: dict[int, dict[str, BlockList]] = {}
-    for r in posting_rows.itertuples():
-        if r.term in wanted:
-            seg = int(getattr(r, "segment", 0))
-            by_seg.setdefault(seg, {})[r.term] = BlockList(r, avgdl)
-    terms = sorted(wanted)
+    import heapq
+
+    lists = postings_by_term(posting_rows)
+    terms = sorted(set(phrase_terms))
+    if any(t not in lists for t in terms):
+        return None  # no doc here can hold the conjunction
 
     # per-distinct-term weight for the upper bound (phrases may repeat terms)
     w: dict[str, float] = {t: 0.0 for t in terms}
     for pi, t in enumerate(phrase_terms):
         w[t] += float(idfs[pi])
+    # float32 on disk → widen; the skip test adds a relative margin that
+    # more than covers the float32 rounding of the stored bound.
+    # Bounds were computed against the avgdl at ENCODE time; if refreshes
+    # have since raised the corpus avgdl, every doc's impact grew by at
+    # most avgdl_now/enc_avgdl (sup over dl of the denominator ratio), so
+    # scaling by max(1, that ratio) keeps the bound conservative.
+    impacts: dict[str, np.ndarray] = {}
+    for t in terms:
+        row = lists[t].row
+        enc_avgdl = float(getattr(row, "enc_avgdl", avgdl) or avgdl)
+        scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
+        impacts[t] = np.asarray(row.max_impacts, dtype=np.float64) * scale
 
-    # Segments partition the doc space (a doc's postings for ALL its terms
-    # live in the segment it arrived in), so WAND runs per segment while the
-    # bounded heap — and therefore the pruning threshold — is shared.
-    heap: list[tuple[float, int]] = []  # (total, -doc_id) min-heap, size ≤ k
-    n_total = n_skipped = n_dead = 0
-    for seg in sorted(by_seg):
-        lists = by_seg[seg]
-        if any(t not in lists for t in terms):
-            continue  # no doc of this segment can hold the conjunction
-        n_seg_skip, n_seg_dead = _wand_segment(
-            lists, terms, w, phrase_terms, idfs, avgdl, k, books, heap
-        )
-        n_total += lists[min(terms, key=lambda t: lists[t].n_docs)].n_blocks
-        n_skipped += n_seg_skip
-        n_dead += n_seg_dead
-
-    if counters is not None:
-        counters["blocks_total"] = counters.get("blocks_total", 0) + n_total
-        counters["blocks_skipped"] = counters.get("blocks_skipped", 0) + n_skipped
-        counters["blocks_dead"] = counters.get("blocks_dead", 0) + n_dead
-    if not heap:
-        return None
-    doc_ids = np.array([-d for _, d in heap], dtype=np.int64)
-    scores = np.array([-t for t, _ in heap], dtype=np.float64)
-    return doc_ids, scores
-
-
-def _wand_segment(
-    lists: dict[str, "BlockList"],
-    terms: list[str],
-    w: dict[str, float],
-    phrase_terms: list[str],
-    idfs: np.ndarray,
-    avgdl: float,
-    k: int,
-    books: np.ndarray | None,
-    heap: list,
-) -> tuple[int, int]:
-    """One segment's block-max WAND pass; pushes into the shared heap.
-    Returns (blocks_skipped, blocks_dead)."""
-    import heapq
-
-    pivot = min(terms, key=lambda t: lists[t].n_docs)
+    pivot = min(terms, key=lambda t: lists[t].df)
     others = [t for t in terms if t != pivot]
     P = len(phrase_terms)
     piv = lists[pivot]
+    first_docs = {t: np.asarray(lists[t].row.first_docs, dtype=np.int64) for t in terms}
+    last_docs = {t: np.asarray(lists[t].row.last_docs, dtype=np.int64) for t in terms}
 
+    heap: list[tuple[float, int]] = []  # (total, -doc_id) min-heap, size ≤ k
     n_skipped = n_dead = 0
     for i in range(piv.n_blocks):
-        lo = piv.first_docs[i]
-        hi = piv.last_docs[i]  # inclusive block doc range [lo, hi]
-        ub = w[pivot] * float(piv.max_impacts[i])
+        lo = first_docs[pivot][i]
+        hi = last_docs[pivot][i]  # inclusive block doc range [lo, hi]
+        ub = w[pivot] * float(impacts[pivot][i])
         ranges: list[tuple[str, int, int]] = []
         dead = False
         for t in others:
             # blocks of t overlapping [lo, hi]: last_doc ≥ lo ∧ first_doc ≤ hi
-            ol = lists[t]
-            j0 = int(np.searchsorted(ol.last_docs, lo, side="left"))
-            j1 = int(np.searchsorted(ol.first_docs, hi, side="right"))
+            j0 = int(np.searchsorted(last_docs[t], lo, side="left"))
+            j1 = int(np.searchsorted(first_docs[t], hi, side="right"))
             if j1 <= j0:
                 dead = True
                 break
             ranges.append((t, j0, j1))
-            ub += w[t] * float(lists[t].max_impacts[j0:j1].max())
+            ub += w[t] * float(impacts[t][j0:j1].max())
         if dead:
             n_dead += 1
             continue
@@ -759,4 +638,12 @@ def _wand_segment(
             elif item > heap[0]:
                 heapq.heapreplace(heap, item)
 
-    return n_skipped, n_dead
+    if counters is not None:
+        counters["blocks_total"] = counters.get("blocks_total", 0) + piv.n_blocks
+        counters["blocks_skipped"] = counters.get("blocks_skipped", 0) + n_skipped
+        counters["blocks_dead"] = counters.get("blocks_dead", 0) + n_dead
+    if not heap:
+        return None
+    doc_ids = np.array([-d for _, d in heap], dtype=np.int64)
+    scores = np.array([-t for t, _ in heap], dtype=np.float64)
+    return doc_ids, scores

@@ -15,17 +15,15 @@ re-derived and golden-tested against the in-process FTS5 oracle:
 3. Highest score wins (strictly-greater comparisons keep the earliest).
 4. Rendering copies the ORIGINAL bytes from the start offset of the first
    window token; overlapping phrase instances are merged and wrapped in
-   open/close marks; '...' is prepended when the window doesn't start at
+   <b>...</b>; '...' is prepended when the window doesn't start at
    token 0 and appended unless the window reaches the last token, in which
    case the raw tail of the document (trailing separators included) is
    emitted instead.
 
-Runs over <= top-k rows only, inside a pandas UDF.
+Runs over <= top-k rows only, on the driver (search.SearchEngine._snippet_pair).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from ..analyzer import _tables
 from ..porter import stem as porter_stem
@@ -139,16 +137,15 @@ def make_snippet(
     phrase_slots: list[list[frozenset[str]]],
     anchored: list[bool],
     n: int,
-    open_m: str = "<b>",
-    close_m: str = "</b>",
-    ellips: str = "...",
-    per_phrase: list[list[tuple[int, int]]] | None = None,
+    *,
+    per_phrase: list[list[tuple[int, int]]],
 ) -> str:
+    """FTS5 snippet(…, '<b>', '</b>', '...', n) of ``text`` around the
+    phrase instances ``per_phrase`` (snippet_plan's visible instances).
+    ``phrase_slots`` and ``anchored`` are not read; they stay only for
+    perfbench's snippet probe, which passes them positionally."""
     toks = tokenize_offsets(text)
     n_docsize = len(toks)
-    terms = [t[0] for t in toks]
-    if per_phrase is None:
-        per_phrase = find_phrase_instances(terms, phrase_slots, anchored)
     # xInst order: by position, phrase index as tiebreak
     instances = sorted(
         (s, pi, e) for pi, inst in enumerate(per_phrase) for (s, e) in inst
@@ -172,7 +169,7 @@ def make_snippet(
                 if s2 > best_score:
                     best_score, best_start = s2, a_first[jj]
 
-    return _render(text, toks, instances, best_start, n, open_m, close_m, ellips)
+    return _render(text, toks, instances, best_start, n)
 
 
 def _render(
@@ -181,9 +178,6 @@ def _render(
     instances: list[tuple[int, int, int]],
     i_range_start: int,
     n: int,
-    open_m: str,
-    close_m: str,
-    ellips: str,
 ) -> str:
     n_docsize = len(toks)
     i_range_end = i_range_start + n - 1
@@ -200,7 +194,7 @@ def _render(
 
     out: list[str] = []
     if i_range_start > 0:
-        out.append(ellips)
+        out.append("...")
     i_off = 0
     it = 0
     for i_pos, (_t, c0, c1) in enumerate(toks):
@@ -214,13 +208,13 @@ def _render(
         cur = merged[it] if it < len(merged) else (-1, -2)
         if i_pos == cur[0]:
             out.append(text[i_off:c0])
-            out.append(open_m)
+            out.append("<b>")
             i_off = c0
         if i_pos == cur[1]:
             if cur[0] < i_range_start:
-                out.append(open_m)
+                out.append("<b>")
             out.append(text[i_off:c1])
-            out.append(close_m)
+            out.append("</b>")
             i_off = c1
             it += 1
             cur = merged[it] if it < len(merged) else (-1, -2)
@@ -228,24 +222,12 @@ def _render(
             out.append(text[i_off:c1])
             i_off = c1
             if cur[0] <= i_pos < cur[1]:
-                out.append(close_m)
+                out.append("</b>")
     if i_range_end >= n_docsize - 1:
         out.append(text[i_off:])
     else:
-        out.append(ellips)
+        out.append("...")
     return "".join(out)
-
-
-def snippet_series(
-    texts: pd.Series,
-    phrase_slots: list[list[frozenset[str]]],
-    anchored: list[bool],
-    n: int,
-) -> pd.Series:
-    return pd.Series(
-        [make_snippet(t or "", phrase_slots, anchored, n) for t in texts],
-        index=texts.index,
-    )
 
 
 class PrefixSet:

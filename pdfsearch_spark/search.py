@@ -3,10 +3,12 @@
 Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → shard-pruned,
 term-filtered parquet scan of ``postings`` (the ``term`` predicate is
 pushed into the reader; terms are unsorted within a file, so it filters
-rows rather than skipping row groups) → per-shard applyInPandas
-match+score (shuffle-free: all of a doc's postings are in its shard) →
-per-query top-k merged on the driver from ≤ shards×k rows → point lookup
-into the doc store for display fields → snippets over ≤ k rows.
+rows rather than skipping row groups) → one exchange of the matching
+posting rows into per-(segment, shard) applyInPandas groups that match
+and score (all of a doc's postings are in its segment and its shard, so
+no group needs another's rows) → per-query top-k merged on the driver
+from ≤ segments×shards×k rows → point lookup into the doc store for
+display fields → snippets over ≤ k rows.
 
 ``search`` (one query, then result assembly) and ``search_batch`` (many
 queries, then rank numbers) run one executor, ``_execute``: one planner,
@@ -139,10 +141,11 @@ class SearchEngine:
     def _scan_predicate(phrases: list[Phrase]):
         """(exact terms, prefixes) → pushdown-able postings-scan filter.
 
-        Prefix phrases push ``startswith(pref)`` into the scan itself —
-        parquet row-group min/max stats on the sorted ``term`` column prune
-        for a StringStartsWith exactly like they do for In, and no term list
-        ever lands on the driver."""
+        Prefix phrases push ``startswith(pref)`` into the scan itself, so
+        no term list ever lands on the driver. Both predicates reach the
+        parquet reader as pushed filters; terms are unsorted within a file
+        (encoder first-appearance order), so row-group min/max stats rarely
+        skip anything and the filter mostly drops rows as they are read."""
         exact: set[str] = set()
         prefixes: set[str] = set()
         for p in phrases:
@@ -170,11 +173,13 @@ class SearchEngine:
         one shard-function DataFrame (SHARD_SCHEMA) with its plan, or
         (None, plan) when no query can touch postings.
 
-        Per plan entry, each shard emits: for an a-priori pure conjunction,
-        its block-max WAND top-k; for any other a-priori query, its
-        exhaustively scored top-k; otherwise its matched (doc_id, dl, vis)
-        rows plus one df-sentinel row. ``book_ids`` (the Q6 doc subset)
-        filters hits, never dfs."""
+        Per plan entry, each (segment, shard) group emits: for an a-priori
+        pure conjunction, its block-max WAND top-k; for any other a-priori
+        query, its exhaustively scored top-k; otherwise its matched
+        (doc_id, dl, vis) rows plus one df-sentinel row. Segments partition
+        the doc space, so the groups' top-k rows merge in ``_topk`` and
+        their sentinels sum like the shards' do. ``book_ids`` (the Q6 doc
+        subset) filters hits, never dfs."""
         cond = self._scan_predicate([p for _, _, ps in parsed for p in ps])
         # ONE dictionary lookup for every a-priori query's terms
         a_priori = [(qid, ps) for qid, tree, ps in parsed if _is_a_priori(tree, ps)]
@@ -216,7 +221,7 @@ class SearchEngine:
             outs = [out for q in plan for out in shard_rows(pdf, q)]
             return pd.concat(outs, ignore_index=True) if outs else _frame(0, [])
 
-        scored = self._postings.filter(cond).groupBy("shard").applyInPandas(
+        scored = self._postings.filter(cond).groupBy("segment", "shard").applyInPandas(
             fn, schema=SHARD_SCHEMA
         )
         return scored, plan
@@ -255,8 +260,9 @@ class SearchEngine:
 
     def _score_matches(self, shard_out: DataFrame, k: int) -> DataFrame:
         """Sentinel path over the persisted shard output: sum the df
-        sentinels driver-side (≤ shards×queries rows, no shuffle), then
-        score each partition's matched rows and keep its top-k per query.
+        sentinels driver-side (≤ segments×shards×queries rows, no
+        shuffle), then score each partition's matched rows and keep its
+        top-k per query.
         Pre-scored a-priori rows pass through the same truncation."""
         dfs: dict[int, np.ndarray] = {}
         for r in shard_out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect():

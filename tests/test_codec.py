@@ -86,11 +86,11 @@ def test_postings_roundtrip_and_blockmeta():
 
 def test_block_positions_match_full_decode():
     """decode_block_positions over each block == decode_positions whole-list,
-    and LazyPositions fetches only the blocks holding requested docs."""
+    and PostingList.positions decodes only the blocks holding requested docs."""
     import pandas as pd
 
     from pdfsearch_spark.codec import decode_block_positions, encode_postings
-    from pdfsearch_spark.query.scorer import LazyPositions
+    from pdfsearch_spark.query.scorer import postings_by_term
 
     rng = np.random.Generator(np.random.Philox(key=[3, 99]))
     doc_ids, tfs, dls, positions = _random_posting(rng, 600)
@@ -106,16 +106,9 @@ def test_block_positions_match_full_decode():
             assert (blk[j] == full[i + j]).all()
         i += n
     # lazy fetch: arbitrary subset, identical results, partial block decode
-    part = {
-        "pos_blob": enc["pos_blob"],
-        "pos_offs": np.asarray(offs, dtype=np.int64),
-        "block_lens": np.asarray(lens, dtype=np.int64),
-        "cum": np.cumsum(np.asarray(lens, dtype=np.int64)),
-        "n": len(doc_ids),
-    }
-    lp = LazyPositions([part], None)
+    pl = postings_by_term(pd.DataFrame([dict(enc, term="t")]))["t"]
     idxs = sorted(rng.choice(200, size=25, replace=False).tolist())  # blocks 0-1
-    got = lp.fetch(np.array(idxs))
+    got = pl.positions(np.array(idxs))
     for x, i_ in zip(got, idxs):
         assert (x == full[i_]).all()
-    assert len(lp._cache) <= 2  # blocks 2-4 never decoded
+    assert len(pl._pos) <= 2  # blocks 2-4 never decoded

@@ -643,6 +643,42 @@ def test_audio_features_fake_math_and_decode_routing(spark):
     assert (r3["n_samples"], r3["rms"], r3["peak"], r3["zcr"]) == (0, 0.0, 0.0, 0.0)
 
 
+def test_audio_features_oracle_reads_utf8_bytes():
+    """The DuckDB oracle of q_audio_features replays the byte fake over the
+    text's UTF-8 BYTES (attach_media casts text to binary), not its
+    codepoints: on non-ASCII text they differ in count and in value."""
+    import math
+
+    import duckdb
+
+    from __spark_entry__ import _audio_features_sql
+    from pdfsearch_spark.pipeline.multimodal import FAKE_AUDIO_RATE
+
+    texts = {1: "Café au lait", 2: "naïve — 東京", 3: "plain ascii", 4: ""}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(texts.items()))
+    got = {r[0]: r[1:] for r in con.execute(_audio_features_sql()).fetchall()}
+
+    def ppm(x: float) -> int:  # SQL round(): half away from zero
+        return math.floor(x * 1_000_000 + 0.5)
+
+    for doc_id, text in texts.items():
+        v = [b - 128 for b in text.encode("utf-8")]
+        n = len(v)
+        exp = (n, FAKE_AUDIO_RATE, 0, 0, 0)
+        if n:
+            crossings = sum(1 for a, b in zip(v, v[1:]) if a * b < 0)
+            exp = (
+                n,
+                FAKE_AUDIO_RATE,
+                ppm(math.sqrt(sum(x * x for x in v) / n) / 128.0),
+                ppm(max(abs(x) for x in v) / 128.0),
+                ppm(crossings / (n - 1)) if n > 1 else 0,
+            )
+        assert got[doc_id] == exp, (text, got[doc_id], exp)
+
+
 def test_frame_sample_decoded_fallback_matches_codegen(spark):
     """In a lib-less container frame_sample(decode=True) must be
     row-for-row identical to the codegen frame_sample; rows with video/*

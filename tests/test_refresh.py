@@ -2,9 +2,10 @@
 
 An index built over the older half of the corpus (by warc_ts) then refreshed
 with the full corpus must be rank-identical to the FTS5 oracle over the FULL
-corpus — across every query shape (WAND conjunctions span segments, phrase /
-NEAR positions merge across segments, prefix expansion sees both segments'
-vocabularies). Compaction back to one segment must change nothing.
+corpus — across every query shape (WAND conjunctions, phrase / NEAR
+positions and prefix expansion all run per segment, and their per-segment
+results and dfs add up to the full corpus's). Compaction back to one segment
+must change nothing.
 
 Reference semantics mirrored: re-crawled urls keep their first version
 (files.path UNIQUE + DO NOTHING, /root/reference/database/database.go:46,257);
@@ -20,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdfsearch_spark import corpus
+from pdfsearch_spark.fnv import fnv1_64_signed
 from pdfsearch_spark.index_build import build_index, compact_index, refresh_index
 from pdfsearch_spark.search import SearchEngine
 
@@ -27,14 +29,16 @@ from conftest import N_DOCS, N_SHARDS
 
 REFRESH_INDEX_DIR = "/tmp/pdfsearch_spark_refresh_index"
 
-# one query per grammar shape (all are in the reference query set)
+# one query per grammar shape (all are in the reference query set); each
+# (segment, shard) is scored on its own, and only per-group top-k rows and
+# df sentinels are merged
 SHAPES = [
     "hypertension",          # single term (WAND)
-    "renal failure",         # conjunction (WAND, multi-segment heap)
+    "renal failure",         # conjunction (WAND per segment, top-k merged)
     "renal OR failure",      # disjunction (exhaustive fast path)
     "failure NOT renal",     # NOT
-    '"renal failure"',       # positional phrase (segment-merged positions)
-    "data*",                 # prefix (expansion over merged vocabulary)
+    '"renal failure"',       # positional phrase (per-segment positions)
+    "data*",                 # prefix (expanded per segment's vocabulary)
     "NEAR(renal failure, 3)",
     "^renal",
 ]
@@ -329,6 +333,48 @@ def test_compact_after_crashed_refresh_drops_orphan_segment(spark, corpus_pdf):
     compacted = spark.read.parquet(table_dir(side, "doc_text", res["epoch"]))
     assert compacted.count() == n_committed
     assert _results(spark, side, ndigits=9) == before
+    shutil.rmtree(side, ignore_errors=True)
+
+
+def test_refresh_rerun_with_other_batch_drops_orphan_partitions(spark, corpus_pdf):
+    """A refresh killed at its commit point leaves its batch's partitions
+    under the uncommitted segment. A rerun with a DIFFERENT batch (the
+    streaming wrapper's next micro-batch) writes other shards; on commit
+    the segment must hold only the rerun's docs — committed doc_text rows
+    == n_docs, and the doc ids are the build's plus the rerun's."""
+    from pdfsearch_spark.index_build import table_dir
+
+    side = REFRESH_INDEX_DIR + "_rerun"
+    pages = corpus.web_pages_df(spark, N_DOCS, partitions=8)
+    urls = corpus_pdf.sort_values("warc_ts")["url"].tolist()
+    built, crashed, rerun = urls[:150], urls[150:240], urls[-2:]
+    shutil.rmtree(side, ignore_errors=True)
+    build_index(spark, pages.filter(F.col("url").isin(built)), side, n_shards=N_SHARDS)
+
+    _crash_at_commit(refresh_index, spark, pages.filter(F.col("url").isin(crashed)), side)
+    res = refresh_index(
+        spark, pages.filter(F.col("url").isin(rerun)), side, use_watermark=False
+    )
+    assert res["appended_docs"] == 2
+    st = spark.read.parquet(side + "/stats").collect()[0]
+    assert st["n_docs"] == 152 and st["n_segments"] == 2
+    committed = (
+        spark.read.parquet(table_dir(side, "doc_text"))
+        .filter(F.col("segment") < st["n_segments"])
+        .select("doc_id")
+        .collect()
+    )
+    assert len(committed) == st["n_docs"]
+    expected = {
+        r["doc_id"]
+        for r in spark.read.parquet(table_dir(side, "doc_text"))
+        .filter(F.col("segment") == 0)
+        .select("doc_id")
+        .collect()
+    } | {fnv1_64_signed(u) for u in rerun}
+    assert {r["doc_id"] for r in committed} == expected
+    postings = spark.read.parquet(table_dir(side, "postings")).filter(F.col("segment") == 1)
+    assert postings.agg(F.max("df")).collect()[0][0] <= 2
     shutil.rmtree(side, ignore_errors=True)
 
 

@@ -12,8 +12,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
 from pdfsearch_spark.codec import encode_postings
-from pdfsearch_spark.query.scorer import bm25_scores, idf_of, wand_shard_topk
+from pdfsearch_spark.query.parser import parse_query
+from pdfsearch_spark.query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
+from pdfsearch_spark.search import _topk
 
 N_DOCS = 20_000
 AVGDL = 140.0
@@ -144,8 +147,9 @@ def test_wand_actually_prunes(shard):
 
 def test_wand_randomized_multisegment_ab():
     """Seeded sweep: random term sets, overlaps, ks, and SEGMENTED posting
-    frames (disjoint doc ranges per segment, as refresh produces) must match
-    brute force exactly — shared-heap-across-segments included."""
+    frames (disjoint doc ranges per segment, as refresh produces). One WAND
+    call per segment, merged by the engine's top-k rule, must match brute
+    force exactly."""
     rng = np.random.Generator(np.random.Philox(key=[23, 1]))
     for trial in range(12):
         n_terms = int(rng.integers(1, 4))
@@ -184,15 +188,45 @@ def test_wand_randomized_multisegment_ab():
         phrase_terms = [names[int(rng.integers(0, n_terms))] for _ in range(int(rng.integers(1, 4)))]
         k = int(rng.integers(1, 300))
         idfs = np.array([idf_of(len(raw[t][0]), N_DOCS * 50) for t in phrase_terms])
-        res = wand_shard_topk(pdf, phrase_terms, idfs, AVGDL, k)
+        per_seg = [
+            wand_shard_topk(seg_rows, phrase_terms, idfs, AVGDL, k)
+            for _, seg_rows in pdf.groupby("segment")
+        ]
+        per_seg = [r for r in per_seg if r is not None]
         exp = _brute_topk(raw, phrase_terms, idfs, k)
-        assert (res is None) == (exp is None), f"trial {trial}"
-        if res is None:
+        assert (not per_seg) == (exp is None), f"trial {trial}"
+        if not per_seg:
             continue
-        got_docs, got_scores = res
-        order = np.lexsort((got_docs, got_scores))
-        assert (got_docs[order] == exp[0]).all(), f"trial {trial}"
-        assert (got_scores[order] == exp[1]).all(), f"trial {trial}"
+        got_docs, got_scores = _topk(
+            np.concatenate([d for d, _ in per_seg]),
+            np.concatenate([s for _, s in per_seg]),
+            k,
+        )
+        assert (got_docs == exp[0]).all(), f"trial {trial}"
+        assert (got_scores == exp[1]).all(), f"trial {trial}"
+
+
+def test_postings_spanning_segments_are_refused():
+    """The scorer reads one (segment, shard) at a time: a posting frame
+    holding one term in two segments is refused by both shard functions
+    instead of being merged."""
+    rows = []
+    for seg, lo in ((0, 1), (1, 10_000)):
+        docs = np.arange(lo, lo + 300, dtype=np.int64)
+        tfs = np.ones(len(docs), dtype=np.int64)
+        enc = encode_postings(
+            docs, tfs, np.full(len(docs), 50, dtype=np.int64),
+            [np.zeros(1, dtype=np.int64)] * len(docs), AVGDL,
+        )
+        enc["term"] = "common"
+        enc["segment"] = seg
+        rows.append(enc)
+    pdf = pd.DataFrame(rows)
+    tree, phrases = parse_query("common", tokenize, unicode61_tokens)
+    with pytest.raises(ValueError, match="segment"):
+        score_shard(pdf, tree, phrases, {}, N_DOCS, AVGDL, None, 10)
+    with pytest.raises(ValueError, match="segment"):
+        wand_shard_topk(pdf, ["common"], np.array([1.0]), AVGDL, 10)
 
 
 def test_wand_dead_blocks_skip_decode():
