@@ -16,10 +16,12 @@ SQLite, so we load exact per-codepoint tables generated by probing the FTS5
 oracle itself (scripts/gen_unicode61_tables.py) rather than deriving them
 from Python's (newer) unicodedata.
 
-Tokenization happens inside Arrow-batched pandas UDFs only — the per-token
-work is dict-cached (Zipfian vocabularies hit the memo almost always), and
-``str.translate`` with a lazily-populated mapping does the fold+separate pass
-at C speed.
+Tokenization runs in Arrow-batched pandas UDFs at index time and on the
+driver for the <= k result docs that get snippets
+(``query.snippet.tokenize_offsets``, which adds each token's char offsets).
+Both paths do the fold+separate pass at C speed with ``str.translate`` over
+a lazily-populated mapping, and both stem through ``_stem_cached``'s dict
+memo (Zipfian vocabularies hit it almost always).
 """
 
 from __future__ import annotations

@@ -22,11 +22,14 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     means the doc-hash is skewed and query fan-out is unbalanced. One
     partial-agged aggregation over a scan that prunes to the stats columns
     (the blobs contribute only their lengths, via parquet column reads —
-    nothing is decoded)."""
+    nothing is decoded). Only committed segments are reported: a crashed
+    refresh's uncommitted ``segment=n_segments`` is on disk but not in the
+    index, the same rule ``SearchEngine`` reads by."""
     from .index_build import _read_stats, table_dir
 
-    epoch = int(_read_stats(spark, index_dir)["epoch"])
-    p = spark.read.parquet(table_dir(index_dir, "postings", epoch))
+    st = _read_stats(spark, index_dir)
+    p = spark.read.parquet(table_dir(index_dir, "postings", int(st["epoch"])))
+    p = p.filter(F.col("segment") < int(st["n_segments"]))
     return p.groupBy("segment", "shard").agg(
         F.count("*").alias("n_terms"),
         F.sum("df").alias("n_postings"),

@@ -1,7 +1,7 @@
 """FTS5 ``snippet()`` re-implementation, byte-identical to the oracle.
 
 The reference calls snippet() twice per result row: N=16 -> title, N=60 ->
-text (/root/reference/database/database.go:180-181). The algorithm below is
+text (the reference's database/database.go:180-181). The algorithm below is
 the documented SQLite fts5_aux.c snippet behavior (public SQLite source),
 re-derived and golden-tested against the in-process FTS5 oracle:
 
@@ -20,40 +20,58 @@ re-derived and golden-tested against the in-process FTS5 oracle:
    case the raw tail of the document (trailing separators included) is
    emitted instead.
 
-Runs over <= top-k rows only, on the driver (search.SearchEngine._snippet_pair).
+``snippet_pair`` makes both snippets of one result doc in one pass, on the
+driver, over the <= k emitted rows (search.SearchEngine._snippet_pair). It
+tokenizes the doc once: ``str.translate`` maps it to a length-preserving
+separator mask, ``re`` finds the token runs in the mask, and each run is
+folded with the analyzer's unicode61 tables and stemmed through its memo,
+so the token list is ``analyzer.tokenize``'s with char offsets. That one
+token list and one sentence-start list feed the highlight plan and both
+windows. ``snippet_plan`` and ``make_snippet`` are thin wrappers over the
+same internals for callers that want the plan and each window separately.
 """
 
 from __future__ import annotations
 
-from ..analyzer import _tables
-from ..porter import stem as porter_stem
+import re
+from bisect import bisect_left, bisect_right
+
+from ..analyzer import _stem_cached, _tables
+
+TITLE_TOKENS = 16  # snippet(…, 16): the reference's title column
+BODY_TOKENS = 60  # snippet(…, 60): the reference's text column
+
+_TOKEN_RUN = re.compile(r"[^ ]+")
+# '.' or ':' then at least one space/tab/newline/cr: a token that starts
+# where such a gap ends starts a sentence (fts5SentenceFinderCb)
+_SENTENCE_GAP = re.compile(r"[.:][ \t\n\r]+")
+
+
+class _MaskMap(dict):
+    """Lazy codepoint → one-char map for str.translate: separator → ' ',
+    token char → 'x'. The fold map sends a char to 0 or 1 chars, so only
+    this length-preserving mask locates the token runs in the original
+    text. Misses consult the fold map once and are cached."""
+
+    def __missing__(self, cp: int) -> str:
+        v = " " if _tables()[cp] == " " else "x"
+        self[cp] = v
+        return v
+
+
+_MASK = _MaskMap()
 
 
 def tokenize_offsets(text: str) -> list[tuple[str, int, int]]:
-    """(stemmed_term, start_char, end_char) per token, FTS5-identical
-    sequence (same fold tables + porter)."""
-    table = _tables()
+    """(stemmed_term, start_char, end_char) per token: the sequence of
+    ``analyzer.tokenize(text)``, each token with its span in ``text``."""
+    fold = _tables()
     out: list[tuple[str, int, int]] = []
-    n = len(text)
-    i = 0
-    while i < n:
-        cp = ord(text[i])
-        repl = table[cp]
-        if repl == " ":
-            i += 1
-            continue
-        j = i
-        folded: list[str] = []
-        while j < n:
-            r = table[ord(text[j])]
-            if r == " ":
-                break
-            folded.append(r)
-            j += 1
-        term = "".join(folded)
-        if term:
-            out.append((porter_stem(term), i, j))
-        i = j if j > i else i + 1
+    for m in _TOKEN_RUN.finditer(text.translate(_MASK)):
+        i, j = m.span()
+        term = text[i:j].translate(fold)
+        if term:  # a run whose chars all fold away is no token
+            out.append((_stem_cached(term), i, j))
     return out
 
 
@@ -64,15 +82,14 @@ def find_phrase_instances(
     out: list[list[tuple[int, int]]] = []
     nt = len(terms)
     for slots, anc in zip(phrase_slots, anchored):
-        inst: list[tuple[int, int]] = []
+        first, rest = slots[0], list(enumerate(slots[1:], start=1))
         L = len(slots)
-        rng = [0] if anc else range(nt - L + 1)
-        for s in rng:
-            if s + L > nt:
-                continue
-            if all(terms[s + j] in slots[j] for j in range(L)):
-                inst.append((s, s + L))
-        out.append(inst)
+        starts = range(min(1, nt - L + 1)) if anc else range(nt - L + 1)
+        out.append([
+            (s, s + L)
+            for s in starts
+            if terms[s] in first and all(terms[s + j] in slot for j, slot in rest)
+        ])
     return out
 
 
@@ -80,21 +97,10 @@ def _sentence_starts(text: str, toks: list[tuple[str, int, int]]) -> list[int]:
     """fts5SentenceFinderCb: token 0, plus tokens whose preceding
     non-{space,tab,newline,cr} char (with at least one such separator
     skipped) is '.' or ':'."""
-    out: list[int] = []
-    for pos, (_t, c0, _c1) in enumerate(toks):
-        if pos == 0:
-            out.append(0)
-            continue
-        i = c0 - 1
-        c = ""
-        while i >= 0:
-            c = text[i]
-            if c not in (" ", "\t", "\n", "\r"):
-                break
-            i -= 1
-        if i != c0 - 1 and c in (".", ":"):
-            out.append(pos)
-    return out
+    if not toks:
+        return []
+    gap_ends = {m.end() for m in _SENTENCE_GAP.finditer(text)}
+    return [0] + [pos for pos in range(1, len(toks)) if toks[pos][1] in gap_ends]
 
 
 def _trunc_div2(d: int) -> int:
@@ -102,74 +108,45 @@ def _trunc_div2(d: int) -> int:
     return d // 2 if d >= 0 else -((-d) // 2)
 
 
-def _score_window(
-    instances: list[tuple[int, int, int]],
-    i_pos: int,
-    n: int,
-    n_docsize: int,
-    adjust: bool,
-) -> tuple[int, int]:
-    """fts5SnippetScore: instances = sorted (io, phrase_idx, end_excl)."""
-    i_end = i_pos + n
-    seen: set[int] = set()
-    score = 0
-    i_first = -1
-    i_last = 0
-    for io, ip, ie in instances:
-        if i_pos <= io < i_end:
-            score += 1 if ip in seen else 1000
-            seen.add(ip)
-            if i_first < 0:
-                i_first = io
-            i_last = ie
-    if not adjust:
-        return score, i_pos
-    i_adj = i_first - _trunc_div2(n - (i_last - i_first))
-    if i_adj + n > n_docsize:
-        i_adj = n_docsize - n
-    if i_adj < 0:
-        i_adj = 0
-    return score, i_adj
+def _xinst(per_phrase: list[list[tuple[int, int]]]) -> list[tuple[int, int, int]]:
+    """xInst order: (start, phrase_idx, end_excl) by position, phrase index
+    as tiebreak."""
+    return sorted((s, pi, e) for pi, inst in enumerate(per_phrase) for (s, e) in inst)
 
 
-def make_snippet(
-    text: str,
-    phrase_slots: list[list[frozenset[str]]],
-    anchored: list[bool],
-    n: int,
-    *,
-    per_phrase: list[list[tuple[int, int]]],
-) -> str:
-    """FTS5 snippet(…, '<b>', '</b>', '...', n) of ``text`` around the
-    phrase instances ``per_phrase`` (snippet_plan's visible instances).
-    ``phrase_slots`` and ``anchored`` are not read; they stay only for
-    perfbench's snippet probe, which passes them positionally."""
-    toks = tokenize_offsets(text)
-    n_docsize = len(toks)
-    # xInst order: by position, phrase index as tiebreak
-    instances = sorted(
-        (s, pi, e) for pi, inst in enumerate(per_phrase) for (s, e) in inst
-    )
-    a_first = _sentence_starts(text, toks)
+def _window_start(
+    instances: list[tuple[int, int, int]], a_first: list[int], n: int, n_docsize: int
+) -> int:
+    """fts5SnippetFunction's choice of the first token of the n-token
+    window: the best of every instance-centered window and every
+    sentence-start window (fts5SnippetScore)."""
+    ios = [io for io, _, _ in instances]
+
+    def in_window(i_pos: int) -> list[tuple[int, int, int]]:
+        # the instances with i_pos <= io < i_pos + n, in xInst order
+        return instances[bisect_left(ios, i_pos) : bisect_left(ios, i_pos + n)]
+
+    def score(win: list[tuple[int, int, int]]) -> int:
+        # 1000 for each phrase's first instance, 1 for each repeat
+        distinct = len({ip for _, ip, _ in win})
+        return 999 * distinct + len(win)
 
     best_score = 0
     best_start = 0
-    for io, _ip, _ie in instances:
-        score, i_adj = _score_window(instances, io, n, n_docsize, adjust=True)
-        if score > best_score:
-            best_score, best_start = score, i_adj
-        if a_first and n_docsize > n:
-            # last sentence start <= io (C loop over aFirst)
-            jj = 0
-            while jj < len(a_first) - 1 and a_first[jj + 1] <= io:
-                jj += 1
-            if a_first[jj] < io:
-                s2, _ = _score_window(instances, a_first[jj], n, n_docsize, adjust=False)
-                s2 += 120 if a_first[jj] == 0 else 100
+    for io in ios:
+        win = in_window(io)
+        s = score(win)
+        if s > best_score:
+            i_first, i_last = win[0][0], win[-1][2]
+            i_adj = i_first - _trunc_div2(n - (i_last - i_first))
+            best_score, best_start = s, max(min(i_adj, n_docsize - n), 0)
+        if n_docsize > n:
+            first = a_first[bisect_right(a_first, io) - 1]  # last start <= io
+            if first < io:
+                s2 = score(in_window(first)) + (120 if first == 0 else 100)
                 if s2 > best_score:
-                    best_score, best_start = s2, a_first[jj]
-
-    return _render(text, toks, instances, best_start, n)
+                    best_score, best_start = s2, first
+    return best_start
 
 
 def _render(
@@ -191,20 +168,17 @@ def _render(
                 merged[-1][1] = e_incl
         else:
             merged.append([io, e_incl])
+    # skip instances that ended before the range
+    it = 0
+    while it < len(merged) and merged[it][1] < i_range_start:
+        it += 1
 
     out: list[str] = []
     if i_range_start > 0:
         out.append("...")
-    i_off = 0
-    it = 0
-    for i_pos, (_t, c0, c1) in enumerate(toks):
-        if i_pos < i_range_start or i_pos > i_range_end:
-            continue
-        if i_range_start and i_pos == i_range_start:
-            i_off = c0
-        # advance iterator past instances that ended before the range
-        while it < len(merged) and merged[it][1] < i_range_start:
-            it += 1
+    i_off = toks[i_range_start][1] if i_range_start else 0
+    for i_pos in range(i_range_start, min(i_range_end, n_docsize - 1) + 1):
+        _t, c0, c1 = toks[i_pos]
         cur = merged[it] if it < len(merged) else (-1, -2)
         if i_pos == cur[0]:
             out.append(text[i_off:c0])
@@ -228,6 +202,32 @@ def _render(
     else:
         out.append("...")
     return "".join(out)
+
+
+def _snippet(
+    text: str,
+    toks: list[tuple[str, int, int]],
+    a_first: list[int],
+    instances: list[tuple[int, int, int]],
+    n: int,
+) -> str:
+    return _render(text, toks, instances, _window_start(instances, a_first, n, len(toks)), n)
+
+
+def make_snippet(
+    text: str,
+    phrase_slots: list[list[frozenset[str]]],
+    anchored: list[bool],
+    n: int,
+    *,
+    per_phrase: list[list[tuple[int, int]]],
+) -> str:
+    """FTS5 snippet(…, '<b>', '</b>', '...', n) of ``text`` around the
+    phrase instances ``per_phrase`` (snippet_plan's visible instances).
+    ``phrase_slots`` and ``anchored`` are not read; they stay only for
+    perfbench's snippet probe, which passes them positionally."""
+    toks = tokenize_offsets(text)
+    return _snippet(text, toks, _sentence_starts(text, toks), _xinst(per_phrase), n)
 
 
 class PrefixSet:
@@ -267,11 +267,11 @@ def phrase_slot_table(phrases, expansions) -> tuple[list, list]:
     return slots_list, anchored
 
 
-def snippet_plan(
-    tree, slots_list, anchored, text: str
-) -> tuple[list, list, list]:
-    """Per-doc highlight plan: (slots, anchored, instances) for exactly the
-    phrase instances FTS5's snippet() marks in THIS row.
+def _visible_instances(
+    tree, slots_list, anchored, terms: list[str]
+) -> tuple[list[int], list[list[tuple[int, int]]]]:
+    """The indexes of the phrases FTS5's snippet() highlights in this row,
+    and every phrase's instances among ``terms`` (NEAR-filtered).
 
     Two FTS5 behaviors reproduced here (both fuzz-found):
     - a phrase is highlighted only when its subtree CONTRIBUTES under the
@@ -286,8 +286,6 @@ def snippet_plan(
 
     from .scorer import PhraseHits, evaluate, near_surviving
 
-    toks = tokenize_offsets(text)
-    terms = [t for t, _, _ in toks]
     per_phrase = find_phrase_instances(terms, slots_list, anchored)
     P = len(slots_list)
     cand = np.zeros(1, dtype=np.int64)
@@ -312,9 +310,9 @@ def snippet_plan(
     if not mask[0]:
         # shouldn't happen for a returned result row; highlight everything
         # as a conservative fallback
-        visible = set(range(P))
+        visible = list(range(P))
     else:
-        visible = {pi for pi in range(P) if vis[0, pi] > 0}
+        visible = [pi for pi in range(P) if vis[0, pi] > 0]
 
     # NEAR participation filter
     def walk(node):
@@ -336,9 +334,36 @@ def snippet_plan(
             walk(c)
 
     walk(tree)
-    keep = sorted(visible)
+    return visible, per_phrase
+
+
+def snippet_plan(
+    tree, slots_list, anchored, text: str
+) -> tuple[list, list, list]:
+    """Per-doc highlight plan: (slots, anchored, instances) for exactly the
+    phrase instances FTS5's snippet() marks in THIS row (see
+    ``_visible_instances``)."""
+    keep, per_phrase = _visible_instances(
+        tree, slots_list, anchored, [t for t, _, _ in tokenize_offsets(text)]
+    )
     return (
         [slots_list[i] for i in keep],
         [anchored[i] for i in keep],
         [per_phrase[i] for i in keep],
+    )
+
+
+def snippet_pair(text: str, tree, slots_list, anchored) -> tuple[str, str]:
+    """(title, body): FTS5 snippet(…, 16) and snippet(…, 60) of one result
+    doc. One tokenization and one sentence-start list feed the highlight
+    plan and both windows."""
+    toks = tokenize_offsets(text)
+    keep, per_phrase = _visible_instances(
+        tree, slots_list, anchored, [t for t, _, _ in toks]
+    )
+    instances = _xinst([per_phrase[i] for i in keep])
+    a_first = _sentence_starts(text, toks)
+    return (
+        _snippet(text, toks, a_first, instances, TITLE_TOKENS),
+        _snippet(text, toks, a_first, instances, BODY_TOKENS),
     )

@@ -390,16 +390,15 @@ class SearchEngine:
         whose branch contributes nothing for that row (fuzz-found via
         '(a OR b) AND c OR d': a doc matching a∧d but not c highlights only
         d)."""
-        from .query.snippet import make_snippet, phrase_slot_table, snippet_plan
+        from .query.snippet import phrase_slot_table, snippet_pair
 
         slots_list, anchored = phrase_slot_table(phrases, {})
         titles: list[str] = []
         bodies: list[str] = []
         for text in texts:
-            text = text or ""
-            fs, fa, fi = snippet_plan(tree, slots_list, anchored, text)
-            titles.append(make_snippet(text, fs, fa, 16, per_phrase=fi))
-            bodies.append(make_snippet(text, fs, fa, 60, per_phrase=fi))
+            title, body = snippet_pair(text or "", tree, slots_list, anchored)
+            titles.append(title)
+            bodies.append(body)
         return titles, bodies
 
 

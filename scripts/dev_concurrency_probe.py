@@ -47,7 +47,8 @@ print(json.dumps({"wall": time.perf_counter()-t0w, "cpu": time.process_time()-t0
 
 def run(m: int, k: int, env_extra: dict) -> dict:
     procs = []
-    env = dict(os.environ, PYTHONPATH="/root/repo", **env_extra)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, **env_extra)
     for i in range(m):
         procs.append(
             subprocess.Popen(

@@ -1,6 +1,6 @@
 """Deep randomized differential sweep: N generated grammar queries vs FTS5.
 
-Usage: PYTHONPATH=/root/repo python scripts/dev_fuzz_queries.py [N] [seed]
+Usage: python scripts/dev_fuzz_queries.py [N] [seed]
 Bigger sibling of tests/test_fuzz_queries.py (same generator) for pre-ship
 sweeps; prints each failing query, exits nonzero on any mismatch.
 
@@ -11,9 +11,11 @@ prefix) — an FTS5 iteration-state artifact, score-only and corpus-dependent,
 that we deliberately do not replicate (tests/test_anchor_artifact.py).
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 
@@ -24,7 +26,7 @@ from pdfsearch_spark.oracle import FTS5Oracle  # noqa: E402
 from pdfsearch_spark.search import SearchEngine  # noqa: E402
 from pdfsearch_spark.session import get_spark  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from test_fuzz_queries import _diff_one, _gen_query, _vocab  # noqa: E402
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 150
@@ -46,12 +48,13 @@ eng = SearchEngine(spark, IDX)
 vocab = _vocab(pdf)
 
 def _snippet_diff(q: str) -> str | None:
-    """Byte-compare FTS5 snippet(16/60) vs ours over top-50 rows."""
+    """Byte-compare FTS5 snippet(16/60) vs the engine's snippet_pair over
+    top-50 rows."""
     import sqlite3
 
     from pdfsearch_spark.analyzer import tokenize as _tok, unicode61_tokens as _fold
     from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query
-    from pdfsearch_spark.query.snippet import make_snippet, snippet_plan
+    from pdfsearch_spark.query.snippet import phrase_slot_table, snippet_pair
 
     try:
         res = oracle.search(q, k=50)
@@ -60,26 +63,11 @@ def _snippet_diff(q: str) -> str | None:
         return None
     if tree is None:
         return None
-    slots_list, anchored = [], []
-    vocab_terms = oracle.vocab_terms()["term"].tolist()
-    for p in sorted(phrases, key=lambda p: p.index):
-        if p.col == "unindexed":
-            slots_list.append([frozenset()])
-            anchored.append(False)
-            continue
-        slots = [frozenset([t]) for t in p.terms]
-        if p.prefix:
-            slots[-1] = frozenset(t for t in vocab_terms if t.startswith(p.terms[-1]))
-        slots_list.append(slots)
-        anchored.append(p.anchored)
+    slots_list, anchored = phrase_slot_table(phrases, {})
     texts = {fnv(u): t for u, t in zip(pdf["url"], pdf["text"])}
     for r in res:
         t = texts[r.doc_id]
-        fs, fa, fi = snippet_plan(tree, slots_list, anchored, t)
-        if (
-            make_snippet(t, fs, fa, 16, per_phrase=fi) != r.title
-            or make_snippet(t, fs, fa, 60, per_phrase=fi) != r.text
-        ):
+        if snippet_pair(t, tree, slots_list, anchored) != (r.title, r.text):
             return f"q={q!r} doc={r.doc_id}: snippet mismatch"
     return None
 

@@ -4,7 +4,7 @@ chunk instead of one Spark job per query — ~50x the sweep rate of
 dev_fuzz_queries.py, and it exercises the batch path, which is how a query
 workload actually runs at cluster scale).
 
-Usage: PYTHONPATH=/root/repo python scripts/dev_fuzz_queries_batch.py [N] [seed] [chunk]
+Usage: python scripts/dev_fuzz_queries_batch.py [N] [seed] [chunk]
 
 Per query, error-ness must agree (oracle sqlite3.OperationalError <=> engine
 QuerySyntaxError, checked driver-side before batching) and result pairs must
@@ -16,9 +16,11 @@ tests/test_anchor_artifact.py — reported at the end, not counted as FAIL if
 it matches the artifact signature (score-multiset-only diff).
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import sqlite3  # noqa: E402
 
@@ -32,7 +34,7 @@ from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query  # noqa: 
 from pdfsearch_spark.search import SearchEngine  # noqa: E402
 from pdfsearch_spark.session import get_spark  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from test_fuzz_queries import _gen_query, _vocab  # noqa: E402
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 1000

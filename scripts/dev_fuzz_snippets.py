@@ -6,16 +6,18 @@ equality, both window sizes — to hit the FTS5 window-heuristic edge cases
 the goldens may not span (all-stopword windows, docs shorter than N,
 multi-phrase coverage ties).
 
-Driver-side only (SQLite + make_snippet — no Spark session), so it sweeps
+Driver-side only (SQLite + snippet_pair — no Spark session), so it sweeps
 thousands of (query, doc, N) diffs in seconds.
 
-Usage: PYTHONPATH=/root/repo python scripts/dev_fuzz_snippets.py [n_queries] [seed] [k]
+Usage: python scripts/dev_fuzz_snippets.py [n_queries] [seed] [k]
 """
 
+import os
 import sqlite3
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 
@@ -28,10 +30,11 @@ from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query  # noqa: 
 from pdfsearch_spark.query.snippet import (  # noqa: E402
     make_snippet,
     phrase_slot_table,
+    snippet_pair,
     snippet_plan,
 )
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from test_fuzz_queries import _gen_query, _vocab  # noqa: E402
 
 N_QUERIES = int(sys.argv[1]) if len(sys.argv) > 1 else 400
@@ -97,22 +100,23 @@ def main() -> None:
             continue
         if tree is None or not res:
             continue
-        # EXACTLY the production path (SearchEngine._snippet_pair):
-        # slot table -> per-doc snippet_plan (scorer-driven phrase
-        # visibility + NEAR-survivor filtering) -> make_snippet
+        # EXACTLY the production path (SearchEngine._snippet_pair): slot
+        # table -> per-doc snippet_pair (one tokenization feeds the
+        # scorer-driven phrase visibility, NEAR-survivor filtering and both
+        # windows)
         slots_list, anchored = phrase_slot_table(phrases, {})
         n_queries_run += 1
         for r in res:
             t = text_by_id[r.doc_id]
-            fs, fa, fi = snippet_plan(tree, slots_list, anchored, t)
-            for nn, want in ((16, r.title), (60, r.text)):
-                got = make_snippet(t, fs, fa, nn, per_phrase=fi)
+            got_pair = snippet_pair(t, tree, slots_list, anchored)
+            for nn, got, want in zip((16, 60), got_pair, (r.title, r.text)):
                 n_pairs += 1
                 if got != want:
                     msg = (
                         f"q={q!r} doc={r.doc_id} N={nn}:\n"
                         f"    ours: {got!r}\n    fts5: {want!r}"
                     )
+                    fs, fa, fi = snippet_plan(tree, slots_list, anchored, t)
                     if _is_branch_drop_artifact(q, t, fs, fa, fi, nn, want):
                         artifacts.append(msg)
                     else:

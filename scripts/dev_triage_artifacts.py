@@ -7,13 +7,14 @@ fuzz corpus and compares per-doc: the documented artifact signature
 OR-branch-drop direction. Any doc where FTS5 credits MORE than the engine
 is NOT the known artifact and must be investigated as an engine bug.
 
-Usage: PYTHONPATH=/root/repo python scripts/dev_triage_artifacts.py 'q1' ['q2' ...]
+Usage: python scripts/dev_triage_artifacts.py 'q1' ['q2' ...]
 (defaults to reading one query per line from stdin when no args)
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdfsearch_spark import corpus  # noqa: E402
 from pdfsearch_spark.extract import extract_text  # noqa: E402

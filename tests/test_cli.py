@@ -4,6 +4,7 @@ two-command shape, cli/flags.go:16-26, re-expressed over tables)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -70,7 +71,8 @@ def test_manifest_has_per_shard_lineage_and_metrics(demo_dirs, spark):
 def test_pyfiles_zip_is_zipimport_safe(tmp_path):
     """north_rule: ships via spark-submit --py-files. The zip must import in
     a clean interpreter with data resources readable through zipimport."""
-    sys.path.insert(0, "/root/repo/scripts")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
     try:
         import make_pyfiles
     finally:

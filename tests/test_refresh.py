@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pdfsearch_spark import corpus
 from pdfsearch_spark.fnv import fnv1_64_signed
 from pdfsearch_spark.index_build import build_index, compact_index, refresh_index
+from pdfsearch_spark.observe import index_stats
 from pdfsearch_spark.search import SearchEngine
 
 from conftest import N_DOCS, N_SHARDS
@@ -274,7 +275,8 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
     commit point (stats write) has already written its segment's doc_text
     and postings partitions. A reader opened afterwards must not see them —
     same docs and bit-identical scores (so idf is unchanged) as a reader of
-    the pre-refresh snapshot. The rerun then commits the segment."""
+    the pre-refresh snapshot, and ``observe.index_stats`` must not report
+    them either. The rerun then commits the segment."""
     from pdfsearch_spark.index_build import table_dir
 
     side = REFRESH_INDEX_DIR + "_crash"
@@ -290,6 +292,7 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
 
     before = _results(spark, side)
     assert any(before.values())
+    postings_before = sum(r["n_postings"] for r in index_stats(spark, side).collect())
 
     _crash_at_commit(refresh_index, spark, pages, side)
 
@@ -297,6 +300,11 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
     for tbl in ("postings", "doc_text"):
         assert os.path.isdir(os.path.join(table_dir(side, tbl), "segment=1")), tbl
     assert _results(spark, side) == before
+    # ... and so does the layout report: committed segments only
+    n_segments = spark.read.parquet(side + "/stats").collect()[0]["n_segments"]
+    layout = index_stats(spark, side).collect()
+    assert sorted({r["segment"] for r in layout}) == list(range(n_segments))
+    assert sum(r["n_postings"] for r in layout) == postings_before
 
     res = refresh_index(spark, pages, side)
     assert res["segment"] == 1
