@@ -6,6 +6,8 @@ import shutil
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 from pdfsearch_spark.session import get_spark
 from pdfsearch_spark import corpus
 from pdfsearch_spark.extract import extract_text
