@@ -106,91 +106,6 @@ def varint_decode(buf: bytes | memoryview, count: int | None = None, offset: int
     return vals
 
 
-def encode_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    positions: list[np.ndarray],
-    avgdl: float,
-) -> dict:
-    """Encode one (term, shard) posting list. Inputs sorted by doc_id asc.
-
-    Returns dict with blob columns + block metadata arrays (SURVEY.md §1.3
-    postings table schema).
-    """
-    n = len(doc_ids)
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids = doc_ids[order].astype(np.int64)
-    tfs = tfs[order].astype(np.int64)
-    dls = dls[order].astype(np.int64)
-    positions = [positions[i] for i in order]
-
-    starts = np.arange(0, n, BLOCK, dtype=np.int64)
-
-    # doc id stream: zigzag first-in-block, plain gaps within block — each
-    # block independently decodable for WAND skipping. Built whole-list:
-    u = doc_ids.view(np.uint64)
-    gaps = np.empty(n, dtype=np.uint64)
-    if n > 1:
-        gaps[1:] = u[1:] - u[:-1]
-    firsts = u[starts]
-    gaps[starts] = (firsts << np.uint64(1)) ^ (doc_ids[starts] >> np.int64(63)).view(np.uint64)
-
-    # position stream: per doc [count, p0, gaps...], built with array ops
-    plens = np.fromiter((len(p) for p in positions), dtype=np.int64, count=n)
-    flat = (
-        np.concatenate(positions).astype(np.int64)
-        if plens.sum()
-        else np.zeros(0, dtype=np.int64)
-    )
-    fstarts = np.zeros(n, dtype=np.int64)
-    np.cumsum(plens[:-1], out=fstarts[1:])
-    d = np.empty(len(flat), dtype=np.int64)
-    if len(flat):
-        d[1:] = flat[1:] - flat[:-1]
-        nz = plens > 0
-        d[fstarts[nz]] = flat[fstarts[nz]]
-    total = int(plens.sum()) + n
-    stream = np.empty(total, dtype=np.uint64)
-    cidx = fstarts + np.arange(n, dtype=np.int64)  # count slots
-    stream[cidx] = plens.astype(np.uint64)
-    mask = np.ones(total, dtype=bool)
-    mask[cidx] = False
-    stream[mask] = d.view(np.uint64)
-
-    # ONE varint pass over [doc gaps | tfs | pos stream | dls]
-    cat = np.concatenate([gaps, tfs.view(np.uint64), stream, dls.view(np.uint64)])
-    buf, offs = _varint_stream(cat)
-    b_doc, b_tf, b_pos, b_dl = 0, n, 2 * n, 2 * n + total
-    doc_blob = buf[offs[b_doc] : offs[b_tf]].tobytes()
-    tf_blob = buf[offs[b_tf] : offs[b_pos]].tobytes()
-    pos_blob = buf[offs[b_pos] : offs[b_dl]].tobytes()
-    dl_blob = buf[offs[b_dl] :].tobytes()
-
-    impact = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * (dls / max(avgdl, 1e-9))))
-    max_impacts = np.maximum.reduceat(impact, starts) if n else np.zeros(0)
-    block_lens = np.diff(np.append(starts, n))
-
-    return {
-        "df": n,
-        "cf": int(tfs.sum()),
-        # per-doc lengths travel with the posting so scoring never joins a
-        # doc-stats table at query time (self-contained shard reads)
-        "dl_blob": dl_blob,
-        "doc_blob": doc_blob,
-        "tf_blob": tf_blob,
-        "pos_blob": pos_blob,
-        "first_docs": doc_ids[starts].tolist(),
-        "last_docs": doc_ids[np.minimum(starts + BLOCK, n) - 1].tolist(),
-        "doc_offs": (offs[b_doc + starts] - offs[b_doc]).tolist(),
-        "tf_offs": (offs[b_tf + starts] - offs[b_tf]).tolist(),
-        "pos_offs": (offs[b_pos + cidx[starts]] - offs[b_pos]).tolist(),
-        "dl_offs": (offs[b_dl + starts] - offs[b_dl]).tolist(),
-        "block_lens": block_lens.tolist(),
-        "max_impacts": [float(x) for x in max_impacts],
-    }
-
-
 def encode_shard_frame(
     terms: np.ndarray,
     doc_ids: np.ndarray,
@@ -201,11 +116,10 @@ def encode_shard_frame(
 ) -> dict:
     """Encode ALL posting lists of one shard in one vectorized pass.
 
-    Inputs must be sorted by (term, doc_id). Format per term is identical to
-    encode_postings (golden-tested round-trip); the difference is purely
-    mechanical: one _varint_stream call and ~50 numpy ops for the whole
-    shard instead of per-term pandas slicing — ~10x fewer Python dispatches
-    in the build's hottest stage. Returns dict of column lists.
+    Inputs must be sorted by (term, doc_id). One _varint_stream call and
+    ~50 numpy ops encode the whole shard: no per-term Python. Returns a
+    dict of column lists, one entry per term in sorted order (the postings
+    table's blob and block-metadata columns, SURVEY.md §1.3).
     """
     n = len(doc_ids)
     if n == 0:

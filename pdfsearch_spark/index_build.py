@@ -4,12 +4,14 @@ the Spark-first way — SURVEY.md §3.A).
 
 Layout (partitioned Parquet warehouse; Iceberg would use the same schema):
 
-  <out>/doc_text/     shard / full doc store: text + part + every metadata
-                      column (snippet source; the build's later stages are
-                      column-pruned reads of this table)
-  <out>/postings/     shard / term, df, cf, blobs + block metadata
-  <out>/stats/        n_docs, avgdl, total_tokens, n_terms
-  <out>/_build_state/ per-shard manifest: lineage + build metrics
+  <out>/doc_text/     segment / shard / full doc store: text + part + every
+                      metadata column (snippet source; the build's later
+                      stages are column-pruned reads of this table)
+  <out>/postings/     segment / shard / term, df, cf, blobs + block metadata
+  <out>/stats/        n_docs, avgdl, total_tokens, n_shards, n_segments,
+                      format, watermark, epoch — the commit point
+  <out>/_build_state/ per-shard manifest of committed shards: lineage +
+                      build metrics
 
 Two former physical tables are now DERIVED views (format 6), because on a
 columnar store they were pure redundancy and each cost the build (and every
@@ -31,11 +33,16 @@ refresh) a fixed-tail Spark job that Amdahl-floored scaling efficiency
   refresh no longer pays a full-vocabulary groupBy: refresh cost is
   O(batch), not O(vocab).
 
-Postings are a pure function of ``doc_text``, and ONE writer produces them:
-build, refresh and compaction all write doc_text through
-``_write_doc_text`` and encode a segment's postings from it through
-``_encode_postings``. Compaction is a one-segment rebuild from the
-committed doc_text.
+Postings are a pure function of ``doc_text``, and ONE function commits
+every segment (``_commit_segment``): fresh build, resume, refresh and
+compaction only select its input rows and clean up around it. It writes
+the segment's doc_text (corpus totals observed on that write), encodes the
+segment's postings at the resulting avgdl, commits ``stats`` and only then
+writes the ``_build_state`` rows, so a manifest row never names
+uncommitted work. Per-shard lineage (doc count, doc-id fingerprint, token
+count) is measured by the encode pass that already reads every doc of its
+shard — no Spark job of its own. Compaction is a one-segment rebuild from
+the committed doc_text.
 
 Scale design (the part that must survive 1000 executors × 100 TB):
 
@@ -59,14 +66,14 @@ Scale design (the part that must survive 1000 executors × 100 TB):
   matches local[32]; at 10^12 docs this is ~10^5 shards, which Spark handles
   as ordinary partitions.
 - every stage is resumable: postings are written per-shard (partitionBy), the
-  manifest records completed shards + input fingerprint, and resume_build
-  re-runs only missing shards (SURVEY.md §7.6).
+  manifest records committed shards + input fingerprint, and resume_build
+  re-runs only missing shards (SURVEY.md §7.6). A fresh in-place build
+  removes the old manifest before it writes any data.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
 from contextlib import contextmanager
 
@@ -206,16 +213,13 @@ def shard_pkeys(n_parts: int) -> list[int]:
     return pk
 
 
-def cluster_by_shard(df: DataFrame, n_shards: int, n_parts: int | None = None) -> DataFrame:
-    """Exchange that places shard s in partition s exactly (see
-    shard_pkeys). ``n_parts`` >= n_shards spreads shards over more
-    partitions 1:1 (the extras stay empty) for callers that size the
-    exchange to cluster parallelism."""
-    n_parts = n_parts or n_shards
-    lut = F.array(*[F.lit(k) for k in shard_pkeys(n_parts)[:n_shards]])
+def cluster_by_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    """Exchange into ``n_shards`` partitions that places shard s in
+    partition s exactly (see shard_pkeys)."""
+    lut = F.array(*[F.lit(k) for k in shard_pkeys(n_shards)])
     return (
         df.withColumn("_pkey", F.element_at(lut, F.col("shard") + 1).cast("int"))
-        .repartition(n_parts, F.col("_pkey"))
+        .repartition(n_shards, F.col("_pkey"))
         .drop("_pkey")
     )
 
@@ -352,7 +356,10 @@ def extract_documents_sharded(pages_with_ids: DataFrame) -> DataFrame:
 
 
 class _ShardMetricsParam(AccumulatorParam):
-    """Sums {shard: [sec, n_postings, n_terms, postings_bytes, pos_bytes]}."""
+    """Merges per-shard encode records ``{shard: [sec, n_postings, n_terms,
+    postings_bytes, positions_bytes, n_docs, n_tokens, docs_fingerprint]}``:
+    every field sums except the fingerprint (last), which XORs, so the
+    records of a shard read by several tasks merge to the shard's lineage."""
 
     def zero(self, value):
         return {}
@@ -360,7 +367,8 @@ class _ShardMetricsParam(AccumulatorParam):
     def addInPlace(self, a, b):
         for k, v in b.items():
             if k in a:
-                a[k] = [x + y for x, y in zip(a[k], v)]
+                x = a[k]
+                a[k] = [p + q for p, q in zip(x[:-1], v[:-1])] + [x[-1] ^ v[-1]]
             else:
                 a[k] = list(v)
         return a
@@ -383,6 +391,11 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
     locally. A shard must fit in one task's memory — the same bound
     applyInPandas imposed — so ``n_shards`` stays the knob that caps
     per-task state as the corpus grows.
+
+    ``metrics_acc`` (a ``_ShardMetricsParam`` accumulator) receives one
+    record per shard: encode metrics plus the shard's lineage — every doc
+    read (zero-token docs included), its token count and the XOR of its doc
+    ids — so the manifest needs no pass over the store of its own.
     """
 
     def fn(it):
@@ -408,19 +421,24 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
             # per-doc dict loop produced), postings from one stable argsort
             # over an int64 (term, doc) key.
             g = g.sort_values("doc_id", kind="stable")
+            all_doc_ids = g["doc_id"].to_numpy(np.int64)
             tok_lists = [tokenize(t) for t in g["text"]]
             counts = np.fromiter(
                 (len(l) for l in tok_lists), np.int64, len(tok_lists)
             )
-            keep = counts > 0
-            if not keep.any():
+            n_tok = int(counts.sum())
+            lineage = [len(g), n_tok, int(np.bitwise_xor.reduce(all_doc_ids))]
+            if n_tok == 0:
+                if metrics_acc is not None:
+                    sec = time.perf_counter() - t0
+                    metrics_acc.add({int(shard): [sec, 0, 0, 0, 0, *lineage]})
                 continue
-            doc_ids_arr = g["doc_id"].to_numpy(np.int64)[keep]
+            keep = counts > 0
+            doc_ids_arr = all_doc_ids[keep]
             counts_k = counts[keep]
-            all_toks = list(
-                chain.from_iterable(l for l in tok_lists if l)
+            all_toks = np.fromiter(
+                chain.from_iterable(tok_lists), dtype=object, count=n_tok
             )
-            n_tok = int(counts_k.sum())
             codes, uniques = pd.factorize(all_toks)
             nd = len(counts_k)
             doc_ord = np.repeat(np.arange(nd, dtype=np.int64), counts_k)
@@ -469,8 +487,9 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
                     + sum(len(b) for b in cols["dl_blob"])
                 )
                 qbytes = int(sum(len(b) for b in cols["pos_blob"]))
+                sec = time.perf_counter() - t0
                 metrics_acc.add(
-                    {int(shard): [time.perf_counter() - t0, n_post, len(out), pbytes, qbytes]}
+                    {int(shard): [sec, n_post, len(out), pbytes, qbytes, *lineage]}
                 )
             yield out[[f.name for f in POSTING_SCHEMA.fields]]
 
@@ -506,9 +525,10 @@ def _encode_postings(
     row per (segment, shard, term)); tokenize → aggregate → encode runs in a
     single mapInPandas (encode_docs_partitions), no shuffle, and the
     per-term payload never crosses an Arrow boundary. Returns the per-shard
-    encode metrics ``{shard: [sec, n_postings, n_terms, postings_bytes,
-    positions_bytes]}``, measured at the source by accumulator (task retries
-    double-count; they are throughput evidence, not invariants)."""
+    records ``{shard: [sec, n_postings, n_terms, postings_bytes,
+    positions_bytes, n_docs, n_tokens, docs_fingerprint]}``, measured at
+    the source by accumulator: the write is a result stage, so each
+    task's records merge exactly once."""
     acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
     with _whole_file_scans(spark):
         (
@@ -524,48 +544,27 @@ def _encode_postings(
     return dict(acc.value)
 
 
-def _shard_lineage(store: DataFrame) -> dict:
-    """Per-shard lineage of doc-store rows — doc count, input fingerprint
-    (bit_xor of doc_ids: order-independent, cheap), token count, max
-    warc_ts — in ONE pruned agg (no text or blob reads)."""
-    return {
-        r["shard"]: r
-        for r in store.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
-            F.sum("dl").alias("n_tokens"),
-            F.max("warc_ts").alias("watermark"),
-        )
-        .collect()
-    }
-
-
 def _write_manifest(
-    spark: SparkSession,
-    out_dir: str,
-    shards: list[int],
-    lineage: dict,
-    shard_metrics: dict,
-    mode: str,
+    spark: SparkSession, out_dir: str, shards, shard_metrics: dict, mode: str
 ) -> None:
     """Per-shard lineage + metrics manifest (``_build_state``; the north_rule
     checkpoint clause that resume_build reads): one ``complete`` row per
-    written shard, joining its lineage with its encode metrics."""
+    committed shard, from its encode record (a shard with no docs has no
+    record and gets zeros)."""
     built_at = pd.Timestamp.utcnow().tz_localize(None)
     rows = []
     for s in shards:
-        lin = lineage.get(s)
-        n_docs = int(lin["n_docs"]) if lin else 0
-        sec, n_post, n_terms, pbytes, qbytes = shard_metrics.get(s, [0.0, 0, 0, 0, 0])
+        sec, n_post, n_terms, pbytes, qbytes, n_docs, n_tokens, fp = shard_metrics.get(
+            s, [0.0, 0, 0, 0, 0, 0, 0, 0]
+        )
         rows.append(
             {
                 "shard": s,
                 "status": "complete",
                 "built_at": built_at,
-                "n_docs": n_docs,
-                "docs_fingerprint": int(lin["docs_fingerprint"]) if lin else 0,
-                "n_tokens": int(lin["n_tokens"]) if lin else 0,
+                "n_docs": int(n_docs),
+                "docs_fingerprint": int(fp),
+                "n_tokens": int(n_tokens),
                 "n_terms": int(n_terms),
                 "n_postings": int(n_post),
                 "postings_bytes": int(pbytes),
@@ -580,6 +579,90 @@ def _write_manifest(
     )
 
 
+def _commit_segment(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    n_shards: int,
+    epoch: int = 0,
+    segment: int = 0,
+    base: tuple = (0, 0, None),
+    shards: list[int] | None = None,
+) -> dict | None:
+    """Write and commit one segment — the one write path of build, resume,
+    refresh and compaction.
+
+    ``docs`` are shard-clustered DOCROW rows; ``base`` is the committed
+    corpus they add to, as (n_docs, total_tokens, watermark); ``shards``
+    narrows the encode and the manifest to a resume's rebuilt shards.
+
+    1. doc_text: ``docs`` become segment ``segment`` of epoch ``epoch``.
+       This write is the extraction's ONE consumer (~one zstd parquet file
+       per shard); every later stage is a column-pruned read of it, never a
+       cached frame — the layout that still works when the corpus exceeds
+       cluster memory. The rows' totals are observed on the write, so
+       N / avgdl / watermark need no job (FTS5 counts zero-token docs in N).
+    2. postings: the segment's shards are encoded at the resulting avgdl;
+       the same pass measures each shard's lineage.
+    3. COMMIT: ``stats`` with n_segments = segment + 1. The watermark only
+       ever advances (out-of-order batches must not regress it).
+    4. ``_build_state``: a new manifest for a whole base segment (fresh
+       build, compaction), appended rows for a resume's or a refresh's
+       shards. Written after the commit, so a manifest row never names
+       uncommitted work: a crash in between costs a resume re-doing
+       committed shards, never skipping a missing one.
+
+    An appended segment (``segment > 0``) with no rows commits nothing and
+    returns None. Otherwise returns the committed totals, the per-shard
+    encode records and the wall time per phase."""
+    phases: dict[str, float] = {}
+    last = [time.time()]
+
+    def _phase(name: str) -> None:
+        now = time.time()
+        phases[name] = round(now - last[0], 2)
+        last[0] = now
+
+    doc_text_dir = table_dir(out_dir, "doc_text", epoch)
+    written = _write_doc_text(docs, doc_text_dir, segment)
+    _phase("extract_and_doc_text_write")
+    n_new = int(written["n_docs"] or 0)
+    if segment > 0 and n_new == 0:
+        return None
+    base_docs, base_tokens, base_wm = base
+    n_docs = base_docs + n_new
+    total_tokens = base_tokens + int(written["n_tokens"] or 0)
+    avgdl = total_tokens / n_docs if n_docs else 0.0
+    wms = [w for w in (base_wm, written["watermark"]) if w is not None]
+    watermark = max(wms) if wms else None
+
+    store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
+    if shards is not None:
+        store = store.filter(F.col("shard").isin(shards))
+    sm = _encode_postings(
+        spark, store, table_dir(out_dir, "postings", epoch), segment, avgdl
+    )
+    _phase("postings_encode_write")
+
+    _write_stats(
+        spark, out_dir, n_docs, avgdl, total_tokens, n_shards, segment + 1,
+        watermark, epoch=epoch,
+    )
+    if segment == 0 and shards is None:
+        _write_manifest(spark, out_dir, range(n_shards), sm, "overwrite")
+    else:
+        _write_manifest(spark, out_dir, shards or sorted(sm), sm, "append")
+    _phase("commit")
+    return {
+        "n_docs": n_docs,
+        "n_new": n_new,
+        "avgdl": avgdl,
+        "total_tokens": total_tokens,
+        "shard_metrics": sm,
+        "phase_sec": phases,
+    }
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -591,27 +674,33 @@ def build_index(
 
     ``only_shards`` is the resume hook: drop completed shards before the
     exchange (never re-shuffled or re-extracted) and rebuild only the given
-    shards' doc_text/postings partitions; global stats re-derive from the
-    now-complete doc_text store.
+    shards' doc_text/postings partitions; the corpus totals they add to
+    come from one aggregate over the other shards' committed doc_text.
     """
     t0 = time.time()
-    phases: dict[str, float] = {}
-    _last = [t0]
-
-    def _phase(name: str) -> None:
-        now = time.time()
-        phases[name] = round(now - _last[0], 2)
-        _last[0] = now
-
+    doc_text_dir = os.path.join(out_dir, "doc_text")
+    base = (0, 0, None)
     if only_shards is None:
-        # Fresh build: clear prior table dirs. Dynamic partition overwrite
-        # (needed for resume/refresh) only replaces partitions present in the
-        # output, so a rebuild over an old dir would otherwise leave orphan
+        # Fresh build: the old manifest goes first — a rebuild killed
+        # midway must not leave it naming every shard complete — then the
+        # prior table dirs. Dynamic partition overwrite (needed for
+        # resume/refresh) only replaces partitions present in the output,
+        # so a rebuild over an old dir would otherwise leave orphan
         # shard/segment partitions behind. documents/term_stats are the
         # tables a pre-format-6 index materialized; nothing reads them now.
+        _hdfs_rm(spark, os.path.join(out_dir, "_build_state"))
         for sub in ("postings", "doc_text", "documents", "term_stats"):
             _hdfs_rm(spark, os.path.join(out_dir, sub))
             _gc_epoch_dirs(spark, out_dir, sub, keep_epochs=0)
+    elif _exists(spark, doc_text_dir):
+        r = (
+            spark.read.schema(DOC_STORE_SCHEMA)
+            .parquet(doc_text_dir)
+            .filter((F.col("segment") == 0) & ~F.col("shard").isin(only_shards))
+            .agg(F.count(F.lit(1)), F.sum("dl"), F.max("warc_ts"))
+            .collect()[0]
+        )
+        base = (int(r[0]), int(r[1] or 0), r[2])
     # ONE full-payload shuffle for the whole build, and it moves RAW pages:
     # the map side computes only (doc_id, shard) from url (a column-pruned
     # pandas UDF — html never enters Python pre-shuffle), rows move once
@@ -619,120 +708,57 @@ def build_index(
     # runs AFTER the exchange in a single Arrow pass. Because doc_id
     # determines shard, url-duplicates land in the same partition and dedup
     # is partition-local — no dropDuplicates shuffle by doc_id, duplicates
-    # are never even extracted, and the doc_text write below needs no
-    # repartition either (each task already holds exactly one shard → one
-    # file per shard partition).
+    # are never even extracted, and the doc_text write needs no repartition
+    # either (each task already holds exactly one shard → one file per
+    # shard partition).
     pre = ids_and_shards(pages.select(*PAGE_COLUMNS), n_shards)
     if only_shards is not None:
         # per-partition checkpoint resume: completed shards are dropped
         # BEFORE the exchange — their pages are never shuffled or
-        # re-extracted; their committed doc_text partitions feed the global
-        # stats below unchanged.
+        # re-extracted.
         pre = pre.filter(F.col("shard").isin(only_shards))
-    docs = extract_documents_sharded(cluster_by_shard(pre, n_shards))
-
-    # The extraction has exactly ONE consumer action: the doc_text store
-    # (text + every display/metadata field + dl), written shard-clustered
-    # (~one zstd parquet file per shard). Every later stage is a
-    # COLUMN-PRUNED read of this table rather than a pass over a cached
-    # frame: the former MEMORY_AND_DISK serialized cache was deserialized
-    # in full — text included — by three consumers (documents write, stats
-    # agg, encode), and re-inflating text-heavy rows made GC + deserialize
-    # time scale with thread count (profiled at 32 threads: the doc_text
-    # pass spent 2-4x more task time in GC/deser than on CPU). Write-once /
-    # read-pruned is also the only layout that still works when the corpus
-    # does not fit cluster memory.
-    doc_text_dir = os.path.join(out_dir, "doc_text")
-    written = _write_doc_text(docs, doc_text_dir, 0)
-    _phase("extract_and_doc_text_write")
-
-    # ONE read handle (explicit schema, no inference probe) shared by every
-    # downstream stage: its file listing is computed once and cached on the
-    # DataFrame, instead of a fresh listing + footer job per consumer.
-    store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
-
-    # Per-shard lineage feeds only the manifest at the very end of the
-    # build, so on a fresh build — where the global N/avgdl/watermark (FTS5
-    # includes zero-token docs in N and avgdl) already arrived via the write
-    # observation — it runs as a CONCURRENT job overlapped with the postings
-    # encode. On resume the written rows cover just the rebuilt shards, so
-    # the lineage agg is the (serialized) source of the global stats: the
-    # store read covers ALL shards by construction — completed shards'
-    # partitions were already committed, the filtered rebuild just added
-    # the missing ones.
-    lineage: dict = {}
-    lin_state: dict = {}
-
-    def _lineage_agg() -> None:
-        tw = time.time()
-        try:
-            lineage.update(_shard_lineage(store))
-        except BaseException as exc:  # re-raised on join
-            lin_state["exc"] = exc
-        lin_state["sec"] = round(time.time() - tw, 2)
-
-    lin_thread = None
-    if only_shards is None:
-        n_docs = int(written["n_docs"])
-        total_tokens = int(written["n_tokens"] or 0)
-        watermark = written["watermark"]
-        lin_thread = threading.Thread(target=_lineage_agg, name="lineage_agg")
-        lin_thread.start()
-    else:
-        _lineage_agg()
-        if "exc" in lin_state:
-            raise lin_state["exc"]
-        n_docs = sum(r["n_docs"] for r in lineage.values())
-        total_tokens = sum(r["n_tokens"] or 0 for r in lineage.values())
-        wms = [
-            r["watermark"] for r in lineage.values() if r["watermark"] is not None
-        ]
-        watermark = max(wms) if wms else None
-    avgdl = total_tokens / n_docs if n_docs else 0.0
-    _phase("stats_lineage_agg")
-
-    rebuilt = (
-        store if only_shards is None else store.filter(F.col("shard").isin(only_shards))
+    c = _commit_segment(
+        spark,
+        extract_documents_sharded(cluster_by_shard(pre, n_shards)),
+        out_dir,
+        n_shards,
+        base=base,
+        shards=only_shards,
     )
-    sm = _encode_postings(spark, rebuilt, os.path.join(out_dir, "postings"), 0, avgdl)
-    _phase("postings_encode_write")
-
-    if lin_thread is not None:
-        lin_thread.join()
-        if "exc" in lin_state:
-            raise lin_state["exc"]
-        # overlapped with the postings encode; own wall recorded
-        phases["lineage_agg"] = lin_state.get("sec", 0.0)
-
-    _write_stats(spark, out_dir, n_docs, avgdl, total_tokens, n_shards, 1, watermark)
-
     elapsed = time.time() - t0
-    if only_shards is None:
-        _write_manifest(spark, out_dir, list(range(n_shards)), lineage, sm, "overwrite")
-    else:
-        _write_manifest(spark, out_dir, only_shards, lineage, sm, "append")
+    sm = c["shard_metrics"]
+    n_docs = c["n_docs"]
     n_postings = int(sum(v[1] for v in sm.values()))
-
     return {
-        "n_docs": int(n_docs),
-        "avgdl": avgdl,
-        "total_tokens": int(total_tokens),
+        "n_docs": n_docs,
+        "avgdl": c["avgdl"],
+        "total_tokens": c["total_tokens"],
         "n_postings": n_postings,
         "n_shards": n_shards,
         "elapsed_sec": elapsed,
-        "phase_sec": phases,
-        "docs_per_sec": int(n_docs) / elapsed if elapsed > 0 else 0.0,
+        "phase_sec": c["phase_sec"],
+        "docs_per_sec": n_docs / elapsed if elapsed > 0 else 0.0,
         "postings_per_sec": n_postings / elapsed if elapsed > 0 else 0.0,
         "postings_bytes": int(sum(v[3] for v in sm.values())),
         "positions_bytes": int(sum(v[4] for v in sm.values())),
     }
 
 
-def _hdfs_rm(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FS API (works for any scheme)."""
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path`` — works for any scheme."""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _fs(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def _hdfs_rm(spark: SparkSession, path: str) -> None:
+    """Recursive delete (a missing path is a no-op)."""
+    fs, hpath = _fs(spark, path)
     fs.delete(hpath, True)
 
 
@@ -755,29 +781,22 @@ def _gc_epoch_dirs(
         else {int(k) for k in keep_epochs}
     )
     keep_names = {f"{tbl}.v{k}" for k in keep}
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(out_dir).getFileSystem(sc._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(jpath(os.path.join(out_dir, f"{tbl}.v*")))
-    for st in statuses or []:
+    fs, pattern = _fs(spark, os.path.join(out_dir, f"{tbl}.v*"))
+    for st in fs.globStatus(pattern) or []:
         p = st.getPath()
         if p.getName() not in keep_names:
             fs.delete(p, True)
     if 0 not in keep:
-        base = jpath(os.path.join(out_dir, tbl))
-        if fs.exists(base):
-            fs.delete(base, True)
+        _hdfs_rm(spark, os.path.join(out_dir, tbl))
 
 
 def _count_parquet_files(spark: SparkSession, path: str) -> int:
     """Number of .parquet data files under `path` (recursive) — the
     small-files metric compaction exists to improve."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
         return 0
-    it = fs.listFiles(jpath, True)
+    it = fs.listFiles(hpath, True)
     n = 0
     while it.hasNext():
         if it.next().getPath().getName().endswith(".parquet"):
@@ -833,15 +852,15 @@ def resume_build(
     spark: SparkSession, pages: DataFrame, out_dir: str, n_shards: int = SHARD_DEFAULT
 ) -> dict:
     """Complete a partial build: read the manifest, build only missing shards."""
-    try:
+    manifest = os.path.join(out_dir, "_build_state")
+    done = set()
+    if _exists(spark, manifest):
         done = {
             r["shard"]
-            for r in spark.read.parquet(os.path.join(out_dir, "_build_state"))
+            for r in spark.read.parquet(manifest)
             .filter(F.col("status") == "complete")
             .collect()
         }
-    except Exception:
-        done = set()
     missing = [s for s in range(n_shards) if s not in done]
     if not missing:
         return {"resumed": 0}
@@ -863,15 +882,22 @@ def refresh_index(
     ``segment=<n>``. Doc ids are hash-sharded, so every doc's postings still
     land in its shard — a query evaluates each (segment, shard) on its own
     (segments partition the doc space) and merges only per-group top-k rows.
+    The segment's blocks are encoded against the NEW corpus avgdl (older
+    segments' block bounds are rescaled at query time via enc_avgdl), and
+    global df/cf stays derivable from the postings table, so an append costs
+    O(batch), not O(vocab).
 
-    Crash safety: a refresh first deletes whatever an earlier crashed
-    attempt left under the uncommitted ``segment=<n>``, then writes the
-    segment's partitions, and the small ``stats`` file — carrying the
-    watermark and segment count — is written LAST as the commit point. A
-    rerun after any crash, with the same batch or another one (the
-    streaming wrapper's next micro-batch), commits exactly its own docs.
-    On Iceberg this whole function is one transaction; on plain parquet the
-    ordering provides the same at-least-once-with-idempotence guarantee.
+    This function only selects the batch's new docs and clears the
+    uncommitted segment; ``_commit_segment`` writes and commits it, as it
+    does for the build and compaction: doc_text, postings, then the small
+    ``stats`` file — carrying the watermark and segment count — as the
+    commit point, then the segment's ``_build_state`` rows. A refresh first
+    deletes whatever an earlier crashed attempt left under the uncommitted
+    ``segment=<n>``, so a rerun after any crash, with the same batch or
+    another one (the streaming wrapper's next micro-batch), commits exactly
+    its own docs. On Iceberg this whole function is one transaction; on
+    plain parquet the ordering provides the same
+    at-least-once-with-idempotence guarantee.
 
     Re-crawled urls keep their first version (reference semantics:
     ``files.path UNIQUE`` + INSERT DO NOTHING, database/database.go:46,257).
@@ -888,9 +914,8 @@ def refresh_index(
     seg = int(st["n_segments"])
     watermark = st["watermark"]
     epoch = int(st["epoch"])
-    doc_text_dir = table_dir(out_dir, "doc_text", epoch)
     # A crashed attempt may have left segment=<seg> partitions written from
-    # ANOTHER batch; the writes below overwrite only the shards this batch
+    # ANOTHER batch; the writes overwrite only the shards this batch
     # touches, so clear the whole uncommitted segment first (no reader sees
     # it: readers stop at segment < n_segments).
     for tbl in ("doc_text", "postings"):
@@ -905,7 +930,7 @@ def refresh_index(
     # Column-pruned read of the store — text chunks never touched.
     old_ids = (
         spark.read.schema(DOC_STORE_SCHEMA)
-        .parquet(doc_text_dir)
+        .parquet(table_dir(out_dir, "doc_text", epoch))
         .filter(F.col("segment") < seg)
         .select("doc_id")
     )
@@ -914,53 +939,25 @@ def refresh_index(
     # the fresh build): batch-internal duplicates co-locate with their
     # shard, so extract_documents_sharded's fused dedup+extract replaces
     # the former dropDuplicates exchange entirely.
-    n_spread = max(n_shards, spark.sparkContext.defaultParallelism * 2)
-    docs = extract_documents_sharded(cluster_by_shard(pre, n_shards, n_spread))
-
-    # 1) the segment's doc_text partitions, with the segment's stats (doc
-    #    count, token count, new watermark) observed on the write — like the
-    #    fresh build, every later step is a column-pruned read of the new
-    #    segment's partitions (an empty batch writes none, commits nothing)
-    added = _write_doc_text(docs, doc_text_dir, seg)
-    n_new = int(added["n_docs"] or 0)
-    if n_new == 0:
-        return {"appended_docs": 0, "segment": None, "elapsed_sec": time.time() - t0}
-    n_docs2 = int(st["n_docs"]) + n_new
-    total2 = int(st["total_tokens"]) + int(added["n_tokens"] or 0)
-    avgdl2 = total2 / n_docs2 if n_docs2 else 0.0
-    store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
-
-    # 2) postings for the new segment only, blocks encoded against the NEW
-    #    avgdl (older segments' block bounds are rescaled at query time via
-    #    enc_avgdl). Global df/cf stays derivable from the postings table
-    #    (all segments), so a segment append costs O(batch), not O(vocab).
-    sm = _encode_postings(
-        spark, store, table_dir(out_dir, "postings", epoch), seg, avgdl2
-    )
-
-    # 3) per-shard lineage + metrics for the manifest (pruned store read)
-    lineage = _shard_lineage(store.filter(F.col("segment") == seg))
-    _write_manifest(spark, out_dir, sorted(lineage), lineage, sm, "append")
-
-    # 4) COMMIT: stats last — new watermark + segment count become visible
-    #    only once every data partition for the segment is in place.
-    #    The watermark only ever advances (out-of-order batches must not
-    #    regress it).
-    new_wm = added["watermark"]
-    if watermark is not None and (new_wm is None or new_wm < watermark):
-        new_wm = watermark
-    _write_stats(
-        spark, out_dir, n_docs2, avgdl2, total2, n_shards, seg + 1, new_wm,
+    c = _commit_segment(
+        spark,
+        extract_documents_sharded(cluster_by_shard(pre, n_shards)),
+        out_dir,
+        n_shards,
         epoch=epoch,
+        segment=seg,
+        base=(int(st["n_docs"]), int(st["total_tokens"]), watermark),
     )
     elapsed = time.time() - t0
+    if c is None:
+        return {"appended_docs": 0, "segment": None, "elapsed_sec": elapsed}
     return {
-        "appended_docs": n_new,
+        "appended_docs": c["n_new"],
         "segment": seg,
-        "n_docs": n_docs2,
-        "avgdl": avgdl2,
+        "n_docs": c["n_docs"],
+        "avgdl": c["avgdl"],
         "elapsed_sec": elapsed,
-        "docs_per_sec": n_new / elapsed if elapsed > 0 else 0.0,
+        "docs_per_sec": c["n_new"] / elapsed if elapsed > 0 else 0.0,
     }
 
 
@@ -970,12 +967,14 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     rewriteDataFiles analog.
 
     Postings are a pure function of doc_text, so compaction is a
-    one-segment REBUILD through the build's own writers: the committed
+    one-segment REBUILD through the build's own commit path: the committed
     doc_text rows (segment < n_segments — a crashed refresh's uncommitted
     segment is left out, exactly as readers leave it out) are clustered by
-    shard and written as segment 0 of the next epoch, then that segment's
-    postings are encoded from it at the committed avgdl. No posting blob
-    is decoded, and the result equals a fresh build of the same pages.
+    shard and handed to ``_commit_segment`` as segment 0 of the next
+    epoch, which writes them, encodes their postings, commits ``stats`` and
+    then rewrites the ``_build_state`` manifest for the compacted segment.
+    No posting blob is decoded, and the result equals a fresh build of the
+    same pages.
 
     Crash safety (versioned-root commit, the plain-parquet stand-in for an
     Iceberg RewriteFiles snapshot): the merged tables are written into the
@@ -995,7 +994,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     segments_before = int(st["n_segments"])
     if segments_before <= 1:
         return {"compacted": False, "elapsed_sec": time.time() - t0}
-    n_shards, avgdl = int(st["n_shards"]), float(st["avgdl"])
+    n_shards = int(st["n_shards"])
     epoch = int(st["epoch"])
     new_epoch = epoch + 1
     files_before = _count_parquet_files(
@@ -1007,28 +1006,8 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
         .parquet(table_dir(out_dir, "doc_text", epoch))
         .filter(F.col("segment") < segments_before)
     )
-    doc_text_dir = table_dir(out_dir, "doc_text", new_epoch)
-    _write_doc_text(cluster_by_shard(committed, n_shards), doc_text_dir, 0)
-    _encode_postings(
-        spark,
-        spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir),
-        table_dir(out_dir, "postings", new_epoch),
-        0,
-        avgdl,
-    )
-
-    # COMMIT: flip the epoch in stats. Until this write lands, readers
-    # resolve the old epoch's complete dirs.
-    _write_stats(
-        spark,
-        out_dir,
-        int(st["n_docs"]),
-        avgdl,
-        int(st["total_tokens"]),
-        n_shards,
-        1,
-        st["watermark"],
-        epoch=new_epoch,
+    _commit_segment(
+        spark, cluster_by_shard(committed, n_shards), out_dir, n_shards, epoch=new_epoch
     )
 
     # GC old epochs (post-commit; failures here leave garbage, never a

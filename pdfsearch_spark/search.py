@@ -311,11 +311,11 @@ class SearchEngine:
         """
         spark = self.spark
         if not query or not query.strip():
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
+            return _empty_frame(spark, RESULT_SCHEMA)
         tree, phrases = self._plan(query)
         hits = self._execute([(0, tree, phrases)], k, book_ids) if tree is not None else {}
         if 0 not in hits:
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
+            return _empty_frame(spark, RESULT_SCHEMA)
 
         # Result assembly over ≤k rows in ONE point-lookup job. Literal id +
         # shard filters push down to parquet (partition pruning on shard,
@@ -375,6 +375,8 @@ class SearchEngine:
             for qid, (ids, scores) in sorted(self._execute(parsed, k).items())
             for rank, (d, s) in enumerate(zip(ids.tolist(), scores.tolist()), start=1)
         ]
+        if not rows:
+            return _empty_frame(self.spark, BATCH_SCHEMA)
         # a local pandas frame (arrow): collecting it runs no Spark job
         pdf = pd.DataFrame(rows, columns=["query_id", "doc_id", "score", "rank"])
         return self.spark.createDataFrame(pdf, schema=BATCH_SCHEMA)
@@ -400,6 +402,13 @@ class SearchEngine:
             titles.append(title)
             bodies.append(body)
         return titles, bodies
+
+
+def _empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty result that collects without a Spark job: the optimizer
+    folds ``limit(0)`` into an empty local relation. An empty list or pandas
+    frame alone becomes a parallelized scan, one job of empty Python tasks."""
+    return spark.createDataFrame([], schema=schema).limit(0)
 
 
 def _is_a_priori(tree: Node, phrases: list[Phrase]) -> bool:

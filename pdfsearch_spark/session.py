@@ -100,8 +100,8 @@ def get_spark(
         # OS on free, so each Arrow batch / numpy temp in the encode and
         # extract hot loops re-faults its pages on every call — and with
         # many concurrent workers those faults serialize on kernel memory
-        # locks (measured: 23-35% per-encode overhead at 8-32 workers,
-        # scripts/dev_concurrency_probe.py). Raising the mmap threshold and
+        # locks (measured: 23-35% per-encode overhead at 8-32 workers; see
+        # SURVEY.md §5.3, the r3 scaling fixes). Raising the mmap threshold and
         # disabling trim keeps the scratch pages resident in the worker for
         # its lifetime. ~256 MB per worker upper bound, freed on worker exit.
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")

@@ -22,11 +22,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # format-6 builds have no documents_write / term_stats phases (both former
-# tables are derived views now); the keys remain here so the script still
-# reads pre-format-6 history rows, and med() skips absent keys.
+# tables are derived views now), and builds that measure lineage in the
+# encode pass have no lineage_agg phase but a commit phase (stats +
+# manifest); the old keys remain here so the script still reads older
+# history rows, and med() skips absent keys.
 PHASES = [
     "extract_and_doc_text_write",
     "postings_encode_write",
+    "commit",
     "lineage_agg",
     "documents_write",
     "term_stats",

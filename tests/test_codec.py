@@ -15,7 +15,7 @@ from pdfsearch_spark.codec import (
     decode_doc_ids,
     decode_positions,
     decode_tfs,
-    encode_postings,
+    encode_shard_frame,
     varint_decode,
     varint_encode,
 )
@@ -53,13 +53,21 @@ def _random_posting(rng, n):
     return doc_ids, tfs, dls, positions
 
 
+def _encode(doc_ids, tfs, dls, positions, avgdl):
+    """One posting list (doc_ids ascending) through the build's shard
+    encoder, as its one term row."""
+    terms = np.full(len(doc_ids), "t", dtype=object)
+    cols = encode_shard_frame(terms, doc_ids, tfs, dls, positions, avgdl)
+    return {c: v[0] for c, v in cols.items()}
+
+
 def test_postings_roundtrip_and_blockmeta():
     rng = np.random.Generator(np.random.Philox(key=[13, 42]))
     avgdl = 120.0
     for trial in range(8):
         n = int(rng.integers(1, 700))
         doc_ids, tfs, dls, positions = _random_posting(rng, n)
-        enc = encode_postings(doc_ids, tfs, dls, positions, avgdl)
+        enc = _encode(doc_ids, tfs, dls, positions, avgdl)
 
         assert enc["df"] == n
         assert enc["cf"] == int(tfs.sum())
@@ -89,12 +97,12 @@ def test_block_positions_match_full_decode():
     and PostingList.positions decodes only the blocks holding requested docs."""
     import pandas as pd
 
-    from pdfsearch_spark.codec import decode_block_positions, encode_postings
+    from pdfsearch_spark.codec import decode_block_positions
     from pdfsearch_spark.query.scorer import postings_by_term
 
     rng = np.random.Generator(np.random.Philox(key=[3, 99]))
     doc_ids, tfs, dls, positions = _random_posting(rng, 600)
-    enc = encode_postings(doc_ids, tfs, dls, positions, 120.0)
+    enc = _encode(doc_ids, tfs, dls, positions, 120.0)
     full = decode_positions(enc["pos_blob"], len(doc_ids))
     # per-block decode matches the whole-list decode
     offs, lens = enc["pos_offs"], enc["block_lens"]

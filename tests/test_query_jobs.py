@@ -5,8 +5,9 @@ Every count is taken for one call inside its own job group
 call, so the df cache and the parquet file listing are warm — the state a
 serving engine is in. Jobs are the fixed cost of a query on Spark: a
 plain-term search must stay at 3 (scoring exchange, collect, doc lookup),
-the df-sentinel path must not need the former 7, and a batch of a-priori
-queries must cost no more than the scoring half of one search.
+the df-sentinel path must not need the former 7, a batch of a-priori
+queries must cost no more than the scoring half of one search, and an
+empty result costs no job of its own.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import itertools
 
 TERM = "hypertension"
 PHRASE = '"renal failure"'
+ZERO_HIT = "qqzxjvvk"  # a plain term in no fixture document
 A_PRIORI = ["hypertension", "renal failure", "renal OR failure", "failure NOT renal"]
 
 _groups = itertools.count()
@@ -62,3 +64,18 @@ def test_a_priori_batch_jobs(spark, engine):
     batch = _warm_jobs(spark, lambda: engine.search_batch(A_PRIORI, k=10).collect())
     # a search is the batch executor plus one doc-lookup job
     assert batch <= search - 1, (batch, search)
+
+
+def test_zero_hit_search_jobs(spark, engine):
+    n = _warm_jobs(
+        spark, lambda: engine.search(ZERO_HIT, k=10, with_snippets=False).collect()
+    )
+    # df lookup and shard pass; the empty result itself runs none
+    assert n <= 2, n
+
+
+def test_empty_results_run_no_job(spark, engine):
+    assert engine.search("  ", k=10).collect() == []
+    assert _jobs(spark, lambda: engine.search("  ", k=10).collect()) == 0
+    assert engine.search_batch(["", " "], k=10).collect() == []
+    assert _jobs(spark, lambda: engine.search_batch(["", " "], k=10).collect()) == 0

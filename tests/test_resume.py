@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pdfsearch_spark import corpus
@@ -92,3 +93,103 @@ def test_fresh_build_sweeps_legacy_tables(spark, tmp_path):
     build_index(spark, corpus.web_pages_df(spark, N, partitions=4), d, n_shards=SHARDS)
     assert not [sub for sub in legacy if os.path.exists(os.path.join(d, sub))]
     assert os.path.isdir(os.path.join(d, "postings"))
+
+
+def test_killed_rebuild_resumes(spark, tmp_path, monkeypatch):
+    """An in-place rebuild of a complete index, killed during the postings
+    encode, must not leave the old manifest naming every shard complete:
+    resume rebuilds the index, equal to a single-shot build."""
+    from pdfsearch_spark import index_build
+
+    full_dir = str(tmp_path / "full")
+    d = str(tmp_path / "idx")
+    pages = corpus.web_pages_df(spark, N, partitions=4)
+    build_index(spark, pages, full_dir, n_shards=SHARDS)
+    build_index(spark, pages, d, n_shards=SHARDS)
+
+    def _boom(*a, **k):
+        raise RuntimeError("simulated crash during encode")
+
+    with monkeypatch.context() as m:
+        m.setattr(index_build, "_encode_postings", _boom)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            build_index(spark, pages, d, n_shards=SHARDS)
+
+    res = resume_build(spark, pages, d, n_shards=SHARDS)
+    assert res.get("resumed") != 0  # did real work
+    a = _postings_fingerprint(spark, full_dir)
+    b = _postings_fingerprint(spark, d)
+    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
+
+
+def _lineage(rows) -> dict:
+    """shard -> (n_docs, docs_fingerprint, n_tokens), shards with docs only."""
+    return {
+        r["shard"]: (r["n_docs"], r["docs_fingerprint"], r["n_tokens"])
+        for r in rows
+        if r["n_docs"]
+    }
+
+
+def _doc_text_lineage(spark, d, segments=None) -> dict:
+    """The reference: one groupBy over the committed doc_text (of the given
+    segments, default all committed ones)."""
+    from pdfsearch_spark.index_build import table_dir
+
+    st = spark.read.parquet(os.path.join(d, "stats")).collect()[0]
+    docs = spark.read.parquet(table_dir(d, "doc_text", st["epoch"])).filter(
+        F.col("segment") < st["n_segments"]
+    )
+    if segments is not None:
+        docs = docs.filter(F.col("segment").isin(segments))
+    return _lineage(
+        docs.groupBy("shard")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
+            F.sum("dl").alias("n_tokens"),
+        )
+        .collect()
+    )
+
+
+def _manifest_rows(spark, d) -> list:
+    return spark.read.parquet(os.path.join(d, "_build_state")).collect()
+
+
+def test_manifest_lineage_matches_doc_text(spark, tmp_path):
+    """The lineage the encode pass measures equals a groupBy over the
+    committed doc_text: after a build, a partial build and its resume, for
+    a refresh's appended rows (against that segment), and after compaction
+    (one row per shard, the compacted segment)."""
+    from pdfsearch_spark.index_build import compact_index, refresh_index
+
+    pages = corpus.web_pages_df(spark, N, partitions=4)
+    cutoff = corpus.gen_pandas(N)["warc_ts"].quantile(0.5)
+    older = pages.filter(F.col("warc_ts") <= F.lit(cutoff))
+
+    built = str(tmp_path / "built")
+    build_index(spark, older, built, n_shards=SHARDS)
+    rows = _manifest_rows(spark, built)
+    assert sorted(r["shard"] for r in rows) == list(range(SHARDS))
+    assert _lineage(rows) == _doc_text_lineage(spark, built)
+
+    d = str(tmp_path / "resumed")
+    build_index(spark, older, d, n_shards=SHARDS, only_shards=[1, 3])
+    assert _lineage(_manifest_rows(spark, d)) == _doc_text_lineage(spark, d)
+    resume_build(spark, older, d, n_shards=SHARDS)
+    rows = _manifest_rows(spark, d)
+    assert sorted(r["shard"] for r in rows) == list(range(SHARDS))
+    assert _lineage(rows) == _doc_text_lineage(spark, built)
+    assert _lineage(rows) == _doc_text_lineage(spark, d)
+
+    res = refresh_index(spark, pages, d)
+    assert res["appended_docs"] > 0
+    appended = set(_manifest_rows(spark, d)) - set(rows)
+    assert _lineage(appended) == _doc_text_lineage(spark, d, [res["segment"]])
+
+    assert compact_index(spark, d)["compacted"] is True
+    rows = _manifest_rows(spark, d)
+    assert sorted(r["shard"] for r in rows) == list(range(SHARDS))
+    assert _lineage(rows) == _doc_text_lineage(spark, d)
+    assert sum(r["n_docs"] for r in rows) == N

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
-from pdfsearch_spark.codec import encode_postings
+from pdfsearch_spark.codec import encode_shard_frame
 from pdfsearch_spark.query.parser import parse_query
 from pdfsearch_spark.query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 from pdfsearch_spark.search import _topk
@@ -32,34 +32,53 @@ def _make_term(rng, df, tf_hi):
     return doc_ids, tfs, dls, positions
 
 
+def _frame(lists: dict, segment: int | None = None) -> pd.DataFrame:
+    """Posting rows of one shard through the build's encoder. ``lists`` maps
+    term -> (doc_ids ascending, tfs, dls, positions); the encoder gets them
+    sorted by (term, doc_id)."""
+    terms = sorted(lists)
+
+    def cat(i):
+        return np.concatenate([lists[t][i] for t in terms])
+
+    frame = pd.DataFrame(
+        encode_shard_frame(
+            np.concatenate([np.full(len(lists[t][0]), t, dtype=object) for t in terms]),
+            cat(0),
+            cat(1),
+            cat(2),
+            [p for t in terms for p in lists[t][3]],
+            AVGDL,
+        )
+    )
+    if segment is not None:
+        frame["segment"] = segment
+    return frame
+
+
 @pytest.fixture(scope="module")
 def shard():
     rng = np.random.Generator(np.random.Philox(key=[11, 3]))
     spec = {"common": (6000, 8), "mid": (900, 6), "rare": (60, 12)}
-    raw, rows = {}, []
+    raw = {}
     for term, (df, tf_hi) in spec.items():
         doc_ids, tfs, dls, positions = _make_term(rng, df, tf_hi)
-        # shared dl per doc across terms (dl is a doc property): align overlaps
         raw[term] = (doc_ids, tfs, dls)
-        enc = encode_postings(doc_ids, tfs, dls, positions, AVGDL)
-        enc["term"] = term
-        rows.append(enc)
-    # make dls consistent: rebuild with one global dl table
+    # shared dl per doc across terms (dl is a doc property): one global
+    # dl table
     dl_table = {}
     for term in spec:
         doc_ids, tfs, _ = raw[term]
         for d in doc_ids.tolist():
             dl_table.setdefault(d, int(rng.integers(20, 400)))
-    rows = []
-    for term, (df, tf_hi) in spec.items():
+    lists = {}
+    for term in spec:
         doc_ids, tfs, _ = raw[term]
         dls = np.array([dl_table[d] for d in doc_ids.tolist()], dtype=np.int64)
         positions = [np.arange(t, dtype=np.int64) for t in tfs]
-        enc = encode_postings(doc_ids, tfs, dls, positions, AVGDL)
-        enc["term"] = term
-        rows.append(enc)
+        lists[term] = (doc_ids, tfs, dls, positions)
         raw[term] = (doc_ids, tfs, dls)
-    return pd.DataFrame(rows), raw
+    return _frame(lists), raw
 
 
 def _brute_topk(raw, phrase_terms, idfs, k, books=None):
@@ -158,7 +177,7 @@ def test_wand_randomized_multisegment_ab():
         seg_bounds = np.sort(rng.choice(np.arange(1, 10**6), size=n_segs - 1, replace=False)) if n_segs > 1 else np.array([], dtype=np.int64)
         bounds = np.concatenate([[0], seg_bounds, [10**6]]).astype(np.int64)
         raw = {}  # term -> (docs, tfs, dls) global
-        rows = []
+        seg_lists = [{} for _ in range(n_segs)]
         names = [f"t{j}" for j in range(n_terms)]
         shared = np.sort(
             rng.choice(np.arange(1, 10**6, dtype=np.int64),
@@ -177,14 +196,14 @@ def test_wand_randomized_multisegment_ab():
                 m = (docs >= bounds[s]) & (docs < bounds[s + 1])
                 if not m.any():
                     continue
-                enc = encode_postings(
+                seg_lists[s][term] = (
                     docs[m], tfs[m], dls[m],
-                    [np.arange(t, dtype=np.int64) for t in tfs[m]], AVGDL,
+                    [np.arange(t, dtype=np.int64) for t in tfs[m]],
                 )
-                enc["term"] = term
-                enc["segment"] = s
-                rows.append(enc)
-        pdf = pd.DataFrame(rows)
+        pdf = pd.concat(
+            [_frame(lists, s) for s, lists in enumerate(seg_lists) if lists],
+            ignore_index=True,
+        )
         phrase_terms = [names[int(rng.integers(0, n_terms))] for _ in range(int(rng.integers(1, 4)))]
         k = int(rng.integers(1, 300))
         idfs = np.array([idf_of(len(raw[t][0]), N_DOCS * 50) for t in phrase_terms])
@@ -210,18 +229,18 @@ def test_postings_spanning_segments_are_refused():
     """The scorer reads one (segment, shard) at a time: a posting frame
     holding one term in two segments is refused by both shard functions
     instead of being merged."""
-    rows = []
+    frames = []
     for seg, lo in ((0, 1), (1, 10_000)):
         docs = np.arange(lo, lo + 300, dtype=np.int64)
         tfs = np.ones(len(docs), dtype=np.int64)
-        enc = encode_postings(
-            docs, tfs, np.full(len(docs), 50, dtype=np.int64),
-            [np.zeros(1, dtype=np.int64)] * len(docs), AVGDL,
-        )
-        enc["term"] = "common"
-        enc["segment"] = seg
-        rows.append(enc)
-    pdf = pd.DataFrame(rows)
+        lists = {
+            "common": (
+                docs, tfs, np.full(len(docs), 50, dtype=np.int64),
+                [np.zeros(1, dtype=np.int64)] * len(docs),
+            )
+        }
+        frames.append(_frame(lists, seg))
+    pdf = pd.concat(frames, ignore_index=True)
     tree, phrases = parse_query("common", tokenize, unicode61_tokens)
     with pytest.raises(ValueError, match="segment"):
         score_shard(pdf, tree, phrases, {}, N_DOCS, AVGDL, None, 10)
@@ -233,7 +252,7 @@ def test_wand_dead_blocks_skip_decode():
     """Disjoint doc-id ranges: every pivot block is dead (no overlapping
     block of the other term) — zero decodes, None result."""
     rng = np.random.Generator(np.random.Philox(key=[5, 9]))
-    rows = []
+    lists = {}
     spans = {"lowrange": (1, 50_000), "highrange": (150_000, 199_999)}
     raw = {}
     for term, (lo, hi) in spans.items():
@@ -242,13 +261,9 @@ def test_wand_dead_blocks_skip_decode():
         )
         tfs = rng.integers(1, 5, size=700, dtype=np.int64)
         dls = rng.integers(20, 300, size=700, dtype=np.int64)
-        enc = encode_postings(
-            doc_ids, tfs, dls, [np.arange(t, dtype=np.int64) for t in tfs], AVGDL
-        )
-        enc["term"] = term
-        rows.append(enc)
+        lists[term] = (doc_ids, tfs, dls, [np.arange(t, dtype=np.int64) for t in tfs])
         raw[term] = doc_ids
-    pdf = pd.DataFrame(rows)
+    pdf = _frame(lists)
     counters: dict = {}
     res = wand_shard_topk(
         pdf, ["lowrange", "highrange"], np.array([2.0, 2.0]), AVGDL, 10, counters=counters
