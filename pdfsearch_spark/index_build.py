@@ -36,10 +36,10 @@ refresh) a fixed-tail Spark job that Amdahl-floored scaling efficiency
 Postings are a pure function of ``doc_text``, and ONE function commits
 every segment (``_commit_segment``): fresh build, resume, refresh and
 compaction only select its input rows and clean up around it. It writes
-the segment's doc_text (corpus totals observed on that write), encodes the
-segment's postings at the resulting avgdl, commits ``stats`` and only then
-writes the ``_build_state`` rows, so a manifest row never names
-uncommitted work. Per-shard lineage (doc count, doc-id fingerprint, token
+the segment's doc_text (corpus totals observed on that write), encodes
+each shard's postings with block bounds at that shard's own avgdl, commits
+``stats`` and only then writes the ``_build_state`` rows, so a manifest
+row never names uncommitted work. Per-shard lineage (doc count, doc-id fingerprint, token
 count) is measured by the encode pass that already reads every doc of its
 shard — no Spark job of its own. Compaction is a one-segment rebuild from
 the committed doc_text.
@@ -157,9 +157,11 @@ POSTING_SCHEMA = StructType(
         StructField("dl_offs", ArrayType(LongType())),
         StructField("block_lens", ArrayType(IntegerType())),
         StructField("max_impacts", ArrayType(FloatType())),
-        # avgdl at encode time: block max_impacts are valid WAND bounds only
-        # for that avgdl; after refreshes shift the corpus avgdl, the query
-        # side rescales the bound by max(1, avgdl_now/enc_avgdl) (scorer.py)
+        # the avgdl block max_impacts were computed at: the mean doc length
+        # of the row's own (segment, shard), so a shard's postings depend on
+        # its docs alone. The query side rescales each bound by
+        # max(1, corpus avgdl / enc_avgdl) (scorer.py); a bound computed at
+        # a larger avgdl is already an upper bound.
         StructField("enc_avgdl", DoubleType()),
     ]
 )
@@ -374,7 +376,7 @@ class _ShardMetricsParam(AccumulatorParam):
         return a
 
 
-def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
+def encode_docs_partitions(metrics_acc=None, segment: int = 0):
     """mapInPandas body over SHARD-CLUSTERED doc partitions: tokenize →
     aggregate → encode in ONE Python pass per shard.
 
@@ -390,7 +392,10 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
     A partition may hold several shards (hash collisions); they are grouped
     locally. A shard must fit in one task's memory — the same bound
     applyInPandas imposed — so ``n_shards`` stays the knob that caps
-    per-task state as the corpus grows.
+    per-task state as the corpus grows. Block bounds are computed at the
+    shard's own mean doc length (tokens over docs, zero-token docs
+    included), written as ``enc_avgdl``: a shard's postings are a function
+    of its docs alone, so a resumed or compacted build equals a fresh one.
 
     ``metrics_acc`` (a ``_ShardMetricsParam`` accumulator) receives one
     record per shard: encode metrics plus the shard's lineage — every doc
@@ -433,6 +438,7 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
                     sec = time.perf_counter() - t0
                     metrics_acc.add({int(shard): [sec, 0, 0, 0, 0, *lineage]})
                 continue
+            avgdl = n_tok / len(g)
             keep = counts > 0
             doc_ids_arr = all_doc_ids[keep]
             counts_k = counts[keep]
@@ -515,10 +521,11 @@ def _write_doc_text(docs: DataFrame, path: str, segment: int) -> dict:
 
 
 def _encode_postings(
-    spark: SparkSession, store: DataFrame, path: str, segment: int, avgdl: float
+    spark: SparkSession, store: DataFrame, path: str, segment: int
 ) -> dict:
     """Encode segment ``segment`` of the doc store into the postings table at
-    ``path``, entirely map-side, with block bounds against ``avgdl``.
+    ``path``, entirely map-side, each shard's block bounds at its own
+    avgdl.
 
     A pruned (shard, doc_id, text) re-read of the shard-clustered ``store``,
     pinned to whole-file tasks so partition == shard exactly (one posting
@@ -535,7 +542,7 @@ def _encode_postings(
             store.filter(F.col("segment") == segment)
             .select("shard", "doc_id", "text")
             .mapInPandas(
-                encode_docs_partitions(avgdl, acc, segment), schema=POSTING_SCHEMA
+                encode_docs_partitions(acc, segment), schema=POSTING_SCHEMA
             )
             .write.partitionBy("segment", "shard")
             .mode("overwrite")
@@ -602,8 +609,10 @@ def _commit_segment(
        cached frame — the layout that still works when the corpus exceeds
        cluster memory. The rows' totals are observed on the write, so
        N / avgdl / watermark need no job (FTS5 counts zero-token docs in N).
-    2. postings: the segment's shards are encoded at the resulting avgdl;
-       the same pass measures each shard's lineage.
+    2. postings: each of the segment's shards is encoded with block bounds
+       at its own avgdl, so a shard's postings depend on its docs alone and
+       a resume or compaction writes what a fresh build writes; the same
+       pass measures each shard's lineage.
     3. COMMIT: ``stats`` with n_segments = segment + 1. The watermark only
        ever advances (out-of-order batches must not regress it).
     4. ``_build_state``: a new manifest for a whole base segment (fresh
@@ -640,7 +649,7 @@ def _commit_segment(
     if shards is not None:
         store = store.filter(F.col("shard").isin(shards))
     sm = _encode_postings(
-        spark, store, table_dir(out_dir, "postings", epoch), segment, avgdl
+        spark, store, table_dir(out_dir, "postings", epoch), segment
     )
     _phase("postings_encode_write")
 
@@ -882,8 +891,8 @@ def refresh_index(
     ``segment=<n>``. Doc ids are hash-sharded, so every doc's postings still
     land in its shard — a query evaluates each (segment, shard) on its own
     (segments partition the doc space) and merges only per-group top-k rows.
-    The segment's blocks are encoded against the NEW corpus avgdl (older
-    segments' block bounds are rescaled at query time via enc_avgdl), and
+    Each of the segment's shards has its block bounds encoded at its own
+    avgdl (bounds are rescaled at query time via enc_avgdl), and
     global df/cf stays derivable from the postings table, so an append costs
     O(batch), not O(vocab).
 
@@ -962,8 +971,8 @@ def refresh_index(
 
 
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
-    """Merge all committed segments back into one (segment 0), with blocks
-    encoded against the current avgdl — the Lucene merge / Iceberg
+    """Merge all committed segments back into one (segment 0), each shard's
+    blocks encoded at that shard's avgdl — the Lucene merge / Iceberg
     rewriteDataFiles analog.
 
     Postings are a pure function of doc_text, so compaction is a

@@ -1,25 +1,45 @@
 """FTS5 MATCH-grammar parser (the query language the reference passes through
 raw at /root/reference/routes/routes.go:78 → database/database.go:184).
 
-Grammar semantics probe-verified against SQLite FTS5 (SURVEY.md §2.5 Q1 and
-scripts/dev_probe_fts5.py):
+A transcription of SQLite's own rules: the tokenizer ``fts5ExprGetToken``
+(``ext/fts5/fts5_expr.c``) and the grammar ``ext/fts5/fts5parse.y`` in the
+public SQLite source. The FTS5 oracle (oracle.py) is the acceptance check;
+tests/test_fuzz_queries.py compares verdicts token sequence by sequence.
 
-- implicit AND between adjacent phrases; AND/NOT bind tighter than OR
-- NOT is binary set-minus
-- "quoted phrase" → positional adjacency; ``a + b`` concatenates into a phrase
-- ``prefix*`` matches any index term with that prefix
-- ``NEAR(p1 p2 ..., n)`` proximity group (default n=10)
-- ``^phrase`` first-token anchor
-- ``col:`` filters: only ``text`` is indexed; ``file_id``/``page_num`` are
-  UNINDEXED → match nothing; unknown column → error
-- parenthesized groups require an explicit operator on BOTH sides
-  ('(a OR b) c' and 'c (a OR b)' are syntax errors)
-- bare hyphen ('covid-19'), unbalanced quotes → errors (reference surfaces
-  these as HTTP 400, routes/routes.go:96-103)
+Lexer:
 
-Scoring-relevant structure: the parse tree's leaves are Phrase nodes; BM25
-needs each phrase's GLOBAL modifier-aware df and per-doc visible-instance
-counts (probe: scripts/dev_probe_fts5.py).
+- whitespace is only space, tab, LF and CR; input ends at the first NUL
+- a bareword is a run of ASCII letters and digits, ``_``, 0x1A and any
+  non-ASCII character (so NBSP, ``²`` and ``٣`` are word characters)
+- ``"…"`` is a string in which ``""`` is a literal quote; an unterminated
+  string is an error
+- ``( ) { } : , + * - ^`` are punctuation; every other ASCII character is a
+  syntax error
+- only the barewords ``AND``, ``OR`` and ``NOT`` are keywords
+
+Grammar (one reader method per rule; STRING is a bareword or a string):
+
+- ``expr := and_not (OR and_not)*``
+- ``and_not := unit ((AND|NOT) unit)*`` — one left-associative tier. FTS5
+  binds NOT tighter than AND; both give the same match sets.
+- ``unit := [colset ':'] '(' expr ')'`` — a group, never juxtaposed — or a
+  run of ``[colset ':'] nearset``, an implicit AND
+- ``colset := ['-'] (STRING | '{' STRING+ '}')`` — names compare
+  case-insensitively and may be quoted. A set that keeps ``text`` is a
+  no-op; one that drops it (only the UNINDEXED columns left) makes every
+  phrase below it match nothing.
+- ``nearset := 'NEAR' '(' phrase+ [',' digits] ')' | ['^'] phrase`` —
+  ``NEAR`` is a keyword only before ``(``; the distance defaults to 10 and
+  wraps as a 32-bit signed int (a negative one matches nothing)
+- ``phrase := STRING ['*'] ('+' STRING ['*'])*`` — each STRING goes through
+  the analyzer; a ``*`` sets, and its absence clears, the prefix flag of the
+  phrase's last token so far. A phrase without tokens matches nothing.
+
+A whole query that starts with ``*`` is an FTS5 special query: ``*reads``
+and ``*id`` join no ``files`` row under the reference SQL, anything else is
+an error. One construct FTS5 accepts is unsupported: a prefix on a
+non-final phrase term (``alpha* + beta``), since a Phrase carries one prefix
+flag, on its last term.
 """
 
 from __future__ import annotations
@@ -35,7 +55,7 @@ class QuerySyntaxError(ValueError):
 # Sentinel for an empty quoted phrase ('""'): a valid FTS5 phrase that
 # matches nothing. U+E000 is private-use (never a unicode61 token char), so
 # it can never appear in the index.
-NOMATCH_TERM = ""
+NOMATCH_TERM = "\ue000"
 
 
 @dataclass
@@ -53,9 +73,6 @@ class Phrase:
     col: str | None = None
     index: int = -1  # position in the query's phrase list (scoring order)
 
-    def key(self) -> tuple:
-        return (tuple(self.terms), self.prefix, self.anchored, self.col)
-
 
 @dataclass
 class Node:
@@ -65,417 +82,161 @@ class Node:
     near_n: int = 10
 
 
+# one token per match: punctuation | STRING | any other non-blank character
 _TOKEN_RE = re.compile(
-    r"""
-    \s*(
-        \"(?P<quoted>[^\"]*)\"   # quoted phrase
-      | (?P<lparen>\()
-      | (?P<rparen>\))
-      | (?P<star>\*)
-      | (?P<colon>:)
-      | (?P<caret>\^)
-      | (?P<plus>\+)
-      | (?P<minus>-)
-      | (?P<comma>,)
-      | (?P<lbrace>\{)
-      | (?P<rbrace>\})
-      | (?P<word>[^\s()\"*:^+,{}-]+)
-    )
-    """,
-    re.VERBOSE,
+    r'[ \t\n\r]*(?:([(){}:,+*^-])'
+    r'|("[^"]*(?:""[^"]*)*"|[0-9A-Za-z_\x1a\x80-\U0010ffff]+)'
+    r"|([^ \t\n\r]))"
 )
+_KEYWORDS = {"AND": "AND", "OR": "OR", "NOT": "NOT"}
+_COLUMNS = ("file_id", "page_num", "text")
+_NEARSET_START = ("w", "-", "{", "^")  # token kinds that open a [colset:] nearset
 
 
-def _lex(q: str) -> list[tuple[str, str]]:
-    toks: list[tuple[str, str]] = []
-    i = 0
-    n = len(q)
-    while i < n:
-        m = _TOKEN_RE.match(q, i)
-        if not m:
-            rest = q[i:].strip()
-            if not rest:
-                break
-            raise QuerySyntaxError(f"fts5: syntax error near {rest[:10]!r}")
-        i = m.end()
-        for kind in ("quoted", "lparen", "rparen", "star", "colon", "caret", "plus", "minus", "comma", "lbrace", "rbrace", "word"):
-            v = m.group(kind)
-            if v is not None:
-                toks.append((kind, v))
-                break
-    # unbalanced quote: odd number of '"' in raw string
-    if q.count('"') % 2 == 1:
-        raise QuerySyntaxError("fts5: syntax error: unterminated string")
-    return toks
+def _dequote(s: str) -> str:
+    return s[1:-1].replace('""', '"') if s[0] == '"' else s
 
 
-class _Parser:
+def _syntax_error(text: str) -> QuerySyntaxError:
+    return QuerySyntaxError(f'fts5: syntax error near "{text}"')
+
+
+class _Reader:
+    """Lexes the whole query, then reads it with one method per grammar
+    rule (see the module docstring); ``phrases`` collects every phrase in
+    query order."""
+
     def __init__(self, q: str, analyzer) -> None:
-        self.toks = _lex(q)
-        self.pos = 0
+        kinds, texts = [], []
+        for punct, string, bad in _TOKEN_RE.findall(q.split("\x00", 1)[0]):
+            if bad:
+                raise (QuerySyntaxError("fts5: unterminated string")
+                       if bad == '"' else _syntax_error(bad))
+            kinds.append(punct or _KEYWORDS.get(string, "w"))
+            texts.append(punct or string)
+        self.kinds = kinds + ["", ""]  # end of input, twice for peek(1)
+        self.texts = texts + ["", ""]
+        self.i = 0
         self.analyzer = analyzer  # str -> list[str] (fold+stem)
-        self.fold = None  # set lazily for prefix folding (no stemming)
         self.phrases: list[Phrase] = []
 
-    def peek(self):
-        return self.toks[self.pos] if self.pos < len(self.toks) else (None, None)
+    def peek(self, ahead: int = 0) -> str:
+        return self.kinds[self.i + ahead]
 
-    def next(self):
-        t = self.peek()
-        self.pos += 1
-        return t
+    def take(self, kind: str) -> str:
+        if self.kinds[self.i] != kind:
+            raise _syntax_error(self.texts[self.i])
+        self.i += 1
+        return self.texts[self.i - 1]
 
-    # expr := and_expr (OR and_expr)*
-    def parse(self) -> Node:
-        node = self.parse_and()
-        while True:
-            kind, val = self.peek()
-            if kind == "word" and val == "OR":
-                self.next()
-                rhs = self.parse_and()
-                node = Node("OR", [node, rhs])
-            else:
-                break
+    def expr(self) -> Node:
+        node = self.and_not()
+        while self.peek() == "OR":
+            self.i += 1
+            node = Node("OR", [node, self.and_not()])
         return node
 
-    # and_expr := seq ((AND|NOT) seq)*   — left-assoc, same tier.
-    # A juxtaposed phrase SEQUENCE is one operand (fts5parse.y: exprlist),
-    # so 'a NOT b c' is a NOT (b AND c) — probe-verified: the oracle returns
-    # the a-minus-(b∧c) row count, not ((a NOT b) ∧ c)'s.
-    def parse_and(self) -> Node:
-        node = self.parse_seq()
-        while True:
-            kind, val = self.peek()
-            if kind == "word" and val in ("AND", "NOT"):
-                self.next()
-                rhs = self.parse_seq()
-                node = Node(val, [node, rhs])
-            else:
-                break
+    def and_not(self) -> Node:
+        node = self.unit()
+        while self.peek() in ("AND", "NOT"):
+            op = self.take(self.peek())
+            node = Node(op, [node, self.unit()])
         return node
 
-    # seq := unit (unit)*   — implicit AND between adjacent phrases; binds
-    # tighter than the explicit operators. Parenthesized GROUPS cannot
-    # juxtapose — '(a OR b) c' and 'c (a OR b)' are fts5 syntax errors —
-    # but NEAR(...) is a phrase-level atom and juxtaposes freely
-    # ('NEAR(a b, 2) c' is legal).
-    def parse_seq(self) -> Node:
-        node = self.parse_unit(primary=True)
-        was_group = self.last_was_group
-        while True:
-            kind, val = self.peek()
-            if (
-                kind in ("word", "quoted", "caret", "colon", "minus", "lbrace")
-                and not (kind == "word" and val in ("OR", "AND", "NOT"))
-            ):
-                if was_group:
-                    raise QuerySyntaxError(f"fts5: syntax error near {val!r}")
-                rhs = self.parse_unit(primary=False)
-                if self.last_was_group:
-                    # a colset-group on the right of a juxtaposition:
-                    # 'alpha text:(beta)' is an fts5 syntax error [probe]
-                    raise QuerySyntaxError('fts5: syntax error near "("')
-                node = Node("AND", [node, rhs])
-            elif kind == "lparen":
-                raise QuerySyntaxError("fts5: syntax error near \"(\"")
-            else:
-                break
+    def unit(self) -> Node:
+        node, grouped = self.scoped(group_ok=True)
+        while not grouped and self.peek() in _NEARSET_START:
+            node = Node("AND", [node, self.scoped(group_ok=False)[0]])
         return node
 
-    # set by parse_unit: True when the unit was a parenthesized group
-    # (bare or colset-prefixed) — groups cannot juxtapose on either side
-    last_was_group = False
+    def scoped(self, group_ok: bool) -> tuple[Node, bool]:
+        """``[colset ':'] nearset``, or ``[colset ':'] '(' expr ')'`` when
+        group_ok; returns (node, whether it was a group)."""
+        start = len(self.phrases)
+        drops_text = self.colset()
+        grouped = group_ok and self.peek() == "("
+        if grouped:
+            self.i += 1
+            node = self.expr()
+            self.take(")")
+        else:
+            node = self.nearset()
+        if drops_text:
+            # colsets intersect: an outer set without 'text' wins over any
+            # inner one ('file_id:(text:alpha)' matches nothing)
+            for ph in self.phrases[start:]:
+                ph.col = "unindexed"
+        return node, grouped
 
-    def _try_colset(self):
-        """Consume a leading column-set ('col:', '-col:', '{..}:',
-        '-{..}:') if one starts at the cursor; return its restriction, or
-        _NO_COL with the cursor unmoved. Used by parse_unit to spot
-        colset-prefixed NEAR groups / parenthesized exprs [probe: FTS5
-        accepts 'text:NEAR(a b, 2)' and 'text:(a OR b)']."""
-        k, v = self.peek()
-        save = self.pos
-        if k == "minus":
-            self.next()
-            k2, v2 = self.peek()
-            if (
-                k2 == "word"
-                and self.pos + 1 < len(self.toks)
-                and self.toks[self.pos + 1][0] == "colon"
-            ):
-                self.next()
-                self.next()
-                return self._colset([v2], negated=True)
-            if k2 == "lbrace":
-                return self._braced_colset(negated=True)
-            self.pos = save
-            return _NO_COL
-        if (
-            k == "word"
-            and v not in ("AND", "OR", "NOT", "NEAR")
-            and self.pos + 1 < len(self.toks)
-            and self.toks[self.pos + 1][0] == "colon"
-        ):
-            self.next()
-            self.next()
-            return self._colset([v], negated=False)
-        if k == "lbrace":
-            return self._braced_colset(negated=False)
-        return _NO_COL
+    def colset(self) -> bool:
+        """Consume ``[colset ':']`` if present; True iff it leaves out
+        ``text``."""
+        kind = self.peek()
+        if kind not in ("-", "{") and not (kind == "w" and self.peek(1) == ":"):
+            return False
+        negated = kind == "-"
+        self.i += negated
+        if self.peek() == "{":
+            self.i += 1
+            names = [self.take("w")]
+            while self.peek() != "}":
+                names.append(self.take("w"))
+            self.i += 1
+        else:
+            names = [self.take("w")]
+        self.take(":")
+        keeps_text = False
+        for name in map(_dequote, names):
+            if name.lower() not in _COLUMNS:
+                raise QuerySyntaxError(f"no such column: {name}")
+            keeps_text |= name.lower() == "text"
+        return keeps_text == negated
 
-    def parse_unit(self, primary: bool) -> Node:
-        kind, val = self.peek()
-        self.last_was_group = False
-        if kind == "lparen":
-            self.next()
-            node = self.parse()
-            k2, _ = self.next()
-            if k2 != "rparen":
-                raise QuerySyntaxError("fts5: syntax error: expected ')'")
-            self.last_was_group = True
-            return node
-        if kind == "word" and val == "NEAR":
-            return self.parse_near()
-        # colset-prefixed NEAR group or parenthesized expr: the restriction
-        # distributes over every phrase inside, INTERSECTING with any inner
-        # colset [probe: 'file_id:(text:alpha)' matches nothing]
-        save = self.pos
-        col = self._try_colset()
-        if col is not _NO_COL:
-            k2, v2 = self.peek()
-            if k2 == "lparen":
-                self.next()
-                node = self.parse()
-                k3, _ = self.next()
-                if k3 != "rparen":
-                    raise QuerySyntaxError("fts5: syntax error: expected ')'")
-                _apply_col(node, col)
-                self.last_was_group = True
-                return node
-            if k2 == "word" and v2 == "NEAR":
-                node = self.parse_near()
-                _apply_col(node, col)
-                return node
-            # plain colset phrase: rewind and let parse_phrase own it (it
-            # also enforces caret-after-colset ordering)
-            self.pos = save
-        return Node("PHRASE", phrase=self.parse_phrase())
+    def nearset(self) -> Node:
+        if self.peek() == "w" and self.peek(1) == "(":
+            if self.texts[self.i] != "NEAR":
+                raise _syntax_error(self.texts[self.i])
+            self.i += 2
+            children = [self.phrase()]
+            while self.peek() == "w":
+                children.append(self.phrase())
+            near_n = 10
+            if self.peek() == ",":
+                self.i += 1
+                dist = self.take("w")
+                if not (dist.isascii() and dist.isdigit()):
+                    raise QuerySyntaxError(f'expected integer, got "{dist}"')
+                # accumulated in a C int, as FTS5 does: it wraps at 2**32
+                near_n = (int(dist) + 2**31) % 2**32 - 2**31
+            self.take(")")
+            return Node("NEAR", children, near_n=near_n)
+        anchored = self.peek() == "^"
+        self.i += anchored
+        return self.phrase(anchored)
 
-    def parse_near(self) -> Node:
-        self.next()  # NEAR
-        k, _ = self.next()
-        if k != "lparen":
-            raise QuerySyntaxError("fts5: syntax error near \"NEAR\"")
-        children: list[Node] = []
-        near_n = 10
-        while True:
-            kind, val = self.peek()
-            if kind == "rparen":
-                self.next()
-                break
-            if kind == "comma":
-                self.next()
-                k2, v2 = self.next()
-                if k2 != "word" or not v2.isdigit():
-                    raise QuerySyntaxError("fts5: syntax error in NEAR")
-                near_n = int(v2)
-                k3, _ = self.next()
-                if k3 != "rparen":
-                    raise QuerySyntaxError("fts5: syntax error in NEAR")
-                break
-            if kind is None:
-                raise QuerySyntaxError("fts5: syntax error: unterminated NEAR")
-            children.append(
-                Node("PHRASE", phrase=self.parse_phrase(in_near=True))
-            )
-        if not children:
-            raise QuerySyntaxError("fts5: syntax error: empty NEAR")
-        return Node("NEAR", children, near_n=near_n)
-
-    COLS = ("file_id", "page_num", "text")
-
-    def _colset(self, names: list[str], negated: bool) -> str | None:
-        """Effective restriction from a column set (order: reference DDL).
-        Returns None = text included (default scoring col); 'unindexed' =
-        only UNINDEXED columns remain → matches nothing."""
-        for c in names:
-            if c not in self.COLS:
-                raise QuerySyntaxError(f"no such column: {c}")
-        eff = set(self.COLS) - set(names) if negated else set(names)
-        return None if "text" in eff else "unindexed"
-
-    def _braced_colset(self, negated: bool) -> str | None:
-        """'{col col ...}:' — already peeked at lbrace."""
-        self.next()  # {
-        names: list[str] = []
-        while True:
-            k, v = self.next()
-            if k == "rbrace":
-                break
-            if k != "word":
-                raise QuerySyntaxError("fts5: syntax error in column set")
-            names.append(v)
-        k, _ = self.next()
-        if k != "colon":
-            raise QuerySyntaxError("fts5: syntax error: expected ':'")
-        if not names:
-            raise QuerySyntaxError("fts5: syntax error: empty column set")
-        return self._colset(names, negated)
-
-    def parse_phrase(self, in_near: bool = False) -> Phrase:
-        anchored = False
-        col: str | None = None
-        kind, val = self.peek()
-        if in_near and kind in ("caret", "minus", "lbrace"):
-            # NEAR members are plain phrases: no anchors, no column filters
-            # [probe: 'NEAR(^a b, 2)' and 'NEAR(text:a b, 2)' are errors]
-            raise QuerySyntaxError(f"fts5: syntax error near {val!r}")
-        if kind == "minus":
-            # '-col:' / '-{col ...}:' — negated column filter; a bare hyphen
-            # ('covid-19') is the reference's "no such column" error
-            self.next()
-            k2, v2 = self.peek()
-            if k2 == "word" and self.pos + 1 < len(self.toks) and self.toks[self.pos + 1][0] == "colon":
-                self.next()
-                self.next()
-                col = self._colset([v2], negated=True)
-                kind, val = self.peek()
-            elif k2 == "lbrace":
-                col = self._braced_colset(negated=True)
-                kind, val = self.peek()
-            else:
-                raise QuerySyntaxError(f"no such column: {v2 if k2=='word' else '-'}")
-        if kind == "caret":
-            self.next()
-            anchored = True
-            kind, val = self.peek()
-            # a column filter may not FOLLOW the anchor [probe: '^text:a'
-            # errors near ':'; 'text:^a' is the legal order]
-            if (
-                kind == "word"
-                and self.pos + 1 < len(self.toks)
-                and self.toks[self.pos + 1][0] == "colon"
-            ) or kind == "lbrace":
-                raise QuerySyntaxError('fts5: syntax error near ":"')
-        # column filter: word ':' ...   or   '{col col}:' ...
-        if (
-            col is None
-            and not in_near
-            and kind == "word"
-            and self.pos + 1 < len(self.toks)
-            and self.toks[self.pos + 1][0] == "colon"
-        ):
-            colname = val
-            if colname in ("AND", "OR", "NOT", "NEAR"):
-                raise QuerySyntaxError(f"fts5: syntax error near {colname!r}")
-            self.next()
-            self.next()
-            col = self._colset([colname], negated=False)
-            kind, val = self.peek()
-            if kind == "caret":
-                self.next()
-                anchored = True
-                kind, val = self.peek()
-        elif col is None and kind == "lbrace":
-            col = self._braced_colset(negated=False)
-            kind, val = self.peek()
-            if kind == "caret":
-                self.next()
-                anchored = True
-                kind, val = self.peek()
-
+    def phrase(self, anchored: bool = False) -> Node:
         terms: list[str] = []
-        prefix = False
+        prefixed: set[int] = set()  # indices of terms carrying a '*'
         while True:
-            kind, val = self.peek()
-            if kind == "quoted":
-                self.next()
-                stemmed = self.analyzer(val)
-                # phrase-prefix: '"a b"*' (whitespace before '*' allowed) —
-                # the LAST token becomes a folded-not-stemmed prefix token
-                k2, _ = self.peek()
-                if k2 == "star":
-                    self.next()
-                    # prefix tokens are analyzed EXACTLY like regular tokens
-                    # (folded + porter-stemmed), then string-prefix-matched
-                    # against index terms — probe: 'running*' == 'run*',
-                    # 'coöperate*' == 'coop*' (scripts/dev_probe_fts5.py)
-                    if stemmed:
-                        terms.extend(stemmed)
-                    else:
-                        terms.append(NOMATCH_TERM)
-                    prefix = True
-                    break
-                if not stemmed:
-                    # '""' / whitespace-only phrase: valid, matches nothing
-                    terms.append(NOMATCH_TERM)
-                else:
-                    terms.extend(stemmed)
-            elif kind == "word":
-                if val in ("AND", "OR", "NOT", "NEAR"):
-                    break
-                self.next()
-                stemmed = self.analyzer(val)
-                # check prefix star immediately after
-                k2, _ = self.peek()
-                if k2 == "star":
-                    self.next()
-                    # prefix tokens are analyzed exactly like regular tokens
-                    # (folded + porter-stemmed) before string-prefix match —
-                    # probe: 'running*' == 'run*', 'failure*' == 'failur*'
-                    if stemmed:
-                        terms.extend(stemmed)
-                    else:
-                        terms.append(NOMATCH_TERM)
-                    prefix = True
-                    break
-                terms.extend(stemmed)
-            elif kind == "minus":
-                # hyphen inside a bareword sequence: 'covid-19'
-                self.next()
-                k2, v2 = self.peek()
-                raise QuerySyntaxError(f"no such column: {v2 if k2=='word' else '-'}")
-            else:
+            terms += self.analyzer(_dequote(self.take("w")))
+            star = self.peek() == "*"
+            self.i += star
+            if terms:
+                # prefix tokens are analyzed exactly like regular tokens
+                # (folded + porter-stemmed), then string-prefix-matched —
+                # probe: 'running*' == 'run*' (scripts/dev_probe_fts5.py)
+                (prefixed.add if star else prefixed.discard)(len(terms) - 1)
+            if self.peek() != "+":
                 break
-            # '+' concatenation continues the phrase
-            k2, _ = self.peek()
-            if k2 == "plus":
-                self.next()
-                continue
-            if not prefix:
-                break
-        if not terms:
-            raise QuerySyntaxError("fts5: syntax error: empty phrase")
-        # empty quoted phrases vanish from concatenations ('renal + ""' ==
-        # 'renal'); a phrase of ONLY empties stays as one sentinel so the
-        # tree-level pruning below can drop it
-        real = [t for t in terms if t != NOMATCH_TERM]
-        terms = real if real else [NOMATCH_TERM]
-        ph = Phrase(terms=terms, prefix=prefix, anchored=anchored, col=col)
-        ph.index = len(self.phrases)
+            self.i += 1
+        if prefixed - {len(terms) - 1}:
+            raise QuerySyntaxError(
+                "unsupported: prefix '*' on a non-final phrase term"
+            )
+        ph = Phrase(terms or [NOMATCH_TERM], prefix=bool(prefixed),
+                    anchored=anchored, index=len(self.phrases))
         self.phrases.append(ph)
-        return ph
-
-
-_NO_COL = object()  # _try_colset sentinel: "no column set at the cursor"
-
-
-def _apply_col(node: Node, col: str | None) -> None:
-    """Distribute an outer column restriction over every phrase under
-    `node`, INTERSECTING with inner restrictions [probe:
-    'file_id:(text:alpha)' matches nothing — the sets intersect to ∅].
-    In the two-value lattice the evaluator consumes (text included /
-    'unindexed'), intersection is: anything ∩ unindexed = unindexed,
-    x ∩ text-included = x — so a text-including outer col is a no-op."""
-    if col is None:
-        return
-    if node.op == "PHRASE":
-        node.phrase.col = "unindexed"
-    elif node.op == "NEAR":
-        for c in node.children:
-            c.phrase.col = "unindexed"
-    else:
-        for c in node.children:
-            _apply_col(c, col)
+        return Node("PHRASE", phrase=ph)
 
 
 def _is_empty_phrase(node: Node) -> bool:
@@ -528,14 +289,14 @@ def parse_query(q: str, analyzer, fold=None) -> tuple[Node | None, list[Phrase]]
     ``fold``: kept for API compat (prefixes are stemmed like everything else).
     Raises QuerySyntaxError exactly where the oracle raises. Returns
     (None, []) when the query prunes to nothing (matches no rows)."""
-    p = _Parser(q, analyzer)
-    p.fold = fold
-    if not p.toks:
-        raise QuerySyntaxError("fts5: syntax error: empty query")
-    node = p.parse()
-    if p.pos != len(p.toks):
-        k, v = p.toks[p.pos]
-        raise QuerySyntaxError(f"fts5: syntax error near {v!r}")
+    if q.startswith("*"):
+        directive = q[1:].split("\x00", 1)[0].lstrip(" ").split(" ", 1)[0]
+        if directive.lower() in ("reads", "id"):
+            return None, []
+        raise QuerySyntaxError(f"unknown special query: {directive}")
+    p = _Reader(q, analyzer)
+    node = p.expr()
+    p.take("")
     node = _prune_empty(node)
     if node is None:
         return None, []

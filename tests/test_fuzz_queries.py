@@ -260,6 +260,11 @@ def _diff_one(engine, oracle, q: str) -> str | None:
         # both sides must classify the query as a grammar error (the
         # reference surfaces it as HTTP 400)
         return None if o_err == e_err else f"q={q!r}: oracle_err={o_err} engine_err={e_err}"
+    return _diff_pairs(o, e, q)
+
+
+def _diff_pairs(o, e, q: str) -> str | None:
+    """Compares sorted (doc_id, score) lists of one query; None if they agree."""
     if len(o) != len(e):
         return f"q={q!r}: oracle {len(o)} rows vs engine {len(e)}"
     if not o:
@@ -308,3 +313,160 @@ def test_accepted_artifact_rate_stays_rare():
     assert len(ACCEPTED_ARTIFACTS) <= max(2, N_QUERIES // 10), (
         ACCEPTED_ARTIFACTS
     )
+
+
+# Token alphabets for the verdict fuzz: FTS5 grammar tokens, and characters
+# the FTS5 tokenizer reads as word, blank, punctuation or error.
+GRAMMAR_TOKENS = [
+    "alpha", "beta", '"alpha beta"', '""', '"a""b"', "*", ":", "^", "+", "-",
+    "(", ")", "{", "}", ",", "NEAR", "near", "AND", "OR", "NOT", "text",
+    "TEXT", '"text"', "file_id", "page_num", "bogus", "2", "_", "covid-19",
+]
+LEXER_TOKENS = [
+    "alpha", "text", "2", "_", "x_y", "a.b", "café", "é", "½", "²", "٣", "中",
+    *"./#!?'&=@;~$%|<>[]\\`", "\t", "\v", "\f", "\xa0",
+]
+N_SEQUENCES = 10_000
+
+
+def _sequences(tokens, n, seed):
+    """n seeded sequences of 1-6 tokens, joined by nothing or one space."""
+    rng = np.random.default_rng(seed)
+    for _ in range(n):
+        picks = rng.integers(0, len(tokens), int(rng.integers(1, 7)))
+        seps = rng.integers(0, 2, len(picks))
+        yield tokens[picks[0]] + "".join(
+            " " * int(s) + tokens[t] for s, t in zip(seps[1:], picks[1:])
+        )
+
+
+def _fts5_rejects(oracle, q: str) -> bool:
+    import sqlite3
+
+    try:
+        oracle.con.execute(
+            "SELECT rowid FROM pages WHERE pages MATCH ? LIMIT 1", (q,)
+        ).fetchall()
+    except sqlite3.OperationalError:
+        return True
+    return False
+
+
+def _unsupported_prefix(q: str) -> bool:
+    """True iff the parser refuses q for the one construct FTS5 accepts and
+    the engine does not: a prefix on a non-final phrase term."""
+    from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
+    from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query
+
+    try:
+        parse_query(q, tokenize, unicode61_tokens)
+    except QuerySyntaxError as e:
+        return "non-final phrase term" in str(e)
+    return False
+
+
+@pytest.mark.parametrize(
+    "tokens", [GRAMMAR_TOKENS, LEXER_TOKENS], ids=["grammar", "lexer"]
+)
+def test_token_sequences_validity_matches_fts5(oracle, tokens):
+    """parse_query raises QuerySyntaxError exactly where FTS5's MATCH raises,
+    and raises nothing else; the only allowed disagreement is the
+    unsupported non-final prefix ('alpha* + beta'), which FTS5 accepts."""
+    from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
+    from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query
+
+    bad = []
+    for q in _sequences(tokens, N_SEQUENCES, SEED):
+        try:
+            parse_query(q, tokenize, unicode61_tokens)
+            ours = None
+        except QuerySyntaxError as e:
+            ours = str(e)
+        except Exception as e:  # noqa: BLE001 — any other type is a bug
+            bad.append((q, f"{type(e).__name__}: {e}"))
+            continue
+        if (ours is not None) != _fts5_rejects(oracle, q):
+            if ours is None or "non-final phrase term" not in ours:
+                bad.append((q, ours))
+    assert not bad, f"{len(bad)} verdicts differ from FTS5, e.g. {bad[:10]}"
+
+
+def test_non_final_prefix_is_named(oracle):
+    from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
+    from pdfsearch_spark.query.parser import QuerySyntaxError, parse_query
+
+    for q in ["alpha* + beta", '"a b"* + c', "alpha* + beta*"]:
+        assert not _fts5_rejects(oracle, q)
+        with pytest.raises(QuerySyntaxError, match="non-final phrase term"):
+            parse_query(q, tokenize, unicode61_tokens)
+    # a later token-less STRING moves or clears the flag, as in FTS5
+    for q in ['alpha* + ""', 'alpha + ""*', '"" + alpha*']:
+        parse_query(q, tokenize, unicode61_tokens)
+
+
+def _adversarial_queries(oracle, vocab, n):
+    """n seeded queries FTS5 accepts, over fixture words plus the inputs the
+    grammar treats specially: NBSP inside a bareword, a '""'-escaped quote,
+    bare NEAR, quoted and upper-case column names, '*', '+', '^', '_'."""
+    words = vocab[:24]
+    rng = np.random.default_rng(SEED)
+
+    def w():
+        return words[int(rng.integers(0, len(words)))]
+
+    pieces = [
+        w, w, w, lambda: f"{w()}\xa0{w()}", lambda: f'"{w()}""{w()}"',
+        "NEAR", "TEXT:", '"text":', "-FILE_ID:", "*", "+", " OR ", " NOT ",
+        "(", ")", "^", "_",
+    ]
+    out: list[str] = []
+    while len(out) < n:
+        picks = rng.integers(0, len(pieces), int(rng.integers(2, 7)))
+        seps = rng.integers(0, 2, len(picks))
+        q = "".join(
+            " " * int(s) * (i > 0) + (p() if callable(p) else p)
+            for i, (s, p) in enumerate(zip(seps, (pieces[j] for j in picks)))
+        )
+        if not _fts5_rejects(oracle, q) and not _unsupported_prefix(q):
+            out.append(q)
+    return out
+
+
+def test_adversarial_queries_rank_identical(engine, oracle, corpus_pdf):
+    """200 FTS5-accepted queries over the lexer's and grammar's corner cases,
+    in one search_batch, each rank-identical to the oracle under
+    _diff_one's rule."""
+    qs = _adversarial_queries(oracle, _vocab(corpus_pdf), 200)
+    got: dict[int, list] = {}
+    for r in engine.search_batch(qs, k=200).collect():
+        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    bad = [
+        msg
+        for qid, q in enumerate(qs)
+        if (msg := _diff_pairs(_pairs_oracle(oracle, q, 200), sorted(got.get(qid, [])), q))
+    ]
+    assert not bad, f"{len(bad)} of {len(qs)} differ, e.g. {bad[:5]}"
+
+
+# One query per way the old regex lexer disagreed with FTS5 ({a}, {b}: the
+# two most frequent fixture words): NBSP is a word character, '""' inside a
+# string is a quote, a token-less '""*' moves the prefix flag; NEAR is a
+# keyword only before '(', column names are case-insensitive and may be
+# quoted, '_' is a token-less word; '&', "'", '.', a dangling '+' and '\v'
+# are errors; a leading '*' is a special query; a NEAR distance wraps as a
+# 32-bit int.
+PINNED_QUERIES = [
+    "{a}\xa0{b}", "{b}\xa0{a}", '"{a}""{b}"', '{a} + ""*', '{a}* + ""',
+    "NEAR {a}", "TEXT:{a}", '"text":{a}', "-FILE_ID:{a}", "{a} _",
+    "at&t", "don't", "covid.19", "{a} +", "{a}\v{b}", "*id", "*bogus",
+    "NEAR({a} {b}, 4294967296)", "NEAR({a} {b}, 4294967295)",
+    "NEAR({a} {b}, 99999999999999999999)",
+]
+
+
+@pytest.mark.parametrize("template", PINNED_QUERIES, ids=repr)
+def test_pinned_lexer_cases_rank_identical(engine, oracle, corpus_pdf, template):
+    a, b = _vocab(corpus_pdf)[:2]
+    q = template.format(a=a, b=b)
+    msg = _diff_one(engine, oracle, q)
+    assert msg is None, msg
