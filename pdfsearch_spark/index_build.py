@@ -75,7 +75,6 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -233,31 +232,31 @@ def cluster_by_shard(df: DataFrame, n_shards: int) -> DataFrame:
 PAGE_COLUMNS = ["url", "warc_ts", "html", "lang"]
 
 
-@contextmanager
-def _whole_file_scans(spark: SparkSession):
-    """Scope file scans to ONE parquet file per task.
+def whole_file_session(spark: SparkSession) -> SparkSession:
+    """A session on ``spark``'s SparkContext whose file scans read whole
+    parquet files, ONE file per task.
 
-    The encode stage reads the shard-clustered doc store back and relies on
-    partition == shard (one posting row per (segment, shard, term), and the
-    per-task seen-state of the fused dedup). Spark's default bin-packing
-    would coalesce many small shard files into one task (fine) but can also
-    SPLIT a file across tasks at row-group boundaries (not fine). Setting
+    Readers that rely on partition == file read through it: the encode
+    stage (partition == shard, so one posting row per (segment, shard,
+    term)) and the query engine's exchange-free shard pass (each task holds
+    whole (segment, shard) posting files). Spark's default bin-packing
+    would coalesce many small files into one task (fine) but can also SPLIT
+    a file across tasks at row-group boundaries (not fine). Setting
     openCostInBytes == maxPartitionBytes makes every file overflow a bin by
     itself: exactly one file per task, at any file size — the same knob a
     cluster deployment sets for this read. n_shards stays the contract that
-    bounds one shard's rows to one task's memory."""
-    mpb_key = "spark.sql.files.maxPartitionBytes"
-    oc_key = "spark.sql.files.openCostInBytes"
-    prev_mpb = spark.conf.get(mpb_key)
-    prev_oc = spark.conf.get(oc_key)
+    bounds one shard's rows to one task's memory.
+
+    ``newSession()`` gives the scoped session its own SQLConf, seeded from
+    the SparkContext's conf (where ``session.get_spark`` puts every
+    setting), so the two keys are set once and never touch ``spark``'s own
+    conf: a caller's reads and another thread's queries keep their split
+    sizes."""
+    scoped = spark.newSession()
     big = str(1 << 38)  # 256 GiB: above any shard file; never splits
-    spark.conf.set(mpb_key, big)
-    spark.conf.set(oc_key, big)
-    try:
-        yield
-    finally:
-        spark.conf.set(mpb_key, prev_mpb)
-        spark.conf.set(oc_key, prev_oc)
+    scoped.conf.set("spark.sql.files.maxPartitionBytes", big)
+    scoped.conf.set("spark.sql.files.openCostInBytes", big)
+    return scoped
 
 
 def shard_of(doc_id: int, n_shards: int) -> int:
@@ -528,8 +527,9 @@ def _encode_postings(
     avgdl.
 
     A pruned (shard, doc_id, text) re-read of the shard-clustered ``store``,
-    pinned to whole-file tasks so partition == shard exactly (one posting
-    row per (segment, shard, term)); tokenize → aggregate → encode runs in a
+    which the caller reads through ``whole_file_session`` so partition ==
+    shard exactly (one posting row per (segment, shard, term), hence one
+    postings file per (segment, shard)); tokenize → aggregate → encode runs in a
     single mapInPandas (encode_docs_partitions), no shuffle, and the
     per-term payload never crosses an Arrow boundary. Returns the per-shard
     records ``{shard: [sec, n_postings, n_terms, postings_bytes,
@@ -537,17 +537,14 @@ def _encode_postings(
     the source by accumulator: the write is a result stage, so each
     task's records merge exactly once."""
     acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
-    with _whole_file_scans(spark):
-        (
-            store.filter(F.col("segment") == segment)
-            .select("shard", "doc_id", "text")
-            .mapInPandas(
-                encode_docs_partitions(acc, segment), schema=POSTING_SCHEMA
-            )
-            .write.partitionBy("segment", "shard")
-            .mode("overwrite")
-            .parquet(path)
-        )
+    (
+        store.filter(F.col("segment") == segment)
+        .select("shard", "doc_id", "text")
+        .mapInPandas(encode_docs_partitions(acc, segment), schema=POSTING_SCHEMA)
+        .write.partitionBy("segment", "shard")
+        .mode("overwrite")
+        .parquet(path)
+    )
     return dict(acc.value)
 
 
@@ -645,7 +642,9 @@ def _commit_segment(
     wms = [w for w in (base_wm, written["watermark"]) if w is not None]
     watermark = max(wms) if wms else None
 
-    store = spark.read.schema(DOC_STORE_SCHEMA).parquet(doc_text_dir)
+    store = whole_file_session(spark).read.schema(DOC_STORE_SCHEMA).parquet(
+        doc_text_dir
+    )
     if shards is not None:
         store = store.filter(F.col("shard").isin(shards))
     sm = _encode_postings(

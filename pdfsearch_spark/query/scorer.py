@@ -1,4 +1,5 @@
-"""Per-shard BM25 match + score engine (runs inside applyInPandas).
+"""Per-(segment, shard) BM25 match + score engine (runs inside the query's
+one exchange-free mapInPandas pass, search.SearchEngine._shard_pass).
 
 Scoring model, probe-verified against FTS5 (scripts/dev_probe_fts5.py,
 SURVEY.md §2.5 Q2):
@@ -7,9 +8,10 @@ SURVEY.md §2.5 Q2):
   idf_p = ln((N − df_p + 0.5)/(df_p + 0.5)), clamped to 1e-6 when ≤ 0
   k1 = 1.2, b = 0.75; N and avgdl include zero-token docs
 
-- df_p is the phrase's GLOBAL, modifier-aware doc frequency: plain terms use
-  the postings-derived dictionary; multi-term phrases / prefixes / anchored phrases count docs
-  with ≥1 instance of the phrase alone (independent of the boolean tree).
+- df_p is the phrase's GLOBAL, modifier-aware doc frequency: the plain terms
+  of a several-term a-priori query use the postings-derived dictionary; any
+  other phrase (a lone term included) counts docs with ≥1 instance of the
+  phrase alone, independent of the boolean tree, summed over the groups.
 - tf_vis = instances visible under the matched tree: an OR branch that
   doesn't match contributes 0; NOT-excluded branches contribute nothing;
   anchored phrases count only position-0 instances.
@@ -18,9 +20,11 @@ Execution: one (segment, shard) at a time — every term's postings for a
 doc live in the segment it arrived in and in its shard, so boolean
 evaluation completes there and one term never has two posting lists to
 merge. When the dfs are known a priori the group also scores and only its
-top-k rows leave; otherwise its matched rows and one df sentinel row
-leave, and the matches are scored per partition once the sentinels are
-summed (search.SearchEngine._execute).
+top-k rows leave. A one-phrase query's group keeps its top-k by the
+idf-free score (bm25_scores at idf 1) and sends it with one df row; the
+driver sums the df rows and scores those rows. Otherwise its matched rows
+and one df sentinel row leave, and the matches are scored per partition
+once the sentinels are summed (search.SearchEngine._execute).
 """
 
 from __future__ import annotations

@@ -1,14 +1,15 @@
 """Query-side engine: FTS5-grammar search over the sharded index.
 
-Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → shard-pruned,
-term-filtered parquet scan of ``postings`` (the ``term`` predicate is
-pushed into the reader; terms are unsorted within a file, so it filters
-rows rather than skipping row groups) → one exchange of the matching
-posting rows into per-(segment, shard) applyInPandas groups that match
-and score (all of a doc's postings are in its segment and its shard, so
-no group needs another's rows) → per-query top-k merged on the driver
-from ≤ segments×shards×k rows → point lookup into the doc store for
-display fields → snippets over ≤ k rows.
+Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → term-filtered
+parquet scan of ``postings`` (the ``term`` predicate is pushed into the
+reader; terms are unsorted within a file, so it filters rows rather than
+skipping row groups) → one ``mapInPandas`` pass with no exchange: the scan
+reads whole files, one (segment, shard) file per task, so each task groups
+its rows by (segment, shard) locally and matches and scores each group on
+its own (all of a doc's postings are in its segment and its shard, so no
+group needs another's rows) → per-query top-k merged on the driver from
+≤ segments×shards×k rows → point lookup into the doc store for display
+fields → snippets over ≤ k rows.
 
 ``search`` (one query, then result assembly) and ``search_batch`` (many
 queries, then rank numbers) run one executor, ``_execute``: one planner,
@@ -16,15 +17,21 @@ one shard function, one BM25 formula (``scorer.bm25_scores``) and one
 top-k rule (``_topk``). Per query the planner only picks where idf comes
 from:
 
-- A PRIORI (every phrase a plain single term, no NEAR): dfs come from the
-  postings table's own (term, df) columns before the scan, so each shard
-  scores and emits only its top-k — block-max WAND for pure conjunctions,
-  exhaustive scoring for OR/NOT trees.
-- SENTINEL (phrase / prefix / NEAR / anchor): per-phrase df is only known
-  after matching, so shards emit matched rows (doc_id, dl, visible-tf
-  vector) plus one df-sentinel row. The driver sums the sentinels of the
-  persisted output, then each partition scores its rows and keeps k per
-  query — untruncated matches never reach the driver.
+- ONE PHRASE (the tree is a single phrase: a plain or column term, a
+  multi-term phrase, a prefix, an anchor): FTS5 scores it as −idf·f(tf, dl)
+  with idf > 0 (``idf_of`` clamps it to ≥ 1e-6), so a group's top-k by f
+  is its top-k under the true idf. Each group emits those ≤ k matched rows
+  (doc_id, dl, visible tf) plus one df row; the driver sums the df rows and
+  scores the matched rows at the true idf. No df lookup, one collect.
+- A PRIORI (several phrases, every one a plain single term, no NEAR): dfs
+  come from the postings table's own (term, df) columns before the scan, so
+  each group scores and emits only its top-k — block-max WAND for pure
+  conjunctions, exhaustive scoring for OR/NOT trees.
+- SENTINEL (any other tree: NEAR, phrase AND phrase, …): per-phrase df is
+  only known after matching and a group's ranking depends on the idfs, so
+  groups emit every matched row plus one df-sentinel row. The driver sums
+  the sentinels of the persisted output, then each partition scores its
+  rows and keeps k per query — untruncated matches never reach the driver.
 """
 
 from __future__ import annotations
@@ -36,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analyzer import tokenize, unicode61_tokens
-from .index_build import _read_stats, shard_of, table_dir
+from .index_build import _read_stats, shard_of, table_dir, whole_file_session
 from .query.parser import Node, Phrase, parse_query
 from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 
@@ -50,25 +57,38 @@ SHARD_SCHEMA = (
     "query_id int, doc_id long, score double, dl long, vis array<long>, dfs array<long>"
 )
 SCORED_SCHEMA = "query_id int, doc_id long, score double"
+# the idf of the one-phrase path's shard-side ranking: any positive idf
+# orders a one-phrase query's docs alike
+_UNIT_IDF = np.ones(1)
 
 
 @dataclass
 class _Query:
     """One plan entry. ``idfs`` is set iff the query's dfs are known a
-    priori; ``None`` sends it down the df-sentinel path."""
+    priori; a one-phrase query (``tree.op == "PHRASE"``) needs none before
+    its groups cut their top-k; any other query takes the df-sentinel
+    path."""
 
     qid: int
     tree: Node
     phrases: list[Phrase]
     idfs: np.ndarray | None
 
+    @property
+    def sentinel(self) -> bool:
+        return self.idfs is None and self.tree.op != "PHRASE"
+
+
+def _topk_order(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """The one top-k rule: indexes of the best k by (score asc = best BM25
+    first, doc_id asc). Shard-local, partition-local and driver-side
+    truncation all use it, so every path keeps the same members of a score
+    plateau crossing the k boundary (tests/test_boundary_ties.py)."""
+    return np.lexsort((doc_ids, scores))[:k]
+
 
 def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
-    """The one top-k rule: best k by (score asc = best BM25 first, doc_id
-    asc). Shard-local, partition-local and driver-side truncation all use
-    it, so every path keeps the same members of a score plateau crossing
-    the k boundary (tests/test_boundary_ties.py)."""
-    order = np.lexsort((doc_ids, scores))[:k]
+    order = _topk_order(doc_ids, scores, k)
     return doc_ids[order], scores[order]
 
 
@@ -84,6 +104,27 @@ def _frame(qid: int, doc_ids, scores=np.nan, dls=0, vis=None, dfs=None) -> pd.Da
             "dfs": np.full(n, None) if dfs is None else dfs,
         }
     )
+
+
+def _best_per_query(batches, idfs: dict[int, np.ndarray], avgdl: float, k: int):
+    """{query_id: (doc_ids, scores)}: each query's top-k over ``batches``
+    of shard rows (df rows excluded). A query in ``idfs`` has its matched
+    rows (dl, vis) scored here; any other query's rows carry their score."""
+    best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    for pdf in batches:
+        for qid, g in pdf.groupby("query_id", sort=False):
+            qid = int(qid)
+            ids = g["doc_id"].to_numpy(dtype=np.int64)
+            if qid in idfs:
+                vis = np.stack(g["vis"].to_numpy())
+                scores = bm25_scores(vis, g["dl"].to_numpy(), idfs[qid], avgdl)
+            else:
+                scores = g["score"].to_numpy(dtype=np.float64)
+            if qid in best:
+                ids = np.concatenate([best[qid][0], ids])
+                scores = np.concatenate([best[qid][1], scores])
+            best[qid] = _topk(ids, scores, k)
+    return best
 
 
 class SearchEngine:
@@ -103,7 +144,10 @@ class SearchEngine:
         # while n_docs leaves its docs out (a free partition filter)
         self.n_segments = int(st["n_segments"])
         committed = F.col("segment") < self.n_segments
-        self._postings = spark.read.parquet(
+        # postings are read through a whole-file session: every scan task
+        # holds whole (segment, shard) files, which the exchange-free shard
+        # pass relies on, whatever split size the caller's session uses
+        self._postings = whole_file_session(spark).read.parquet(
             table_dir(index_dir, "postings", self.epoch)
         ).filter(committed)
         # The term dictionary (df lookup) is the postings table's own
@@ -131,6 +175,17 @@ class SearchEngine:
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
+
+    def _sentinel_idfs(self, rows) -> dict[int, np.ndarray]:
+        """{query_id: idfs} from df rows (query_id, dfs): per query, the
+        groups' per-phrase dfs summed into global dfs."""
+        dfs: dict[int, np.ndarray] = {}
+        for qid, q_dfs in rows:
+            dfs[qid] = dfs.get(qid, 0) + np.array(q_dfs)
+        return {
+            qid: np.array([idf_of(int(df), self.n_docs) for df in q_dfs])
+            for qid, q_dfs in dfs.items()
+        }
 
     # ---- planning -----------------------------------------------------
 
@@ -175,11 +230,13 @@ class SearchEngine:
 
         Per plan entry, each (segment, shard) group emits: for an a-priori
         pure conjunction, its block-max WAND top-k; for any other a-priori
-        query, its exhaustively scored top-k; otherwise its matched
-        (doc_id, dl, vis) rows plus one df-sentinel row. Segments partition
-        the doc space, so the groups' top-k rows merge in ``_topk`` and
-        their sentinels sum like the shards' do. ``book_ids`` (the Q6 doc
-        subset) filters hits, never dfs."""
+        query, its exhaustively scored top-k; for a one-phrase query, its
+        top-k matched (doc_id, dl, vis) rows by the idf-free score plus one
+        df row; otherwise all its matched rows plus one df-sentinel row.
+        Segments partition the doc space, so the groups' top-k rows merge
+        in ``_topk`` and their df rows sum like the shards' do.
+        ``book_ids`` (the Q6 doc subset) filters hits before any top-k cut,
+        never dfs."""
         cond = self._scan_predicate([p for _, _, ps in parsed for p in ps])
         # ONE dictionary lookup for every a-priori query's terms
         a_priori = [(qid, ps) for qid, tree, ps in parsed if _is_a_priori(tree, ps)]
@@ -209,21 +266,30 @@ class SearchEngine:
             if books is not None:
                 sel = np.isin(matched, books)
                 matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-            if q.idfs is None:
-                yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
-                dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
-                yield _frame(q.qid, [0], dfs=[dfs_row])
-            elif len(matched):
-                ids, scores = _topk(matched, bm25_scores(mvis, mdl, q.idfs, avgdl), k)
-                yield _frame(q.qid, ids, scores=scores)
+            if q.idfs is not None:
+                if len(matched):
+                    ids, scores = _topk(matched, bm25_scores(mvis, mdl, q.idfs, avgdl), k)
+                    yield _frame(q.qid, ids, scores=scores)
+                return
+            if not q.sentinel:
+                keep = _topk_order(matched, bm25_scores(mvis, mdl, _UNIT_IDF, avgdl), k)
+                matched, mdl, mvis = matched[keep], mdl[keep], mvis[keep]
+            yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
+            dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
+            yield _frame(q.qid, [0], dfs=[dfs_row])
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = [out for q in plan for out in shard_rows(pdf, q)]
-            return pd.concat(outs, ignore_index=True) if outs else _frame(0, [])
+        def fn(batches):
+            # whole-file scans: each (segment, shard) group lies whole in
+            # this task's batches, so grouping here needs no exchange
+            pdfs = list(batches)
+            if not pdfs:
+                return
+            for _, group in pd.concat(pdfs).groupby(["segment", "shard"], sort=False):
+                outs = [out for q in plan for out in shard_rows(group, q)]
+                if outs:
+                    yield pd.concat(outs, ignore_index=True)
 
-        scored = self._postings.filter(cond).groupBy("segment", "shard").applyInPandas(
-            fn, schema=SHARD_SCHEMA
-        )
+        scored = self._postings.filter(cond).mapInPandas(fn, schema=SHARD_SCHEMA)
         return scored, plan
 
     # ---- execution ----------------------------------------------------
@@ -239,56 +305,38 @@ class SearchEngine:
         shard_out, plan = self._shard_pass(parsed, k, book_ids)
         if shard_out is None:
             return {}
-        if all(q.idfs is not None for q in plan):
-            # every shard already emitted scored top-k rows: one collect
-            rows = shard_out.select("query_id", "doc_id", "score").collect()
-        else:
+        if any(q.sentinel for q in plan):
             shard_out = shard_out.persist()
             try:
                 rows = self._score_matches(shard_out, k).collect()
             finally:
                 shard_out.unpersist()
-        by_q: dict[int, tuple[list, list]] = {}
-        for r in rows:
-            ids, scores = by_q.setdefault(r["query_id"], ([], []))
-            ids.append(r["doc_id"])
-            scores.append(r["score"])
-        return {
-            qid: _topk(np.array(ids, dtype=np.int64), np.array(scores), k)
-            for qid, (ids, scores) in by_q.items()
-        }
+            return _best_per_query(
+                [pd.DataFrame.from_records(rows, columns=["query_id", "doc_id", "score"])],
+                {}, self.avgdl, k,
+            )
+        # every group already cut its top-k: ONE collect, then the df rows
+        # are summed and the ≤ groups×k one-phrase rows scored here
+        pdf = pd.DataFrame.from_records(shard_out.collect(), columns=shard_out.columns)
+        df_rows = pdf["dfs"].notna()
+        idfs = self._sentinel_idfs(
+            pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False)
+        )
+        return _best_per_query([pdf[~df_rows]], idfs, self.avgdl, k)
 
     def _score_matches(self, shard_out: DataFrame, k: int) -> DataFrame:
         """Sentinel path over the persisted shard output: sum the df
         sentinels driver-side (≤ segments×shards×queries rows, no
         shuffle), then score each partition's matched rows and keep its
-        top-k per query.
-        Pre-scored a-priori rows pass through the same truncation."""
-        dfs: dict[int, np.ndarray] = {}
-        for r in shard_out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect():
-            dfs[r["query_id"]] = dfs.get(r["query_id"], 0) + np.array(r["dfs"])
-        idfs = {
-            qid: np.array([idf_of(int(df), self.n_docs) for df in q_dfs])
-            for qid, q_dfs in dfs.items()
-        }
+        top-k per query. A batch's one-phrase rows are scored the same way;
+        its pre-scored a-priori rows pass through the same truncation."""
+        idfs = self._sentinel_idfs(
+            shard_out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect()
+        )
         avgdl = self.avgdl
 
         def fn(batches):
-            best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-            for pdf in batches:
-                for qid, g in pdf.groupby("query_id", sort=False):
-                    qid = int(qid)
-                    ids = g["doc_id"].to_numpy()
-                    if qid in idfs:
-                        vis = np.stack(g["vis"].to_numpy())
-                        scores = bm25_scores(vis, g["dl"].to_numpy(), idfs[qid], avgdl)
-                    else:
-                        scores = g["score"].to_numpy()
-                    if qid in best:
-                        ids = np.concatenate([best[qid][0], ids])
-                        scores = np.concatenate([best[qid][1], scores])
-                    best[qid] = _topk(ids, scores, k)
-            for qid, (ids, scores) in best.items():
+            for qid, (ids, scores) in _best_per_query(batches, idfs, avgdl, k).items():
                 yield pd.DataFrame(
                     {"query_id": np.int32(qid), "doc_id": ids, "score": scores}
                 )
@@ -412,9 +460,10 @@ def _empty_frame(spark: SparkSession, schema: str) -> DataFrame:
 
 
 def _is_a_priori(tree: Node, phrases: list[Phrase]) -> bool:
-    """Every phrase is a plain single term and the tree has no NEAR: the
-    query's dfs are dictionary lookups, known before the scan."""
-    return tree_has_no_near(tree) and all(
+    """More than one phrase, every one a plain single term, and no NEAR: the
+    query's dfs are dictionary lookups, known before the scan. (A
+    one-phrase tree needs no df before its groups cut their top-k.)"""
+    return tree.op != "PHRASE" and tree_has_no_near(tree) and all(
         len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
         for p in phrases
     )

@@ -22,11 +22,13 @@ import pandas as pd
 import pytest
 
 from pdfsearch_spark.extract import extract_text
-from pdfsearch_spark.index_build import build_index
+from pdfsearch_spark.index_build import build_index, shard_of
 from pdfsearch_spark.oracle import FTS5Oracle
 from pdfsearch_spark.search import SearchEngine
+from perfbench.check import rank_mismatch
 
 IDX = "/tmp/pdfsearch_boundary_idx"
+SPREAD_IDX = "/tmp/pdfsearch_boundary_spread_idx"
 
 # 40-doc tie cohort + 10 strictly-better docs + fillers
 TIED = ["alpha beta gamma delta epsilon"] * 40
@@ -46,13 +48,27 @@ QUERIES = [
     '"beta gamma"',
     "alpha OR epsilon",
     "gam*",
+    "^alpha",
     "NEAR(alpha delta, 4)",
 ]
 
 
 @pytest.fixture(scope="module")
 def pair(spark):
-    urls = [f"http://ties.example/d{i}" for i in range(len(TEXTS))]
+    yield _build(spark, IDX, [f"http://ties.example/d{i}" for i in range(len(TEXTS))])
+    shutil.rmtree(IDX, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def spread_pair(spark):
+    """The same corpus under urls whose ids spread over all 4 shards: FNV-1
+    ids of urls that differ only in their last bytes share their top bits,
+    hence their shard (``pair``'s cohort sits in 2 of the 4)."""
+    yield _build(spark, SPREAD_IDX, [f"http://ties.example/d{i}.html" for i in range(len(TEXTS))])
+    shutil.rmtree(SPREAD_IDX, ignore_errors=True)
+
+
+def _build(spark, idx, urls):
     htmls = [f"<html><body><p>{t}</p></body></html>".encode() for t in TEXTS]
     ts = pd.to_datetime("2025-01-01")
     pdf = pd.DataFrame(
@@ -64,10 +80,9 @@ def pair(spark):
     pages = spark.createDataFrame(
         pdf[["url", "warc_ts", "html", "text", "lang"]]
     )
-    shutil.rmtree(IDX, ignore_errors=True)
-    build_index(spark, pages, IDX, n_shards=4)
-    yield SearchEngine(spark, IDX), oracle
-    shutil.rmtree(IDX, ignore_errors=True)
+    shutil.rmtree(idx, ignore_errors=True)
+    build_index(spark, pages, idx, n_shards=4)
+    return SearchEngine(spark, idx), oracle
 
 
 def _engine_rows(eng, q, k=K):
@@ -137,3 +152,26 @@ def test_boundary_tie_batch_matches_search(pair):
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, q in enumerate(QUERIES):
         assert sorted(by_q.get(qid, [])) == _engine_rows(eng, q), q
+
+
+@pytest.mark.parametrize("q", ["gam*", "^alpha"])
+def test_one_phrase_plateau_across_groups(spread_pair, q):
+    """A one-phrase query's groups each keep their own top-k by the
+    idf-free score, and the driver merges them. With the tied cohort spread
+    over all 4 shards and the boundary inside it, the engine must keep the
+    cohort's smallest doc ids — the global (score, doc_id) rule, not one
+    group's."""
+    eng, oracle = spread_pair
+    full = sorted((r.score, r.doc_id) for r in oracle.search(q, k=len(TEXTS)))
+    boundary = full[K - 1][0]
+    strict = [d for s, d in full if s < boundary - 1e-9]
+    cohort = sorted(d for s, d in full if abs(s - boundary) < 1e-9)
+    assert len(strict) < K < len(strict) + len(cohort)
+    assert {shard_of(d, 4) for d in cohort} == {0, 1, 2, 3}
+    got = _engine_rows(eng, q)
+    want = [(r.doc_id, r.score) for r in oracle.search(q, k=K)]
+    assert rank_mismatch(want, got) is None, q
+    assert sorted(d for d, _ in got) == sorted(strict + cohort[: K - len(strict)])
+    for d, score in got:
+        if d in cohort:
+            assert abs(score - boundary) < 1e-9, (d, score, boundary)

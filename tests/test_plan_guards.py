@@ -18,8 +18,6 @@ prints.
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,25 +69,21 @@ def test_point_lookup_prunes_shard_partition(engine):
 
 
 def test_fts_query_plan_has_no_exchange_before_scoring(engine):
-    """Both executor paths are scan → ((segment, shard)-grouped)
-    match+score: the only wide node between the postings scan and the
-    python scorer is the groupBy("segment", "shard") exchange, whose
-    payload is <= n_query_terms rows per (segment, shard) — never a second
-    full-width shuffle. 'renal failure' scores a priori (WAND) inside the
-    shard function; the phrase takes the df-sentinel path, whose
-    partition-local scoring over the persisted match output must add no
-    exchange above the cache."""
-    for q in ("renal failure", '"renal failure"'):
+    """Every executor path is scan → match+score in one mapInPandas, with
+    no exchange: the postings scan reads whole files, one (segment, shard)
+    file per task, so the shard function groups by (segment, shard) inside
+    its task. 'renal failure' scores a priori (WAND) inside the shard
+    function; the phrase is a one-phrase query whose groups cut an idf-free
+    top-k; NEAR takes the df-sentinel path, whose partition-local scoring
+    over the persisted match output must add no exchange above the cache."""
+    for q in ("renal failure", '"renal failure"', "NEAR(renal failure, 3)"):
         tree, phrases = engine._plan(q)
         shard_out, plan = engine._shard_pass([(0, tree, phrases)], 200)
         text = _executed_plan(shard_out)
-        exchanges = [l for l in text.splitlines() if "Exchange" in l]
-        assert len(exchanges) == 1, (q, text)
-        assert re.search(r"hashpartitioning\(segment#\d+, shard#\d+,", exchanges[0]), (
-            q,
-            exchanges[0],
-        )
-        if plan[0].idfs is not None:
+        assert "MapInPandas" in text, (q, text)
+        assert "Exchange" not in text, (q, text)
+        assert plan[0].sentinel == q.startswith("NEAR"), q
+        if not plan[0].sentinel:
             continue
         shard_out = shard_out.persist()
         try:

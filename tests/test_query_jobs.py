@@ -3,11 +3,18 @@
 Every count is taken for one call inside its own job group
 (``setJobGroup`` + ``statusTracker``), after a warm-up run of the same
 call, so the df cache and the parquet file listing are warm — the state a
-serving engine is in. Jobs are the fixed cost of a query on Spark: a
-plain-term search must stay at 3 (scoring exchange, collect, doc lookup),
-the df-sentinel path must not need the former 7, a batch of a-priori
-queries must cost no more than the scoring half of one search, and an
-empty result costs no job of its own.
+serving engine is in. Jobs are the fixed cost of a query on Spark, and the
+shard pass has no exchange, so it is one job:
+
+- a one-phrase search (plain term, phrase, prefix, anchor) takes 2: the
+  shard pass, whose one collect brings the groups' top-k and df rows, and
+  the doc lookup — also cold, since it runs no df lookup;
+- a zero-hit search takes 1, the shard pass alone;
+- a NEAR search (the df-sentinel path) takes at most 3: the persisted
+  shard pass with its sentinel collect, the partition scoring, the doc
+  lookup;
+- a batch of a-priori queries costs no more than the scoring half of one
+  search, and an empty result costs no job of its own.
 """
 
 from __future__ import annotations
@@ -16,6 +23,8 @@ import itertools
 
 TERM = "hypertension"
 PHRASE = '"renal failure"'
+ONE_PHRASE = [PHRASE, "data*", "^guation", "text:hypertension"]
+NEAR = "NEAR(renal failure, 3)"
 ZERO_HIT = "qqzxjvvk"  # a plain term in no fixture document
 A_PRIORI = ["hypertension", "renal failure", "renal OR failure", "failure NOT renal"]
 
@@ -47,14 +56,35 @@ def test_plain_term_search_jobs(spark, engine):
     n = _warm_jobs(
         spark, lambda: engine.search(TERM, k=10, with_snippets=False).collect()
     )
-    assert n <= 3, n
+    assert n <= 2, n
+
+
+def test_cold_plain_term_runs_no_df_lookup(spark, index_dir):
+    from pdfsearch_spark.search import SearchEngine
+
+    eng = SearchEngine(spark, index_dir)
+    rows = []
+    n = _jobs(
+        spark, lambda: rows.extend(eng.search(TERM, k=10, with_snippets=False).collect())
+    )
+    assert rows
+    assert eng._df_cache == {}
+    assert n <= 2, n
+
+
+def test_one_phrase_search_jobs(spark, engine):
+    for q in ONE_PHRASE:
+        n = _warm_jobs(
+            spark, lambda: engine.search(q, k=10, with_snippets=False).collect()
+        )
+        assert n <= 2, (q, n)
 
 
 def test_sentinel_path_search_jobs(spark, engine):
     n = _warm_jobs(
-        spark, lambda: engine.search(PHRASE, k=10, with_snippets=False).collect()
+        spark, lambda: engine.search(NEAR, k=10, with_snippets=False).collect()
     )
-    assert n < 7, n
+    assert n <= 3, n
 
 
 def test_a_priori_batch_jobs(spark, engine):
@@ -70,8 +100,8 @@ def test_zero_hit_search_jobs(spark, engine):
     n = _warm_jobs(
         spark, lambda: engine.search(ZERO_HIT, k=10, with_snippets=False).collect()
     )
-    # df lookup and shard pass; the empty result itself runs none
-    assert n <= 2, n
+    # the shard pass alone; the empty result itself runs none
+    assert n <= 1, n
 
 
 def test_empty_results_run_no_job(spark, engine):

@@ -137,16 +137,30 @@ def test_colset_group_errors_raise(engine, oracle, q):
         engine.search(q, with_snippets=False).collect()
 
 
-def test_book_filter(engine, oracle, corpus_pdf):
-    """Intended Q6 semantics: restrict scoring to the given doc ids."""
-    # pick docs that contain the head term so the filter bites
-    q = "renal failure"
-    full = _oracle_pairs(oracle, q, 200)
-    if len(full) < 3:
+@pytest.mark.parametrize(
+    "q",
+    [
+        "renal failure",           # a-priori conjunction (WAND)
+        "hypertension",            # plain term
+        "text:hypertension",       # column term
+        '"renal failure"',         # phrase
+        "data*",                   # prefix
+        "^guation",                # anchor
+        "NEAR(renal failure, 3)",  # df-sentinel path
+        "renal NOT failure OR study",
+    ],
+    ids=lambda q: repr(q)[:30],
+)
+def test_book_filter(engine, oracle, q):
+    """Intended Q6 semantics: restrict scoring to the given doc ids. The
+    ids are the unfiltered result's worst-ranked docs, so a filter applied
+    after any group's top-k cut, rather than before it, would lose them."""
+    ranked = sorted(_oracle_pairs(oracle, q, 200), key=lambda p: (p[1], p[0]))
+    if len(ranked) < 4:
         pytest.skip("fixture too small for filter test")
-    book_ids = [d for d, _ in full[:2]]
-    o = _oracle_pairs(oracle, q, 200, book_ids=book_ids)
-    e = _engine_pairs(engine, q, 200, book_ids=book_ids)
+    book_ids = [d for d, _ in ranked[-2:]]
+    o = _oracle_pairs(oracle, q, 2, book_ids=book_ids)
+    e = _engine_pairs(engine, q, 2, book_ids=book_ids)
     _assert_rank_identical(o, e, q)
     assert {d for d, _ in e} == set(book_ids)
 
