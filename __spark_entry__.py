@@ -1212,7 +1212,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # ---------------------------------------------------------------- FTS demo
 
-from pdfsearch_spark.index_build import INDEX_FORMAT as _IDX_FMT
+from pdfsearch_spark.index_build import INDEX_FORMAT as _IDX_FMT, STATS_FILE as _IDX_COMMIT
 
 # version-keyed to the on-disk format so a format bump rebuilds the cache
 _FTS_INDEX_DIR = f"/tmp/spark_entry_fts_index_v{_IDX_FMT}"
@@ -1224,7 +1224,7 @@ def _ensure_fts_index(spark: SparkSession) -> str:
     from pdfsearch_spark import corpus
     from pdfsearch_spark.index_build import build_index
 
-    marker = os.path.join(_FTS_INDEX_DIR, "stats")
+    marker = os.path.join(_FTS_INDEX_DIR, _IDX_COMMIT)
     if not os.path.exists(marker):
         pages = corpus.web_pages_df(spark, _FTS_N, partitions=8)
         build_index(spark, pages, _FTS_INDEX_DIR, n_shards=8)

@@ -8,8 +8,10 @@ Layout (partitioned Parquet warehouse; Iceberg would use the same schema):
                       metadata column (snippet source; the build's later
                       stages are column-pruned reads of this table)
   <out>/postings/     segment / shard / term, df, cf, blobs + block metadata
-  <out>/stats/        n_docs, avgdl, total_tokens, n_shards, n_segments,
-                      format, watermark, epoch — the commit point
+  <out>/_stats.json   n_docs, avgdl, total_tokens, n_shards, n_segments,
+                      format, watermark, epoch, op, phase_sec — the commit
+                      point: one small JSON file, replaced by an atomic
+                      rename and read without a Spark job
   <out>/_build_state/ per-shard manifest of committed shards: lineage +
                       build metrics
 
@@ -38,9 +40,9 @@ every segment (``_commit_segment``): fresh build, resume, refresh and
 compaction only select its input rows and clean up around it. It writes
 the segment's doc_text (corpus totals observed on that write), encodes
 each shard's postings with block bounds at that shard's own avgdl, commits
-``stats`` and only then writes the ``_build_state`` rows, so a manifest
-row never names uncommitted work. Per-shard lineage (doc count, doc-id fingerprint, token
-count) is measured by the encode pass that already reads every doc of its
+``_stats.json`` and only then writes the ``_build_state`` rows, so a
+manifest row never names uncommitted work. Per-shard lineage (doc count,
+doc-id fingerprint, token count) is measured by the encode pass that already reads every doc of its
 shard — no Spark job of its own. Compaction is a one-segment rebuild from
 the committed doc_text.
 
@@ -73,6 +75,7 @@ Scale design (the part that must survive 1000 executors × 100 TB):
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -99,7 +102,10 @@ SHARD_DEFAULT = 32
 # readers refuse a mismatched index instead of misreading it.
 # 6: documents + term_stats are no longer materialized (derived from
 #    doc_text / postings; see module docstring).
-INDEX_FORMAT = 6
+# 7: the commit point is the JSON file STATS_FILE, not a parquet ``stats``
+#    table.
+INDEX_FORMAT = 7
+STATS_FILE = "_stats.json"
 
 
 def table_dir(out_dir: str, tbl: str, epoch: int = 0) -> str:
@@ -107,12 +113,12 @@ def table_dir(out_dir: str, tbl: str, epoch: int = 0) -> str:
 
     Epoch 0 is the unversioned layout a fresh build writes (``<out>/<tbl>``);
     compaction commits each full-table rewrite as epoch N+1
-    (``<out>/<tbl>.v<N+1>``) and flips the epoch recorded in ``stats`` — a
-    versioned-root commit that makes the swap crash-safe on plain parquet
-    (the Iceberg-snapshot analog): readers resolve table paths through
-    stats, so at every instant they see either the old complete epoch or
-    the new complete epoch, never a half-swapped directory. Old epochs are
-    GC'd only after the commit."""
+    (``<out>/<tbl>.v<N+1>``) and flips the epoch recorded in the commit
+    file (``STATS_FILE``) — a versioned-root commit that makes the swap
+    crash-safe on plain parquet (the Iceberg-snapshot analog): readers
+    resolve table paths through the commit file, so at every instant they
+    see either the old complete epoch or the new complete epoch, never a
+    half-swapped directory. Old epochs are GC'd only after the commit."""
     return os.path.join(out_dir, tbl if epoch == 0 else f"{tbl}.v{epoch}")
 
 DOCROW_SCHEMA = StructType(
@@ -548,13 +554,32 @@ def _encode_postings(
     return dict(acc.value)
 
 
+MANIFEST_SCHEMA = StructType(
+    [
+        StructField("shard", LongType()),
+        StructField("status", StringType()),
+        StructField("built_at", TimestampType()),
+        StructField("n_docs", LongType()),
+        StructField("docs_fingerprint", LongType()),
+        StructField("n_tokens", LongType()),
+        StructField("n_terms", LongType()),
+        StructField("n_postings", LongType()),
+        StructField("postings_bytes", LongType()),
+        StructField("positions_bytes", LongType()),
+        StructField("encode_sec", DoubleType()),
+        StructField("docs_per_sec", DoubleType()),
+        StructField("postings_per_sec", DoubleType()),
+    ]
+)
+
+
 def _write_manifest(
     spark: SparkSession, out_dir: str, shards, shard_metrics: dict, mode: str
 ) -> None:
     """Per-shard lineage + metrics manifest (``_build_state``; the north_rule
     checkpoint clause that resume_build reads): one ``complete`` row per
     committed shard, from its encode record (a shard with no docs has no
-    record and gets zeros)."""
+    record and gets zeros). Written and read with ``MANIFEST_SCHEMA``."""
     built_at = pd.Timestamp.utcnow().tz_localize(None)
     rows = []
     for s in shards:
@@ -578,9 +603,9 @@ def _write_manifest(
                 "postings_per_sec": n_post / sec if sec > 0 else 0.0,
             }
         )
-    spark.createDataFrame(pd.DataFrame(rows)).write.mode(mode).parquet(
-        os.path.join(out_dir, "_build_state")
-    )
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=MANIFEST_SCHEMA.fieldNames()), MANIFEST_SCHEMA
+    ).write.mode(mode).parquet(os.path.join(out_dir, "_build_state"))
 
 
 def _commit_segment(
@@ -588,13 +613,14 @@ def _commit_segment(
     docs: DataFrame,
     out_dir: str,
     n_shards: int,
+    op: str,
     epoch: int = 0,
     segment: int = 0,
     base: tuple = (0, 0, None),
     shards: list[int] | None = None,
 ) -> dict | None:
     """Write and commit one segment — the one write path of build, resume,
-    refresh and compaction.
+    refresh and compaction (``op``, recorded in the commit).
 
     ``docs`` are shard-clustered DOCROW rows; ``base`` is the committed
     corpus they add to, as (n_docs, total_tokens, watermark); ``shards``
@@ -610,8 +636,12 @@ def _commit_segment(
        at its own avgdl, so a shard's postings depend on its docs alone and
        a resume or compaction writes what a fresh build writes; the same
        pass measures each shard's lineage.
-    3. COMMIT: ``stats`` with n_segments = segment + 1. The watermark only
-       ever advances (out-of-order batches must not regress it).
+    3. COMMIT: the ``_stats.json`` commit file (``_write_stats``) with
+       n_segments = segment + 1, ``op`` and the phase times so far, written
+       under a temp name and renamed over the old one — no Spark job, and
+       a reader sees the old commit or the new one, never neither. The
+       watermark only ever advances (out-of-order batches must not regress
+       it).
     4. ``_build_state``: a new manifest for a whole base segment (fresh
        build, compaction), appended rows for a resume's or a refresh's
        shards. Written after the commit, so a manifest row never names
@@ -654,7 +684,7 @@ def _commit_segment(
 
     _write_stats(
         spark, out_dir, n_docs, avgdl, total_tokens, n_shards, segment + 1,
-        watermark, epoch=epoch,
+        watermark, epoch=epoch, op=op, phase_sec=phases,
     )
     if segment == 0 and shards is None:
         _write_manifest(spark, out_dir, range(n_shards), sm, "overwrite")
@@ -695,9 +725,10 @@ def build_index(
         # resume/refresh) only replaces partitions present in the output,
         # so a rebuild over an old dir would otherwise leave orphan
         # shard/segment partitions behind. documents/term_stats are the
-        # tables a pre-format-6 index materialized; nothing reads them now.
+        # tables a pre-format-6 index materialized, and stats the parquet
+        # commit table of a pre-format-7 one; nothing reads them now.
         _hdfs_rm(spark, os.path.join(out_dir, "_build_state"))
-        for sub in ("postings", "doc_text", "documents", "term_stats"):
+        for sub in ("postings", "doc_text", "documents", "term_stats", "stats"):
             _hdfs_rm(spark, os.path.join(out_dir, sub))
             _gc_epoch_dirs(spark, out_dir, sub, keep_epochs=0)
     elif _exists(spark, doc_text_dir):
@@ -730,6 +761,7 @@ def build_index(
         extract_documents_sharded(cluster_by_shard(pre, n_shards)),
         out_dir,
         n_shards,
+        "build" if only_shards is None else "resume",
         base=base,
         shards=only_shards,
     )
@@ -812,6 +844,39 @@ def _count_parquet_files(spark: SparkSession, path: str) -> int:
     return n
 
 
+def _commit_fs(spark: SparkSession, path: str):
+    """``_fs`` for the commit file, unwrapped to the raw FS when the FS
+    checksums (the local FS does). A checksumming local FS renames a file
+    and its ``.crc`` sidecar in two steps, so a reader could pair a new
+    file with an old checksum; the raw FS writes no sidecar. ``_fs``
+    returns the JVM's cached FileSystem, which the parquet writers share:
+    it is unwrapped, never reconfigured."""
+    fs, hpath = _fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    if jvm.org.apache.hadoop.fs.ChecksumFileSystem._java_lang_class.isInstance(fs):
+        fs = fs.getRawFileSystem()
+    return fs, hpath
+
+
+def _replace(spark: SparkSession, fs, src, dst) -> None:
+    """Rename ``src`` over ``dst`` so that a reader of ``dst`` finds the
+    old file or the new one, never neither. The raw local FS renames with
+    rename(2), which replaces ``dst`` atomically. A store that refuses to
+    rename over an existing file (HDFS) gets FileContext's OVERWRITE
+    rename, which is its atomic replace. FileContext is not used for the
+    local FS: there, OVERWRITE deletes ``dst`` before renaming."""
+    if fs.rename(src, dst):
+        return
+    sc = spark.sparkContext
+    rename_opt = getattr(sc._jvm.org.apache.hadoop.fs, "Options$Rename")
+    opts = sc._gateway.new_array(rename_opt, 1)
+    opts[0] = rename_opt.OVERWRITE
+    fc = sc._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        dst.toUri(), sc._jsc.hadoopConfiguration()
+    )
+    fc.rename(src, dst, opts)
+
+
 def _write_stats(
     spark: SparkSession,
     out_dir: str,
@@ -821,38 +886,69 @@ def _write_stats(
     n_shards: int,
     n_segments: int,
     watermark,
-    epoch: int = 0,
+    *,
+    epoch: int,
+    op: str,
+    phase_sec: dict,
 ) -> None:
-    spark.createDataFrame(
-        [
-            (
-                int(n_docs),
-                float(avgdl),
-                int(total_tokens),
-                int(n_shards),
-                int(n_segments),
-                int(INDEX_FORMAT),
-                watermark,
-                int(epoch),
-            )
-        ],
-        schema=(
-            "n_docs long, avgdl double, total_tokens long, n_shards int, "
-            "n_segments int, format int, watermark timestamp, epoch int"
-        ),
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
+    """Commit the index: write ``STATS_FILE`` under a temp name in
+    ``out_dir``, then rename it over the old one (``_replace``). No Spark
+    job runs. ``watermark`` is stored as Spark's internal timestamp value
+    (UTC microseconds), so it reads back as the datetime a parquet
+    timestamp column collects to. ``op`` (build, resume, refresh or
+    compact) and its ``phase_sec`` up to the commit are recorded for
+    operators; no reader depends on them. One writer per index."""
+    rec = {
+        "format": INDEX_FORMAT,
+        "op": op,
+        "n_docs": int(n_docs),
+        "avgdl": float(avgdl),
+        "total_tokens": int(total_tokens),
+        "n_shards": int(n_shards),
+        "n_segments": int(n_segments),
+        "epoch": int(epoch),
+        "watermark": TimestampType().toInternal(watermark),
+        "phase_sec": phase_sec,
+    }
+    fs, path = _commit_fs(spark, os.path.join(out_dir, STATS_FILE))
+    tmp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        path.getParent(), STATS_FILE + ".tmp"
+    )
+    out = fs.create(tmp, True)
+    try:
+        out.write(json.dumps(rec, sort_keys=True).encode())
+    finally:
+        out.close()
+    _replace(spark, fs, tmp, path)
 
 
 def _read_stats(spark: SparkSession, out_dir: str) -> dict:
-    """The committed ``stats`` row of an index, as a dict. Raises
-    ``ValueError`` when the index was written in another on-disk format, so
-    no reader or writer misreads (or restamps) an older index."""
-    st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0].asDict()
+    """The committed ``STATS_FILE`` record of an index, as a dict, read
+    without a Spark job. Raises ``ValueError`` when the index was written
+    in another on-disk format (formats up to 6 committed a parquet
+    ``stats`` table instead), so no reader or writer misreads (or
+    restamps) an older index, and ``FileNotFoundError`` when ``out_dir``
+    holds no commit at all."""
+    fs, path = _commit_fs(spark, os.path.join(out_dir, STATS_FILE))
+    if not fs.exists(path):
+        if _exists(spark, os.path.join(out_dir, "stats")):
+            raise ValueError(
+                f"index format <= 6 (a parquet stats table) != reader format "
+                f"{INDEX_FORMAT}; rebuild the index"
+            )
+        raise FileNotFoundError(f"no committed index at {out_dir}")
+    stream = fs.open(path)
+    try:
+        raw = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    st = json.loads(bytes(raw))
     fmt = st.get("format")
     if fmt != INDEX_FORMAT:
         raise ValueError(
             f"index format {fmt!r} != reader format {INDEX_FORMAT}; rebuild the index"
         )
+    st["watermark"] = TimestampType().fromInternal(st["watermark"])
     return st
 
 
@@ -865,7 +961,8 @@ def resume_build(
     if _exists(spark, manifest):
         done = {
             r["shard"]
-            for r in spark.read.parquet(manifest)
+            for r in spark.read.schema(MANIFEST_SCHEMA)
+            .parquet(manifest)
             .filter(F.col("status") == "complete")
             .collect()
         }
@@ -898,9 +995,9 @@ def refresh_index(
     This function only selects the batch's new docs and clears the
     uncommitted segment; ``_commit_segment`` writes and commits it, as it
     does for the build and compaction: doc_text, postings, then the small
-    ``stats`` file — carrying the watermark and segment count — as the
-    commit point, then the segment's ``_build_state`` rows. A refresh first
-    deletes whatever an earlier crashed attempt left under the uncommitted
+    ``_stats.json`` file — carrying the watermark and segment count — as
+    the commit point, then the segment's ``_build_state`` rows. A refresh
+    first deletes whatever an earlier crashed attempt left under the uncommitted
     ``segment=<n>``, so a rerun after any crash, with the same batch or
     another one (the streaming wrapper's next micro-batch), commits exactly
     its own docs. On Iceberg this whole function is one transaction; on
@@ -952,6 +1049,7 @@ def refresh_index(
         extract_documents_sharded(cluster_by_shard(pre, n_shards)),
         out_dir,
         n_shards,
+        "refresh",
         epoch=epoch,
         segment=seg,
         base=(int(st["n_docs"]), int(st["total_tokens"]), watermark),
@@ -965,6 +1063,7 @@ def refresh_index(
         "n_docs": c["n_docs"],
         "avgdl": c["avgdl"],
         "elapsed_sec": elapsed,
+        "phase_sec": c["phase_sec"],
         "docs_per_sec": c["n_new"] / elapsed if elapsed > 0 else 0.0,
     }
 
@@ -979,23 +1078,25 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     doc_text rows (segment < n_segments — a crashed refresh's uncommitted
     segment is left out, exactly as readers leave it out) are clustered by
     shard and handed to ``_commit_segment`` as segment 0 of the next
-    epoch, which writes them, encodes their postings, commits ``stats`` and
-    then rewrites the ``_build_state`` manifest for the compacted segment.
+    epoch, which writes them, encodes their postings, commits
+    ``_stats.json`` and then rewrites the ``_build_state`` manifest for the
+    compacted segment.
     No posting blob is decoded, and the result equals a fresh build of the
     same pages.
 
     Crash safety (versioned-root commit, the plain-parquet stand-in for an
     Iceberg RewriteFiles snapshot): the merged tables are written into the
     NEXT epoch's dirs (``<tbl>.v<N+1>``, see table_dir) while every reader
-    keeps resolving the CURRENT epoch through ``stats``; the single small
-    ``stats`` rewrite — carrying the new epoch — is the commit point,
-    after which old epochs are GC'd. A crash at any moment before the
+    keeps resolving the CURRENT epoch through ``_stats.json``; the single
+    small commit-file replace — carrying the new epoch — is the commit
+    point, after which old epochs are GC'd. A crash at any moment before the
     commit leaves the old epoch complete and visible (a rerun overwrites
     the orphan next-epoch dirs); a crash between commit and GC leaves
     stale old-epoch dirs that the next compaction or fresh build sweeps.
 
     Returns segment/file counts before and after so callers (and the
-    bench) can verify the rewrite paid for itself.
+    bench) can verify the rewrite paid for itself, and ``phase_sec``: the
+    commit's phases plus ``gc`` (the old-epoch sweep and the file count).
     """
     t0 = time.time()
     st = _read_stats(spark, out_dir)
@@ -1014,9 +1115,11 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
         .parquet(table_dir(out_dir, "doc_text", epoch))
         .filter(F.col("segment") < segments_before)
     )
-    _commit_segment(
-        spark, cluster_by_shard(committed, n_shards), out_dir, n_shards, epoch=new_epoch
+    c = _commit_segment(
+        spark, cluster_by_shard(committed, n_shards), out_dir, n_shards, "compact",
+        epoch=new_epoch,
     )
+    t_gc = time.time()
 
     # GC old epochs (post-commit; failures here leave garbage, never a
     # broken index — swept again by the next cycle). The epoch we just
@@ -1028,6 +1131,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     files_after = _count_parquet_files(
         spark, table_dir(out_dir, "postings", new_epoch)
     )
+    phases = dict(c["phase_sec"], gc=round(time.time() - t_gc, 2))
     return {
         "compacted": True,
         "elapsed_sec": time.time() - t0,
@@ -1036,4 +1140,5 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
         "segments_after": 1,
         "postings_files_before": files_before,
         "postings_files_after": files_after,
+        "phase_sec": phases,
     }

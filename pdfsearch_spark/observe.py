@@ -25,10 +25,12 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     nothing is decoded). Only committed segments are reported: a crashed
     refresh's uncommitted ``segment=n_segments`` is on disk but not in the
     index, the same rule ``SearchEngine`` reads by."""
-    from .index_build import _read_stats, table_dir
+    from .index_build import POSTING_SCHEMA, _read_stats, table_dir
 
     st = _read_stats(spark, index_dir)
-    p = spark.read.parquet(table_dir(index_dir, "postings", int(st["epoch"])))
+    p = spark.read.schema(POSTING_SCHEMA).parquet(
+        table_dir(index_dir, "postings", int(st["epoch"]))
+    )
     p = p.filter(F.col("segment") < int(st["n_segments"]))
     return p.groupBy("segment", "shard").agg(
         F.count("*").alias("n_terms"),

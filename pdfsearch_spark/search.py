@@ -43,7 +43,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analyzer import tokenize, unicode61_tokens
-from .index_build import _read_stats, shard_of, table_dir, whole_file_session
+from .index_build import (
+    DOC_STORE_SCHEMA,
+    POSTING_SCHEMA,
+    _read_stats,
+    shard_of,
+    table_dir,
+    whole_file_session,
+)
 from .query.parser import Node, Phrase, parse_query
 from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 
@@ -135,7 +142,7 @@ class SearchEngine:
         self.n_docs = st["n_docs"]
         self.avgdl = st["avgdl"]
         self.n_shards = st["n_shards"]
-        # table paths resolve through the stats epoch (compaction's
+        # table paths resolve through the committed epoch (compaction's
         # versioned-root commit): this engine is bound to one complete
         # epoch snapshot for its lifetime
         self.epoch = int(st["epoch"])
@@ -146,17 +153,24 @@ class SearchEngine:
         committed = F.col("segment") < self.n_segments
         # postings are read through a whole-file session: every scan task
         # holds whole (segment, shard) files, which the exchange-free shard
-        # pass relies on, whatever split size the caller's session uses
-        self._postings = whole_file_session(spark).read.parquet(
-            table_dir(index_dir, "postings", self.epoch)
-        ).filter(committed)
+        # pass relies on, whatever split size the caller's session uses.
+        # Both tables are read with their declared schemas: opening a
+        # snapshot runs no schema-inference job.
+        self._postings = (
+            whole_file_session(spark)
+            .read.schema(POSTING_SCHEMA)
+            .parquet(table_dir(index_dir, "postings", self.epoch))
+            .filter(committed)
+        )
         # The term dictionary (df lookup) is the postings table's own
         # (term, df) columns, read column-pruned (blob chunks are never
         # read) — no global vocabulary table to build, ship or refresh.
         self._dict = self._postings.select("term", "df")
-        self._doc_text = spark.read.parquet(
-            table_dir(index_dir, "doc_text", self.epoch)
-        ).filter(committed)
+        self._doc_text = (
+            spark.read.schema(DOC_STORE_SCHEMA)
+            .parquet(table_dir(index_dir, "doc_text", self.epoch))
+            .filter(committed)
+        )
         # Driver-side df cache: an engine is bound to one snapshot, so
         # term→df never changes and repeated vocabulary skips the dictionary
         # job. Prefixes are never expanded driver-side: expansion happens

@@ -13,7 +13,7 @@ Delivery semantics compose cleanly:
 - the STREAM checkpoint guarantees each source file is delivered in exactly
   one micro-batch (replayed identically after a crash);
 - ``refresh_index`` is idempotent per batch (dynamic partition overwrite of
-  the segment's partitions, stats-last commit) — so a replayed batch rewrites
+  the segment's partitions, commit-file-last commit) — so a replayed batch rewrites
   the same segment rather than duplicating it;
 - batches need not arrive in warc_ts order: the wrapper passes
   ``use_watermark=False`` so dedup rides the doc-id anti-join (the MERGE

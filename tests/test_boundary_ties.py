@@ -7,7 +7,8 @@ cohort the k-th rank falls inside a tie plateau. FTS5 keeps a
 NONDETERMINISTIC member at an exact boundary tie (physical rowid order —
 meaningless in a partitioned engine), so rank-identity at a tie boundary is
 defined exactly as bench.assert_rank_identity and the fuzz harness define
-it: pairwise-equal score sequences + identical membership for every score
+it (``perfbench.check.rank_mismatch``): pairwise-equal score sequences,
+each side sorted by (score, doc_id) + identical membership for every score
 strictly better than the boundary + boundary rows drawn from the tied
 cohort. The engine itself must additionally be DETERMINISTIC (score, then
 doc_id ascending) — re-running a tied query twice returns identical rows,
@@ -94,30 +95,35 @@ def _engine_rows(eng, q, k=K):
     return sorted((r["doc_id"], r["score"]) for r in rows)
 
 
-@pytest.mark.parametrize("q", QUERIES, ids=lambda q: q[:30])
-def test_boundary_tie_rank_identity(pair, q):
-    eng, oracle = pair
-    o = sorted((r.doc_id, r.score) for r in oracle.search(q, k=K))
+def _assert_tie_aware_identity(eng, oracle, q):
+    """The engine's top K equals the oracle's under ``rank_mismatch``'s
+    (score, doc_id) rule, and every boundary doc the engine keeps is a true
+    member of the corpus-wide tie at the boundary score."""
+    o = [(r.doc_id, r.score) for r in oracle.search(q, k=K)]
     e = _engine_rows(eng, q)
-    assert len(o) == len(e), f"{q!r}: {len(o)} vs {len(e)}"
+    reason = rank_mismatch(o, e)
+    assert reason is None, f"{q!r}: {reason}"
     if not o:
         return
-    # score sequences pairwise identical (this includes the tied plateau)
-    for (_, osc), (_, esc) in zip(o, e):
-        assert abs(osc - esc) < 1e-9, f"{q!r}: {osc} vs {esc}"
-    # the boundary actually sits inside a tie for the tie-bearing queries
-    boundary = o[-1][1]
-    o_strict = {d for d, s in o if s < boundary - 1e-9}
-    e_strict = {d for d, s in e if s < boundary - 1e-9}
-    assert o_strict == e_strict, f"{q!r}: strict membership differs"
-    # boundary members on BOTH sides come from the same equal-score cohort:
-    # every boundary doc's full-corpus score equals the boundary score
+    boundary = max(s for _, s in o)
     full_o = {r.doc_id: r.score for r in oracle.search(q, k=len(TEXTS))}
     for d, s in e:
         if abs(s - boundary) < 1e-9:
             assert abs(full_o[d] - boundary) < 1e-9, (
                 f"{q!r}: engine boundary doc {d} is not a true tie member"
             )
+
+
+@pytest.mark.parametrize("q", QUERIES, ids=lambda q: q[:30])
+def test_boundary_tie_rank_identity(pair, q):
+    _assert_tie_aware_identity(*pair, q)
+
+
+@pytest.mark.parametrize("q", QUERIES, ids=lambda q: q[:30])
+def test_boundary_tie_rank_identity_spread(spread_pair, q):
+    """The same rule where the tie cohort spans all 4 shards, so FTS5's
+    and the engine's boundary members need not share doc-id positions."""
+    _assert_tie_aware_identity(*spread_pair, q)
 
 
 def test_tie_plateau_really_spans_boundary(pair):

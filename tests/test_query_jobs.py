@@ -15,6 +15,11 @@ shard pass has no exchange, so it is one job:
   lookup;
 - a batch of a-priori queries costs no more than the scoring half of one
   search, and an empty result costs no job of its own.
+
+Opening a snapshot (``SearchEngine``, ``_read_stats``) runs no job: the
+commit file is read through the Hadoop FileSystem and both tables are read
+with declared schemas. A refresh and a compaction run a pinned number of
+jobs (``REFRESH_JOBS``, ``COMPACT_JOBS``).
 """
 
 from __future__ import annotations
@@ -27,6 +32,12 @@ ONE_PHRASE = [PHRASE, "data*", "^guation", "text:hypertension"]
 NEAR = "NEAR(renal failure, 3)"
 ZERO_HIT = "qqzxjvvk"  # a plain term in no fixture document
 A_PRIORI = ["hypertension", "renal failure", "renal OR failure", "failure NOT renal"]
+
+# jobs of one refresh_index (+ new docs) and one compact_index over the
+# small fixture below; each was 3 more while the commit point was a parquet
+# table (schema inference, collect, and the write)
+REFRESH_JOBS = 6
+COMPACT_JOBS = 4
 
 _groups = itertools.count()
 
@@ -109,3 +120,29 @@ def test_empty_results_run_no_job(spark, engine):
     assert _jobs(spark, lambda: engine.search("  ", k=10).collect()) == 0
     assert engine.search_batch(["", " "], k=10).collect() == []
     assert _jobs(spark, lambda: engine.search_batch(["", " "], k=10).collect()) == 0
+
+
+def test_open_snapshot_runs_no_job(spark, index_dir):
+    from pdfsearch_spark.index_build import _read_stats
+    from pdfsearch_spark.search import SearchEngine
+
+    assert _jobs(spark, lambda: SearchEngine(spark, index_dir)) == 0
+    assert _jobs(spark, lambda: _read_stats(spark, index_dir)) == 0
+
+
+def test_refresh_and_compaction_jobs(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from pdfsearch_spark import corpus
+    from pdfsearch_spark.index_build import build_index, compact_index, refresh_index
+
+    n = 120
+    pages = corpus.web_pages_df(spark, n, partitions=4)
+    cutoff = corpus.gen_pandas(n)["warc_ts"].quantile(0.5)
+    d = str(tmp_path / "idx")
+    build_index(spark, pages.filter(F.col("warc_ts") <= F.lit(cutoff)), d, n_shards=4)
+    out = {}
+    refresh = _jobs(spark, lambda: out.update(r=refresh_index(spark, pages, d)))
+    compact = _jobs(spark, lambda: out.update(c=compact_index(spark, d)))
+    assert out["r"]["appended_docs"] > 0 and out["c"]["compacted"]
+    assert (refresh, compact) == (REFRESH_JOBS, COMPACT_JOBS)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from pdfsearch_spark import corpus
 from pdfsearch_spark.fnv import fnv1_64_signed
-from pdfsearch_spark.index_build import build_index, compact_index, refresh_index
+from pdfsearch_spark.index_build import _read_stats, build_index, compact_index, refresh_index
 from pdfsearch_spark.observe import index_stats
 from pdfsearch_spark.search import SearchEngine
 
@@ -61,7 +61,7 @@ def refreshed(spark, corpus_pdf):
 
 
 def _stats(spark):
-    return spark.read.parquet(REFRESH_INDEX_DIR + "/stats").collect()[0]
+    return _read_stats(spark, REFRESH_INDEX_DIR)
 
 
 def _results(spark, index_dir, ndigits=None):
@@ -80,7 +80,7 @@ def _results(spark, index_dir, ndigits=None):
 
 def _crash_at_commit(fn, *args):
     """Run an index write killed at its commit point: every data partition
-    is written, the ``stats`` rewrite raises."""
+    is written, the commit (``_write_stats``) raises."""
     from pdfsearch_spark import index_build
 
     real_write_stats = index_build._write_stats
@@ -114,6 +114,10 @@ def test_refresh_appended_second_segment(spark, refreshed):
     st = _stats(spark)
     assert st["n_segments"] == 2
     assert st["n_docs"] == N_DOCS
+    # the commit records its operation and the phases before it
+    assert st["op"] == "refresh"
+    assert set(st["phase_sec"]) == {"extract_and_doc_text_write", "postings_encode_write"}
+    assert set(refreshed["phase_sec"]) == set(st["phase_sec"]) | {"commit"}
 
 
 def test_refreshed_index_rank_identical(spark, oracle, refreshed):
@@ -163,7 +167,7 @@ def test_refresh_after_compact(spark, oracle, refreshed):
     res = refresh_index(spark, extra, side)
     assert res["appended_docs"] == 20
     assert res["segment"] == 1
-    st = spark.read.parquet(side + "/stats").collect()[0]
+    st = _read_stats(spark, side)
     assert st["n_segments"] == 2 and st["n_docs"] == N_DOCS + 20
     # original docs still searchable, scores now under the shifted avgdl —
     # just assert the engine runs and returns rows for a known query
@@ -228,9 +232,9 @@ def test_reader_survives_compaction_epoch_gc(spark, oracle, refreshed):
 
 def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     """Crash-safety of the versioned-root commit: a compaction killed at ANY
-    point before the stats flip leaves readers on the old epoch's complete
-    dirs with identical results; the rerun completes, flips the epoch, and
-    GCs the old dirs."""
+    point before the commit-file flip leaves readers on the old epoch's
+    complete dirs with identical results; the rerun completes, flips the
+    epoch, and GCs the old dirs."""
     import os
     import shutil as _sh
 
@@ -246,11 +250,11 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     before = results()
 
     # kill the job at the commit point: all data dirs for the new epoch are
-    # written, stats is not — the worst-case crash instant
+    # written, the commit file is not — the worst-case crash instant
     _crash_at_commit(compact_index, spark, side)
 
     # readers resolve the old epoch: index is fully usable, results identical
-    st = spark.read.parquet(side + "/stats").collect()[0]
+    st = _read_stats(spark, side)
     assert int(st["epoch"]) == 0 and int(st["n_segments"]) == 2
     assert results() == before
     # the orphan next-epoch dirs may exist; they are invisible to readers
@@ -261,7 +265,7 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     # (test_reader_survives_compaction_epoch_gc covers their later sweep)
     res = compact_index(spark, side)
     assert res["compacted"] is True and res["epoch"] == 1
-    st2 = spark.read.parquet(side + "/stats").collect()[0]
+    st2 = _read_stats(spark, side)
     assert int(st2["epoch"]) == 1 and int(st2["n_segments"]) == 1
     assert os.path.exists(table_dir(side, "postings", 1))
     assert os.path.exists(os.path.join(side, "postings"))
@@ -272,7 +276,7 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
 
 def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
     """Snapshot isolation across a refresh crash: a refresh killed at its
-    commit point (stats write) has already written its segment's doc_text
+    commit point (the commit-file write) has already written its segment's doc_text
     and postings partitions. A reader opened afterwards must not see them —
     same docs and bit-identical scores (so idf is unchanged) as a reader of
     the pre-refresh snapshot, and ``observe.index_stats`` must not report
@@ -301,7 +305,7 @@ def test_crashed_refresh_is_invisible_to_readers(spark, corpus_pdf):
         assert os.path.isdir(os.path.join(table_dir(side, tbl), "segment=1")), tbl
     assert _results(spark, side) == before
     # ... and so does the layout report: committed segments only
-    n_segments = spark.read.parquet(side + "/stats").collect()[0]["n_segments"]
+    n_segments = _read_stats(spark, side)["n_segments"]
     layout = index_stats(spark, side).collect()
     assert sorted({r["segment"] for r in layout}) == list(range(n_segments))
     assert sum(r["n_postings"] for r in layout) == postings_before
@@ -327,7 +331,7 @@ def test_compact_after_crashed_refresh_drops_orphan_segment(spark, corpus_pdf):
         spark, pages.filter(F.col("warc_ts") <= F.lit(q1)), side, n_shards=N_SHARDS
     )
     refresh_index(spark, pages.filter(F.col("warc_ts") <= F.lit(q2)), side)
-    n_committed = spark.read.parquet(side + "/stats").collect()[0]["n_docs"]
+    n_committed = _read_stats(spark, side)["n_docs"]
     assert 0 < n_committed < N_DOCS
     before = _results(spark, side, ndigits=9)
 
@@ -336,7 +340,7 @@ def test_compact_after_crashed_refresh_drops_orphan_segment(spark, corpus_pdf):
 
     res = compact_index(spark, side)
     assert res["compacted"] is True and res["segments_before"] == 2
-    st = spark.read.parquet(side + "/stats").collect()[0]
+    st = _read_stats(spark, side)
     assert st["n_docs"] == n_committed and st["n_segments"] == 1
     compacted = spark.read.parquet(table_dir(side, "doc_text", res["epoch"]))
     assert compacted.count() == n_committed
@@ -364,7 +368,7 @@ def test_refresh_rerun_with_other_batch_drops_orphan_partitions(spark, corpus_pd
         spark, pages.filter(F.col("url").isin(rerun)), side, use_watermark=False
     )
     assert res["appended_docs"] == 2
-    st = spark.read.parquet(side + "/stats").collect()[0]
+    st = _read_stats(spark, side)
     assert st["n_docs"] == 152 and st["n_segments"] == 2
     committed = (
         spark.read.parquet(table_dir(side, "doc_text"))
@@ -389,28 +393,50 @@ def test_refresh_rerun_with_other_batch_drops_orphan_partitions(spark, corpus_pd
 def test_format_mismatch_is_refused_before_any_write(spark, refreshed):
     """An index in another on-disk format is refused by every entry point —
     compaction included, which must not restamp it as the current format:
-    ``stats`` is unchanged and no next-epoch table appears."""
-    from pdfsearch_spark.index_build import table_dir
+    the commit is unchanged and no next-epoch table appears. Both older
+    kinds of index are planted: a format-6 commit file, and an index of
+    format <= 6, whose commit point was a parquet ``stats`` table."""
+    import json
+
+    from pdfsearch_spark.index_build import STATS_FILE, table_dir
 
     side = REFRESH_INDEX_DIR + "_fmt"
     shutil.rmtree(side, ignore_errors=True)
     shutil.copytree(REFRESH_INDEX_DIR, side)
-    stats_dir = os.path.join(side, "stats")
-    cur = spark.read.parquet(stats_dir)
-    schema, row = cur.schema, cur.collect()[0]
-    old = tuple(5 if f.name == "format" else row[f.name] for f in schema.fields)
-    spark.createDataFrame([old], schema).write.mode("overwrite").parquet(stats_dir)
-    planted = spark.read.parquet(stats_dir).collect()
+    commit = os.path.join(side, STATS_FILE)
+    with open(commit) as f:
+        rec = json.load(f)
+    with open(commit, "w") as f:
+        json.dump(dict(rec, format=6), f)
+    with open(commit, "rb") as f:
+        planted = f.read()
 
-    with pytest.raises(ValueError, match="format"):
-        compact_index(spark, side)
-    with pytest.raises(ValueError, match="format"):
-        refresh_index(spark, corpus.web_pages_df(spark, N_DOCS, partitions=8), side)
-    with pytest.raises(ValueError, match="format"):
-        SearchEngine(spark, side)
+    def refused():
+        with pytest.raises(ValueError, match="format"):
+            compact_index(spark, side)
+        with pytest.raises(ValueError, match="format"):
+            refresh_index(spark, corpus.web_pages_df(spark, N_DOCS, partitions=8), side)
+        with pytest.raises(ValueError, match="format"):
+            SearchEngine(spark, side)
+        for tbl in ("postings", "doc_text"):
+            assert not os.path.exists(table_dir(side, tbl, 1)), tbl
+
+    refused()
+    with open(commit, "rb") as f:
+        assert f.read() == planted
+
+    os.remove(commit)
+    stats_dir = os.path.join(side, "stats")
+    spark.createDataFrame(
+        [(rec["n_docs"], rec["avgdl"], rec["total_tokens"], rec["n_shards"],
+          rec["n_segments"], 6, None, rec["epoch"])],
+        "n_docs long, avgdl double, total_tokens long, n_shards int, "
+        "n_segments int, format int, watermark timestamp, epoch int",
+    ).write.parquet(stats_dir)
+    planted = spark.read.parquet(stats_dir).collect()
+    refused()
     assert spark.read.parquet(stats_dir).collect() == planted
-    for tbl in ("postings", "doc_text"):
-        assert not os.path.exists(table_dir(side, tbl, 1)), tbl
+    assert not os.path.exists(commit)
     shutil.rmtree(side, ignore_errors=True)
 
 
@@ -421,6 +447,8 @@ def test_compaction_preserves_results(spark, oracle, refreshed, index_dir):
     assert res["compacted"] is True
     st = _stats(spark)
     assert st["n_segments"] == 1
+    assert st["op"] == "compact"
+    assert set(res["phase_sec"]) == set(st["phase_sec"]) | {"commit", "gc"}
     assert st["n_docs"] == N_DOCS
     # the rewrite must demonstrably shrink the index: one segment and fewer
     # data files than the segmented layout it replaced
@@ -455,6 +483,6 @@ def test_compaction_preserves_results(spark, oracle, refreshed, index_dir):
         assert len(compacted) == len(fresh) > 0, tbl
         for a, b in zip(compacted, fresh):
             assert a == b, (tbl, [a[c] for c in key])
-    fresh_st = spark.read.parquet(index_dir + "/stats").collect()[0]
+    fresh_st = _read_stats(spark, index_dir)
     for c in ("n_docs", "avgdl", "total_tokens", "n_shards", "n_segments"):
         assert st[c] == fresh_st[c], c

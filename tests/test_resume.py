@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdfsearch_spark import corpus
-from pdfsearch_spark.index_build import POSTING_SCHEMA, build_index, resume_build
+from pdfsearch_spark.index_build import POSTING_SCHEMA, _read_stats, build_index, resume_build
 
 N = 120
 SHARDS = 4
@@ -48,6 +48,7 @@ def test_resume_equals_single_shot(spark, tmp_path):
 
     res = resume_build(spark, pages, part_dir, n_shards=SHARDS)
     assert res.get("resumed") != 0  # did real work
+    assert _read_stats(spark, part_dir)["op"] == "resume"
 
     _assert_same_postings(
         _postings_fingerprint(spark, full_dir), _postings_fingerprint(spark, part_dir)
@@ -86,11 +87,12 @@ def test_resumed_index_searches_identically(spark, tmp_path, oracle):
 
 
 def test_fresh_build_sweeps_legacy_tables(spark, tmp_path):
-    """An in-place rebuild over a pre-format-6 index removes the tables that
-    format no longer writes (documents, term_stats) and their compaction
-    epochs, instead of leaving them on disk beside the new index."""
+    """An in-place rebuild over a pre-format-7 index removes the tables that
+    format 7 no longer writes (documents, term_stats, the parquet stats
+    commit table) and their compaction epochs, instead of leaving them on
+    disk beside the new index."""
     d = str(tmp_path / "legacy")
-    legacy = ("documents", "documents.v1", "term_stats", "term_stats.v2")
+    legacy = ("documents", "documents.v1", "term_stats", "term_stats.v2", "stats")
     for sub in legacy:
         os.makedirs(os.path.join(d, sub, "shard=0"))
         with open(os.path.join(d, sub, "shard=0", "part-0.parquet"), "wb") as f:
@@ -141,7 +143,7 @@ def _doc_text_lineage(spark, d, segments=None) -> dict:
     segments, default all committed ones)."""
     from pdfsearch_spark.index_build import table_dir
 
-    st = spark.read.parquet(os.path.join(d, "stats")).collect()[0]
+    st = _read_stats(spark, d)
     docs = spark.read.parquet(table_dir(d, "doc_text", st["epoch"])).filter(
         F.col("segment") < st["n_segments"]
     )

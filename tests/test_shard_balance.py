@@ -9,6 +9,8 @@ and bytes; assert the spread is tight.
 
 from __future__ import annotations
 
+from pdfsearch_spark.index_build import _read_stats
+
 
 def test_postings_spread_is_tight(spark, index_dir):
     rows = (
@@ -34,16 +36,31 @@ def test_head_term_splits_across_all_shards(spark, index_dir):
         .select("shard", "df")
         .collect()
     )
-    n_shards = spark.read.parquet(index_dir + "/stats").collect()[0]["n_shards"]
+    n_shards = _read_stats(spark, index_dir)["n_shards"]
     assert len(post) == n_shards  # one slice of the head term in EVERY shard
     dfs = [r["df"] for r in post]
     assert max(dfs) <= 3.0 * (sum(dfs) / len(dfs)), dfs
 
 
 def test_reader_refuses_wrong_format(spark, tmp_path):
+    """A reader refuses a commit file of another format, and an index of
+    format <= 6, whose commit point was a parquet ``stats`` table."""
+    import json
+    import os
+
     import pytest
 
+    from pdfsearch_spark.index_build import STATS_FILE
     from pdfsearch_spark.search import SearchEngine
+
+    commit = tmp_path / STATS_FILE
+    commit.write_text(json.dumps(
+        {"n_docs": 100, "avgdl": 50.0, "total_tokens": 5000, "n_shards": 8,
+         "n_segments": 1, "format": 6, "watermark": None, "epoch": 0}
+    ))
+    with pytest.raises(ValueError, match="format"):
+        SearchEngine(spark, str(tmp_path))
+    os.remove(commit)
 
     spark.createDataFrame(
         [(100, 50.0, 5000, 8, 1, 1, None)],

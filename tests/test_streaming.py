@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from conftest import N_DOCS, N_SHARDS
 from pdfsearch_spark import corpus
-from pdfsearch_spark.index_build import build_index
+from pdfsearch_spark.index_build import _read_stats, build_index
 from pdfsearch_spark.search import SearchEngine
 from pdfsearch_spark.streaming import stream_refresh
 
@@ -58,7 +58,7 @@ def streamed(spark, corpus_pdf):
 
 
 def test_stream_appended_all_docs(spark, streamed):
-    st = spark.read.parquet(BASE + "/index/stats").collect()[0]
+    st = _read_stats(spark, BASE + "/index")
     assert st["n_docs"] == N_DOCS
     appended = sum(b["appended_docs"] for b in streamed)
     assert appended == N_DOCS - spark.read.parquet(
@@ -80,7 +80,7 @@ def test_stream_rank_identical(spark, oracle, streamed):
 
 def test_stream_restart_is_noop(spark, streamed):
     """Re-starting the drained stream delivers no new batches → no segments."""
-    before = spark.read.parquet(BASE + "/index/stats").collect()[0]["n_segments"]
+    before = _read_stats(spark, BASE + "/index")["n_segments"]
     q = stream_refresh(
         spark,
         BASE + "/incoming/*",
@@ -89,7 +89,7 @@ def test_stream_restart_is_noop(spark, streamed):
         available_now=True,
     )
     q.awaitTermination(120)
-    after = spark.read.parquet(BASE + "/index/stats").collect()[0]["n_segments"]
+    after = _read_stats(spark, BASE + "/index")["n_segments"]
     assert after == before
 
 
