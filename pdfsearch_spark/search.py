@@ -32,15 +32,35 @@ from:
   groups emit every matched row plus one df-sentinel row. The driver sums
   the sentinels of the persisted output, then each partition scores its
   rows and keeps k per query — untruncated matches never reach the driver.
+
+Driver work per call is a fixed number of JVM calls, whatever k or the hit
+count: a Column literal costs ≥ 3 py4j round trips, so every predicate
+built from a per-query list (dictionary terms, scan terms and prefixes,
+the doc lookup's shards and ids) is one SQL string (``_sql_in``); the doc
+lookup's projections are built once per engine (``_lookup``); and every
+schema is a declared ``StructType``, never a DDL string for the JVM to
+parse nor a ``DataFrame.columns`` call. ``SearchEngine.last_trace`` holds
+the wall seconds of each step of the last call (parse, shard_pass, merge,
+then for ``search`` doc_lookup and snippets, and assemble).
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .analyzer import tokenize, unicode61_tokens
 from .index_build import (
@@ -54,16 +74,37 @@ from .index_build import (
 from .query.parser import Node, Phrase, parse_query
 from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
 
-RESULT_SCHEMA = (
-    "doc_id long, part int, title string, text string, base_name string, score double"
+# Declared, not DDL strings: a DDL string is parsed by the JVM at every use
+RESULT_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("part", IntegerType()),
+        StructField("title", StringType()),
+        StructField("text", StringType()),
+        StructField("base_name", StringType()),
+        StructField("score", DoubleType()),
+    ]
 )
-BATCH_SCHEMA = "query_id int, doc_id long, score double, rank int"
+SCORED_SCHEMA = StructType(
+    [
+        StructField("query_id", IntegerType()),
+        StructField("doc_id", LongType()),
+        StructField("score", DoubleType()),
+    ]
+)
+BATCH_SCHEMA = StructType(
+    list(SCORED_SCHEMA.fields) + [StructField("rank", IntegerType())]
+)
 # one shard-function row is a scored hit (score), a matched hit awaiting
 # idf (dl, vis) or a df sentinel (dfs)
-SHARD_SCHEMA = (
-    "query_id int, doc_id long, score double, dl long, vis array<long>, dfs array<long>"
+SHARD_SCHEMA = StructType(
+    list(SCORED_SCHEMA.fields)
+    + [
+        StructField("dl", LongType()),
+        StructField("vis", ArrayType(LongType())),
+        StructField("dfs", ArrayType(LongType())),
+    ]
 )
-SCORED_SCHEMA = "query_id int, doc_id long, score double"
 # the idf of the one-phrase path's shard-side ranking: any positive idf
 # orders a one-phrase query's docs alike
 _UNIT_IDF = np.ones(1)
@@ -84,6 +125,39 @@ class _Query:
     @property
     def sentinel(self) -> bool:
         return self.idfs is None and self.tree.op != "PHRASE"
+
+
+def _sql_literal(v) -> str:
+    """One value as Spark SQL literal text: an int as a bigint (``<n>L``),
+    a string single-quoted with ``\\`` and ``'`` escaped."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{int(v)}L"
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (v, …)`` as SQL text for ``DataFrame.filter(str)``: one JVM
+    call however long the list, where ``F.col(col).isin(values)`` makes ≥ 3
+    py4j round trips per value. ``IN ()`` does not parse, so an empty list
+    is refused; callers never build one."""
+    if not values:
+        raise ValueError(f"empty IN list for column {col!r}")
+    return f"`{col}` IN ({', '.join(map(_sql_literal, values))})"
+
+
+class _Steps(dict):
+    """{step: wall seconds} of one call, in step order: each ``step(name)``
+    records the time since the previous one. ``perf_counter`` only (no job
+    group, no JVM call), so it stays on."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._t = time.perf_counter()
+
+    def step(self, name: str) -> None:
+        now = time.perf_counter()
+        self[name] = now - self._t
+        self._t = now
 
 
 def _topk_order(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
@@ -171,6 +245,14 @@ class SearchEngine:
             .parquet(table_dir(index_dir, "doc_text", self.epoch))
             .filter(committed)
         )
+        # the doc lookup's two projections, built once: a query only adds
+        # its (shard, doc_id) filter (``_lookup``)
+        self._doc_fields = {
+            False: self._doc_text.select("doc_id", "base_name"),
+            True: self._doc_text.select("doc_id", "base_name", "text"),
+        }
+        # {step: wall seconds} of the last search or search_batch call
+        self.last_trace: dict[str, float] = {}
         # Driver-side df cache: an engine is bound to one snapshot, so
         # term→df never changes and repeated vocabulary skips the dictionary
         # job. Prefixes are never expanded driver-side: expansion happens
@@ -184,7 +266,7 @@ class SearchEngine:
             # back; global df = their sum (one job, no shuffle — the groupBy
             # happens driver-side over a few hundred ints)
             found: dict[str, int] = {}
-            for r in self._dict.filter(F.col("term").isin(missing)).collect():
+            for r in self._dict.filter(_sql_in("term", missing)).collect():
                 found[r["term"]] = found.get(r["term"], 0) + int(r["df"])
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
@@ -208,7 +290,8 @@ class SearchEngine:
 
     @staticmethod
     def _scan_predicate(phrases: list[Phrase]):
-        """(exact terms, prefixes) → pushdown-able postings-scan filter.
+        """(exact terms, prefixes) → pushdown-able postings-scan filter, as
+        SQL text: ``term IN (…) OR startswith(term, '…') OR …``.
 
         Prefix phrases push ``startswith(pref)`` into the scan itself, so
         no term list ever lands on the driver. Both predicates reach the
@@ -225,12 +308,9 @@ class SearchEngine:
                 prefixes.add(p.terms[-1])
             else:
                 exact.update(p.terms)
-        if not exact and not prefixes:
-            return None
-        cond = F.col("term").isin(sorted(exact)) if exact else F.lit(False)
-        for pref in sorted(prefixes):
-            cond = cond | F.col("term").startswith(pref)
-        return cond
+        conds = [_sql_in("term", sorted(exact))] if exact else []
+        conds += [f"startswith(`term`, {_sql_literal(p)})" for p in sorted(prefixes)]
+        return " OR ".join(conds) or None
 
     def _shard_pass(
         self,
@@ -312,10 +392,12 @@ class SearchEngine:
         self,
         parsed: list[tuple[int, Node, list[Phrase]]],
         k: int,
+        trace: _Steps,
         book_ids: list[int] | None = None,
     ) -> dict[int, tuple[np.ndarray, np.ndarray]]:
         """{query_id: (doc_ids, scores)} — each query's top-k ordered by
-        (score asc, doc_id asc); queries without a hit are absent."""
+        (score asc, doc_id asc); queries without a hit are absent. Records
+        the ``shard_pass`` (planning, jobs, collect) and ``merge`` steps."""
         shard_out, plan = self._shard_pass(parsed, k, book_ids)
         if shard_out is None:
             return {}
@@ -325,18 +407,24 @@ class SearchEngine:
                 rows = self._score_matches(shard_out, k).collect()
             finally:
                 shard_out.unpersist()
-            return _best_per_query(
-                [pd.DataFrame.from_records(rows, columns=["query_id", "doc_id", "score"])],
+            trace.step("shard_pass")
+            best = _best_per_query(
+                [pd.DataFrame.from_records(rows, columns=SCORED_SCHEMA.names)],
                 {}, self.avgdl, k,
             )
+            trace.step("merge")
+            return best
         # every group already cut its top-k: ONE collect, then the df rows
         # are summed and the ≤ groups×k one-phrase rows scored here
-        pdf = pd.DataFrame.from_records(shard_out.collect(), columns=shard_out.columns)
+        pdf = pd.DataFrame.from_records(shard_out.collect(), columns=SHARD_SCHEMA.names)
+        trace.step("shard_pass")
         df_rows = pdf["dfs"].notna()
         idfs = self._sentinel_idfs(
             pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False)
         )
-        return _best_per_query([pdf[~df_rows]], idfs, self.avgdl, k)
+        best = _best_per_query([pdf[~df_rows]], idfs, self.avgdl, k)
+        trace.step("merge")
+        return best
 
     def _score_matches(self, shard_out: DataFrame, k: int) -> DataFrame:
         """Sentinel path over the persisted shard output: sum the df
@@ -345,7 +433,7 @@ class SearchEngine:
         top-k per query. A batch's one-phrase rows are scored the same way;
         its pre-scored a-priori rows pass through the same truncation."""
         idfs = self._sentinel_idfs(
-            shard_out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect()
+            shard_out.filter("dfs IS NOT NULL").select("query_id", "dfs").collect()
         )
         avgdl = self.avgdl
 
@@ -355,7 +443,7 @@ class SearchEngine:
                     {"query_id": np.int32(qid), "doc_id": ids, "score": scores}
                 )
 
-        return shard_out.filter(F.col("dfs").isNull()).mapInPandas(
+        return shard_out.filter("dfs IS NULL").mapInPandas(
             fn, schema=SCORED_SCHEMA
         )
 
@@ -372,27 +460,27 @@ class SearchEngine:
         the reference). Empty query → empty result (routes/routes.go:108-110).
         """
         spark = self.spark
+        self.last_trace = trace = _Steps()
         if not query or not query.strip():
             return _empty_frame(spark, RESULT_SCHEMA)
         tree, phrases = self._plan(query)
-        hits = self._execute([(0, tree, phrases)], k, book_ids) if tree is not None else {}
+        trace.step("parse")
+        hits = (
+            self._execute([(0, tree, phrases)], k, trace, book_ids)
+            if tree is not None
+            else {}
+        )
         if 0 not in hits:
             return _empty_frame(spark, RESULT_SCHEMA)
 
-        # Result assembly over ≤k rows in ONE point-lookup job. Literal id +
-        # shard filters push down to parquet (partition pruning on shard,
-        # row-group stats pruning on doc_id) — never a join whose OTHER side
-        # is a full table scan, the plan that dies at 10^12 docs. doc_text
-        # carries base_name so this stays one lookup; without snippets the
-        # text chunks are pruned away.
+        # Result assembly over ≤k rows: ONE point-lookup job, then snippets
+        # and a local frame. Every step makes the same number of JVM calls
+        # whatever k or the hit count: the lookup's id and shard lists are
+        # one SQL string on a projection built at open, and the result
+        # frame has a declared schema.
         ids, scores = (a.tolist() for a in hits[0])
-        shards = sorted({shard_of(i, self.n_shards) for i in ids})
-        pruned = F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
-        cols = ["doc_id", "base_name"] + (["text"] if with_snippets else [])
-        found = {
-            int(r["doc_id"]): r
-            for r in self._doc_text.filter(pruned).select(*cols).collect()
-        }
+        found = {int(r["doc_id"]): r for r in self._lookup(ids, with_snippets).collect()}
+        trace.step("doc_lookup")
         if with_snippets:
             # snippets are a ≤k-row presentation concern — driver-side, not
             # a cluster stage (reference computes them per emitted row too)
@@ -401,6 +489,7 @@ class SearchEngine:
             )
         else:
             titles = bodies = [""] * len(ids)
+        trace.step("snippets")
         out_pdf = pd.DataFrame(
             {
                 "doc_id": pd.Series(ids, dtype="int64"),
@@ -411,7 +500,21 @@ class SearchEngine:
                 "score": pd.Series(scores, dtype="float64"),
             }
         )
-        return spark.createDataFrame(out_pdf, schema=RESULT_SCHEMA)
+        out = spark.createDataFrame(out_pdf, schema=RESULT_SCHEMA)
+        trace.step("assemble")
+        return out
+
+    def _lookup(self, ids: list[int], with_snippets: bool) -> DataFrame:
+        """The doc lookup of ``ids`` (non-empty): (doc_id, base_name) and,
+        with snippets, text. Literal shard and doc_id lists push down to
+        parquet (partition pruning on shard, row-group stats pruning on
+        doc_id) — never a join whose OTHER side is a full table scan, the
+        plan that dies at 10^12 docs. doc_text carries base_name so this
+        stays one lookup; without snippets no text column is read."""
+        shards = sorted({shard_of(i, self.n_shards) for i in ids})
+        return self._doc_fields[bool(with_snippets)].filter(
+            f"{_sql_in('shard', shards)} AND {_sql_in('doc_id', ids)}"
+        )
 
     def search_batch(self, queries: list[str], k: int = 10) -> DataFrame:
         """Evaluate MANY queries in ONE shard-scan job.
@@ -425,6 +528,7 @@ class SearchEngine:
         query workload actually runs at cluster scale. Empty queries yield
         no rows; grammar errors raise (reference 400 behavior).
         """
+        self.last_trace = trace = _Steps()
         parsed = []
         for qid, q in enumerate(queries):
             if not q or not q.strip():
@@ -432,16 +536,19 @@ class SearchEngine:
             tree, phrases = self._plan(q)
             if tree is not None:  # a query pruned to nothing ('""') has no rows
                 parsed.append((qid, tree, phrases))
+        trace.step("parse")
         rows = [
             (qid, d, s, rank)
-            for qid, (ids, scores) in sorted(self._execute(parsed, k).items())
+            for qid, (ids, scores) in sorted(self._execute(parsed, k, trace).items())
             for rank, (d, s) in enumerate(zip(ids.tolist(), scores.tolist()), start=1)
         ]
         if not rows:
             return _empty_frame(self.spark, BATCH_SCHEMA)
         # a local pandas frame (arrow): collecting it runs no Spark job
-        pdf = pd.DataFrame(rows, columns=["query_id", "doc_id", "score", "rank"])
-        return self.spark.createDataFrame(pdf, schema=BATCH_SCHEMA)
+        pdf = pd.DataFrame(rows, columns=BATCH_SCHEMA.names)
+        out = self.spark.createDataFrame(pdf, schema=BATCH_SCHEMA)
+        trace.step("assemble")
+        return out
 
     # ---- snippets ------------------------------------------------------
 
@@ -466,7 +573,7 @@ class SearchEngine:
         return titles, bodies
 
 
-def _empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     """An empty result that collects without a Spark job: the optimizer
     folds ``limit(0)`` into an empty local relation. An empty list or pandas
     frame alone becomes a parallelized scan, one job of empty Python tasks."""

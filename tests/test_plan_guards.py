@@ -18,6 +18,8 @@ prints.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,6 +68,37 @@ def test_point_lookup_prunes_shard_partition(engine):
     assert any("shard" in l for l in part), part
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert any("doc_id" in l for l in pushed), pushed
+
+
+def test_engine_scan_predicate_pushes_terms_and_prefix(engine):
+    """The engine's own postings predicate (SQL text) pushes both halves:
+    the term IN list and the prefix as StringStartsWith."""
+    _, phrases = engine._plan('"renal failure" OR hyper*')
+    df = engine._postings.filter(engine._scan_predicate(phrases))
+    pushed = [l for l in _executed_plan(df).splitlines() if "PushedFilters" in l]
+    assert any("term" in l and "StringStartsWith" in l for l in pushed), pushed
+
+
+def _scan_fields(plan: str, name: str) -> list[str]:
+    """The values of one FileScan field (``PushedFilters``, ``ReadSchema``,
+    …) across a plan, each cut at its first closing bracket."""
+    return re.findall(rf"{name}: (\[[^\]\n]*|struct<[^>\n]*)", plan)
+
+
+def test_engine_lookup_prunes_shard_and_pushes_doc_id(engine):
+    """The engine's doc lookup prunes shard partitions, pushes doc_id, and
+    reads no text column without snippets — at the ends of the id range
+    too."""
+    hits = engine.search("hypertension", k=30, with_snippets=False).collect()
+    for ids in ([r["doc_id"] for r in hits], [-(2**63), 2**63 - 1, -1, 0]):
+        for with_snippets in (False, True):
+            plan = _executed_plan(engine._lookup(ids, with_snippets))
+            part = _scan_fields(plan, "PartitionFilters")
+            assert part and all("shard" in f for f in part), plan
+            pushed = _scan_fields(plan, "PushedFilters")
+            assert pushed and all("doc_id" in f for f in pushed), plan
+            read = _scan_fields(plan, "ReadSchema")
+            assert read and all(("text" in f) == with_snippets for f in read), plan
 
 
 def test_fts_query_plan_has_no_exchange_before_scoring(engine):

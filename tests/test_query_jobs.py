@@ -32,6 +32,10 @@ ONE_PHRASE = [PHRASE, "data*", "^guation", "text:hypertension"]
 NEAR = "NEAR(renal failure, 3)"
 ZERO_HIT = "qqzxjvvk"  # a plain term in no fixture document
 A_PRIORI = ["hypertension", "renal failure", "renal OR failure", "failure NOT renal"]
+# fixture queries with ≥ 60 hits: a one-phrase prefix and a sentinel-path OR
+MANY_HITS = ["b*", "s* OR r*"]
+# py4j round trips a k=200 search may make beyond the same search at k=5
+ROUND_TRIP_SLACK = 4
 
 # jobs of one refresh_index (+ new docs) and one compact_index over the
 # small fixture below; each was 3 more while the commit point was a parquet
@@ -61,6 +65,28 @@ def _jobs(spark, fn) -> int:
 def _warm_jobs(spark, fn) -> int:
     fn()
     return _jobs(spark, fn)
+
+
+def _round_trips(spark, fn) -> int:
+    """py4j commands the driver sends during ``fn()``, except the object
+    releases (commands starting ``"m\\n"``), which the Python GC sends at
+    random times."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        if not command.startswith("m\n"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return n
 
 
 def test_plain_term_search_jobs(spark, engine):
@@ -105,6 +131,27 @@ def test_a_priori_batch_jobs(spark, engine):
     batch = _warm_jobs(spark, lambda: engine.search_batch(A_PRIORI, k=10).collect())
     # a search is the batch executor plus one doc-lookup job
     assert batch <= search - 1, (batch, search)
+
+
+def test_round_trips_do_not_grow_with_k(spark, engine):
+    """A search plans its scans and assembles its result in a fixed number
+    of JVM calls: its predicates are SQL strings, not a Column per literal
+    (≥ 3 round trips each), so k=200 over ≥ 60 hits costs what k=5 does."""
+    for q in MANY_HITS:
+        for with_snippets in (True, False):
+            runs = {}
+            for k in (5, 200):
+                engine.search(q, k=k, with_snippets=with_snippets).collect()
+                rows = []
+                n = _round_trips(
+                    spark,
+                    lambda: rows.extend(
+                        engine.search(q, k=k, with_snippets=with_snippets).collect()
+                    ),
+                )
+                runs[k] = (n, len(rows))
+            assert runs[200][1] >= 60, (q, runs)
+            assert runs[200][0] <= runs[5][0] + ROUND_TRIP_SLACK, (q, with_snippets, runs)
 
 
 def test_zero_hit_search_jobs(spark, engine):

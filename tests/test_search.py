@@ -11,6 +11,7 @@ book-filter semantics (database/database.go:186-193)."""
 from __future__ import annotations
 
 import sqlite3
+import time
 
 import pytest
 
@@ -227,3 +228,66 @@ def test_high_fanout_prefix_rank_identical(engine, oracle, q):
     _assert_rank_identical(
         _oracle_pairs(oracle, q, 200), _engine_pairs(engine, q, 200), q
     )
+
+
+@pytest.mark.parametrize(
+    "values",
+    [["a'b"], ["c\\d"], ["naïve"], ["漢字"], ["a'b", "c\\d", "naïve", "漢字"],
+     [-(2**63)], [2**63 - 1], [-1], [0], [-(2**63), 2**63 - 1, -1, 0]],
+    ids=repr,
+)
+def test_sql_in_selects_exactly_the_listed_rows(spark, values):
+    """``search._sql_in`` renders each literal so that the filter keeps
+    exactly the rows it lists: quotes and backslashes escaped, non-ASCII
+    text verbatim, both ends of the bigint range."""
+    from pdfsearch_spark.search import _sql_in
+
+    if isinstance(values[0], str):
+        col, ddl = "term", "term string"
+        rows = ["a'b", "c\\d", "naïve", "漢字", "ab", "a", "c\\\\d", "naive", "漢"]
+    else:
+        col, ddl = "doc_id", "doc_id long"
+        rows = [-(2**63), 2**63 - 1, -1, 0, 1, -(2**63) + 1, 2**63 - 2]
+    df = spark.createDataFrame([(v,) for v in rows], ddl)
+    got = sorted(r[0] for r in df.filter(_sql_in(col, values)).collect())
+    assert got == sorted(values)
+
+
+def test_engine_never_renders_an_empty_in_list(engine, monkeypatch):
+    """``IN ()`` does not parse: ``_sql_in`` refuses an empty list, and no
+    engine path builds one — prefix-only, zero-hit, cached-df, NEAR, batch
+    and book-filtered queries included."""
+    from pdfsearch_spark import search as search_mod
+
+    with pytest.raises(ValueError):
+        search_mod._sql_in("term", [])
+    lists = []
+    real = search_mod._sql_in
+
+    def recording(col, values):
+        lists.append((col, list(values)))
+        return real(col, values)
+
+    monkeypatch.setattr(search_mod, "_sql_in", recording)
+    for q in ["data*", "qqzxjvvk", "renal failure", "renal failure", "NEAR(renal failure, 3)"]:
+        engine.search(q, k=10).collect()
+    books = engine.search("hypertension", k=3, with_snippets=False).collect()
+    engine.search("renal", k=10, book_ids=[r["doc_id"] for r in books]).collect()
+    engine.search_batch(["s* OR r*", "", "renal OR failure", "qqzxjvvk"], k=10).collect()
+    assert lists and all(values for _, values in lists), lists
+
+
+def test_last_trace_times_every_step(engine):
+    """``SearchEngine.last_trace`` holds the wall seconds of each step of
+    the last ``search``; the steps are consecutive, so they sum to no more
+    than the call's wall time."""
+    steps = ["parse", "shard_pass", "merge", "doc_lookup", "snippets", "assemble"]
+    for q in ["hypertension", "NEAR(renal failure, 3)"]:
+        for with_snippets in (True, False):
+            t0 = time.perf_counter()
+            engine.search(q, k=20, with_snippets=with_snippets)
+            wall = time.perf_counter() - t0
+            trace = engine.last_trace
+            assert list(trace) == steps, (q, trace)
+            assert all(s >= 0 for s in trace.values()), trace
+            assert sum(trace.values()) <= wall, (trace, wall)
