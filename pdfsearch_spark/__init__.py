@@ -14,8 +14,8 @@ Spark-first over a Common-Crawl-style web-page corpus
   doc-id shard, and delta-gap + varint-compressed posting lists with
   per-block max-score metadata are encoded map-side from the shard-clustered
   text, so Zipfian head terms split evenly across shards by construction
-- BM25 (k1=1.2, b=0.75, FTS5 idf clamp) top-k with block-max pruning,
-  rank-identical to the SQLite FTS5 oracle
+- BM25 (k1=1.2, b=0.75, FTS5 idf clamp) top-k over every hit, scored
+  exhaustively as FTS5 does, rank-identical to the SQLite FTS5 oracle
 - training-data pipeline operators (dedup, similarity search, text analysis,
   multimodal plumbing) for 100 TB-scale corpus preparation
 """

@@ -11,8 +11,10 @@ out — no per-row Python in the hot path):
   a separate stream so term-only queries never decode them (SURVEY.md §7.8-4)
 - blocks of 128 docs: per-block first doc id, byte offsets into each stream,
   and ``max_impact`` = max over docs of the BM25 tf/dl factor
-  tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) — multiplied by idf at query time this
-  is the block-max WAND upper bound (SURVEY.md §2.5 Q2)
+  tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) — multiplied by idf this is the
+  block-max WAND upper bound (SURVEY.md §2.5 Q2). The engine scores every
+  hit and reads none of the block metadata but the block lengths and the
+  position-block offsets; the rest feeds perfbench's WAND probe only.
 """
 
 from __future__ import annotations
@@ -317,16 +319,7 @@ def decode_block_positions(
 ) -> list[np.ndarray]:
     """Decode ONE block's slice of the position stream: ``ndocs`` entries of
     [count, delta positions...] between byte ``offset`` and ``end``."""
-    flat = varint_decode(memoryview(pos_blob)[int(offset) : int(end)]).astype(np.int64)
-    out: list[np.ndarray] = []
-    i = 0
-    for _ in range(ndocs):
-        n = int(flat[i])
-        i += 1
-        p = flat[i : i + n]
-        out.append(np.cumsum(p) if n else p)
-        i += n
-    return out
+    return decode_positions(memoryview(pos_blob)[int(offset) : int(end)], ndocs)
 
 
 def decode_positions(pos_blob: bytes, df: int) -> list[np.ndarray]:

@@ -13,25 +13,31 @@ fields → snippets over ≤ k rows.
 
 ``search`` (one query, then result assembly) and ``search_batch`` (many
 queries, then rank numbers) run one executor, ``_execute``: one planner,
-one shard function, one BM25 formula (``scorer.bm25_scores``) and one
-top-k rule (``_topk``). Per query the planner only picks where idf comes
-from:
+one kernel per (segment, shard) group (``scorer.score_shard``, which
+matches; every hit is scored exhaustively, never pruned, as FTS5 does), one
+BM25 formula (``scorer.bm25_scores``) and one top-k rule (``_topk_order``).
+A group emits only matched rows (doc_id, dl, visible tf) and df rows; the
+driver sums the df rows into the plan's idf map and scores every hit it
+collects once (``_best_per_query``). Per query the planner only picks
+where idf comes from:
 
 - ONE PHRASE (the tree is a single phrase: a plain or column term, a
   multi-term phrase, a prefix, an anchor): FTS5 scores it as −idf·f(tf, dl)
   with idf > 0 (``idf_of`` clamps it to ≥ 1e-6), so a group's top-k by f
   is its top-k under the true idf. Each group emits those ≤ k matched rows
-  (doc_id, dl, visible tf) plus one df row; the driver sums the df rows and
-  scores the matched rows at the true idf. No df lookup, one collect.
+  plus one df row. No df lookup, one collect.
 - A PRIORI (several phrases, every one a plain single term, no NEAR): dfs
   come from the postings table's own (term, df) columns before the scan, so
-  each group scores and emits only its top-k — block-max WAND for pure
-  conjunctions, exhaustive scoring for OR/NOT trees.
+  each group cuts its top-k at the true idfs and emits no df row.
 - SENTINEL (any other tree: NEAR, phrase AND phrase, …): per-phrase df is
   only known after matching and a group's ranking depends on the idfs, so
   groups emit every matched row plus one df-sentinel row. The driver sums
-  the sentinels of the persisted output, then each partition scores its
-  rows and keeps k per query — untruncated matches never reach the driver.
+  the sentinels of the persisted output, then each partition keeps its
+  top-k matched rows per query — untruncated matches never reach the
+  driver.
+
+The scan reads only the postings columns the groups decode
+(``scorer.POSTING_COLUMNS``), through a projection built at open.
 
 Driver work per call is a fixed number of JVM calls, whatever k or the hit
 count: a Column literal costs ≥ 3 py4j round trips, so every predicate
@@ -72,7 +78,7 @@ from .index_build import (
     whole_file_session,
 )
 from .query.parser import Node, Phrase, parse_query
-from .query.scorer import bm25_scores, idf_of, score_shard, wand_shard_topk
+from .query.scorer import POSTING_COLUMNS, bm25_scores, idf_of, score_shard
 
 # Declared, not DDL strings: a DDL string is parsed by the JVM at every use
 RESULT_SCHEMA = StructType(
@@ -85,21 +91,20 @@ RESULT_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
-SCORED_SCHEMA = StructType(
+BATCH_SCHEMA = StructType(
     [
         StructField("query_id", IntegerType()),
         StructField("doc_id", LongType()),
         StructField("score", DoubleType()),
+        StructField("rank", IntegerType()),
     ]
 )
-BATCH_SCHEMA = StructType(
-    list(SCORED_SCHEMA.fields) + [StructField("rank", IntegerType())]
-)
-# one shard-function row is a scored hit (score), a matched hit awaiting
-# idf (dl, vis) or a df sentinel (dfs)
+# one shard-function row is a matched hit awaiting idf (doc_id, dl, vis) or
+# a df row (dfs)
 SHARD_SCHEMA = StructType(
-    list(SCORED_SCHEMA.fields)
-    + [
+    [
+        StructField("query_id", IntegerType()),
+        StructField("doc_id", LongType()),
         StructField("dl", LongType()),
         StructField("vis", ArrayType(LongType())),
         StructField("dfs", ArrayType(LongType())),
@@ -162,7 +167,7 @@ class _Steps(dict):
 
 def _topk_order(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     """The one top-k rule: indexes of the best k by (score asc = best BM25
-    first, doc_id asc). Shard-local, partition-local and driver-side
+    first, doc_id asc). Group-local, partition-local and driver-side
     truncation all use it, so every path keeps the same members of a score
     plateau crossing the k boundary (tests/test_boundary_ties.py)."""
     return np.lexsort((doc_ids, scores))[:k]
@@ -173,13 +178,12 @@ def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
     return doc_ids[order], scores[order]
 
 
-def _frame(qid: int, doc_ids, scores=np.nan, dls=0, vis=None, dfs=None) -> pd.DataFrame:
+def _frame(qid: int, doc_ids, dls=0, vis=None, dfs=None) -> pd.DataFrame:
     n = len(doc_ids)
     return pd.DataFrame(
         {
             "query_id": np.full(n, qid, dtype=np.int32),
             "doc_id": np.asarray(doc_ids, dtype=np.int64),
-            "score": scores,
             "dl": dls,
             "vis": np.full(n, None) if vis is None else vis,
             "dfs": np.full(n, None) if dfs is None else dfs,
@@ -189,18 +193,15 @@ def _frame(qid: int, doc_ids, scores=np.nan, dls=0, vis=None, dfs=None) -> pd.Da
 
 def _best_per_query(batches, idfs: dict[int, np.ndarray], avgdl: float, k: int):
     """{query_id: (doc_ids, scores)}: each query's top-k over ``batches``
-    of shard rows (df rows excluded). A query in ``idfs`` has its matched
-    rows (dl, vis) scored here; any other query's rows carry their score."""
+    of matched rows (doc_id, dl, vis; no df rows), every row scored here
+    at its query's idfs."""
     best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     for pdf in batches:
         for qid, g in pdf.groupby("query_id", sort=False):
             qid = int(qid)
             ids = g["doc_id"].to_numpy(dtype=np.int64)
-            if qid in idfs:
-                vis = np.stack(g["vis"].to_numpy())
-                scores = bm25_scores(vis, g["dl"].to_numpy(), idfs[qid], avgdl)
-            else:
-                scores = g["score"].to_numpy(dtype=np.float64)
+            vis = np.stack(g["vis"].to_numpy())
+            scores = bm25_scores(vis, g["dl"].to_numpy(), idfs[qid], avgdl)
             if qid in best:
                 ids = np.concatenate([best[qid][0], ids])
                 scores = np.concatenate([best[qid][1], scores])
@@ -240,6 +241,9 @@ class SearchEngine:
         # (term, df) columns, read column-pruned (blob chunks are never
         # read) — no global vocabulary table to build, ship or refresh.
         self._dict = self._postings.select("term", "df")
+        # the shard pass's projection, built once: only the columns its
+        # groups and PostingList decode are read (``_shard_pass``)
+        self._scan = self._postings.select("segment", "shard", *POSTING_COLUMNS)
         self._doc_text = (
             spark.read.schema(DOC_STORE_SCHEMA)
             .parquet(table_dir(index_dir, "doc_text", self.epoch))
@@ -256,7 +260,7 @@ class SearchEngine:
         # Driver-side df cache: an engine is bound to one snapshot, so
         # term→df never changes and repeated vocabulary skips the dictionary
         # job. Prefixes are never expanded driver-side: expansion happens
-        # per shard against the pruned scan (scorer.score_shard).
+        # per group against the pruned scan (scorer.phrase_hits).
         self._df_cache: dict[str, int] = {}
 
     def _dfs_of(self, terms: list[str]) -> dict[str, int]:
@@ -322,15 +326,15 @@ class SearchEngine:
         one shard-function DataFrame (SHARD_SCHEMA) with its plan, or
         (None, plan) when no query can touch postings.
 
-        Per plan entry, each (segment, shard) group emits: for an a-priori
-        pure conjunction, its block-max WAND top-k; for any other a-priori
-        query, its exhaustively scored top-k; for a one-phrase query, its
-        top-k matched (doc_id, dl, vis) rows by the idf-free score plus one
-        df row; otherwise all its matched rows plus one df-sentinel row.
-        Segments partition the doc space, so the groups' top-k rows merge
-        in ``_topk`` and their df rows sum like the shards' do.
-        ``book_ids`` (the Q6 doc subset) filters hits before any top-k cut,
-        never dfs."""
+        Every plan entry runs one kernel per (segment, shard) group: match
+        with ``score_shard``, then emit matched (doc_id, dl, vis) rows. An
+        a-priori query's group keeps its top-k by the true score (its idfs
+        are known); a one-phrase query's keeps its top-k by the idf-free
+        score and adds one df row; any other query's emits all its matched
+        rows plus one df-sentinel row. Segments partition the doc space, so
+        the groups' top-k rows merge in ``_topk_order`` and their df rows
+        sum like the shards' do. ``book_ids`` (the Q6 doc subset) filters
+        hits before any top-k cut, never dfs."""
         cond = self._scan_predicate([p for _, _, ps in parsed for p in ps])
         # ONE dictionary lookup for every a-priori query's terms
         a_priori = [(qid, ps) for qid, tree, ps in parsed if _is_a_priori(tree, ps)]
@@ -346,13 +350,6 @@ class SearchEngine:
         books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
 
         def shard_rows(pdf: pd.DataFrame, q: _Query):
-            if q.idfs is not None and tree_is_pure_and(q.tree):
-                res = wand_shard_topk(
-                    pdf, [p.terms[0] for p in q.phrases], q.idfs, avgdl, k, books
-                )
-                if res is not None:
-                    yield _frame(q.qid, res[0], scores=res[1])
-                return
             res = score_shard(pdf, q.tree, q.phrases, {}, n_docs, avgdl, None, k)
             if res is None:
                 return
@@ -360,17 +357,17 @@ class SearchEngine:
             if books is not None:
                 sel = np.isin(matched, books)
                 matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-            if q.idfs is not None:
-                if len(matched):
-                    ids, scores = _topk(matched, bm25_scores(mvis, mdl, q.idfs, avgdl), k)
-                    yield _frame(q.qid, ids, scores=scores)
-                return
             if not q.sentinel:
-                keep = _topk_order(matched, bm25_scores(mvis, mdl, _UNIT_IDF, avgdl), k)
+                cut_idfs = _UNIT_IDF if q.idfs is None else q.idfs
+                keep = _topk_order(matched, bm25_scores(mvis, mdl, cut_idfs, avgdl), k)
                 matched, mdl, mvis = matched[keep], mdl[keep], mvis[keep]
-            yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
-            dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
-            yield _frame(q.qid, [0], dfs=[dfs_row])
+            # no frame without a match: a task whose frames were all empty
+            # would send a float ``vis`` column, which Arrow refuses
+            if len(matched):
+                yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
+            if q.idfs is None:
+                dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
+                yield _frame(q.qid, [0], dfs=[dfs_row])
 
         def fn(batches):
             # whole-file scans: each (segment, shard) group lies whole in
@@ -383,8 +380,7 @@ class SearchEngine:
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
-        scored = self._postings.filter(cond).mapInPandas(fn, schema=SHARD_SCHEMA)
-        return scored, plan
+        return self._scan.filter(cond).mapInPandas(fn, schema=SHARD_SCHEMA), plan
 
     # ---- execution ----------------------------------------------------
 
@@ -401,51 +397,57 @@ class SearchEngine:
         shard_out, plan = self._shard_pass(parsed, k, book_ids)
         if shard_out is None:
             return {}
+        idfs = {q.qid: q.idfs for q in plan if q.idfs is not None}
         if any(q.sentinel for q in plan):
             shard_out = shard_out.persist()
             try:
-                rows = self._score_matches(shard_out, k).collect()
+                rows = self._partition_topk(shard_out, idfs, k).collect()
             finally:
                 shard_out.unpersist()
-            trace.step("shard_pass")
-            best = _best_per_query(
-                [pd.DataFrame.from_records(rows, columns=SCORED_SCHEMA.names)],
-                {}, self.avgdl, k,
-            )
-            trace.step("merge")
-            return best
-        # every group already cut its top-k: ONE collect, then the df rows
-        # are summed and the ≤ groups×k one-phrase rows scored here
-        pdf = pd.DataFrame.from_records(shard_out.collect(), columns=SHARD_SCHEMA.names)
+        else:
+            rows = shard_out.collect()
         trace.step("shard_pass")
+        # ONE tail: sum the collected df rows into the plan's idf map, then
+        # score every hit once
+        pdf = pd.DataFrame.from_records(rows, columns=SHARD_SCHEMA.names)
         df_rows = pdf["dfs"].notna()
-        idfs = self._sentinel_idfs(
-            pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False)
+        idfs.update(
+            self._sentinel_idfs(pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False))
         )
         best = _best_per_query([pdf[~df_rows]], idfs, self.avgdl, k)
         trace.step("merge")
         return best
 
-    def _score_matches(self, shard_out: DataFrame, k: int) -> DataFrame:
-        """Sentinel path over the persisted shard output: sum the df
-        sentinels driver-side (≤ segments×shards×queries rows, no
-        shuffle), then score each partition's matched rows and keep its
-        top-k per query. A batch's one-phrase rows are scored the same way;
-        its pre-scored a-priori rows pass through the same truncation."""
-        idfs = self._sentinel_idfs(
-            shard_out.filter("dfs IS NOT NULL").select("query_id", "dfs").collect()
-        )
+    def _partition_topk(
+        self, shard_out: DataFrame, idfs: dict[int, np.ndarray], k: int
+    ) -> DataFrame:
+        """Sentinel path over the persisted shard output (SHARD_SCHEMA in
+        and out): sum its df rows driver-side (≤ segments×shards×queries
+        rows, no shuffle) into ``idfs``, the plan's a-priori idf map, then
+        each partition keeps its top-k matched rows per query at those
+        idfs and passes its df rows on to the driver's tail."""
+        idfs = {
+            **idfs,
+            **self._sentinel_idfs(
+                shard_out.filter("dfs IS NOT NULL").select("query_id", "dfs").collect()
+            ),
+        }
         avgdl = self.avgdl
 
         def fn(batches):
-            for qid, (ids, scores) in _best_per_query(batches, idfs, avgdl, k).items():
-                yield pd.DataFrame(
-                    {"query_id": np.int32(qid), "doc_id": ids, "score": scores}
-                )
+            kept: list[pd.DataFrame] = []  # the top-k rows so far, per query
+            for pdf in batches:
+                df_rows = pdf["dfs"].notna()
+                if df_rows.any():
+                    yield pdf[df_rows]
+                hits = pd.concat([*kept, pdf[~df_rows]])
+                kept = [
+                    hits[(hits["query_id"] == qid) & hits["doc_id"].isin(ids)]
+                    for qid, (ids, _) in _best_per_query([hits], idfs, avgdl, k).items()
+                ]
+            yield from kept
 
-        return shard_out.filter("dfs IS NULL").mapInPandas(
-            fn, schema=SCORED_SCHEMA
-        )
+        return shard_out.mapInPandas(fn, schema=SHARD_SCHEMA)
 
     def search(
         self,
@@ -597,7 +599,9 @@ def tree_has_no_near(node: Node) -> bool:
 
 
 def tree_is_pure_and(node: Node) -> bool:
-    """True iff the tree is a conjunction of plain phrases (no OR/NOT/NEAR)."""
+    """True iff the tree is a conjunction of plain phrases (no OR/NOT/NEAR).
+    The engine no longer calls it; it stays only for perfbench's scorer
+    probe, which picks the pure conjunctions it times with it."""
     if node.op == "PHRASE":
         return True
     if node.op == "AND":

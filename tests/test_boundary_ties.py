@@ -46,6 +46,7 @@ K = 15  # 10 strictly-better + 5 of the 40-way tie -> boundary inside the tie
 
 QUERIES = [
     "alpha",
+    "alpha beta",
     '"beta gamma"',
     "alpha OR epsilon",
     "gam*",
@@ -160,13 +161,13 @@ def test_boundary_tie_batch_matches_search(pair):
         assert sorted(by_q.get(qid, [])) == _engine_rows(eng, q), q
 
 
-@pytest.mark.parametrize("q", ["gam*", "^alpha"])
+@pytest.mark.parametrize("q", ["gam*", "^alpha", "alpha beta"])
 def test_one_phrase_plateau_across_groups(spread_pair, q):
     """A one-phrase query's groups each keep their own top-k by the
-    idf-free score, and the driver merges them. With the tied cohort spread
-    over all 4 shards and the boundary inside it, the engine must keep the
-    cohort's smallest doc ids — the global (score, doc_id) rule, not one
-    group's."""
+    idf-free score, an a-priori query's (the pure conjunction) by its true
+    score, and the driver merges them. With the tied cohort spread over all
+    4 shards and the boundary inside it, the engine must keep the cohort's
+    smallest doc ids — the global (score, doc_id) rule, not one group's."""
     eng, oracle = spread_pair
     full = sorted((r.score, r.doc_id) for r in oracle.search(q, k=len(TEXTS)))
     boundary = full[K - 1][0]

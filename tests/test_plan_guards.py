@@ -18,6 +18,7 @@ prints.
 
 from __future__ import annotations
 
+import json
 import re
 
 import pytest
@@ -85,6 +86,18 @@ def _scan_fields(plan: str, name: str) -> list[str]:
     return re.findall(rf"{name}: (\[[^\]\n]*|struct<[^>\n]*)", plan)
 
 
+def _read_schemas(df) -> list[list[str]]:
+    """The field names of every file scan's ReadSchema in ``df``'s executed
+    plan, in full: the plan text cuts a long ReadSchema short."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    return [
+        [f["name"] for f in json.loads(leaf.requiredSchema().json())["fields"]]
+        for leaf in scans
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
 def test_engine_lookup_prunes_shard_and_pushes_doc_id(engine):
     """The engine's doc lookup prunes shard partitions, pushes doc_id, and
     reads no text column without snippets — at the ends of the id range
@@ -105,10 +118,11 @@ def test_fts_query_plan_has_no_exchange_before_scoring(engine):
     """Every executor path is scan → match+score in one mapInPandas, with
     no exchange: the postings scan reads whole files, one (segment, shard)
     file per task, so the shard function groups by (segment, shard) inside
-    its task. 'renal failure' scores a priori (WAND) inside the shard
-    function; the phrase is a one-phrase query whose groups cut an idf-free
-    top-k; NEAR takes the df-sentinel path, whose partition-local scoring
-    over the persisted match output must add no exchange above the cache."""
+    its task. 'renal failure' is an a-priori query whose groups cut their
+    top-k at the known idfs; the phrase is a one-phrase query whose groups
+    cut an idf-free top-k; NEAR takes the df-sentinel path, whose
+    partition-local top-k over the persisted match output must add no
+    exchange above the cache."""
     for q in ("renal failure", '"renal failure"', "NEAR(renal failure, 3)"):
         tree, phrases = engine._plan(q)
         shard_out, plan = engine._shard_pass([(0, tree, phrases)], 200)
@@ -120,12 +134,36 @@ def test_fts_query_plan_has_no_exchange_before_scoring(engine):
             continue
         shard_out = shard_out.persist()
         try:
-            text = _executed_plan(engine._score_matches(shard_out, 200))
+            text = _executed_plan(engine._partition_topk(shard_out, {}, 200))
         finally:
             shard_out.unpersist()
         above_cache = text.partition("InMemoryRelation")[0]
         assert "InMemoryTableScan" in above_cache, (q, text)
         assert "Exchange" not in above_cache, (q, text)
+
+
+# the postings columns only block-max WAND read; the engine scores every hit
+# and decodes none of them
+UNREAD_POSTING_COLUMNS = (
+    "cf", "first_docs", "last_docs", "doc_offs", "tf_offs", "dl_offs",
+    "max_impacts", "enc_avgdl",
+)
+
+
+@pytest.mark.parametrize(
+    "q", ["renal failure", "hypertension", '"renal failure"', "NEAR(renal failure, 3)"]
+)
+def test_shard_pass_reads_only_decoded_columns(engine, q):
+    """The shard pass's scan reads only the columns its groups decode: for
+    a pure AND, a term, a phrase and a NEAR, no WAND-only column is in its
+    ReadSchema."""
+    tree, phrases = engine._plan(q)
+    shard_out, _ = engine._shard_pass([(0, tree, phrases)], 200)
+    read = _read_schemas(shard_out)
+    assert read, q
+    for fields in read:
+        assert {"term", "doc_blob", "pos_blob"} <= set(fields), (q, fields)
+        assert not set(fields) & set(UNREAD_POSTING_COLUMNS), (q, fields)
 
 
 # ---- entry queries ------------------------------------------------------

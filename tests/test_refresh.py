@@ -2,7 +2,7 @@
 
 An index built over the older half of the corpus (by warc_ts) then refreshed
 with the full corpus must be rank-identical to the FTS5 oracle over the FULL
-corpus — across every query shape (WAND conjunctions, phrase / NEAR
+corpus — across every query shape (conjunctions, phrase / NEAR
 positions and prefix expansion all run per segment, and their per-segment
 results and dfs add up to the full corpus's). Compaction back to one segment
 must change nothing.
@@ -34,9 +34,9 @@ REFRESH_INDEX_DIR = "/tmp/pdfsearch_spark_refresh_index"
 # (segment, shard) is scored on its own, and only per-group top-k rows and
 # df sentinels are merged
 SHAPES = [
-    "hypertension",          # single term (WAND)
-    "renal failure",         # conjunction (WAND per segment, top-k merged)
-    "renal OR failure",      # disjunction (exhaustive fast path)
+    "hypertension",          # single term (one phrase, idf-free group top-k)
+    "renal failure",         # conjunction (a-priori top-k per segment, merged)
+    "renal OR failure",      # disjunction (a-priori)
     "failure NOT renal",     # NOT
     '"renal failure"',       # positional phrase (per-segment positions)
     "data*",                 # prefix (expanded per segment's vocabulary)

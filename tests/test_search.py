@@ -141,7 +141,7 @@ def test_colset_group_errors_raise(engine, oracle, q):
 @pytest.mark.parametrize(
     "q",
     [
-        "renal failure",           # a-priori conjunction (WAND)
+        "renal failure",           # a-priori conjunction
         "hypertension",            # plain term
         "text:hypertension",       # column term
         '"renal failure"',         # phrase

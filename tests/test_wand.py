@@ -1,9 +1,13 @@
 """Block-max WAND: A/B vs exhaustive scoring + pruning effectiveness.
 
-SURVEY.md §7.8-5: pruning must NEVER change the returned top-k. The A/B here
-is bit-exact (same bm25_scores float path); the integration-level guarantee
-is tests/test_search.py, whose fixture queries now route pure conjunctions
-through WAND and still diff rank-identical against the FTS5 oracle.
+The engine no longer calls ``wand_shard_topk``: every query is scored
+exhaustively (``score_shard`` + ``bm25_scores``), which was faster in every
+measured shape. WAND stays only for perfbench's scorer probe, and these
+tests keep it honest until that probe goes: pruning must NEVER change the
+returned top-k (SURVEY.md §7.8-5), bit-exact through the same bm25_scores
+float path. The brute-force and spanning-segments checks also run
+``score_shard``, the engine's own path (``test_exhaustive_matches_bruteforce``
+and ``test_postings_spanning_segments_are_refused``).
 """
 
 from __future__ import annotations
@@ -103,17 +107,36 @@ def _brute_topk(raw, phrase_terms, idfs, k, books=None):
     return docs[order], scores[order]
 
 
-@pytest.mark.parametrize(
-    "phrase_terms",
-    [
-        ["common"],
-        ["rare"],
-        ["common", "mid"],
-        ["common", "mid", "rare"],
-        ["common", "common"],  # repeated phrase: both columns contribute
-        ["mid", "rare"],
-    ],
-)
+CONJUNCTIONS = [
+    ["common"],
+    ["rare"],
+    ["common", "mid"],
+    ["common", "mid", "rare"],
+    ["common", "common"],  # repeated phrase: both columns contribute
+    ["mid", "rare"],
+]
+
+
+@pytest.mark.parametrize("phrase_terms", CONJUNCTIONS)
+@pytest.mark.parametrize("k", [10, 200])
+def test_exhaustive_matches_bruteforce(shard, phrase_terms, k):
+    """The engine's path: score_shard matches, bm25_scores scores every
+    hit, and the one (score, doc_id) rule cuts the top-k."""
+    pdf, raw = shard
+    idfs = np.array([idf_of(len(raw[t][0]), N_DOCS) for t in phrase_terms])
+    tree, phrases = parse_query(" ".join(phrase_terms), tokenize, unicode61_tokens)
+    matched, dls, vis, _ = score_shard(pdf, tree, phrases, {}, N_DOCS, AVGDL, None, k)
+    got_docs, got_scores = _topk(matched, bm25_scores(vis, dls, idfs, AVGDL), k)
+    exp = _brute_topk(raw, phrase_terms, idfs, k)
+    if exp is None:
+        assert len(got_docs) == 0
+        return
+    exp_docs, exp_scores = exp
+    assert (got_docs == exp_docs).all()
+    assert (got_scores == exp_scores).all()
+
+
+@pytest.mark.parametrize("phrase_terms", CONJUNCTIONS)
 @pytest.mark.parametrize("k", [10, 200])
 def test_wand_matches_bruteforce(shard, phrase_terms, k):
     pdf, raw = shard
