@@ -1,4 +1,4 @@
-"""FNV-1 hashes for document identity and term bucketing.
+"""FNV-1 64 hash for document identity.
 
 The reference assigns ``file_id = fnv.New32()(path)`` — FNV-**1**, not 1a
 (``/root/reference/pdf/pdf.go:329-335``; the comment there says New32a but the
@@ -10,16 +10,9 @@ well-defined.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 _FNV1_64_OFFSET = 0xCBF29CE484222325
 _FNV1_64_PRIME = 0x100000001B3
 _MASK64 = 0xFFFFFFFFFFFFFFFF
-
-_FNV1_32_OFFSET = 0x811C9DC5
-_FNV1_32_PRIME = 0x01000193
-_MASK32 = 0xFFFFFFFF
 
 
 def fnv1_64(data: bytes | str) -> int:
@@ -37,27 +30,3 @@ def fnv1_64_signed(data: bytes | str) -> int:
     """FNV-1 64-bit reinterpreted as a signed int64 (Spark LongType)."""
     h = fnv1_64(data)
     return h - 0x10000000000000000 if h >= 0x8000000000000000 else h
-
-
-def fnv1_32(data: bytes | str) -> int:
-    """FNV-1 32-bit — the reference's exact id function (pdf/pdf.go:329-335)."""
-    if isinstance(data, str):
-        data = data.encode("utf-8")
-    h = _FNV1_32_OFFSET
-    for b in data:
-        h = (h * _FNV1_32_PRIME) & _MASK32
-        h ^= b
-    return h
-
-
-def fnv1_64_series(urls: pd.Series) -> pd.Series:
-    """Vectorized-ish FNV-1 64 over a pandas Series of strings → signed int64.
-
-    Called from inside Arrow-batched pandas UDFs (never row-at-a-time Python
-    UDFs); the per-string loop is bounded by url length, and batches amortize
-    the JVM↔Python crossing per input_hint.
-    """
-    out = np.empty(len(urls), dtype=np.int64)
-    for i, u in enumerate(urls):
-        out[i] = fnv1_64_signed(u)
-    return pd.Series(out)

@@ -164,9 +164,10 @@ POSTING_SCHEMA = StructType(
         StructField("max_impacts", ArrayType(FloatType())),
         # the avgdl block max_impacts were computed at: the mean doc length
         # of the row's own (segment, shard), so a shard's postings depend on
-        # its docs alone. The query side rescales each bound by
-        # max(1, corpus avgdl / enc_avgdl) (scorer.py); a bound computed at
-        # a larger avgdl is already an upper bound.
+        # its docs alone. No query reads it: only perfbench's block-max
+        # WAND probe (scorer.wand_shard_topk) rescales each bound by
+        # max(1, corpus avgdl / enc_avgdl); a bound computed at a larger
+        # avgdl is already an upper bound.
         StructField("enc_avgdl", DoubleType()),
     ]
 )
@@ -988,7 +989,7 @@ def refresh_index(
     land in its shard — a query evaluates each (segment, shard) on its own
     (segments partition the doc space) and merges only per-group top-k rows.
     Each of the segment's shards has its block bounds encoded at its own
-    avgdl (bounds are rescaled at query time via enc_avgdl), and
+    avgdl (recorded in enc_avgdl; no query reads the bounds), and
     global df/cf stays derivable from the postings table, so an append costs
     O(batch), not O(vocab).
 

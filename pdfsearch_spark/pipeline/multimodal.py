@@ -442,15 +442,6 @@ def decode_audio_samples(media: bytes, media_type: str) -> tuple[np.ndarray, int
         raise NotImplementedError(f"stdlib WAV decode failed: {exc}") from exc
 
 
-def decode_audio_fake(media: bytes) -> tuple[np.ndarray, int]:
-    """Deterministic fake: each byte is a sample centered at 128
-    ((b - 128) / 128 → [-1, 1)), nominal rate FAKE_AUDIO_RATE. Total on any
-    byte string (empty → zero samples); SQL-recomputable from the text
-    bytes, which is what makes q_audio_features DuckDB-oracle-checkable."""
-    arr = np.frombuffer(media, dtype=np.uint8).astype(np.float64)
-    return (arr - 128.0) / 128.0, FAKE_AUDIO_RATE
-
-
 def audio_features(media_df: DataFrame) -> DataFrame:
     """(doc_id, n_samples, sample_rate, rms, peak, zcr, decoded): per-row
     REAL decode for audio/* payloads (decode_audio_samples) with row-local
@@ -517,6 +508,8 @@ def audio_features(media_df: DataFrame) -> DataFrame:
                     rms, peak, zcr = _feats_float(s)
                     n, dec = len(s), True
                 except Exception:  # non-audio type / absent lib / bad bytes
+                    # the byte fake: each byte one sample centered at 128,
+                    # at the nominal FAKE_AUDIO_RATE (SQL-recomputable)
                     v = np.frombuffer(buf, dtype=np.uint8).astype(
                         np.int64
                     ) - 128

@@ -75,14 +75,6 @@ def bucket_expr(vec_col: str, planes: list[list[float]]) -> str:
     return f"({bits})"
 
 
-def bucket_of(vec: list[float], planes: list[list[float]]) -> int:
-    b = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(np.asarray(vec, dtype=np.float64), np.asarray(p))) > 0:
-            b |= 1 << i
-    return b
-
-
 def cosine_topk(
     emb: DataFrame, query_vecs: DataFrame, k: int = 10
 ) -> DataFrame:

@@ -8,10 +8,11 @@ SURVEY.md §2.5 Q2):
   idf_p = ln((N − df_p + 0.5)/(df_p + 0.5)), clamped to 1e-6 when ≤ 0
   k1 = 1.2, b = 0.75; N and avgdl include zero-token docs
 
-- df_p is the phrase's GLOBAL, modifier-aware doc frequency: the plain terms
-  of a several-term a-priori query use the postings-derived dictionary; any
-  other phrase (a lone term included) counts docs with ≥1 instance of the
-  phrase alone, independent of the boolean tree, summed over the groups.
+- df_p is the phrase's GLOBAL, modifier-aware doc frequency: the docs with
+  ≥1 instance of the phrase alone, independent of the boolean tree (NEAR
+  included). The plain terms of a several-phrase query read it from the
+  postings-derived dictionary; any other phrase's is counted per group
+  (``score_shard``'s local dfs) and summed over the groups.
 - tf_vis = instances visible under the matched tree: an OR branch that
   doesn't match contributes 0; NOT-excluded branches contribute nothing;
   anchored phrases count only position-0 instances.
@@ -21,12 +22,11 @@ doc live in the segment it arrived in and in its shard, so boolean
 evaluation completes there and one term never has two posting lists to
 merge. ``score_shard`` matches every doc and never prunes: like FTS5, the
 engine scores every hit (``bm25_scores``, vectorized over the group's
-matches). When the dfs are known a priori the group keeps its top-k at the
-true idfs; a one-phrase query's group keeps its top-k by the idf-free
-score (bm25_scores at idf 1) and sends it with one df row; otherwise its
-matched rows and one df sentinel row leave, and the matches are cut per
-partition once the sentinels are summed. The driver scores the rows it
-collects (search.SearchEngine._execute).
+matches). Every group keeps ≤ k hits per query: at the true idfs when they
+are known before the scan (from the dictionary or a k=0 df pass), or, for a
+one-phrase query, by the idf-free score (bm25_scores at idf 1), sent with
+one df row. The driver scores the rows it collects
+(search.SearchEngine._execute).
 
 ``wand_shard_topk`` (block-max WAND) is no longer on the engine's path: it
 lost to the exhaustive scan in every measured shape and stays only for

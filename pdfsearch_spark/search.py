@@ -18,23 +18,25 @@ matches; every hit is scored exhaustively, never pruned, as FTS5 does), one
 BM25 formula (``scorer.bm25_scores``) and one top-k rule (``_topk_order``).
 A group emits only matched rows (doc_id, dl, visible tf) and df rows; the
 driver sums the df rows into the plan's idf map and scores every hit it
-collects once (``_best_per_query``). Per query the planner only picks
-where idf comes from:
+collects once (``_best_per_query``). Every group keeps ≤ k hit rows per
+query, so one collect of ≤ segments×shards×k rows per query ends the shard
+pass. FTS5 takes a phrase's df from the docs that hold that phrase alone,
+whatever the tree decides (``xQueryPhrase``), so per query the planner only
+picks where those dfs come from:
 
 - ONE PHRASE (the tree is a single phrase: a plain or column term, a
   multi-term phrase, a prefix, an anchor): FTS5 scores it as −idf·f(tf, dl)
   with idf > 0 (``idf_of`` clamps it to ≥ 1e-6), so a group's top-k by f
   is its top-k under the true idf. Each group emits those ≤ k matched rows
-  plus one df row. No df lookup, one collect.
-- A PRIORI (several phrases, every one a plain single term, no NEAR): dfs
-  come from the postings table's own (term, df) columns before the scan, so
-  each group cuts its top-k at the true idfs and emits no df row.
-- SENTINEL (any other tree: NEAR, phrase AND phrase, …): per-phrase df is
-  only known after matching and a group's ranking depends on the idfs, so
-  groups emit every matched row plus one df-sentinel row. The driver sums
-  the sentinels of the persisted output, then each partition keeps its
-  top-k matched rows per query — untruncated matches never reach the
-  driver.
+  plus one df row. No df lookup.
+- A PRIORI (several phrases, every one a plain single term, NEAR included):
+  dfs come from the postings table's own (term, df) columns before the
+  scan, so each group cuts its top-k at the true idfs and emits no df row.
+- DF PASS (several phrases, at least one a multi-term phrase, a prefix or
+  an anchor): a phrase's df is only known after matching, so the shard
+  function first runs at k=0 over these queries' own terms, which returns
+  only df rows; the scan then cuts each group's top-k at the summed idfs,
+  as for an a-priori query.
 
 The scan reads only the postings columns the groups decode
 (``scorer.POSTING_COLUMNS``), through a projection built at open.
@@ -110,26 +112,19 @@ SHARD_SCHEMA = StructType(
         StructField("dfs", ArrayType(LongType())),
     ]
 )
-# the idf of the one-phrase path's shard-side ranking: any positive idf
-# orders a one-phrase query's docs alike
-_UNIT_IDF = np.ones(1)
 
 
 @dataclass
 class _Query:
-    """One plan entry. ``idfs`` is set iff the query's dfs are known a
-    priori; a one-phrase query (``tree.op == "PHRASE"``) needs none before
-    its groups cut their top-k; any other query takes the df-sentinel
-    path."""
+    """One plan entry. ``idfs`` is None for a one-phrase query
+    (``tree.op == "PHRASE"``), whose groups need none before they cut their
+    top-k, and for a df-pass query until its df pass has run (for good
+    when none of its phrases is indexed: it matches nowhere)."""
 
     qid: int
     tree: Node
     phrases: list[Phrase]
     idfs: np.ndarray | None
-
-    @property
-    def sentinel(self) -> bool:
-        return self.idfs is None and self.tree.op != "PHRASE"
 
 
 def _sql_literal(v) -> str:
@@ -276,7 +271,7 @@ class SearchEngine:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
 
-    def _sentinel_idfs(self, rows) -> dict[int, np.ndarray]:
+    def _summed_idfs(self, rows) -> dict[int, np.ndarray]:
         """{query_id: idfs} from df rows (query_id, dfs): per query, the
         groups' per-phrase dfs summed into global dfs."""
         dfs: dict[int, np.ndarray] = {}
@@ -326,17 +321,11 @@ class SearchEngine:
         one shard-function DataFrame (SHARD_SCHEMA) with its plan, or
         (None, plan) when no query can touch postings.
 
-        Every plan entry runs one kernel per (segment, shard) group: match
-        with ``score_shard``, then emit matched (doc_id, dl, vis) rows. An
-        a-priori query's group keeps its top-k by the true score (its idfs
-        are known); a one-phrase query's keeps its top-k by the idf-free
-        score and adds one df row; any other query's emits all its matched
-        rows plus one df-sentinel row. Segments partition the doc space, so
-        the groups' top-k rows merge in ``_topk_order`` and their df rows
-        sum like the shards' do. ``book_ids`` (the Q6 doc subset) filters
-        hits before any top-k cut, never dfs."""
+        An a-priori query's idfs come from ONE dictionary lookup, a df-pass
+        query's from ONE k=0 run of the shard function over those queries'
+        own scan predicate (never book-filtered: dfs count every doc), both
+        before the scan; a one-phrase query's stay None."""
         cond = self._scan_predicate([p for _, _, ps in parsed for p in ps])
-        # ONE dictionary lookup for every a-priori query's terms
         a_priori = [(qid, ps) for qid, tree, ps in parsed if _is_a_priori(tree, ps)]
         dfs = self._dfs_of(sorted({p.terms[0] for _, ps in a_priori for p in ps}))
         idfs = {
@@ -346,6 +335,30 @@ class SearchEngine:
         plan = [_Query(qid, tree, ps, idfs.get(qid)) for qid, tree, ps in parsed]
         if cond is None:
             return None, plan
+        df_plan = [q for q in plan if q.idfs is None and q.tree.op != "PHRASE"]
+        df_cond = self._scan_predicate([p for q in df_plan for p in q.phrases])
+        if df_cond is not None:
+            rows = (
+                self._scan.filter(df_cond)
+                .mapInPandas(self._shard_fn(df_plan, 0, None), schema=SHARD_SCHEMA)
+                .collect()
+            )
+            found = self._summed_idfs((r["query_id"], r["dfs"]) for r in rows)
+            for q in df_plan:
+                # no df row: none of q's phrases occurs, so q matches nowhere
+                q.idfs = found.get(q.qid, np.ones(len(q.phrases)))
+        fn = self._shard_fn(plan, k, book_ids)
+        return self._scan.filter(cond).mapInPandas(fn, schema=SHARD_SCHEMA), plan
+
+    def _shard_fn(self, plan: list[_Query], k: int, book_ids: list[int] | None):
+        """The shard function over ``plan``: one kernel per (segment, shard)
+        group and query. Match with ``score_shard``, then keep the ≤ k best
+        matched (doc_id, dl, vis) rows by ``_topk_order`` at the query's
+        idfs; a query whose idfs are None ranks at unit idfs and adds one df
+        row (at k=0, the df pass, only df rows leave). Segments partition
+        the doc space, so the groups' top-k rows merge in ``_topk_order``
+        and their df rows sum like the shards' do. ``book_ids`` (the Q6 doc
+        subset) filters hits before the top-k cut, never dfs."""
         n_docs, avgdl = self.n_docs, self.avgdl
         books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
 
@@ -357,14 +370,13 @@ class SearchEngine:
             if books is not None:
                 sel = np.isin(matched, books)
                 matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-            if not q.sentinel:
-                cut_idfs = _UNIT_IDF if q.idfs is None else q.idfs
-                keep = _topk_order(matched, bm25_scores(mvis, mdl, cut_idfs, avgdl), k)
-                matched, mdl, mvis = matched[keep], mdl[keep], mvis[keep]
+            # any positive idf orders a one-phrase query's docs alike
+            cut_idfs = np.ones(len(q.phrases)) if q.idfs is None else q.idfs
+            keep = _topk_order(matched, bm25_scores(mvis, mdl, cut_idfs, avgdl), k)
             # no frame without a match: a task whose frames were all empty
             # would send a float ``vis`` column, which Arrow refuses
-            if len(matched):
-                yield _frame(q.qid, matched, dls=mdl, vis=list(mvis))
+            if len(keep):
+                yield _frame(q.qid, matched[keep], dls=mdl[keep], vis=list(mvis[keep]))
             if q.idfs is None:
                 dfs_row = [local_dfs.get(i, 0) for i in range(len(q.phrases))]
                 yield _frame(q.qid, [0], dfs=[dfs_row])
@@ -380,7 +392,7 @@ class SearchEngine:
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
-        return self._scan.filter(cond).mapInPandas(fn, schema=SHARD_SCHEMA), plan
+        return fn
 
     # ---- execution ----------------------------------------------------
 
@@ -397,57 +409,19 @@ class SearchEngine:
         shard_out, plan = self._shard_pass(parsed, k, book_ids)
         if shard_out is None:
             return {}
-        idfs = {q.qid: q.idfs for q in plan if q.idfs is not None}
-        if any(q.sentinel for q in plan):
-            shard_out = shard_out.persist()
-            try:
-                rows = self._partition_topk(shard_out, idfs, k).collect()
-            finally:
-                shard_out.unpersist()
-        else:
-            rows = shard_out.collect()
+        rows = shard_out.collect()
         trace.step("shard_pass")
         # ONE tail: sum the collected df rows into the plan's idf map, then
         # score every hit once
         pdf = pd.DataFrame.from_records(rows, columns=SHARD_SCHEMA.names)
         df_rows = pdf["dfs"].notna()
+        idfs = {q.qid: q.idfs for q in plan if q.idfs is not None}
         idfs.update(
-            self._sentinel_idfs(pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False))
+            self._summed_idfs(pdf.loc[df_rows, ["query_id", "dfs"]].itertuples(index=False))
         )
         best = _best_per_query([pdf[~df_rows]], idfs, self.avgdl, k)
         trace.step("merge")
         return best
-
-    def _partition_topk(
-        self, shard_out: DataFrame, idfs: dict[int, np.ndarray], k: int
-    ) -> DataFrame:
-        """Sentinel path over the persisted shard output (SHARD_SCHEMA in
-        and out): sum its df rows driver-side (≤ segments×shards×queries
-        rows, no shuffle) into ``idfs``, the plan's a-priori idf map, then
-        each partition keeps its top-k matched rows per query at those
-        idfs and passes its df rows on to the driver's tail."""
-        idfs = {
-            **idfs,
-            **self._sentinel_idfs(
-                shard_out.filter("dfs IS NOT NULL").select("query_id", "dfs").collect()
-            ),
-        }
-        avgdl = self.avgdl
-
-        def fn(batches):
-            kept: list[pd.DataFrame] = []  # the top-k rows so far, per query
-            for pdf in batches:
-                df_rows = pdf["dfs"].notna()
-                if df_rows.any():
-                    yield pdf[df_rows]
-                hits = pd.concat([*kept, pdf[~df_rows]])
-                kept = [
-                    hits[(hits["query_id"] == qid) & hits["doc_id"].isin(ids)]
-                    for qid, (ids, _) in _best_per_query([hits], idfs, avgdl, k).items()
-                ]
-            yield from kept
-
-        return shard_out.mapInPandas(fn, schema=SHARD_SCHEMA)
 
     def search(
         self,
@@ -524,8 +498,9 @@ class SearchEngine:
         Returns (query_id int, doc_id long, score double, rank int), rank
         1..k per query by (score asc = best BM25 first, doc_id asc) — the
         same per-query results as ``search`` (both run ``_execute``), but
-        all driver-side planning collapses to one dictionary lookup and all
-        matching/scoring to one pass over postings. Per-query latency on
+        all driver-side planning collapses to one dictionary lookup (and
+        one df pass when any query needs it) and all matching/scoring to
+        one pass over postings. Per-query latency on
         Spark is dominated by job-scheduling fixed costs; batching is how a
         query workload actually runs at cluster scale. Empty queries yield
         no rows; grammar errors raise (reference 400 behavior).
@@ -583,16 +558,19 @@ def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
 
 
 def _is_a_priori(tree: Node, phrases: list[Phrase]) -> bool:
-    """More than one phrase, every one a plain single term, and no NEAR: the
-    query's dfs are dictionary lookups, known before the scan. (A
-    one-phrase tree needs no df before its groups cut their top-k.)"""
-    return tree.op != "PHRASE" and tree_has_no_near(tree) and all(
+    """More than one phrase, every one a plain single term (under a NEAR
+    too): the query's dfs are dictionary lookups, known before the scan.
+    (A one-phrase tree needs no df before its groups cut their top-k.)"""
+    return tree.op != "PHRASE" and all(
         len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
         for p in phrases
     )
 
 
 def tree_has_no_near(node: Node) -> bool:
+    """True iff no NEAR node is in the tree. The engine no longer calls it;
+    it stays only for perfbench's query classifier
+    (``perfbench/workloads.py::_is_fast``)."""
     if node.op == "NEAR":
         return False
     return all(tree_has_no_near(c) for c in node.children)

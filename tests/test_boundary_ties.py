@@ -52,6 +52,7 @@ QUERIES = [
     "gam*",
     "^alpha",
     "NEAR(alpha delta, 4)",
+    '"beta gamma" alpha',
 ]
 
 
@@ -161,11 +162,14 @@ def test_boundary_tie_batch_matches_search(pair):
         assert sorted(by_q.get(qid, [])) == _engine_rows(eng, q), q
 
 
-@pytest.mark.parametrize("q", ["gam*", "^alpha", "alpha beta"])
+@pytest.mark.parametrize(
+    "q", ["gam*", "^alpha", "alpha beta", "NEAR(alpha delta, 4)", '"beta gamma" alpha']
+)
 def test_one_phrase_plateau_across_groups(spread_pair, q):
     """A one-phrase query's groups each keep their own top-k by the
-    idf-free score, an a-priori query's (the pure conjunction) by its true
-    score, and the driver merges them. With the tied cohort spread over all
+    idf-free score, an a-priori query's (the pure conjunction, the NEAR) and
+    a df-pass query's (the phrase AND term) by its true score, and the
+    driver merges them. With the tied cohort spread over all
     4 shards and the boundary inside it, the engine must keep the cohort's
     smallest doc ids — the global (score, doc_id) rule, not one group's."""
     eng, oracle = spread_pair

@@ -16,10 +16,12 @@ from __future__ import annotations
 import numpy as np
 
 from pdfsearch_spark.query.scorer import bm25_scores, idf_of
-from pdfsearch_spark.search import _UNIT_IDF, _best_per_query, _frame, _topk, _topk_order
+from pdfsearch_spark.search import _best_per_query, _frame, _topk, _topk_order
 from perfbench.check import rank_mismatch
 
 AVGDL = 30.0  # avgdl / 3 = 10: near-tie partners have integer dl
+# the idf at which a one-phrase query's group ranks its hits
+_UNIT_IDF = np.ones(1)
 
 
 def _group(rng, doc_base: int):

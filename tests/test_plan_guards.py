@@ -88,8 +88,13 @@ def _scan_fields(plan: str, name: str) -> list[str]:
 
 def _read_schemas(df) -> list[list[str]]:
     """The field names of every file scan's ReadSchema in ``df``'s executed
-    plan, in full: the plan text cuts a long ReadSchema short."""
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    plan, in full: the plan text cuts a long ReadSchema short. An adaptive
+    plan is read through its current physical plan, whose leaves are the
+    scans."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
     scans = [leaves.apply(i) for i in range(leaves.size())]
     return [
         [f["name"] for f in json.loads(leaf.requiredSchema().json())["fields"]]
@@ -110,7 +115,7 @@ def test_engine_lookup_prunes_shard_and_pushes_doc_id(engine):
             assert part and all("shard" in f for f in part), plan
             pushed = _scan_fields(plan, "PushedFilters")
             assert pushed and all("doc_id" in f for f in pushed), plan
-            read = _scan_fields(plan, "ReadSchema")
+            read = _read_schemas(engine._lookup(ids, with_snippets))
             assert read and all(("text" in f) == with_snippets for f in read), plan
 
 
@@ -118,28 +123,23 @@ def test_fts_query_plan_has_no_exchange_before_scoring(engine):
     """Every executor path is scan → match+score in one mapInPandas, with
     no exchange: the postings scan reads whole files, one (segment, shard)
     file per task, so the shard function groups by (segment, shard) inside
-    its task. 'renal failure' is an a-priori query whose groups cut their
-    top-k at the known idfs; the phrase is a one-phrase query whose groups
-    cut an idf-free top-k; NEAR takes the df-sentinel path, whose
-    partition-local top-k over the persisted match output must add no
-    exchange above the cache."""
-    for q in ("renal failure", '"renal failure"', "NEAR(renal failure, 3)"):
+    its task. 'renal failure' and the NEAR are a-priori queries whose
+    groups cut their top-k at the dictionary's idfs; the phrase is a
+    one-phrase query whose groups cut an idf-free top-k; the phrase AND
+    term gets its idfs from a df pass before its scan. Only the one-phrase
+    query reaches the scan without idfs."""
+    for q in (
+        "renal failure",
+        '"renal failure"',
+        "NEAR(renal failure, 3)",
+        '"renal failure" hypertension',
+    ):
         tree, phrases = engine._plan(q)
         shard_out, plan = engine._shard_pass([(0, tree, phrases)], 200)
         text = _executed_plan(shard_out)
         assert "MapInPandas" in text, (q, text)
         assert "Exchange" not in text, (q, text)
-        assert plan[0].sentinel == q.startswith("NEAR"), q
-        if not plan[0].sentinel:
-            continue
-        shard_out = shard_out.persist()
-        try:
-            text = _executed_plan(engine._partition_topk(shard_out, {}, 200))
-        finally:
-            shard_out.unpersist()
-        above_cache = text.partition("InMemoryRelation")[0]
-        assert "InMemoryTableScan" in above_cache, (q, text)
-        assert "Exchange" not in above_cache, (q, text)
+        assert (plan[0].idfs is None) == (tree.op == "PHRASE"), q
 
 
 # the postings columns only block-max WAND read; the engine scores every hit
@@ -212,11 +212,6 @@ def test_ann_joins_are_equi_joins(spark, entry_queries):
 
 def test_catalog_scan_prunes_columns(spark, entry_queries):
     """A 4-column projection must not read the text/html payload columns."""
-    plan = _executed_plan(entry_queries["q_catalog_scan"](spark, SF_DIR))
-    scan_lines = [
-        l for l in plan.splitlines() if "ReadSchema" in l
-    ]
-    assert scan_lines, plan
-    assert all("text" not in l and "html" not in l for l in scan_lines), (
-        scan_lines
-    )
+    read = _read_schemas(entry_queries["q_catalog_scan"](spark, SF_DIR))
+    assert read
+    assert all("text" not in f and "html" not in f for f in read), read

@@ -10,11 +10,16 @@ shard pass has no exchange, so it is one job:
   shard pass, whose one collect brings the groups' top-k and df rows, and
   the doc lookup — also cold, since it runs no df lookup;
 - a zero-hit search takes 1, the shard pass alone;
-- a NEAR search (the df-sentinel path) takes at most 3: the persisted
-  shard pass with its sentinel collect, the partition scoring, the doc
-  lookup;
+- a NEAR search of plain terms is a-priori: warm, it takes at most 2, the
+  shard pass and the doc lookup (its dfs are in the df cache);
+- a query of several phrases with a multi-term phrase, a prefix or an
+  anchor takes at most 3: the df pass (the shard function at k=0), the
+  shard pass, the doc lookup;
 - a batch of a-priori queries costs no more than the scoring half of one
   search, and an empty result costs no job of its own.
+
+No path persists or caches a DataFrame: every plan entry's groups cut
+their hits to ≤ k rows, so the shard pass is one collect.
 
 Opening a snapshot (``SearchEngine``, ``_read_stats``) runs no job: the
 commit file is read through the Hadoop FileSystem and both tables are read
@@ -30,9 +35,10 @@ TERM = "hypertension"
 PHRASE = '"renal failure"'
 ONE_PHRASE = [PHRASE, "data*", "^guation", "text:hypertension"]
 NEAR = "NEAR(renal failure, 3)"
+PHRASE_AND_TERM = '"renal failure" hypertension'
 ZERO_HIT = "qqzxjvvk"  # a plain term in no fixture document
 A_PRIORI = ["hypertension", "renal failure", "renal OR failure", "failure NOT renal"]
-# fixture queries with ≥ 60 hits: a one-phrase prefix and a sentinel-path OR
+# fixture queries with ≥ 60 hits: a one-phrase prefix and a df-pass OR
 MANY_HITS = ["b*", "s* OR r*"]
 # py4j round trips a k=200 search may make beyond the same search at k=5
 ROUND_TRIP_SLACK = 4
@@ -117,11 +123,38 @@ def test_one_phrase_search_jobs(spark, engine):
         assert n <= 2, (q, n)
 
 
-def test_sentinel_path_search_jobs(spark, engine):
+def test_near_search_jobs(spark, engine):
     n = _warm_jobs(
         spark, lambda: engine.search(NEAR, k=10, with_snippets=False).collect()
     )
+    assert n <= 2, n
+
+
+def test_df_pass_search_jobs(spark, engine):
+    n = _warm_jobs(
+        spark,
+        lambda: engine.search(PHRASE_AND_TERM, k=10, with_snippets=False).collect(),
+    )
+    # the df pass, the shard pass, the doc lookup
     assert n <= 3, n
+
+
+def test_executor_never_persists(engine, monkeypatch):
+    """No query path persists or caches its shard output. The patch goes on
+    the class of the engine's own DataFrames: PySpark's classic DataFrame
+    is a subclass that overrides both methods, so a patch on
+    ``pyspark.sql.DataFrame`` would not reach it."""
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("the executor persisted a DataFrame")
+
+    cls = type(engine._scan)
+    monkeypatch.setattr(cls, "persist", refuse)
+    monkeypatch.setattr(cls, "cache", refuse)
+    for q in (NEAR, PHRASE_AND_TERM, "data* OR renal"):
+        assert engine.search(q, k=10, with_snippets=False).collect(), q
+    rows = engine.search_batch([NEAR, TERM, PHRASE, PHRASE_AND_TERM, "data* OR renal"], k=10)
+    assert {r["query_id"] for r in rows.collect()} == {0, 1, 2, 3, 4}
 
 
 def test_a_priori_batch_jobs(spark, engine):

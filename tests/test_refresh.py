@@ -32,7 +32,7 @@ REFRESH_INDEX_DIR = "/tmp/pdfsearch_spark_refresh_index"
 
 # one query per grammar shape (all are in the reference query set); each
 # (segment, shard) is scored on its own, and only per-group top-k rows and
-# df sentinels are merged
+# df rows are merged
 SHAPES = [
     "hypertension",          # single term (one phrase, idf-free group top-k)
     "renal failure",         # conjunction (a-priori top-k per segment, merged)

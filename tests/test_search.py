@@ -147,7 +147,8 @@ def test_colset_group_errors_raise(engine, oracle, q):
         '"renal failure"',         # phrase
         "data*",                   # prefix
         "^guation",                # anchor
-        "NEAR(renal failure, 3)",  # df-sentinel path
+        "NEAR(renal failure, 3)",  # a-priori NEAR
+        '"renal failure" hypertension',  # df pass, which no book filter narrows
         "renal NOT failure OR study",
     ],
     ids=lambda q: repr(q)[:30],
