@@ -90,21 +90,18 @@ def varint_decode(buf: bytes | memoryview, count: int | None = None, offset: int
         b = b[offset:]
     if len(b) == 0:
         return np.zeros(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+    ends = np.flatnonzero(b < 0x80)
     if count is not None:
         ends = ends[:count]
-        b = b[: ends[-1] + 1] if len(ends) else b[:0]
-        is_last = is_last[: len(b)]
     starts = np.empty(len(ends), dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
+    # every value's first byte at once; only the longer values' later bytes
+    vals = (b[starts] & 0x7F).astype(np.uint64)
     lengths = ends - starts + 1
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    maxb = int(lengths.max()) if len(lengths) else 0
-    for j in range(maxb):
-        mask = lengths > j
-        vals[mask] |= (b[starts[mask] + j] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * j)
+    for j in range(1, int(lengths.max())):
+        more = np.flatnonzero(lengths > j)
+        vals[more] |= (b[starts[more] + j] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * j)
     return vals
 
 
@@ -278,16 +275,17 @@ def encode_shard_frame_pre(
 
 
 def decode_doc_ids(doc_blob: bytes, block_lens: list[int]) -> np.ndarray:
-    """Decode the full doc-id stream (all blocks)."""
-    gaps = varint_decode(doc_blob)
-    out = np.empty(len(gaps), dtype=np.int64)
-    i = 0
-    for bl in block_lens:
-        out[i] = unzigzag(int(gaps[i]))
-        if bl > 1:
-            out[i + 1 : i + bl] = out[i] + np.cumsum(gaps[i + 1 : i + bl].astype(np.int64))
-        i += bl
-    return out
+    """Decode the full doc-id stream: per block a zigzag first id, then
+    gaps, summed by one segmented cumsum (int64 sums wrap like the uint64
+    gaps they add)."""
+    g = varint_decode(doc_blob)
+    lens = np.asarray(block_lens, dtype=np.int64)
+    heads = np.cumsum(lens) - lens
+    u = g[heads]
+    g[heads] = (u >> np.uint64(1)) ^ -(u & np.uint64(1))
+    g = g.view(np.int64)
+    out = np.cumsum(g)
+    return out - np.repeat(out[heads] - g[heads], lens)
 
 
 def decode_tfs(tf_blob: bytes) -> np.ndarray:
@@ -314,16 +312,30 @@ def decode_block_u64(blob: bytes, offset: int, count: int) -> np.ndarray:
     return varint_decode(blob, count=count, offset=int(offset)).astype(np.int64)
 
 
-def decode_block_positions(
-    pos_blob: bytes, offset: int, end: int, ndocs: int
-) -> list[np.ndarray]:
-    """Decode ONE block's slice of the position stream: ``ndocs`` entries of
-    [count, delta positions...] between byte ``offset`` and ``end``."""
-    return decode_positions(memoryview(pos_blob)[int(offset) : int(end)], ndocs)
+def decode_flat_positions(pos_blob: bytes | memoryview, tfs: np.ndarray) -> np.ndarray:
+    """Positions of consecutive position-stream entries as one flat int64
+    array, entry by entry: ``tfs`` are the entries' tfs, and each entry is
+    [count, first, gaps...] with count = tf. One varint decode, the count
+    slots dropped, one segmented cumsum. Raises ValueError when the stream
+    does not hold exactly those entries."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    vals = varint_decode(pos_blob).astype(np.int64)
+    seg = tfs + 1
+    heads = np.cumsum(seg) - seg
+    if len(vals) != int(seg.sum()) or (vals[heads] != tfs).any():
+        raise ValueError("position stream does not match its tfs")
+    keep = np.ones(len(vals), dtype=bool)
+    keep[heads] = False
+    gaps = vals[keep]
+    out = np.cumsum(gaps)
+    firsts = (np.cumsum(tfs) - tfs)[tfs > 0]
+    out -= np.repeat(out[firsts] - gaps[firsts], tfs[tfs > 0])
+    return out
 
 
 def decode_positions(pos_blob: bytes, df: int) -> list[np.ndarray]:
-    """Decode per-doc position arrays (delta-decoded)."""
+    """Decode per-doc position arrays (delta-decoded). The engine reads
+    ``decode_flat_positions``; this stays for perfbench's codec probe."""
     flat = varint_decode(pos_blob).astype(np.int64)
     out: list[np.ndarray] = []
     i = 0

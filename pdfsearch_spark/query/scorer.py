@@ -28,6 +28,14 @@ one-phrase query, by the idf-free score (bm25_scores at idf 1), sent with
 one df row. The driver scores the rows it collects
 (search.SearchEngine._execute).
 
+Positional matching has no per-doc loop. Phrases, anchors, prefixes and
+NEAR all match on sorted int64 keys, (doc rank << 32) | position, a few
+numpy calls per group: a phrase intersects its slots' keys, slot j shifted
+by −j; an anchor keeps position 0; NEAR searches each instance's window
+(``near_surviving``); counts are a unique or bincount of key >> 32.
+Positions are decoded flat, and only from the 128-posting blocks that
+hold the docs asked about (``PostingList.positions``).
+
 ``wand_shard_topk`` (block-max WAND) is no longer on the engine's path: it
 lost to the exhaustive scan in every measured shape and stays only for
 perfbench's scorer probe.
@@ -40,11 +48,12 @@ from dataclasses import dataclass
 import numpy as np
 
 from ..codec import (
+    BLOCK,
     decode_block_doc_ids,
-    decode_block_positions,
     decode_block_u64,
     decode_dls,
     decode_doc_ids,
+    decode_flat_positions,
     decode_tfs,
 )
 from .parser import Node, Phrase
@@ -62,24 +71,22 @@ POSTING_COLUMNS = (
 class PostingList:
     """One posting row — one term's postings in one (segment, shard) —
     read lazily from the codec's independently decodable 128-doc blocks
-    (codec.py). Each read decodes only what it is asked for, once:
-    ``whole()`` the full doc/tf/dl lists (the engine's matching),
+    (codec.py). Each read decodes only what it is asked for:
+    ``whole()`` the full doc/tf/dl lists, once (the engine's matching),
     ``block(i)`` one block's (perfbench's block-max WAND probe only),
-    ``positions(idxs)`` the position blocks holding the
-    given list indexes (phrases, anchors, NEAR) — positions live in a
-    separate stream so plain terms never pay their decode (SURVEY.md
-    §7.8-4)."""
+    ``positions(idxs)`` the flat positions of the given postings, decoded
+    from the position blocks that hold them alone (phrases, anchors,
+    NEAR). Positions live in a separate stream so plain terms never pay
+    their decode (SURVEY.md §7.8-4)."""
 
-    __slots__ = ("row", "df", "n_blocks", "_ends", "_whole", "_blocks", "_pos")
+    __slots__ = ("row", "df", "n_blocks", "_whole", "_blocks")
 
     def __init__(self, row) -> None:
         self.row = row
         self.df = int(row.df)
         self.n_blocks = len(row.block_lens)
-        self._ends: np.ndarray | None = None  # cumulative block lengths
         self._whole: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         self._blocks: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        self._pos: dict[int, list[np.ndarray]] = {}
 
     def whole(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(doc_ids, tfs, dls) of the whole list, doc ids sorted."""
@@ -110,25 +117,24 @@ class PostingList:
             return parts[0]
         return tuple(np.concatenate([p[c] for p in parts]) for c in range(3))
 
-    def positions(self, idxs) -> list[np.ndarray]:
-        """Token positions of the docs at list indexes ``idxs``."""
+    def positions(self, idxs: np.ndarray) -> np.ndarray:
+        """Flat token positions of the postings at ascending list indexes
+        ``idxs``, posting by posting: the byte slices of the blocks that
+        hold them are joined and decoded once."""
         r = self.row
-        if self._ends is None:
-            self._ends = np.cumsum(np.asarray(r.block_lens, dtype=np.int64))
-        idxs = np.asarray(idxs, dtype=np.int64)
-        blocks = np.searchsorted(self._ends, idxs, side="right")
-        out: list[np.ndarray] = []
-        for i, b in zip(idxs.tolist(), blocks.tolist()):
-            blk = self._pos.get(b)
-            if blk is None:
-                offs = r.pos_offs
-                end = offs[b + 1] if b + 1 < len(offs) else len(r.pos_blob)
-                blk = self._pos[b] = decode_block_positions(
-                    r.pos_blob, offs[b], end, int(r.block_lens[b])
-                )
-            block_start = int(self._ends[b]) - len(blk)
-            out.append(blk[i - block_start])
-        return out
+        blocks = np.unique(idxs // BLOCK)
+        if len(blocks) == self.n_blocks:
+            blob, posts = r.pos_blob, np.arange(self.df)
+        else:
+            offs = list(r.pos_offs) + [len(r.pos_blob)]
+            mv = memoryview(r.pos_blob)
+            blob = b"".join(mv[offs[b] : offs[b + 1]] for b in blocks.tolist())
+            posts = (blocks[:, None] * BLOCK + np.arange(BLOCK)).ravel()
+            posts = posts[posts < self.df]
+        tfs = self.whole()[1][posts]
+        take = np.zeros(len(posts), dtype=bool)
+        take[np.searchsorted(posts, idxs)] = True
+        return decode_flat_positions(blob, tfs)[np.repeat(take, tfs)]
 
 
 def postings_by_term(rows) -> dict[str, PostingList]:
@@ -146,285 +152,234 @@ def postings_by_term(rows) -> dict[str, PostingList]:
     return out
 
 
+# the position half of a key (doc rank << 32) | position, the rank a doc's
+# index in the doc array at hand
+POS_MASK = 0xFFFFFFFF
+
+
+def _slot_docs(slot: list[PostingList]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tfs, dls) of one phrase slot: one exact term's list, or a
+    prefix's expansions in the group merged (union docs, summed tfs)."""
+    if len(slot) == 1:
+        return slot[0].whole()
+    docs, tfs, dls = (np.concatenate([pl.whole()[c] for pl in slot]) for c in range(3))
+    u, inv = np.unique(docs, return_inverse=True)
+    out_dls = np.empty(len(u), dtype=np.int64)
+    out_dls[inv] = dls
+    return u, np.bincount(inv, weights=tfs, minlength=len(u)).astype(np.int64), out_dls
+
+
+def _slot_keys(slot: list[PostingList], docs: np.ndarray) -> np.ndarray:
+    """Sorted keys of every position of ``slot``'s terms in ``docs``
+    (sorted doc ids), ranked by index in ``docs``; only the position
+    blocks holding those docs are decoded."""
+    parts = []
+    for pl in slot:
+        d, tfs, _ = pl.whole()
+        loc = np.minimum(np.searchsorted(d, docs), len(d) - 1)
+        hit = d[loc] == docs
+        idxs = loc[hit]
+        if len(idxs):
+            ranks = np.repeat(np.flatnonzero(hit), tfs[idxs])
+            parts.append((ranks << 32) | pl.positions(idxs))
+    if len(parts) == 1:
+        return parts[0]
+    return np.sort(np.concatenate(parts)) if parts else np.zeros(0, dtype=np.int64)
+
+
 @dataclass
 class PhraseHits:
-    """Per-(segment, shard) instance data for one phrase: sorted doc ids,
-    visible instance counts, dl per doc, and (optional) instance start
-    positions.
-    ``lazy`` defers position decode for single-term phrases under NEAR —
-    _near_eval fetches only the blocks of docs where every NEAR phrase is
-    present."""
+    """Per-(segment, shard) instances of one phrase: sorted doc ids, visible
+    instance counts, dl per doc, and ``starts``: the instance starts, flat
+    in doc order. For a lone unanchored term or prefix ``starts`` holds that
+    slot's PostingLists instead, whose positions only a NEAR reads, and
+    ``starts_in`` decodes them for the docs it asks about alone."""
 
     doc_ids: np.ndarray
     counts: np.ndarray
     dls: np.ndarray
-    positions: list[np.ndarray] | None  # start positions per doc
-    lazy: PostingList | None = None
+    starts: np.ndarray | list[PostingList]
 
     @staticmethod
     def empty() -> "PhraseHits":
         z = np.zeros(0, dtype=np.int64)
-        return PhraseHits(z, z.copy(), z.copy(), [])
+        return PhraseHits(z, z.copy(), z.copy(), z.copy())
+
+    def starts_in(self, sel: np.ndarray) -> np.ndarray:
+        """Sorted keys of the instance starts of the docs at ascending rows
+        ``sel``, ranked by index in ``sel``."""
+        if isinstance(self.starts, list):
+            return _slot_keys(self.starts, self.doc_ids[sel])
+        starts = self.starts
+        if len(sel) < len(self.doc_ids):
+            take = np.zeros(len(self.doc_ids), dtype=bool)
+            take[sel] = True
+            starts = starts[np.repeat(take, self.counts)]
+        ranks = np.repeat(np.arange(len(sel), dtype=np.int64), self.counts[sel])
+        return (ranks << 32) | starts
 
 
-def _union_positions(arrs: list[np.ndarray]) -> np.ndarray:
-    if len(arrs) == 1:
-        return arrs[0]
-    return np.unique(np.concatenate(arrs))
-
-
-def phrase_hits(
-    lists: dict[str, PostingList], phrase: Phrase, need_positions: bool
-) -> PhraseHits:
+def phrase_hits(lists: dict[str, PostingList], phrase: Phrase) -> PhraseHits:
     """Instances of one phrase in one (segment, shard), modifier-aware and
     tree-independent. A prefix slot expands against the group's own posting
     lists: the postings scan already kept only exact and prefix-matching
     terms, so this is the expansion ∩ group, and the driver never
-    materializes a web-scale-vocabulary expansion. ``need_positions``: the
-    phrase sits under NEAR, which reads its instance positions."""
+    materializes a web-scale-vocabulary expansion."""
     if phrase.col == "unindexed":
         return PhraseHits.empty()
-
-    # resolve postings, fail fast on missing exact terms; a prefix occupies
-    # the LAST slot of the phrase, preceding terms are exact
-    exact_terms = phrase.terms[:-1] if phrase.prefix else phrase.terms
-    slots: list[PostingList | list[PostingList]] = []
-    for t in exact_terms:
-        pl = lists.get(t)
-        if pl is None:
-            return PhraseHits.empty()
-        slots.append(pl)
+    # a prefix occupies the LAST slot of the phrase, preceding terms are exact
+    exact = phrase.terms[:-1] if phrase.prefix else phrase.terms
+    slots = [[lists[t]] if t in lists else [] for t in exact]
     if phrase.prefix:
-        pref = phrase.terms[-1]
-        pls = [pl for t, pl in lists.items() if t.startswith(pref)]
-        if not pls:
-            return PhraseHits.empty()
-        slots.append(pls)
-
-    positional = len(slots) > 1 or phrase.anchored
-    if not positional and not phrase.prefix:
-        # positions deferred: only a NEAR evaluation consumes them, and it
-        # knows the candidate set — let it fetch just those docs' blocks
-        pl = slots[0]
-        return PhraseHits(*pl.whole(), None, pl if need_positions else None)
-
-    # Merge the prefix slot into a virtual term: union docs; per doc union
-    # positions / sum tfs. Plain-term slots stay PostingLists so the
-    # positional branch below fetches their position blocks for the
-    # intersection docs only.
-    def slot_data(slot):
-        if isinstance(slot, PostingList):
-            return (*slot.whole(), slot)
-        all_docs = _union_positions([s.whole()[0] for s in slot])
-        tfs = np.zeros(len(all_docs), dtype=np.int64)
-        dls = np.zeros(len(all_docs), dtype=np.int64)
-        pos = [[] for _ in range(len(all_docs))] if positional or need_positions else None
-        for s in slot:
-            s_docs, s_tfs, s_dls = s.whole()
-            loc = np.searchsorted(all_docs, s_docs)
-            tfs[loc] += s_tfs
-            dls[loc] = s_dls
-            if pos is not None:
-                for j, arr in zip(loc, s.positions(range(len(s_docs)))):
-                    pos[j].append(arr)
-        merged_pos = None if pos is None else [_union_positions(p) for p in pos]
-        return all_docs, tfs, dls, merged_pos
-
-    slots_d = [slot_data(s) for s in slots]
-    if not positional:
-        return PhraseHits(*slots_d[0])
-
-    # positional evaluation needed (multi-term adjacency and/or anchor):
-    # positions are fetched ONLY for the doc-id intersection — block-lazy
-    # for plain-term slots, so a phrase over two huge posting lists decodes
-    # a handful of position blocks instead of both whole streams
-    docs_common = slots_d[0][0]
-    for s in slots_d[1:]:
-        docs_common = np.intersect1d(docs_common, s[0], assume_unique=True)
-    if len(docs_common) == 0:
+        slots.append([pl for t, pl in lists.items() if t.startswith(phrase.terms[-1])])
+    if not all(slots):
         return PhraseHits.empty()
+    if len(slots) == 1 and not phrase.anchored:
+        return PhraseHits(*_slot_docs(slots[0]), slots[0])
 
-    locs = [np.searchsorted(s[0], docs_common) for s in slots_d]
-    slot_pos: list[list[np.ndarray]] = []
-    for si, s in enumerate(slots_d):
-        prov = s[3]
-        if isinstance(prov, PostingList):
-            slot_pos.append(prov.positions(locs[si]))
-        else:
-            slot_pos.append([prov[j] for j in locs[si]])
+    # keys over the docs holding every slot; slot j's positions shift by -j
+    merged = [_slot_docs(s) for s in slots]
+    docs = merged[0][0]
+    for m in merged[1:]:
+        docs = np.intersect1d(docs, m[0], assume_unique=True)
+    keys = _slot_keys(slots[0], docs)
+    for j, slot in enumerate(slots[1:], start=1):
+        if not len(keys):
+            break
+        k = _slot_keys(slot, docs)
+        keys = np.intersect1d(keys, k[(k & POS_MASK) >= j] - j, assume_unique=True)
+    if phrase.anchored:
+        keys = keys[(keys & POS_MASK) == 0]
+    ranks, counts = np.unique(keys >> 32, return_counts=True)
+    dls = merged[0][2][np.searchsorted(merged[0][0], docs[ranks])]
+    return PhraseHits(docs[ranks], counts, dls, keys & POS_MASK)
 
-    out_docs, out_counts, out_dls, out_pos = [], [], [], []
-    for ci, doc in enumerate(docs_common):
-        inter = slot_pos[0][ci]
-        ok = True
-        for si in range(1, len(slots_d)):
-            p = slot_pos[si][ci]
-            inter = np.intersect1d(inter, p - si, assume_unique=True)
-            if len(inter) == 0:
-                ok = False
-                break
-        if not ok:
-            continue
-        if phrase.anchored:
-            inter = inter[inter == 0]
-            if len(inter) == 0:
-                continue
-        out_docs.append(doc)
-        out_counts.append(len(inter))
-        out_dls.append(slots_d[0][2][locs[0][ci]])
-        out_pos.append(inter)
-    if not out_docs:
-        return PhraseHits.empty()
-    return PhraseHits(
-        np.array(out_docs, dtype=np.int64),
-        np.array(out_counts, dtype=np.int64),
-        np.array(out_dls, dtype=np.int64),
-        out_pos,
-    )
+
+def near_surviving(
+    keys: list[np.ndarray], phrase_lens: list[int], near_n: int
+) -> list[np.ndarray]:
+    """Per phrase: boolean mask over its instance-start ``keys`` (sorted,
+    one rank space for all phrases) of the instances taking part in >= 1
+    valid NEAR combination in their doc: the instances FTS5 counts for
+    bm25 AND highlights in snippets. A combination is valid when <= near_n
+    tokens lie between its two furthest-apart instances.
+
+    Exact for any number of phrases: with m the smallest end in a
+    combination, an instance (s, e) can join it iff s-n-1 <= m <= e, so an
+    instance survives iff its [s-n-1, e] meets the points every phrase's
+    union of such intervals covers. Two phrases reduce to a window search
+    of the other phrase's starts."""
+    if near_n < 0:
+        return [np.zeros(len(k), dtype=bool) for k in keys]
+    n = min(near_n, POS_MASK)
+    if len(keys) == 2:
+        # an instance (s, e) of A survives iff B starts in [s-n-len_B, e+n+1]
+
+        def partnered(ka, kb, len_a, len_b):
+            base = ka & ~POS_MASK
+            lo = np.maximum(ka - (n + len_b), base)
+            hi = np.minimum(ka + (len_a + n), base | POS_MASK)
+            return np.searchsorted(kb, lo) < np.searchsorted(kb, hi, side="right")
+
+        (ka, kb), (la, lb) = keys, phrase_lens
+        return [partnered(ka, kb, la, lb), partnered(kb, ka, lb, la)]
+    spans = [
+        (np.maximum(k - (n + 1), k & ~POS_MASK), k + (ln - 1))
+        for k, ln in zip(keys, phrase_lens)
+    ]
+    # each phrase's intervals merged (both ends ascend with the key), then
+    # one sweep over their +1/-1 events finds the points all of them cover
+    at, step = [], []
+    for lo, hi in spans:
+        first = np.ones(len(lo), dtype=bool)
+        first[1:] = lo[1:] > hi[:-1]
+        last = np.append(first[1:], True)
+        at += [lo[first], hi[last] + 1]
+        step += [np.ones(first.sum(), dtype=np.int64), -np.ones(last.sum(), dtype=np.int64)]
+    at = np.concatenate(at)
+    order = np.argsort(at, kind="stable")
+    at, cover = at[order], np.cumsum(np.concatenate(step)[order])
+    full = (cover[:-1] == len(keys)) & (at[1:] > at[:-1])
+    f_lo, f_hi = at[:-1][full], at[1:][full] - 1
+    if not len(f_lo):
+        return [np.zeros(len(k), dtype=bool) for k in keys]
+    out = []
+    for lo, hi in spans:
+        i = np.searchsorted(f_hi, lo)
+        out.append((i < len(f_hi)) & (f_lo[np.minimum(i, len(f_lo) - 1)] <= hi))
+    return out
 
 
 def _near_eval(
     hits: list[PhraseHits],
-    cand: np.ndarray,
-    locs: list[np.ndarray],
     present: list[np.ndarray],
     phrase_lens: list[int],
     near_n: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-candidate NEAR evaluation.
+    """NEAR over the candidate docs (the rows of the ``present`` masks):
+    keys only the docs holding every phrase, keeps the instances
+    ``near_surviving`` keeps, and counts them.
 
     Probe-verified semantics (scripts/dev_probe_fts5.py + micro-probe): a doc
     matches if there exists one instance per phrase with ≤ near_n tokens
     between the two furthest-apart instances, and the visible tf of each
     phrase counts ONLY instances that participate in at least one valid
-    combination. Exact pairwise rule for 2 phrases; bounded brute force for
-    k>2 (falls back to all-instances when the combination count explodes —
-    FTS5 queries with >2 NEAR phrases and huge tfs are pathological).
+    combination.
 
-    Returns (mask, counts[len(cand) × n_phrases_in_near]).
+    Returns (mask, counts[n_candidates × n_phrases_in_near]).
     """
-    k = len(hits)
-    mask = np.zeros(len(cand), dtype=bool)
-    counts = np.zeros((len(cand), k), dtype=np.int64)
-    # prefetch deferred positions for the candidate rows only (docs where
-    # EVERY NEAR phrase is present) — block-lazy decode, see PhraseHits.lazy
-    all_present = np.logical_and.reduce(present) if present else np.zeros(0, bool)
-    cand_rows = np.flatnonzero(all_present)
-    pos_by_phrase: list[list] = []
-    for j, h in enumerate(hits):
-        if h.positions is None and h.lazy is not None:
-            fetched = h.lazy.positions(locs[j][cand_rows])
-            plist: list = [None] * (len(h.doc_ids) or 1)
-            for r, arr in zip(locs[j][cand_rows], fetched):
-                plist[r] = arr
-            pos_by_phrase.append(plist)
-        else:
-            pos_by_phrase.append(h.positions)
-    for i in range(len(cand)):
-        if not all(p[i] for p in present):
-            continue
-        spans = []
-        for j, h in enumerate(hits):
-            starts = np.asarray(pos_by_phrase[j][locs[j][i]], dtype=np.int64)
-            ends = starts + (phrase_lens[j] - 1)
-            spans.append((starts, ends))
-        surviving = near_surviving(spans, near_n)
-        if any(s.any() for s in surviving):
-            mask[i] = True
-            for j in range(k):
-                counts[i, j] = int(surviving[j].sum())
-    return mask, counts
-
-
-def near_surviving(
-    spans: list[tuple[np.ndarray, np.ndarray]], near_n: int
-) -> list[np.ndarray]:
-    """Per phrase: boolean mask of instances participating in >=1 valid NEAR
-    combination (the instances FTS5 counts for bm25 AND highlights in
-    snippets). Exact pairwise rule for 2 phrases; bounded brute force for
-    k>2, falling back to all-instances when the combination count explodes."""
-    k = len(spans)
-    sizes = [len(s[0]) for s in spans]
-    if k == 2:
-        s0, e0 = spans[0]
-        s1, e1 = spans[1]
-        # gap(a,b): tokens strictly between the two spans (0 if overlap)
-        gap = np.where(
-            s1[None, :] > e0[:, None],
-            s1[None, :] - e0[:, None] - 1,
-            np.where(s0[:, None] > e1[None, :], s0[:, None] - e1[None, :] - 1, 0),
-        )
-        ok_pairs = gap <= near_n
-        return [ok_pairs.any(axis=1), ok_pairs.any(axis=0)]
-    total = 1
-    for s_ in sizes:
-        total *= s_
-    if total > 20000:
-        return [np.ones(s_, dtype=bool) for s_ in sizes]
-    import itertools
-
-    surviving = [np.zeros(s_, dtype=bool) for s_ in sizes]
-    for combo in itertools.product(*(range(s_) for s_ in sizes)):
-        max_s = max(spans[j][0][c] for j, c in enumerate(combo))
-        min_e = min(spans[j][1][c] for j, c in enumerate(combo))
-        if max(0, max_s - min_e - 1) <= near_n:
-            for j, c in enumerate(combo):
-                surviving[j][c] = True
-    return surviving
+    counts = np.zeros((len(present[0]), len(hits)), dtype=np.int64)
+    rows = np.flatnonzero(np.logical_and.reduce(present))
+    if len(rows):
+        # a candidate's row in a phrase's hits: the present docs before it
+        keys = [h.starts_in(np.cumsum(m)[rows] - 1) for h, m in zip(hits, present)]
+        surv = near_surviving(keys, phrase_lens, near_n)
+        for j, (k, s) in enumerate(zip(keys, surv)):
+            counts[rows, j] = np.bincount(k[s] >> 32, minlength=len(rows))
+    return counts.any(axis=1), counts
 
 
 def evaluate(
     node: Node,
     hits_by_phrase: dict[int, PhraseHits],
-    cand: np.ndarray,
     tf_matrix: np.ndarray,
     present: dict[int, np.ndarray],
-    locs: dict[int, np.ndarray],
     phrase_lens: dict[int, int],
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Recursive tree eval over the candidate doc array.
+    """Recursive tree eval over the candidate docs, the rows of
+    ``tf_matrix`` (n_candidates × n_phrases instance counts).
 
-    Returns (mask, vis) where vis is a (len(cand) × n_phrases) matrix of
+    Returns (mask, vis) where vis is an (n_candidates × n_phrases) matrix of
     visible instance counts, already zeroed where invisible.
     """
-    n = len(cand)
-    P = tf_matrix.shape[1]
+    n, P = tf_matrix.shape
     if node.op == "PHRASE":
         pi = node.phrase.index
         mask = present[pi]
         vis = np.zeros((n, P), dtype=np.int64)
         vis[:, pi] = tf_matrix[:, pi]
         return mask, vis
-    if node.op == "AND":
-        m0, v0 = evaluate(node.children[0], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        m1, v1 = evaluate(node.children[1], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        mask = m0 & m1
-        vis = (v0 + v1) * mask[:, None]
-        return mask, vis
-    if node.op == "OR":
-        m0, v0 = evaluate(node.children[0], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        m1, v1 = evaluate(node.children[1], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        return m0 | m1, v0 + v1
-    if node.op == "NOT":
-        m0, v0 = evaluate(node.children[0], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        m1, _ = evaluate(node.children[1], hits_by_phrase, cand, tf_matrix, present, locs, phrase_lens)
-        mask = m0 & ~m1
-        return mask, v0 * mask[:, None]
     if node.op == "NEAR":
         pis = [c.phrase.index for c in node.children]
-        h = [hits_by_phrase[pi] for pi in pis]
         mask, counts = _near_eval(
-            h,
-            cand,
-            [locs[pi] for pi in pis],
+            [hits_by_phrase[pi] for pi in pis],
             [present[pi] for pi in pis],
             [phrase_lens[pi] for pi in pis],
             node.near_n,
         )
         vis = np.zeros((n, P), dtype=np.int64)
-        for j, pi in enumerate(pis):
-            vis[:, pi] = counts[:, j]
+        vis[:, pis] = counts
         return mask, vis
+    m0, v0 = evaluate(node.children[0], hits_by_phrase, tf_matrix, present, phrase_lens)
+    m1, v1 = evaluate(node.children[1], hits_by_phrase, tf_matrix, present, phrase_lens)
+    if node.op == "AND":
+        mask = m0 & m1
+        return mask, (v0 + v1) * mask[:, None]
+    if node.op == "OR":
+        return m0 | m1, v0 + v1
+    if node.op == "NOT":
+        mask = m0 & ~m1
+        return mask, v0 * mask[:, None]
     raise ValueError(f"unknown node op {node.op}")
 
 
@@ -450,54 +405,28 @@ def score_shard(
     one segment.
     """
     lists = postings_by_term(posting_rows)
-    near_pis = _near_phrase_indexes(tree)
-    hits = {p.index: phrase_hits(lists, p, p.index in near_pis) for p in phrases}
-
-    nonempty = [h for h in hits.values() if len(h.doc_ids)]
+    hits = {p.index: phrase_hits(lists, p) for p in phrases}
+    nonempty = [h.doc_ids for h in hits.values() if len(h.doc_ids)]
     if not nonempty:
         return None
-    cand = _union_positions([h.doc_ids for h in nonempty])
+    cand = nonempty[0] if len(nonempty) == 1 else np.unique(np.concatenate(nonempty))
     P = len(phrases)
     tf_matrix = np.zeros((len(cand), P), dtype=np.int64)
     dl = np.zeros(len(cand), dtype=np.int64)
     present: dict[int, np.ndarray] = {}
-    locs: dict[int, np.ndarray] = {}
     for pi, h in hits.items():
         loc = np.searchsorted(cand, h.doc_ids)
-        m = np.zeros(len(cand), dtype=bool)
-        m[loc] = True
+        present[pi] = np.zeros(len(cand), dtype=bool)
+        present[pi][loc] = True
         tf_matrix[loc, pi] = h.counts
         dl[loc] = h.dls
-        full_loc = np.zeros(len(cand), dtype=np.int64)
-        full_loc[loc] = np.arange(len(h.doc_ids))
-        present[pi] = m
-        locs[pi] = full_loc
     phrase_lens = {p.index: len(p.terms) for p in phrases}
 
-    mask, vis = evaluate(tree, hits, cand, tf_matrix, present, locs, phrase_lens)
+    mask, vis = evaluate(tree, hits, tf_matrix, present, phrase_lens)
+    # per-phrase dfs count toward the global idf reduce even when no doc
+    # matches the whole tree here
     local_dfs = {pi: int(present[pi].sum()) for pi in hits}
-    if not mask.any():
-        # no whole-tree match in this shard, but per-phrase dfs still count
-        # toward the global idf reduce
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), np.zeros((0, P), dtype=np.int64), local_dfs
-
-    matched = cand[mask]
-    mdl = dl[mask]
-    mvis = vis[mask]
-
-    return matched, mdl, mvis, local_dfs
-
-
-def _near_phrase_indexes(node: Node) -> set[int]:
-    """Phrase indexes that appear under a NEAR node (their instance
-    positions feed _near_eval even if the phrase itself is a single term)."""
-    out: set[int] = set()
-    if node.op == "NEAR":
-        out.update(c.phrase.index for c in node.children)
-    for c in node.children:
-        out.update(_near_phrase_indexes(c))
-    return out
+    return cand[mask], dl[mask], vis[mask], local_dfs
 
 
 def bm25_scores(

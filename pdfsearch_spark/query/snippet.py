@@ -289,24 +289,16 @@ def _visible_instances(
     per_phrase = find_phrase_instances(terms, slots_list, anchored)
     P = len(slots_list)
     cand = np.zeros(1, dtype=np.int64)
-    tf_matrix = np.zeros((1, P), dtype=np.int64)
-    present: dict[int, np.ndarray] = {}
-    locs: dict[int, np.ndarray] = {}
-    hits: dict[int, PhraseHits] = {}
-    for pi in range(P):
-        inst = per_phrase[pi]
-        tf_matrix[0, pi] = len(inst)
-        present[pi] = np.array([bool(inst)])
-        locs[pi] = np.zeros(1, dtype=np.int64)
-        starts = np.array([s for s, _ in inst], dtype=np.int64)
-        hits[pi] = PhraseHits(
-            np.zeros(1 if inst else 0, dtype=np.int64),
-            np.array([len(inst)] if inst else [], dtype=np.int64),
-            np.zeros(1 if inst else 0, dtype=np.int64),
-            [starts],
-        )
+    tf_matrix = np.array([[len(inst) for inst in per_phrase]], dtype=np.int64)
+    present = {pi: tf_matrix[0, pi:pi + 1] > 0 for pi in range(P)}
+    # one doc, rank 0: each phrase's instance starts are its keys
+    hits = {
+        pi: PhraseHits(cand, tf_matrix[0, pi:pi + 1], cand,
+                       np.array([s for s, _ in per_phrase[pi]], dtype=np.int64))
+        for pi in range(P)
+    }
     phrase_lens = {pi: len(slots_list[pi]) for pi in range(P)}
-    mask, vis = evaluate(tree, hits, cand, tf_matrix, present, locs, phrase_lens)
+    mask, vis = evaluate(tree, hits, tf_matrix, present, phrase_lens)
     if not mask[0]:
         # shouldn't happen for a returned result row; highlight everything
         # as a conservative fallback
@@ -319,15 +311,12 @@ def _visible_instances(
         if node.op == "NEAR":
             pis = [c.phrase.index for c in node.children]
             if all(per_phrase[pi] for pi in pis):
-                spans = []
-                for pi in pis:
-                    s = np.array([a for a, _ in per_phrase[pi]], dtype=np.int64)
-                    e = np.array([b - 1 for _, b in per_phrase[pi]], dtype=np.int64)
-                    spans.append((s, e))
-                surv = near_surviving(spans, node.near_n)
+                surv = near_surviving(
+                    [hits[pi].starts for pi in pis], [phrase_lens[pi] for pi in pis], node.near_n
+                )
                 for j, pi in enumerate(pis):
                     per_phrase[pi] = [
-                        inst for ok, inst in zip(surv[j], per_phrase[pi]) if ok
+                        inst for ok, inst in zip(surv[j].tolist(), per_phrase[pi]) if ok
                     ]
             return
         for c in node.children:

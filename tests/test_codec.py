@@ -6,6 +6,7 @@ every block's max_impact is a valid WAND upper bound."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pdfsearch_spark.codec import (
     BLOCK,
@@ -13,6 +14,7 @@ from pdfsearch_spark.codec import (
     K1,
     decode_dls,
     decode_doc_ids,
+    decode_flat_positions,
     decode_positions,
     decode_tfs,
     encode_shard_frame,
@@ -92,31 +94,46 @@ def test_postings_roundtrip_and_blockmeta():
             assert enc["max_impacts"][b] >= impacts[lo:hi].max() - 1e-6
 
 
-def test_block_positions_match_full_decode():
-    """decode_block_positions over each block == decode_positions whole-list,
-    and PostingList.positions decodes only the blocks holding requested docs."""
+def test_flat_positions_match_full_decode(monkeypatch):
+    """decode_flat_positions and PostingList.positions agree with the
+    per-posting decode_positions, and positions(idxs) decodes only the
+    blocks holding the requested postings."""
     import pandas as pd
 
-    from pdfsearch_spark.codec import decode_block_positions
-    from pdfsearch_spark.query.scorer import postings_by_term
+    from pdfsearch_spark.query import scorer
 
     rng = np.random.Generator(np.random.Philox(key=[3, 99]))
     doc_ids, tfs, dls, positions = _random_posting(rng, 600)
     enc = _encode(doc_ids, tfs, dls, positions, 120.0)
     full = decode_positions(enc["pos_blob"], len(doc_ids))
-    # per-block decode matches the whole-list decode
-    offs, lens = enc["pos_offs"], enc["block_lens"]
-    i = 0
-    for b, n in enumerate(lens):
-        end = offs[b + 1] if b + 1 < len(offs) else len(enc["pos_blob"])
-        blk = decode_block_positions(enc["pos_blob"], offs[b], end, n)
-        for j in range(n):
-            assert (blk[j] == full[i + j]).all()
-        i += n
-    # lazy fetch: arbitrary subset, identical results, partial block decode
-    pl = postings_by_term(pd.DataFrame([dict(enc, term="t")]))["t"]
-    idxs = sorted(rng.choice(200, size=25, replace=False).tolist())  # blocks 0-1
-    got = pl.positions(np.array(idxs))
-    for x, i_ in zip(got, idxs):
-        assert (x == full[i_]).all()
-    assert len(pl._pos) <= 2  # blocks 2-4 never decoded
+    assert (decode_flat_positions(enc["pos_blob"], tfs) == np.concatenate(full)).all()
+
+    # a subset in blocks 0-1: 256 tfs reach the decoder, blocks 2-4 never do
+    seen = []
+
+    def spy(blob, tfs_):
+        seen.append(len(tfs_))
+        return decode_flat_positions(blob, tfs_)
+
+    monkeypatch.setattr(scorer, "decode_flat_positions", spy)
+    pl = scorer.postings_by_term(pd.DataFrame([dict(enc, term="t")]))["t"]
+    idxs = np.array(sorted(rng.choice(200, size=25, replace=False).tolist()))
+    got = pl.positions(idxs)
+    assert (got == np.concatenate([full[i] for i in idxs])).all()
+    assert seen == [2 * BLOCK]
+    # every posting: the whole stream, one decode
+    assert (pl.positions(np.arange(len(doc_ids))) == np.concatenate(full)).all()
+    assert seen[-1] == len(doc_ids)
+
+
+def test_flat_positions_refuse_a_count_that_is_not_the_tf():
+    """Each posting's stream entry opens with its count, which the build
+    writes as its tf; a stream that disagrees is refused."""
+    tfs = np.array([2, 1], dtype=np.int64)
+    good = varint_encode(np.array([2, 3, 4, 1, 9], dtype=np.uint64))
+    assert decode_flat_positions(good, tfs).tolist() == [3, 7, 9]
+    bad = varint_encode(np.array([2, 3, 4, 2, 9, 1], dtype=np.uint64))
+    with pytest.raises(ValueError):
+        decode_flat_positions(bad, tfs)
+    with pytest.raises(ValueError):
+        decode_flat_positions(good[:-1], tfs)
